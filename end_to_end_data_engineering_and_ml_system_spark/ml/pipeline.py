@@ -20,6 +20,7 @@ per micro-batch (stream_anomaly_detector.py:212-303, M2). Here:
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -295,16 +296,21 @@ def align_features(
 ) -> DataFrame:
     """Feature-dimension alignment (M3): project onto the model's declared
     feature schema in its exact order — extra columns dropped, missing
-    columns zero-filled — so inference never sees a shape mismatch
+    columns filled with ``fill`` — so inference never sees a shape mismatch
     (reference introspects the Keras input_shape and pads/trims ad hoc,
     stream_anomaly_detector.py:237-261; here the schema is declared and the
-    alignment is one projection)."""
+    alignment is one projection). Every output column is double.
+
+    The projection is one ``selectExpr`` call: a Column chain per feature
+    costs several Python→JVM round trips each, which dominated per-batch
+    plan building in the detect loop."""
     present = set(df.columns)
-    return df.select(
+    fill_sql = _double_sql(fill)
+    return df.selectExpr(
         *[
-            F.col(c).cast("double").alias(c)
+            f"CAST({_quote(c)} AS DOUBLE) AS {_quote(c)}"
             if c in present
-            else F.lit(fill).alias(c)
+            else f"{fill_sql} AS {_quote(c)}"
             for c in expected_cols
         ]
     )
@@ -365,15 +371,35 @@ def apply_standardizer_literal(
     into every downstream tree, and with ~64 features Catalyst analysis of
     the duplicated subtrees dominates wall time (measured minutes on the
     reference-width 65-column input vs seconds with literals). Collecting
-    one row of scalars is not a data-path collect."""
+    one row of scalars is not a data-path collect.
+
+    ``stats_row`` is a ``Row`` or mapping with ``mean_<c>``/``std_<c>``
+    entries (floats or Decimals). Like :func:`align_features`, the
+    projection is built in one ``selectExpr`` call; each statistic becomes
+    an exact double literal, so the result is bit-identical to
+    ``(x - mean) / std`` in IEEE doubles."""
     zcols = [
-        (
-            (F.col(c).cast("double") - F.lit(float(stats_row[f"mean_{c}"])))
-            / F.lit(float(stats_row[f"std_{c}"]))
-        ).alias(f"{prefix}{c}")
+        f"(CAST({_quote(c)} AS DOUBLE) - {_double_sql(stats_row[f'mean_{c}'])})"
+        f" / {_double_sql(stats_row[f'std_{c}'])} AS {_quote(prefix + c)}"
         for c in cols
     ]
-    return df.select(*df.columns, *zcols)
+    return df.selectExpr("*", *zcols)
+
+
+def _quote(name: str) -> str:
+    """``name`` as a SQL identifier, so dots, spaces and backticks in it are
+    taken literally rather than as struct paths or syntax."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _double_sql(x) -> str:
+    """``x`` as a SQL double literal that parses back to the same bits:
+    ``repr`` of a float round-trips exactly; NaN and the infinities have no
+    literal syntax and go through a string cast."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    return f"CAST('{x!r}' AS DOUBLE)"
 
 
 def pairwise_correlations(df, cols):

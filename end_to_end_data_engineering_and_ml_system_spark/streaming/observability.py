@@ -18,9 +18,14 @@ class BatchMetric:
     query_id: str
     batch_id: int
     num_input_rows: int
-    batch_duration_ms: int | None
+    batch_duration_ms: int | None  # durationMs["triggerExecution"]
     watermark: str | None
     state_rows: int | None
+    #: Spark's full ``durationMs`` breakdown in ms: ``queryPlanning``,
+    #: ``getBatch``, ``addBatch``, ``walCommit``, ``latestOffset``,
+    #: ``commitOffsets`` and ``triggerExecution`` (keys a trigger did not
+    #: run are absent)
+    durations: dict[str, int] = field(default_factory=dict)
 
 
 @dataclass
@@ -38,16 +43,18 @@ class ProgressCapture(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:
         p = event.progress
         state = p.stateOperators
+        durations = dict(p.durationMs or {})
         self.metrics.append(
             BatchMetric(
                 query_id=str(p.id),
                 batch_id=p.batchId,
                 num_input_rows=p.numInputRows,
-                batch_duration_ms=(p.durationMs or {}).get("triggerExecution"),
+                batch_duration_ms=durations.get("triggerExecution"),
                 watermark=(p.eventTime or {}).get("watermark"),
                 state_rows=(
                     sum(s.numRowsTotal for s in state) if state else None
                 ),
+                durations=durations,
             )
         )
 

@@ -178,6 +178,44 @@ def test_scratch_headroom_sees_env_local_dirs(monkeypatch):
     assert S.scratch_headroom_ok(_FakeSession()) is True
 
 
+DEBUG_CONF = "spark.python.sql.dataFrameDebugging.enabled"
+
+
+def test_get_spark_turns_off_call_site_capture(spark):
+    """PySpark's per-call DataFrame call-site capture is off by default:
+    it costs four extra JVM round trips per Column call."""
+    assert spark.conf.get(DEBUG_CONF) == "false"
+
+
+def test_get_spark_extra_conf_overrides_call_site_capture(monkeypatch):
+    """``extra_conf`` wins over the default. The conf is static, so this
+    checks the options handed to a new session's builder."""
+    from pyspark.sql import SparkSession
+
+    from end_to_end_data_engineering_and_ml_system_spark.session import get_spark
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda b: dict(b._options))
+    assert get_spark()[DEBUG_CONF] == "false"
+    assert get_spark(extra_conf={DEBUG_CONF: "true"})[DEBUG_CONF] == "true"
+
+
+def test_unresolved_column_still_names_the_column(spark):
+    """Without call-site capture an analysis error still carries its class
+    and the unresolved name; only the caller's file:line is gone."""
+    from pyspark.errors import AnalysisException
+
+    from end_to_end_data_engineering_and_ml_system_spark.ml.pipeline import (
+        apply_standardizer_literal,
+    )
+
+    df = spark.range(3).selectExpr("CAST(id AS DOUBLE) AS x")
+    with pytest.raises(AnalysisException, match="no_such_col"):
+        df.select(F.col("no_such_col")).collect()
+    stats = {"mean_no_such_feature": 0.0, "std_no_such_feature": 1.0}
+    with pytest.raises(AnalysisException, match="no_such_feature"):
+        apply_standardizer_literal(df, stats, ["no_such_feature"]).collect()
+
+
 def test_gate_artifact_name_covers_all_sweep_dimensions(monkeypatch):
     """Evidence files are named from ALL non-default sweep knobs, so a
     combined-knob run (e.g. p=3 at sf0.1) can never merge into a

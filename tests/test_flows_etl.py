@@ -73,6 +73,37 @@ def test_preprocess_flows_end_to_end(spark, dirty_flows):
     assert total == survivors
 
 
+def test_preprocess_flows_z_scores_are_bit_identical_to_numpy(spark, dirty_flows):
+    """The ETL's z-scored outputs equal numpy's ``(x - mean) / std`` over the
+    same split and the fitted stats, bit for bit, on train and on the
+    benign part of the eval set."""
+    import numpy as np
+
+    splits = []
+
+    def split(benign):
+        odd = F.col("Total_Fwd_Packets") % 2 == 1
+        splits.append((benign.filter(odd), benign.filter(~odd)))
+        return splits[-1]
+
+    res = preprocess_flows(dirty_flows, seed=42, split_fn=split)
+    cols = res.feature_cols
+    stats = res.stats.first()
+    mean = np.array([stats[f"mean_{c}"] for c in cols])
+    std = np.array([stats[f"std_{c}"] for c in cols])
+
+    def values(df):
+        return df.select(*cols).toPandas().to_numpy(dtype=np.float64)
+
+    def row_bits(a):  # row order is not part of the contract
+        return sorted(map(tuple, a.view(np.int64)))
+
+    train_b, test_b = splits[0]
+    assert row_bits(values(res.train)) == row_bits((values(train_b) - mean) / std)
+    benign_eval = res.stream_eval.filter(F.col("Label") == "BENIGN")
+    assert row_bits(values(benign_eval)) == row_bits((values(test_b) - mean) / std)
+
+
 def test_kafka_json_envelope_round_trip(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", F.col("value").cast("double").alias("value"), "event_type"

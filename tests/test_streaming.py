@@ -549,6 +549,40 @@ def test_progress_listener_captures_batch_metrics(spark, sf_dir):
     assert any(m.state_rows for m in cap.metrics)
 
 
+def test_progress_listener_keeps_duration_breakdown(spark, tmp_path):
+    """Each batch's metric keeps Spark's durationMs breakdown, not only the
+    trigger total."""
+    import time
+
+    from end_to_end_data_engineering_and_ml_system_spark.streaming.observability import (
+        capture_progress,
+    )
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for k in range(2):
+        (src / f"part-{k}.txt").write_text("".join(f"{k}-{i}\n" for i in range(5)))
+    with capture_progress(spark) as cap:
+        q = (
+            spark.readStream.schema("value string")
+            .option("maxFilesPerTrigger", 1)
+            .text(str(src))
+            .writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        deadline = time.time() + 30
+        while time.time() < deadline and len(cap.for_query(q.id)) < 2:
+            time.sleep(0.2)
+    metrics = cap.for_query(q.id)
+    assert [m.num_input_rows for m in metrics] == [5, 5]
+    for m in metrics:
+        assert {"addBatch", "queryPlanning", "triggerExecution"} <= set(m.durations)
+        assert m.batch_duration_ms == m.durations["triggerExecution"]
+
+
 def test_stream_topk_similarity_invariant_to_batch_split(spark, sf_dir):
     """The running top-k merge must produce the BATCH top-k no matter how
     the vector stream is split into micro-batches (associative merge under
