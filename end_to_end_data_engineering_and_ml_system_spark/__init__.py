@@ -1,9 +1,9 @@
 """PySpark-native analytics engine with the query and data-processing
 capabilities of the reference system (a network-anomaly-detection pipeline:
 batch ETL, streaming scoring, windowed dashboard analytics, ML scoring), plus
-the large-scale training-data operators (dedup, similarity search, text
-analysis, multimodal columns, learned quality filtering, tokenizer training,
-versioned tables) required at 100 TB scale.
+the large-scale training-data operators (dedup, text analysis, multimodal
+columns, learned quality filtering, tokenizer training, versioned tables)
+required at 100 TB scale.
 
 Everything here is built on public Apache Spark APIs only: DataFrame/SQL for
 batch, Structured Streaming for streams, MLlib for feature/ML pipelines, and
@@ -26,7 +26,7 @@ _EXPORTS = {
     "load_table": ("end_to_end_data_engineering_and_ml_system_spark.sources.catalog", "load_table"),
     # query registry (the driver contract)
     "all_queries": ("end_to_end_data_engineering_and_ml_system_spark.plans.registry", "all_queries"),
-    # dedup / similarity
+    # dedup
     "lsh_verified_near_dups": ("end_to_end_data_engineering_and_ml_system_spark.operators.dedup", "lsh_verified_near_dups"),
     "dedup_cluster_labels": ("end_to_end_data_engineering_and_ml_system_spark.operators.graph", "dedup_cluster_labels"),
     # learned quality filter
@@ -35,7 +35,6 @@ _EXPORTS = {
     # tokenizer training
     "learn_bpe_merges": ("end_to_end_data_engineering_and_ml_system_spark.operators.bpe", "learn_bpe_merges"),
     "bpe_token_lengths": ("end_to_end_data_engineering_and_ml_system_spark.operators.bpe", "bpe_token_lengths"),
-    "fit_als": ("end_to_end_data_engineering_and_ml_system_spark.ml.als", "fit_als"),
     # tracking / registry
     "Tracker": ("end_to_end_data_engineering_and_ml_system_spark.ml.registry", "Tracker"),
     "ModelRegistry": ("end_to_end_data_engineering_and_ml_system_spark.ml.registry", "ModelRegistry"),

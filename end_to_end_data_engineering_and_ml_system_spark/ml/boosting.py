@@ -1,6 +1,6 @@
-"""Distributed gradient-boosted stumps — the fifth trainer family
-(boosting), alongside the linear/MLP autoencoders, the logistic
-classifier, k-means, and ALS.
+"""Distributed gradient-boosted stumps — the boosting trainer family,
+alongside the linear/MLP autoencoders, the logistic classifier and
+k-means.
 
 LS-Boost (Friedman 2001, "Greedy Function Approximation", Algorithm 2)
 with depth-1 regression trees over BUCKETIZED integer features — the

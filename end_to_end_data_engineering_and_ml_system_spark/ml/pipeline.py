@@ -103,33 +103,16 @@ def mse_score(zcols: Sequence[str]) -> Column:
     return total / F.lit(float(len(zcols)))
 
 
-def score_and_route(
-    df: DataFrame,
-    stats: DataFrame,
-    cols: Sequence[str],
-    threshold: float = 2.0,
-) -> DataFrame:
-    """Full scoring envelope: standardize → MSE score → threshold prediction
-    → confidence (the scored_flows contract: FIXTURES.md §4;
-    stream_anomaly_detector.py:278-302)."""
-    from ..functions.scalars import classify_by_threshold, confidence
-
-    z = apply_standardizer(df, stats, cols)
-    zcols = [f"z_{c}" for c in cols]
-    scored = z.withColumn("anomaly_score", mse_score(zcols))
-    return scored.withColumn(
-        "prediction", classify_by_threshold("anomaly_score", threshold)
-    ).withColumn("confidence", confidence("anomaly_score"))
-
-
 def score_and_route_literal(
     df: DataFrame,
     stats_row,
     cols: Sequence[str],
     threshold: float = 2.0,
 ) -> DataFrame:
-    """``score_and_route`` with the 1-row stats frame pre-collected to
-    literals (see :func:`apply_standardizer_literal` for when and why)."""
+    """Full scoring envelope: standardize → MSE score → threshold prediction
+    → confidence (the scored_flows contract: FIXTURES.md §4;
+    stream_anomaly_detector.py:278-302), with the 1-row stats pre-collected
+    to literals (see :func:`apply_standardizer_literal` for when and why)."""
     from ..functions.scalars import classify_by_threshold, confidence
 
     z = apply_standardizer_literal(df, stats_row, cols)

@@ -377,13 +377,12 @@ def pagerank(
     with dangling mass (nodes with no out-edges) redistributed uniformly,
     so each iteration conserves total rank mass at exactly 1.
 
-    Determinism contract (the same device as ml/als.py's loss): every
-    per-edge contribution and every dangling term is quantized onto the
-    1e-12 integer grid as a LONG before the shuffle-sum, so the grouped
-    sums are order-free exact integers and the resulting ranks are
-    bit-identical across partitionings AND across engines — a DuckDB
-    oracle unrolling the same arithmetic hash-matches (see
-    plans/queries_graph_retrieval.py). Floating-point ops happen only
+    Determinism contract: every per-edge contribution and every dangling
+    term is quantized onto the 1e-12 integer grid as a LONG before the
+    shuffle-sum, so the grouped sums are order-free exact integers and the
+    resulting ranks are bit-identical across partitionings AND across
+    engines — a DuckDB oracle unrolling the same arithmetic hash-matches
+    (see plans/queries_graph_retrieval.py). Floating-point ops happen only
     pointwise, in a fixed expression order mirrored by the oracle SQL.
 
     Scale notes (100 TB):

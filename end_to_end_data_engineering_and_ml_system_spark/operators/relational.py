@@ -360,8 +360,8 @@ def _enforce_null_policy(
     """Shared NULL-order-key policy for the rank family. ``"drop"``
     silently excludes NULL-key rows (the documented default); ``"strict"``
     spends one extra count job to RAISE when any exist, so a data-quality
-    problem upstream of rankers like RRF/nDCG can't shrink the result set
-    unnoticed. Returns the NULL-free frame."""
+    problem upstream of a ranker can't shrink the result set unnoticed.
+    Returns the NULL-free frame."""
     if on_null not in ("drop", "strict"):
         raise ValueError(f"{caller}: on_null must be 'drop' or 'strict'")
     if on_null == "strict":
@@ -404,8 +404,8 @@ def bounded_ranked_topk(
 
     The k-row top set is PERSISTED before the self-join: both join
     branches reference it, and without the cache each branch re-executes
-    the entire upstream plan (for callers like the RRF/nDCG rankers that
-    upstream is a full corpus scoring pass — measured 2x the query).
+    the entire upstream plan (for a ranker over a full corpus scoring
+    pass, measured 2x the query).
     The handle is tracked for ``release_rank_caches``."""
     if k > BOUNDED_TOPK_MAX_K:
         raise ValueError(
@@ -449,10 +449,9 @@ def ranked_topk(
     while k fits under its ceiling, else ``global_row_number`` + filter
     (range-repartition + O(num_partitions) offsets — linear in the data,
     no quadratic term). Both paths produce identical (row, rank) sets on
-    NULL-free keys; callers whose k scales with the data (SemDeDup's
-    cluster count, for one) must come through here, not the bounded
-    form. NULL-order-key rows are dropped (``on_null="strict"`` raises
-    instead — see ``bounded_ranked_topk``)."""
+    NULL-free keys; callers whose k scales with the data must come
+    through here, not the bounded form. NULL-order-key rows are dropped
+    (``on_null="strict"`` raises instead — see ``bounded_ranked_topk``)."""
     if k <= BOUNDED_TOPK_MAX_K:
         return bounded_ranked_topk(df, order_specs, k, out=out, on_null=on_null)
     clean = _enforce_null_policy(df, order_specs, on_null, "ranked_topk")

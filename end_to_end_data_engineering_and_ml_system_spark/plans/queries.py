@@ -1289,205 +1289,6 @@ def doc_simhash(spark, sf_dir):
     return simhash_table(docs, "doc_id", "text")
 
 
-# Shared by embedding_cosine_topk AND embedding_ann_bruteforce_portable:
-# both compute the same decimal-exact cosine top-3 over query ids < 8, so
-# one oracle string keeps the Spark/oracle constants from drifting.
-_COSINE_TOPK_ORACLE = """
-        WITH ex AS (
-            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-                   generate_subscripts(embedding, 1) AS pos
-            FROM embeddings
-        ),
-        norms AS (
-            SELECT vec_id,
-                   CAST(SUM(CAST(x * x AS DECIMAL(28,10))) AS DOUBLE) AS nrm
-            FROM ex GROUP BY 1
-        ),
-        dots AS (
-            SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-                   CAST(SUM(CAST(q.x * c.x AS DECIMAL(28,10))) AS DOUBLE) AS dot
-            FROM ex q
-            JOIN ex c ON q.pos = c.pos
-                      AND q.vec_id < 8 AND c.vec_id <> q.vec_id
-            GROUP BY 1, 2
-        ),
-        cos AS (
-            SELECT d.query_id, d.cand_id,
-                   d.dot / (sqrt(nq.nrm) * sqrt(nc.nrm)) AS cosine
-            FROM dots d
-            JOIN norms nq ON d.query_id = nq.vec_id
-            JOIN norms nc ON d.cand_id = nc.vec_id
-        )
-        SELECT query_id, cand_id, cosine, rn
-        FROM (
-            SELECT *, ROW_NUMBER() OVER (
-                PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rn
-            FROM cos
-        )
-        WHERE rn <= 3
-"""
-
-
-@register(
-    "embedding_cosine_topk",
-    oracle=_COSINE_TOPK_ORACLE,
-    description="exact cosine top-k neighbors (order-independent decimal dot products)",
-    tags=("similarity", "ann"),
-)
-def embedding_cosine_topk(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from ..sources.catalog import spread_for_compute
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    ex_raw = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "xf")
-    ).select("vec_id", "pos", F.col("xf").cast("double").alias("x"))
-    # guarded spread before the |queries|-way dot fan-out + decimal sums
-    # (single task off the fixture's 1-partition scan; decimal aggregates
-    # are partition-independent — see embedding_retrieval_label_consistency)
-    ex = spread_for_compute(ex_raw, "vec_id", "pos")
-    norms = ex.groupBy("vec_id").agg(
-        F.sum((F.col("x") * F.col("x")).cast("decimal(28,10)"))
-        .cast("double")
-        .alias("nrm")
-    )
-    q = ex_raw.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), "pos", F.col("x").alias("qx")
-    )
-    dots = (
-        ex.join(q, "pos")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("cand_id"))
-        .agg(
-            F.sum((F.col("qx") * F.col("x")).cast("decimal(28,10)"))
-            .cast("double")
-            .alias("dot")
-        )
-    )
-    nq = norms.select(F.col("vec_id").alias("query_id"), F.col("nrm").alias("nrm_q"))
-    nc = norms.select(F.col("vec_id").alias("cand_id"), F.col("nrm").alias("nrm_c"))
-    cos = (
-        dots.join(F.broadcast(nq), "query_id")
-        .join(nc, "cand_id")
-        .select(
-            "query_id",
-            "cand_id",
-            (F.col("dot") / (F.sqrt("nrm_q") * F.sqrt("nrm_c"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return cos.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 3)
-
-
-@register(
-    "embedding_ann_bruteforce",
-    oracle=None,
-    bench=True,
-    description="fast brute-force cosine top-k via zip_with (JVM fold; bench path)",
-    tags=("similarity", "ann"),
-)
-def embedding_ann_bruteforce(spark, sf_dir):
-    from ..operators.similarity import cosine_topk_bruteforce
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return cosine_topk_bruteforce(emb, queries, k=3)
-
-
-@register(
-    "embedding_ann_bruteforce_portable",
-    oracle=_COSINE_TOPK_ORACLE,
-    description="brute-force ANN API in decimal-exact mode: same broadcast "
-    "crossJoin plan as embedding_ann_bruteforce, cross-engine-reproducible "
-    "scores (oracle-checked sibling of the rows-only bench path)",
-    tags=("similarity", "ann"),
-)
-def embedding_ann_bruteforce_portable(spark, sf_dir):
-    from ..operators.similarity import cosine_topk_bruteforce
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return cosine_topk_bruteforce(emb, queries, k=3, exact=True)
-
-
-@register(
-    "embedding_lsh_candidates",
-    oracle=None,
-    description="ANN candidate pairs via random-hyperplane LSH bucketing (scale path)",
-    tags=("similarity", "ann", "lsh"),
-)
-def embedding_lsh_candidates(spark, sf_dir):
-    from ..operators.similarity import lsh_bucket_candidates
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
-    return lsh_bucket_candidates(emb, num_planes=16, num_tables=4, planes_per_table=4)
-
-
-@register(
-    "embedding_lsh_candidates_portable",
-    oracle="""
-        WITH ex AS (
-            SELECT vec_id, i AS pos, CAST(embedding[i + 1] AS DOUBLE) AS x
-            FROM embeddings, UNNEST(range(len(embedding))) AS t(i)
-        ),
-        terms AS (
-            SELECT vec_id, p.j,
-                   CAST(floor(x * (CASE WHEN CAST(concat('0x',
-                            substr(md5(p.j || ':' || pos), 1, 1)) AS INT)
-                            % 2 = 1 THEN 1.0 ELSE -1.0 END)
-                        * 1000000.0 + 0.5) AS BIGINT) AS term
-            FROM ex CROSS JOIN (SELECT unnest(range(24)) AS j) p
-        ),
-        projs AS (SELECT vec_id, j, SUM(term) AS p FROM terms GROUP BY 1, 2),
-        sigs AS (
-            SELECT vec_id,
-                   CAST(SUM(CASE WHEN p > 0
-                            THEN (CAST(1 AS BIGINT) << CAST(j AS INT))
-                            ELSE 0 END) AS BIGINT) AS sig
-            FROM projs GROUP BY 1
-        ),
-        buckets AS (
-            SELECT vec_id, t.table_id,
-                   (sig >> (t.table_id * 4)) & 15 AS bucket
-            FROM sigs CROSS JOIN (SELECT unnest(range(6)) AS table_id) t
-        )
-        SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
-        FROM buckets a
-        JOIN buckets b ON a.table_id = b.table_id
-                      AND a.bucket = b.bucket
-                      AND a.vec_id < b.vec_id
-    """,
-    description=(
-        "ANN candidate pairs via md5-plane sign-sketch LSH, oracle-checked: "
-        "the portable sibling of embedding_lsh_candidates with a DIFFERENT "
-        "banding geometry (24 planes in 6 tables of 4) so the band-width "
-        "arithmetic is proven at a second shape"
-    ),
-    tags=("similarity", "ann", "lsh", "deterministic"),
-)
-def embedding_lsh_candidates_portable(spark, sf_dir):
-    """Same machinery as embedding_near_dups_portable's candidate stage
-    (lsh_signatures_portable → band_signature_candidates) but surfaced AS
-    the candidate-pair query and at a wider signature (24 planes, 6 bands
-    of 4 — num_tables × planes_per_table must equal the width or the
-    banding guard raises). Every bucket is md5-derived, every projection a
-    decimal-quantized integer sum, so the pair list is bit-identical in any
-    engine. The only shuffle is the bucket equi-join; at 100 TB the
-    ``max_bucket_size`` cap (exercised by the skew probe) bounds the
-    self-join fanout."""
-    from ..operators.similarity import (
-        band_signature_candidates,
-        lsh_signatures_portable,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    sig = lsh_signatures_portable(emb, "vec_id", "embedding", num_planes=24)
-    return band_signature_candidates(
-        sig, "vec_id", num_tables=6, planes_per_table=4, num_planes=24
-    )
-
-
 # ---------------------------------------------------------------------------
 # ML pipeline (§2.11): distributed scaler fit/apply, MSE anomaly scoring,
 # threshold routing (the scored_flows contract), PCA reconstruction scorer,
@@ -2604,194 +2405,6 @@ def stream_stateful_user_counts(spark, sf_dir):
 
 
 @register(
-    "embedding_ivf_topk",
-    oracle=None,
-    description="IVF ANN: KMeans coarse cells + probed exact re-rank (scale path; rows-only)",
-    tags=("similarity", "ann", "ivf"),
-)
-def embedding_ivf_topk(spark, sf_dir):
-    """IVF approximate top-k (operators/similarity.py): nprobe-of-k_cells
-    probing bounds the re-rank to a corpus fraction; recall vs brute force
-    is asserted in tests/test_dedup_similarity.py. KMeans is Spark-specific,
-    so no SQL oracle."""
-    from ..operators.similarity import ivf_index, ivf_search
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    assigned, centroids = ivf_index(emb, k_cells=8, seed=42)
-    return ivf_search(assigned, centroids, queries, nprobe=4, k=3).select(
-        "query_id", "cand_id", "cosine"
-    )
-
-
-@register(
-    "embedding_ivf_topk_portable",
-    oracle="""
-        -- Medoid-quantizer IVF, fully deterministic: 8 seed vectors picked
-        -- by md5(vec_id) order stand in for trained centroids; assignment
-        -- and ranking use order-independent decimal dot products, so every
-        -- engine computes the identical index and result.
-        WITH ex AS (
-            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-                   generate_subscripts(embedding, 1) AS pos
-            FROM embeddings
-        ),
-        norms AS (
-            SELECT vec_id,
-                   CAST(SUM(CAST(x * x AS DECIMAL(28,10))) AS DOUBLE) AS nrm
-            FROM ex GROUP BY 1
-        ),
-        seeds AS (
-            SELECT vec_id AS cell_id FROM embeddings
-            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8
-        ),
-        cdots AS (
-            SELECT v.vec_id, c.vec_id AS cell_id,
-                   CAST(SUM(CAST(v.x * c.x AS DECIMAL(28,10))) AS DOUBLE)
-                       AS dot
-            FROM ex v
-            JOIN ex c ON c.pos = v.pos
-            JOIN seeds s ON c.vec_id = s.cell_id
-            GROUP BY 1, 2
-        ),
-        ranked_cells AS (
-            SELECT d.vec_id, d.cell_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY d.vec_id
-                       ORDER BY d.dot / sqrt(nc.nrm) DESC, d.cell_id) AS crn
-            FROM cdots d JOIN norms nc ON nc.vec_id = d.cell_id
-        ),
-        asg AS (SELECT vec_id, cell_id FROM ranked_cells WHERE crn = 1),
-        probes AS (
-            SELECT vec_id AS query_id, cell_id FROM ranked_cells
-            WHERE vec_id < 8 AND crn <= 2
-        ),
-        cand AS (
-            SELECT p.query_id, a.vec_id AS cand_id
-            FROM probes p
-            JOIN asg a ON a.cell_id = p.cell_id AND a.vec_id <> p.query_id
-        ),
-        dots AS (
-            SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-                   CAST(SUM(CAST(q.x * c.x AS DECIMAL(28,10))) AS DOUBLE)
-                       AS dot
-            FROM cand
-            JOIN ex q ON q.vec_id = cand.query_id
-            JOIN ex c ON c.vec_id = cand.cand_id AND c.pos = q.pos
-            GROUP BY 1, 2
-        ),
-        cos AS (
-            SELECT d.query_id, d.cand_id,
-                   d.dot / (sqrt(nq.nrm) * sqrt(nc.nrm)) AS cosine
-            FROM dots d
-            JOIN norms nq ON nq.vec_id = d.query_id
-            JOIN norms nc ON nc.vec_id = d.cand_id
-        )
-        SELECT query_id, cand_id, cosine, rn
-        FROM (
-            SELECT *, ROW_NUMBER() OVER (
-                PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rn
-            FROM cos
-        )
-        WHERE rn <= 3
-    """,
-    description="deterministic medoid-quantizer IVF ANN (oracle-checked sibling of the KMeans path)",
-    tags=("similarity", "ann", "ivf"),
-)
-def embedding_ivf_topk_portable(spark, sf_dir):
-    """Oracle-checked IVF sibling: `embedding_ivf_topk` is rows-only because
-    MLlib KMeans centroids are seed/engine-specific, which leaves the IVF
-    *mechanism* (cell assignment -> nprobe probing -> within-cell re-rank)
-    without hash-level cross-engine evidence. This variant swaps the trained
-    quantizer for 8 deterministic medoid seeds (smallest md5(vec_id)) and
-    keeps every IVF mechanic identical, with order-independent decimal dot
-    products so Spark and DuckDB build the same index bit-for-bit. The
-    distributed shapes match the production path: seeds/probes are
-    broadcast-sized, assignment is one groupBy over the position-exploded
-    corpus, and the re-rank touches only probed cells."""
-    from pyspark.sql import Window
-
-    from ..sources.catalog import spread_for_compute
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    ex_raw = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "xf")
-    ).select("vec_id", "pos", F.col("xf").cast("double").alias("x"))
-    # guarded spread before the k-way assignment fan-out and the re-rank
-    # dot joins (single task off the 1-partition fixture scan; decimal
-    # sums and per-key argmax/argmin are partition-independent)
-    ex = spread_for_compute(ex_raw, "vec_id", "pos")
-    norms = ex.groupBy("vec_id").agg(
-        F.sum((F.col("x") * F.col("x")).cast("decimal(28,10)"))
-        .cast("double")
-        .alias("nrm")
-    )
-    seeds = (
-        emb.select(F.col("vec_id").alias("cell_id"))
-        .orderBy(F.md5(F.col("cell_id").cast("string")), "cell_id")
-        .limit(8)
-    )
-    cex = ex_raw.join(
-        F.broadcast(seeds), ex_raw.vec_id == F.col("cell_id"), "inner"
-    ).select("cell_id", "pos", F.col("x").alias("cx"))
-    cdots = (
-        ex.join(F.broadcast(cex), "pos")
-        .groupBy("vec_id", "cell_id")
-        .agg(
-            F.sum((F.col("x") * F.col("cx")).cast("decimal(28,10)"))
-            .cast("double")
-            .alias("dot")
-        )
-    )
-    ncell = norms.select(
-        F.col("vec_id").alias("cell_id"), F.col("nrm").alias("nrm_cell")
-    )
-    wc = Window.partitionBy("vec_id").orderBy(
-        (F.col("dot") / F.sqrt("nrm_cell")).desc(), F.col("cell_id")
-    )
-    ranked_cells = cdots.join(F.broadcast(ncell), "cell_id").withColumn(
-        "crn", F.row_number().over(wc)
-    )
-    asg = ranked_cells.filter(F.col("crn") == 1).select("vec_id", "cell_id")
-    probes = (
-        ranked_cells.filter((F.col("vec_id") < 8) & (F.col("crn") <= 2))
-        .select(F.col("vec_id").alias("query_id"), "cell_id")
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(asg, "cell_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("cand_id"))
-    )
-    qx = ex.select(F.col("vec_id").alias("query_id"), "pos", F.col("x").alias("qx"))
-    cx = ex.select(F.col("vec_id").alias("cand_id"), "pos", F.col("x").alias("cx"))
-    dots = (
-        F.broadcast(cand)
-        .join(qx, "query_id")
-        .join(cx, ["cand_id", "pos"])
-        .groupBy("query_id", "cand_id")
-        .agg(
-            F.sum((F.col("qx") * F.col("cx")).cast("decimal(28,10)"))
-            .cast("double")
-            .alias("dot")
-        )
-    )
-    nq = norms.select(F.col("vec_id").alias("query_id"), F.col("nrm").alias("nrm_q"))
-    nc = norms.select(F.col("vec_id").alias("cand_id"), F.col("nrm").alias("nrm_c"))
-    cos = (
-        dots.join(F.broadcast(nq), "query_id")
-        .join(nc, "cand_id")
-        .select(
-            "query_id",
-            "cand_id",
-            (F.col("dot") / (F.sqrt("nrm_q") * F.sqrt("nrm_c"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return cos.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 3)
-
-
-@register(
     "contrastive_negatives",
     oracle="""
         -- Deterministic negative sampling for contrastive training: each
@@ -3120,100 +2733,6 @@ def doc_tfidf_topk(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     return tf_idf_topk(docs, "doc_id", "text", k=3)
-
-
-@register(
-    "embedding_near_dups",
-    oracle=None,
-    description="embedding-cosine near-dup pairs: LSH candidates + exact cosine verify (rows-only: sketch uses xxhash64)",
-    tags=("dedup", "similarity", "ann"),
-)
-def embedding_near_dups(spark, sf_dir):
-    """Verified pairs are a subset of the brute-force threshold pairs by
-    construction; subset + recall asserted in tests/test_dedup_similarity.py.
-    Threshold 0.3 ≈ the 99th percentile of candidate-pair cosine in the
-    synthetic corpus (max 0.49 — it has no true near-identical vectors), so
-    the query returns the most-similar ~1% instead of an empty frame."""
-    from ..operators.similarity import embedding_near_dups as op
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return op(emb, "vec_id", "embedding", threshold=0.3)
-
-
-@register(
-    "embedding_near_dups_portable",
-    oracle="""
-        WITH ex AS (
-            SELECT vec_id, i AS pos, CAST(embedding[i + 1] AS DOUBLE) AS x
-            FROM embeddings, UNNEST(range(len(embedding))) AS t(i)
-        ),
-        terms AS (
-            SELECT vec_id, p.j,
-                   CAST(floor(x * (CASE WHEN CAST(concat('0x',
-                            substr(md5(p.j || ':' || pos), 1, 1)) AS INT)
-                            % 2 = 1 THEN 1.0 ELSE -1.0 END)
-                        * 1000000.0 + 0.5) AS BIGINT) AS term
-            FROM ex CROSS JOIN (SELECT unnest(range(16)) AS j) p
-        ),
-        projs AS (SELECT vec_id, j, SUM(term) AS p FROM terms GROUP BY 1, 2),
-        sigs AS (
-            SELECT vec_id,
-                   CAST(SUM(CASE WHEN p > 0
-                            THEN (CAST(1 AS BIGINT) << CAST(j AS INT))
-                            ELSE 0 END) AS BIGINT) AS sig
-            FROM projs GROUP BY 1
-        ),
-        buckets AS (
-            SELECT vec_id, t.table_id,
-                   (sig >> (t.table_id * 4)) & 15 AS bucket
-            FROM sigs CROSS JOIN (SELECT unnest(range(4)) AS table_id) t
-        ),
-        cands AS (
-            SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
-            FROM buckets a
-            JOIN buckets b ON a.table_id = b.table_id
-                          AND a.bucket = b.bucket
-                          AND a.vec_id < b.vec_id
-        ),
-        norms AS (
-            SELECT vec_id,
-                   CAST(SUM(CAST(x * x AS DECIMAL(28,10))) AS DOUBLE) AS nrm
-            FROM ex GROUP BY 1
-        ),
-        dots AS (
-            SELECT c.id1, c.id2,
-                   CAST(SUM(CAST(e1.x * e2.x AS DECIMAL(28,10))) AS DOUBLE)
-                       AS dot
-            FROM cands c
-            JOIN ex e1 ON e1.vec_id = c.id1
-            JOIN ex e2 ON e2.vec_id = c.id2 AND e2.pos = e1.pos
-            GROUP BY 1, 2
-        )
-        SELECT d.id1, d.id2,
-               d.dot / (sqrt(n1.nrm) * sqrt(n2.nrm)) AS cosine
-        FROM dots d
-        JOIN norms n1 ON n1.vec_id = d.id1
-        JOIN norms n2 ON n2.vec_id = d.id2
-        WHERE d.dot / (sqrt(n1.nrm) * sqrt(n2.nrm)) >= 0.3
-    """,
-    description=(
-        "embedding near-dup pairs, engine-portable: md5-plane LSH candidates"
-        " + decimal-exact cosine verify (oracle-checked end to end)"
-    ),
-    tags=("dedup", "similarity", "ann", "deterministic"),
-)
-def embedding_near_dups_portable(spark, sf_dir):
-    """Oracle-checked composition of the two already-proven pieces
-    (lsh_signatures_portable + decimal-summed exact cosine): the sketch is
-    md5-derived so any engine reproduces every bucket, and the verify's dot
-    products are order-independent decimal sums, so the pair list and the
-    cosine values are bit-identical cross-engine. Threshold 0.3 as in
-    embedding_near_dups (the synthetic corpus has no true near-identical
-    vectors; 0.3 ≈ its 99th percentile of candidate cosine)."""
-    from ..operators.similarity import embedding_near_dups_portable as op
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return op(emb, "vec_id", "embedding", threshold=0.3)
 
 
 @register(
@@ -3622,39 +3141,6 @@ def stratified_sample_counts(spark, sf_dir):
         {"click": 0.1, "view": 0.25, "purchase": 1.0, "signup": 1.0, "error": 1.0},
     )
     return sampled.groupBy("event_type").agg(F.count("*").alias("n_sampled"))
-
-
-@register(
-    "embedding_label_centroids",
-    oracle="""
-        WITH e AS (
-            SELECT label,
-                   generate_subscripts(embedding, 1) - 1 AS dim,
-                   unnest(embedding) AS val
-            FROM embeddings
-        )
-        -- floor-quantized integer sums, NOT decimal casts: engines disagree
-        -- on decimal tie rounding (HALF_UP vs half-even); floor over IEEE
-        -- doubles is bit-identical in both
-        SELECT label, dim,
-               CAST(SUM(CAST(floor(CAST(val AS DOUBLE) * 1e10 + 0.5)
-                             AS BIGINT)) AS DOUBLE) / 1e10 / COUNT(*)
-                   AS mean_val,
-               COUNT(*) AS n_vecs
-        FROM e
-        GROUP BY 1, 2
-    """,
-    description="per-class embedding centroids, long format (label, dim, mean) — decimal-exact",
-    tags=("embedding", "aggregation"),
-)
-def embedding_label_centroids(spark, sf_dir):
-    """Long-format class centroids (operators/similarity.py::centroids_long):
-    posexplode + one partial-aggregated groupBy; shuffle carries one row
-    per (label, dim)."""
-    from ..operators.similarity import centroids_long
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return centroids_long(emb, "label")
 
 
 @register(
@@ -6149,44 +5635,6 @@ def multimodal_feature_histogram(spark, sf_dir):
 
 
 @register(
-    "embedding_lsh_signatures_portable",
-    oracle="""
-        WITH ex AS (
-            SELECT vec_id, i AS pos, CAST(embedding[i + 1] AS DOUBLE) AS x
-            FROM embeddings, UNNEST(range(len(embedding))) AS t(i)
-            WHERE vec_id < 500
-        ),
-        terms AS (
-            SELECT vec_id, p.j,
-                   CAST(floor(x * (CASE WHEN CAST(concat('0x',
-                            substr(md5(p.j || ':' || pos), 1, 1)) AS INT)
-                            % 2 = 1 THEN 1.0 ELSE -1.0 END)
-                        * 1000000.0 + 0.5) AS BIGINT) AS term
-            FROM ex CROSS JOIN (SELECT unnest(range(16)) AS j) p
-        ),
-        projs AS (SELECT vec_id, j, SUM(term) AS p FROM terms GROUP BY 1, 2)
-        SELECT vec_id,
-               CAST(SUM(CASE WHEN p > 0
-                        THEN (CAST(1 AS BIGINT) << CAST(j AS INT))
-                        ELSE 0 END) AS BIGINT) AS sig
-        FROM projs
-        GROUP BY 1
-    """,
-    description=(
-        "engine-portable hyperplane LSH signatures (md5 plane signs, "
-        "integer-quantized projections) — the ANN sketch, oracle-checked "
-        "bit-for-bit"
-    ),
-    tags=("similarity", "ann", "lsh", "deterministic"),
-)
-def embedding_lsh_signatures_portable(spark, sf_dir):
-    from ..operators.similarity import lsh_signatures_portable
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
-    return lsh_signatures_portable(emb)
-
-
-@register(
     "feature_correlations",
     oracle="""
         WITH m AS (
@@ -7228,47 +6676,6 @@ def corpus_yield_by_source(spark, sf_dir):
             ).alias("yield_rate"),
         )
     )
-
-
-@register(
-    "embedding_quantize_int8",
-    oracle="""
-        -- Per-dim int8 quantization stats. Codes are floor(x+0.5) over IEEE
-        -- doubles and the error sum is floor-quantized to integers — both
-        -- bit-identical across engines (decimal casts are not: tie rounding
-        -- differs HALF_UP vs half-even).
-        WITH e AS (
-            SELECT generate_subscripts(embedding, 1) - 1 AS dim,
-                   CAST(unnest(embedding) AS DOUBLE) AS val
-            FROM embeddings
-        ), s AS (
-            SELECT dim, MIN(val) AS mn, MAX(val) AS mx FROM e GROUP BY dim
-        ), c AS (
-            SELECT e.dim, s.mn, s.mx, e.val,
-                   CASE WHEN s.mx > s.mn
-                        THEN CAST(floor((e.val - s.mn) / (s.mx - s.mn) * 255
-                                        + 0.5) AS BIGINT)
-                        ELSE 0 END AS code
-            FROM e JOIN s USING (dim)
-        )
-        SELECT dim, mn, mx,
-               CAST(COUNT(*) AS BIGINT) AS n_vecs,
-               CAST(SUM(code) AS DOUBLE) / COUNT(*) AS mean_code,
-               CAST(SUM(CAST(floor(abs(val - (mn + CAST(code AS DOUBLE) / 255.0
-                                              * (mx - mn))) * 1e10 + 0.5)
-                             AS BIGINT)) AS DOUBLE) / 1e10 / COUNT(*)
-                   AS mean_abs_err,
-        FROM c
-        GROUP BY dim, mn, mx
-    """,
-    description="int8 embedding quantization stats per dimension (4x storage/shuffle cut before ANN)",
-    tags=("embedding", "quantization"),
-)
-def embedding_quantize_int8(spark, sf_dir):
-    from ..operators.similarity import quantize_int8_stats
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return quantize_int8_stats(emb, "embedding")
 
 
 @register(
@@ -10560,151 +9967,6 @@ def chunk_level_dedup_stats(spark, sf_dir):
 
 
 @register(
-    "embedding_retrieval_label_consistency",
-    oracle="""
-        -- retrieval-quality eval: does each query's nearest neighbor
-        -- carry the same class label? (label-consistency@1, the zero-
-        -- annotation sanity metric for an embedding index)
-        WITH ex AS (
-            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-                   generate_subscripts(embedding, 1) AS pos
-            FROM embeddings
-        ),
-        norms AS (
-            SELECT vec_id,
-                   CAST(SUM(CAST(x * x AS DECIMAL(28,10))) AS DOUBLE) AS nrm
-            FROM ex GROUP BY 1
-        ),
-        dots AS (
-            SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-                   CAST(SUM(CAST(q.x * c.x AS DECIMAL(28,10))) AS DOUBLE)
-                       AS dot
-            FROM ex q
-            JOIN ex c ON q.pos = c.pos
-                      AND q.vec_id < 50 AND c.vec_id <> q.vec_id
-            GROUP BY 1, 2
-        ),
-        top1 AS (
-            SELECT query_id, cand_id
-            FROM (
-                SELECT d.query_id, d.cand_id,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY d.query_id
-                           ORDER BY d.dot / (sqrt(nq.nrm) * sqrt(nc.nrm))
-                                        DESC,
-                                    d.cand_id) AS rn
-                FROM dots d
-                JOIN norms nq ON d.query_id = nq.vec_id
-                JOIN norms nc ON d.cand_id = nc.vec_id
-            )
-            WHERE rn = 1
-        )
-        SELECT eq.label,
-               CAST(COUNT(*) AS BIGINT) AS n_queries,
-               CAST(SUM(CASE WHEN ec.label = eq.label THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_matched,
-               CAST(SUM(CASE WHEN ec.label = eq.label THEN 1 ELSE 0 END)
-                    AS DOUBLE) / COUNT(*) AS consistency_at_1
-        FROM top1 t
-        JOIN embeddings eq ON t.query_id = eq.vec_id
-        JOIN embeddings ec ON t.cand_id = ec.vec_id
-        GROUP BY 1
-    """,
-    description=(
-        "retrieval eval: label-consistency@1 of exact nearest neighbors "
-        "over a 50-query sample, rolled up per class"
-    ),
-    tags=("similarity", "ml", "quality"),
-)
-def embedding_retrieval_label_consistency(spark, sf_dir):
-    """The zero-annotation retrieval sanity check: if nearest neighbors
-    don't even share the class label, the index isn't ready for RAG.
-    Same decimal-exact cosine skeleton as embedding_cosine_topk (the
-    query side is a bounded sample, its exploded form rides a broadcast);
-    rank-1 ties break on cand_id so the metric is engine-deterministic;
-    the label joins move one row per query."""
-    from pyspark.sql import Window
-
-    from ..sources.catalog import spread_for_compute
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    ex_raw = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "xf")
-    ).select("vec_id", "pos", F.col("xf").cast("double").alias("x"))
-    # the broadcast dot join below fans each exploded row out ~|queries|
-    # ways before the partial aggregate; off the fixture's 1-partition scan
-    # that 6.4M-row expansion ran in ONE task (measured 7.5 s of a 8.5 s
-    # wall). Guarded spread: no-op on well-split corpora; decimal sums are
-    # partition-independent, so results are bit-unchanged (guide §2.5).
-    ex = spread_for_compute(ex_raw, "vec_id", "pos")
-    norms = ex.groupBy("vec_id").agg(
-        F.sum((F.col("x") * F.col("x")).cast("decimal(28,10)"))
-        .cast("double")
-        .alias("nrm")
-    )
-    # the broadcast-sized query side reads the raw 1-task projection — no
-    # reason to pay the spread exchange inside the broadcast build
-    q = ex_raw.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), "pos", F.col("x").alias("qx")
-    )
-    dots = (
-        ex.join(F.broadcast(q), "pos")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("cand_id"))
-        .agg(
-            F.sum((F.col("qx") * F.col("x")).cast("decimal(28,10)"))
-            .cast("double")
-            .alias("dot")
-        )
-    )
-    nq = norms.select(
-        F.col("vec_id").alias("query_id"), F.col("nrm").alias("nrm_q")
-    )
-    nc = norms.select(
-        F.col("vec_id").alias("cand_id"), F.col("nrm").alias("nrm_c")
-    )
-    cos = (
-        dots.join(F.broadcast(nq), "query_id")
-        .join(nc, "cand_id")
-        .select(
-            "query_id",
-            "cand_id",
-            (F.col("dot") / (F.sqrt("nrm_q") * F.sqrt("nrm_c"))).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    top1 = (
-        cos.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "cand_id")
-    )
-    labels = emb.select("vec_id", "label")
-    lq = labels.select(
-        F.col("vec_id").alias("query_id"), F.col("label").alias("q_label")
-    )
-    lc = labels.select(
-        F.col("vec_id").alias("cand_id"), F.col("label").alias("c_label")
-    )
-    # broadcast the ≤|Q|-row top1 result INTO the corpus-sized label scans
-    # — broadcasting lq/lc would ship the whole corpus's labels to every
-    # executor (the forced-broadcast-of-a-data-scaled-frame job-killer)
-    qside = lq.join(F.broadcast(top1), "query_id")
-    joined = lc.join(F.broadcast(qside), "cand_id")
-    match = F.sum(
-        F.when(F.col("c_label") == F.col("q_label"), 1).otherwise(0)
-    )
-    return joined.groupBy(F.col("q_label").alias("label")).agg(
-        F.count("*").alias("n_queries"),
-        match.alias("n_matched"),
-        (match.cast("double") / F.count("*")).alias("consistency_at_1"),
-    )
-
-
-@register(
     "near_dup_threshold_sensitivity",
     oracle=f"""
         -- ONE candidate+verify computation, three thresholds read off the
@@ -11713,444 +10975,6 @@ def daily_growth_accounting(spark, sf_dir):
     )
 
 
-_SEMDEDUP_CTES = """
-        WITH ex AS (
-            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-                   generate_subscripts(embedding, 1) AS pos
-            FROM embeddings
-        ),
-        norms AS (
-            SELECT vec_id,
-                   CAST(SUM(CAST(x * x AS DECIMAL(28,10))) AS DOUBLE) AS nrm
-            FROM ex GROUP BY 1
-        ),
-        cent AS (
-            SELECT vec_id AS cent_vid,
-                   ROW_NUMBER() OVER (
-                       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1
-                       AS cluster_id
-            FROM embeddings
-            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8
-        ),
-        cex AS (
-            SELECT c.cluster_id, e.pos, e.x AS cx
-            FROM cent c JOIN ex e ON e.vec_id = c.cent_vid
-        ),
-        cnorm AS (
-            SELECT c.cluster_id, n.nrm AS cnrm
-            FROM cent c JOIN norms n ON n.vec_id = c.cent_vid
-        ),
-        adots AS (
-            SELECT e.vec_id, c.cluster_id,
-                   CAST(SUM(CAST(e.x * c.cx AS DECIMAL(28,10))) AS DOUBLE)
-                       AS dot
-            FROM ex e JOIN cex c ON e.pos = c.pos
-            GROUP BY 1, 2
-        ),
-        acos AS (
-            SELECT a.vec_id, a.cluster_id,
-                   a.dot / (sqrt(n.nrm) * sqrt(cn.cnrm)) AS c
-            FROM adots a
-            JOIN norms n ON a.vec_id = n.vec_id
-            JOIN cnorm cn ON a.cluster_id = cn.cluster_id
-        ),
-        assign AS (
-            SELECT vec_id, cluster_id FROM (
-                SELECT *, ROW_NUMBER() OVER (
-                    PARTITION BY vec_id ORDER BY c DESC, cluster_id) AS rn
-                FROM acos
-            ) WHERE rn = 1
-        ),
-        exc AS (
-            SELECT a.cluster_id, e.vec_id, e.pos, e.x
-            FROM ex e JOIN assign a ON e.vec_id = a.vec_id
-        ),
-        pdots AS (
-            SELECT a.cluster_id, a.vec_id AS id1, b.vec_id AS id2,
-                   CAST(SUM(CAST(a.x * b.x AS DECIMAL(28,10))) AS DOUBLE)
-                       AS dot
-            FROM exc a JOIN exc b
-              ON a.cluster_id = b.cluster_id AND a.pos = b.pos
-             AND a.vec_id < b.vec_id
-            GROUP BY 1, 2, 3
-        ),
-        maxprev AS (
-            SELECT id2,
-                   MAX(dot / (sqrt(n1.nrm) * sqrt(n2.nrm))) AS max_cos_prev
-            FROM pdots
-            JOIN norms n1 ON id1 = n1.vec_id
-            JOIN norms n2 ON id2 = n2.vec_id
-            GROUP BY 1
-        )
-"""
-
-
-@register(
-    "embedding_semdedup_kept",
-    oracle=_SEMDEDUP_CTES
-    + """
-        SELECT s.cluster_id,
-               CAST(COUNT(*) AS BIGINT) AS n_members,
-               CAST(SUM(CASE WHEN COALESCE(m.max_cos_prev, -1.0) <= 0.3
-                             THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-        FROM assign s LEFT JOIN maxprev m ON s.vec_id = m.id2
-        GROUP BY 1
-    """,
-    description=(
-        "SemDeDup semantic dedup (arXiv:2303.09540): md5-pick centroids, "
-        "exact-decimal cosine assignment, within-cluster near-dup drop"
-    ),
-    tags=("dedup", "similarity", "semdedup"),
-)
-def embedding_semdedup_kept(spark, sf_dir):
-    """Per-cluster survivor counts of the SemDeDup pipeline: k clusters
-    around deterministically-picked centroids, a vector dropped when a
-    lower-id cluster member exceeds cosine tau. The quadratic stage is
-    within-cluster only — k scales with the corpus so cluster sizes stay
-    bounded (the paper runs 50k clusters over 5B LAION embeddings)."""
-    from ..operators.similarity import semdedup_portable
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    t = semdedup_portable(emb, k=8, tau=0.3)
-    return t.groupBy("cluster_id").agg(
-        F.count("*").alias("n_members"),
-        F.sum(F.col("is_kept").cast("int")).alias("n_kept"),
-    )
-
-
-@register(
-    "embedding_semdedup_threshold_sweep",
-    oracle=_SEMDEDUP_CTES
-    + """
-        SELECT t.tau,
-               CAST(COUNT(*) AS BIGINT) AS n_total,
-               CAST(SUM(CASE WHEN COALESCE(m.max_cos_prev, -1.0) <= t.tau
-                             THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-        FROM assign s
-        LEFT JOIN maxprev m ON s.vec_id = m.id2
-        CROSS JOIN (SELECT unnest([0.20, 0.25, 0.30, 0.35, 0.40]) AS tau) t
-        GROUP BY 1
-    """,
-    description=(
-        "SemDeDup retention curve: survivors at five cosine thresholds "
-        "from one pairwise pass (re-threshold without recompute)"
-    ),
-    tags=("dedup", "similarity", "semdedup"),
-)
-def embedding_semdedup_threshold_sweep(spark, sf_dir):
-    """Budget-setting view for semantic dedup: the per-vector
-    max-cosine-to-lower-id-cluster-member from one SemDeDup pairwise pass
-    is re-thresholded at five taus — choosing the dedup strength costs one
-    broadcast re-aggregation, not five pipeline reruns."""
-    from ..operators.similarity import semdedup_portable
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    t = semdedup_portable(emb, k=8, tau=0.3)
-    taus = spark.createDataFrame(
-        [(0.20,), (0.25,), (0.30,), (0.35,), (0.40,)], "tau double"
-    )
-    return t.crossJoin(F.broadcast(taus)).groupBy("tau").agg(
-        F.count("*").alias("n_total"),
-        F.sum(
-            (F.col("max_cos_prev") <= F.col("tau")).cast("int")
-        ).alias("n_kept"),
-    )
-
-
-@register(
-    "pq_init_assignment_portable",
-    oracle="""
-        -- product-quantization iteration 0 under the md5-medoid init:
-        -- per-subspace code histogram of the first assignment. Subspace
-        -- of a position is floor((pos-1)/dsub) (1-based unnest); squared
-        -- distances sum DECIMAL-exact, ties break by code rank.
-        WITH cw AS (
-            SELECT vec_id AS cw_id,
-                   ROW_NUMBER() OVER (
-                       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-                   ) - 1 AS code_rank
-            FROM embeddings
-            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-            LIMIT 16
-        ),
-        ex AS (
-            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-                   generate_subscripts(embedding, 1) AS pos
-            FROM embeddings
-        ),
-        cx AS (
-            SELECT cw.code_rank, e.pos, e.x AS c
-            FROM cw JOIN ex e ON e.vec_id = cw.cw_id
-        ),
-        d AS (
-            SELECT e.vec_id,
-                   CAST(FLOOR((e.pos - 1) / 8) AS INT) AS sub,
-                   c.code_rank,
-                   SUM(CAST((e.x - c.c) * (e.x - c.c) AS DECIMAL(28,10)))
-                       AS d2
-            FROM ex e JOIN cx c ON e.pos = c.pos
-            GROUP BY 1, 2, 3
-        ),
-        a AS (
-            SELECT vec_id, sub, code_rank,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY vec_id, sub ORDER BY d2, code_rank
-                   ) AS rn
-            FROM d
-        )
-        SELECT sub, CAST(code_rank AS INT) AS code_rank,
-               CAST(COUNT(*) AS BIGINT) AS n_assigned
-        FROM a
-        WHERE rn = 1
-        GROUP BY 1, 2
-    """,
-    description=(
-        "product-quantization iteration-0 code histogram under the "
-        "md5-medoid init, oracle-checked per subspace"
-    ),
-    tags=("ml", "similarity", "pq", "deterministic"),
-)
-def pq_init_assignment_portable(spark, sf_dir):
-    """Cross-engine proof of the PQ core (operators/pq.py): the
-    deterministic codebook init and the per-subspace nearest-codeword
-    assignment recomputed declaratively — posexplode, pos-join against
-    the 16 seed rows, decimal-exact squared distances grouped by
-    (vector, subspace), rank-tie argmin — and checked against a
-    from-scratch SQL oracle. Later Lloyd iterations average floats and
-    stay rows-only by necessity (embedding_pq_distortion_curve)."""
-    from pyspark.sql.window import Window as W
-
-    from ..operators.relational import bounded_ranked_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # distributed TakeOrdered(16) + bounded self-join rank — no
-    # single-partition WindowExec anywhere in the codeword pick
-    cw = bounded_ranked_topk(
-        emb.select(
-            F.col("vec_id").alias("cw_id"),
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
-        ),
-        [("h", "asc"), ("cw_id", "asc")],
-        16,
-        out="__rk",
-    ).select("cw_id", (F.col("__rk") - 1).cast("int").alias("code_rank"))
-    ex_raw = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "xf")
-    ).select("vec_id", "pos", F.col("xf").cast("double").alias("x"))
-    cx = cw.join(
-        ex_raw.select(
-            F.col("vec_id").alias("cw_id"), "pos", F.col("x").alias("c")
-        ),
-        "cw_id",
-    ).select("code_rank", "pos", "c")
-    # guarded spread before the 16-way codeword expansion + decimal
-    # battery (single task off the fixture's 1-partition scan — r16
-    # measured 3.1 s in one task; decimal sums and the per-(vec, sub)
-    # argmin are partition-independent, results bit-unchanged). The
-    # broadcast side cx stays on the raw 1-task projection.
-    from ..sources.catalog import spread_for_compute
-
-    ex = spread_for_compute(ex_raw, "vec_id", "pos")
-    d = (
-        ex.join(F.broadcast(cx), "pos")
-        .groupBy(
-            "vec_id",
-            F.floor(F.col("pos") / 8).cast("int").alias("sub"),
-            "code_rank",
-        )
-        .agg(
-            F.sum(
-                ((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).cast(
-                    "decimal(28,10)"
-                )
-            ).alias("d2")
-        )
-    )
-    a = d.withColumn(
-        "rn",
-        F.row_number().over(
-            W.partitionBy("vec_id", "sub").orderBy("d2", "code_rank")
-        ),
-    ).where(F.col("rn") == 1)
-    return a.groupBy("sub", F.col("code_rank").cast("int").alias("code_rank")).agg(
-        F.count("*").cast("bigint").alias("n_assigned")
-    )
-
-
-@register(
-    "embedding_pq_distortion_curve",
-    oracle=None,
-    description=(
-        "PQ codebook training curve: total quantization distortion per "
-        "fused-Lloyd iteration (rows-only; monotone invariant in pytest)"
-    ),
-    tags=("ml", "similarity", "pq"),
-)
-def embedding_pq_distortion_curve(spark, sf_dir):
-    """Distortion per training iteration of the fused per-subspace
-    Lloyd's loop — non-increasing by construction. Driver state is the
-    m×ks×dsub codebook only; each iteration is one mapInPandas pass."""
-    from ..operators.pq import fit_pq
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    fit = fit_pq(emb, m=8, ks=16, iters=3)
-    rows = [(i, float(d)) for i, d in enumerate(fit.distortions)]
-    return spark.createDataFrame(rows, "iter int, distortion double")
-
-
-@register(
-    "embedding_pq_adc_topk",
-    oracle=None,
-    description=(
-        "PQ/ADC approximate top-k over 24-byte codes (~10x compression); "
-        "recall@3 = 0.72 vs exact L2 measured in tests/test_pq.py"
-    ),
-    tags=("ml", "similarity", "pq", "ann"),
-)
-def embedding_pq_adc_topk(spark, sf_dir):
-    """The compressed-domain ANN path: train codebooks, encode the corpus
-    to (id, sub, code) — m=32 six-bit codes (24 bytes) a vector at rest,
-    ~10x under float32 — and answer top-k for the first 8 vectors via
-    asymmetric distance computation: a broadcast (query × sub × code)
-    lookup table, one grouped sum over the codes, one window top-k. The
-    corpus scan never touches the original floats. m=32/ks=64 is the
-    measured 0.72-recall@3 operating point on the unclustered synthetic
-    gaussians (PQ's worst case — real embedding corpora cluster)."""
-    from ..operators.pq import codebook_df, fit_pq, pq_adc_topk, pq_encode
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    fit = fit_pq(emb, m=32, ks=64, iters=3)
-    cb = codebook_df(spark, fit.codebooks)
-    enc = pq_encode(emb, cb, m=32)
-    queries = emb.filter(F.col("vec_id") < 8)
-    return pq_adc_topk(enc, cb, queries, m=32, k=3)
-
-
-@register(
-    "embedding_pq_adc_topk_portable",
-    oracle="""
-        -- ADC serving path under the deterministic md5-medoid iteration-0
-        -- codebook (no Lloyd float averaging): encode = decimal-exact
-        -- per-subspace argmin, ADC table = the same decimal distances for
-        -- the query rows, score = exact sum cast to double, top-3 per
-        -- query with (dist, cand_id) ties. Every engine computes the
-        -- identical codes, table, and ranking bit-for-bit.
-        WITH cw AS (
-            SELECT vec_id AS cw_id,
-                   ROW_NUMBER() OVER (
-                       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-                   ) - 1 AS code
-            FROM embeddings
-            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-            LIMIT 16
-        ),
-        ex AS (
-            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-                   generate_subscripts(embedding, 1) AS pos
-            FROM embeddings
-        ),
-        cx AS (
-            SELECT cw.code, e.pos,
-                   CAST(FLOOR((e.pos - 1) / 8) AS INT) AS sub, e.x AS c
-            FROM cw JOIN ex e ON e.vec_id = cw.cw_id
-        ),
-        d AS (
-            SELECT e.vec_id, c.sub, c.code,
-                   SUM(CAST((e.x - c.c) * (e.x - c.c) AS DECIMAL(28,10)))
-                       AS d2
-            FROM ex e JOIN cx c ON e.pos = c.pos
-            GROUP BY 1, 2, 3
-        ),
-        enc AS (
-            SELECT vec_id, sub, code FROM (
-                SELECT vec_id, sub, code,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY vec_id, sub ORDER BY d2, code
-                       ) AS arn
-                FROM d
-            ) WHERE arn = 1
-        ),
-        adc AS (
-            SELECT vec_id AS query_id, sub, code, d2 AS pd
-            FROM d WHERE vec_id < 8
-        ),
-        scored AS (
-            SELECT a.query_id, e.vec_id AS cand_id,
-                   CAST(SUM(a.pd) AS DOUBLE) AS adc_dist,
-                   COUNT(*) AS n_sub
-            FROM enc e
-            JOIN adc a ON a.sub = e.sub AND a.code = e.code
-            WHERE e.vec_id <> a.query_id
-            GROUP BY 1, 2
-        )
-        SELECT query_id, cand_id, adc_dist, CAST(rn AS INT) AS rn
-        FROM (
-            SELECT query_id, cand_id, adc_dist,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY query_id ORDER BY adc_dist, cand_id
-                   ) AS rn
-            FROM scored WHERE n_sub = 8
-        )
-        WHERE rn <= 3
-    """,
-    description=(
-        "deterministic md5-medoid PQ/ADC top-k, decimal-exact encode and "
-        "lookup table (oracle-checked sibling of the trained ADC path)"
-    ),
-    tags=("ml", "similarity", "pq", "ann", "deterministic"),
-)
-def embedding_pq_adc_topk_portable(spark, sf_dir):
-    """Oracle-checked ADC sibling: `embedding_pq_adc_topk` is rows-only
-    because trained Lloyd codebooks average floats (order-dependent), so
-    the ADC *serving* mechanics (codes-only scan, broadcast lookup table,
-    grouped-sum distance, window top-k) lacked hash-level cross-engine
-    evidence — pq_init_assignment_portable covers only the encode argmin.
-    This variant runs the REAL operators (pq_encode + pq_adc_topk, both
-    exact=True) against the deterministic md5-medoid iteration-0 codebook
-    from init_codebooks, so the exact plan a production search executes —
-    broadcast codebook join, map-side-combined argmin encode, broadcast
-    ADC table, m-lookup grouped sum — is what DuckDB's from-scratch SQL
-    re-derivation must match bit-for-bit."""
-    from ..operators.pq import (
-        codebook_df,
-        init_codebooks,
-        pq_adc_topk,
-        pq_encode,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cb = codebook_df(spark, init_codebooks(emb, m=8, ks=16))
-    enc = pq_encode(emb, cb, m=8, exact=True)
-    queries = emb.filter(F.col("vec_id") < 8)
-    return pq_adc_topk(enc, cb, queries, m=8, k=3, exact=True)
-
-
-@register(
-    "embedding_ivfpq_topk",
-    oracle=None,
-    description=(
-        "IVF-PQ (FAISS IVFADC shape): coarse cells + residual PQ codes, "
-        "probed-cell ADC top-k; recall@3 = 0.71 at nprobe=4 in test_pq.py"
-    ),
-    tags=("ml", "similarity", "pq", "ann"),
-)
-def embedding_ivfpq_topk(spark, sf_dir):
-    """The composed ANN scale path: KMeans cells, PQ codebooks trained on
-    the residuals, the corpus stored as (id, cell_id, sub, code) — the
-    layout that, written partitioned by cell_id, makes a search's scan
-    partition-pruned to the probed cells AND codes-only (never the
-    floats). MLlib KMeans seeds make the cells engine-specific, so this
-    is rows-only; the oracle-checked siblings are
-    pq_init_assignment_portable (PQ assignment math) and
-    embedding_ivf_topk_portable (probed-cell pruning math)."""
-    from ..operators.pq import ivfpq_index, ivfpq_search
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    enc, cent, cb, _fit = ivfpq_index(emb, k_cells=8, m=32, ks=64, iters=3)
-    queries = emb.filter(F.col("vec_id") < 8)
-    return ivfpq_search(enc, cent, cb, queries, m=32, nprobe=4, k=3)
-
-
 _DSIR_ORACLE_CORE = """
         tokarr AS (
             SELECT doc_id, source,
@@ -12283,84 +11107,6 @@ def dsir_selection_by_source(spark, sf_dir):
 
 
 @register(
-    "stream_pq_index_update",
-    oracle="""
-        -- the streamed PQ index must equal the batch encode of the whole
-        -- corpus against the committed md5-medoid codebook: per-(sub,
-        -- code) histogram, decimal-exact distances, ties to lowest code.
-        WITH cw AS (
-            SELECT vec_id AS cw_id,
-                   ROW_NUMBER() OVER (
-                       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-                   ) - 1 AS code
-            FROM embeddings
-            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-            LIMIT 16
-        ),
-        ex AS (
-            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-                   generate_subscripts(embedding, 1) AS pos
-            FROM embeddings
-        ),
-        cx AS (
-            SELECT cw.code, e.pos, e.x AS c
-            FROM cw JOIN ex e ON e.vec_id = cw.cw_id
-        ),
-        d AS (
-            SELECT e.vec_id,
-                   CAST(FLOOR((e.pos - 1) / 8) AS INT) AS sub,
-                   c.code,
-                   SUM(CAST((e.x - c.c) * (e.x - c.c) AS DECIMAL(28,10)))
-                       AS d2
-            FROM ex e JOIN cx c ON e.pos = c.pos
-            GROUP BY 1, 2, 3
-        ),
-        a AS (
-            SELECT vec_id, sub, code,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY vec_id, sub ORDER BY d2, code
-                   ) AS rn
-            FROM d
-        )
-        SELECT sub, CAST(code AS INT) AS code,
-               CAST(COUNT(*) AS BIGINT) AS n_vectors
-        FROM a
-        WHERE rn = 1
-        GROUP BY 1, 2
-    """,
-    description=(
-        "streaming vector-index maintenance: per-batch PQ encode into a "
-        "txlog table; final code histogram equals the batch encode (full "
-        "oracle)"
-    ),
-    tags=("streaming", "pq", "ann", "table-format", "deterministic"),
-)
-def stream_pq_index_update(spark, sf_dir):
-    """The live-retrieval index loop composed from three proven parts:
-    embeddings arrive as a file-source stream, every micro-batch is
-    PQ-encoded against the committed md5-medoid codebook (broadcast) with
-    decimal-exact argmin, and each batch commits one append version into
-    the transaction-log table — codebook re-training stays a rare offline
-    event, exactly like production IVF-PQ serving. The final snapshot is
-    batch-split-independent (encoding is per-row and codebook-stationary),
-    so the streamed index shares the batch SQL oracle verbatim."""
-    from ..operators.pq import codebook_df, init_codebooks
-    from ..scratch import scratch_unique
-    from ..sources.txlog import TxTable
-    from ..streaming.pipeline import embeddings_stream, run_pq_index_append
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cb = codebook_df(spark, init_codebooks(emb, m=8, ks=16))
-    table = TxTable(spark, scratch_unique(spark, "pqindex"))
-    snap = run_pq_index_append(
-        embeddings_stream(spark, sf_dir), table, cb, m=8
-    )
-    return snap.groupBy("sub", "code").agg(
-        F.count("*").cast("bigint").alias("n_vectors")
-    )
-
-
-@register(
     "mlp_ae_detect_loop",
     oracle=None,  # the scores come from the iterative nonlinear fit — not
     # SQL-expressible; the routing invariants (counts partition-stable,
@@ -12369,7 +11115,7 @@ def stream_pq_index_update(spark, sf_dir):
     description=(
         "the reference's FULL detect loop with the exact architecture: "
         "MLP-AE fit -> per-row reconstruction scores -> mean+2σ threshold "
-        "calibration (M8) -> score_and_route partition counts"
+        "calibration (M8) -> classify_by_threshold partition counts"
     ),
     tags=("ml", "scoring", "calibration", "rows-only"),
 )

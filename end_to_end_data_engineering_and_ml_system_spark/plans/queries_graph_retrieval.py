@@ -12,9 +12,8 @@ data-profiling surface at all) does not:
   quantized onto an integer grid first (operators/graph.py:pagerank), so a
   DuckDB oracle that unrolls the same arithmetic hash-matches.
 - **BM25 top-k retrieval** (Robertson & Zaragoza 2009; the Lucene-default
-  ranking function) — the lexical-retrieval sibling of the embedding-ANN
-  family, over the same `documents` table the inverted-index/posting-stats
-  queries already profile.
+  ranking function) over the same `documents` table the
+  inverted-index/posting-stats queries already profile.
 - **Deequ-style column profiling** (Schelter et al., VLDB 2018: completeness
   / distinctness / compliance / entropy as a declarative constraint suite) —
   the data-quality metrics layer run before any corpus enters training.
@@ -712,181 +711,6 @@ def doc_bigram_logprob(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Hybrid retrieval: BM25 ∪ dense-cosine, fused with RRF
-# ---------------------------------------------------------------------------
-
-_RRF_K = 60  # the standard reciprocal-rank-fusion constant (Cormack 2009)
-_RRF_QUERY_VEC = 0  # vec_id whose embedding plays the dense query
-_RRF_DEPTH = 50  # per-ranker candidate-list depth
-
-
-@register(
-    "hybrid_rrf_retrieval",
-    oracle=rf"""
-        WITH t AS (
-            SELECT doc_id,
-                   list_filter(regexp_split_to_array(trim(text), '\s+'),
-                               tk -> tk <> '') AS toks
-            FROM documents
-        ),
-        d AS (
-            SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl,
-               {_BM25_TF_COLS_SQL}
-            FROM t
-        ),
-        s AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(dl) AS BIGINT) AS sdl,
-               {_BM25_DF_COLS_SQL}
-            FROM d
-        ),
-        lex AS (
-            SELECT doc_id, ROUND({_BM25_TERM_SQL}, 6) AS bm25
-            FROM d CROSS JOIN s
-            WHERE {_BM25_MATCH_SQL}
-        ),
-        lexrank AS (
-            SELECT doc_id,
-                   CAST(ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id)
-                        AS BIGINT) AS r
-            FROM lex QUALIFY r <= {_RRF_DEPTH}
-        ),
-        ex AS (
-            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-                   generate_subscripts(embedding, 1) AS pos
-            FROM embeddings
-        ),
-        norms AS (
-            SELECT vec_id,
-                   CAST(SUM(CAST(x * x AS DECIMAL(28,10))) AS DOUBLE) AS nrm
-            FROM ex GROUP BY 1
-        ),
-        dots AS (
-            SELECT c.vec_id AS cand_id,
-                   CAST(SUM(CAST(q.x * c.x AS DECIMAL(28,10))) AS DOUBLE)
-                       AS dot
-            FROM ex q
-            JOIN ex c ON q.pos = c.pos
-                      AND q.vec_id = {_RRF_QUERY_VEC}
-                      AND c.vec_id <> {_RRF_QUERY_VEC}
-            GROUP BY 1
-        ),
-        denserank AS (
-            SELECT cand_id AS doc_id,
-                   CAST(ROW_NUMBER() OVER (
-                       ORDER BY d.dot / (sqrt(nq.nrm) * sqrt(nc.nrm)) DESC,
-                                cand_id) AS BIGINT) AS r
-            FROM dots d
-            JOIN norms nq ON nq.vec_id = {_RRF_QUERY_VEC}
-            JOIN norms nc ON nc.vec_id = d.cand_id
-            QUALIFY r <= {_RRF_DEPTH}
-        )
-        SELECT COALESCE(l.doc_id, e.doc_id) AS doc_id,
-               COALESCE(l.r, 0) AS lex_rank,
-               COALESCE(e.r, 0) AS dense_rank,
-               COALESCE(CAST(1.0 AS DOUBLE) / ({_RRF_K} + l.r),
-                        CAST(0.0 AS DOUBLE))
-               + COALESCE(CAST(1.0 AS DOUBLE) / ({_RRF_K} + e.r),
-                          CAST(0.0 AS DOUBLE)) AS rrf
-        FROM lexrank l FULL OUTER JOIN denserank e ON l.doc_id = e.doc_id
-        ORDER BY rrf DESC, doc_id
-        LIMIT 10
-    """,
-    description=(
-        "hybrid search: BM25 lexical ∪ exact-cosine dense candidates "
-        "fused by reciprocal-rank fusion (k=60), top-10"
-    ),
-    tags=("text", "retrieval", "similarity", "llm-data", "deterministic"),
-)
-def hybrid_rrf_retrieval(spark, sf_dir):
-    """The two retrieval families this engine carries — BM25 over tokens
-    and cosine over embeddings (documents.doc_id ≡ embeddings.vec_id on
-    the fixtures) — fused the way production search stacks do it:
-    reciprocal-rank fusion, score = Σ 1/(60+rank) over the rankers that
-    surfaced the doc (Cormack et al. 2009, the standard hybrid-search
-    combiner). Ranks are exact integers (each ranker's ties broken by
-    doc_id), so the fused score is a fixed-order sum of two exact
-    divisions — cross-engine bit-identical with no rounding.
-
-    Scale shape: the lexical side is the BM25 single-scan projection; the
-    dense side is the decimal-exact cosine against ONE query vector (a
-    broadcast 64-row dimension join — no pairwise blowup; the ANN/IVF/PQ
-    family is the recall path when the query set is large). Missing-from-
-    a-list is encoded as rank 0 (never NULL: a half-empty int column would
-    come back as float64 on one engine and int64 on the other)."""
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    ex = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "xf")
-    ).select("vec_id", "pos", F.col("xf").cast("double").alias("x"))
-    norms = ex.groupBy("vec_id").agg(
-        F.sum((F.col("x") * F.col("x")).cast(DEC))
-        .cast("double")
-        .alias("nrm")
-    )
-    q = ex.filter(F.col("vec_id") == _RRF_QUERY_VEC).select(
-        "pos", F.col("x").alias("qx")
-    )
-    dots = (
-        ex.filter(F.col("vec_id") != _RRF_QUERY_VEC)
-        .join(F.broadcast(q), "pos")
-        .groupBy(F.col("vec_id").alias("cand_id"))
-        .agg(
-            F.sum((F.col("qx") * F.col("x")).cast(DEC))
-            .cast("double")
-            .alias("dot")
-        )
-    )
-    nq = norms.filter(F.col("vec_id") == _RRF_QUERY_VEC).select(
-        F.col("nrm").alias("qnrm")
-    )
-    cos = (
-        dots.join(
-            norms.withColumnRenamed("vec_id", "cand_id"), "cand_id"
-        )
-        .crossJoin(F.broadcast(nq))
-        .select(
-            F.col("cand_id").alias("doc_id"),
-            (
-                F.col("dot")
-                / (F.sqrt(F.col("qnrm")) * F.sqrt(F.col("nrm")))
-            ).alias("cosine"),
-        )
-    )
-    # rank lists via distributed TakeOrdered top-k + bounded self-join
-    # rank recovery (operators/relational.py::bounded_ranked_topk) — the
-    # scored corpus never funnels through a single-partition window
-    from ..operators.relational import bounded_ranked_topk
-
-    dense = bounded_ranked_topk(
-        cos, [("cosine", "desc"), ("doc_id", "asc")], _RRF_DEPTH, out="r"
-    ).select("doc_id", "r")
-    lex = bounded_ranked_topk(
-        _bm25_scored(spark, sf_dir),
-        [("bm25", "desc"), ("doc_id", "asc")],
-        _RRF_DEPTH,
-        out="r",
-    ).select("doc_id", "r")
-    l, e = lex.alias("l"), dense.alias("e")
-    rrf_term = lambda c: F.coalesce(  # noqa: E731
-        F.lit(1.0) / (F.lit(_RRF_K) + c), F.lit(0.0)
-    )
-    return (
-        l.join(e, F.col("l.doc_id") == F.col("e.doc_id"), "full_outer")
-        .select(
-            F.coalesce(F.col("l.doc_id"), F.col("e.doc_id")).alias("doc_id"),
-            F.coalesce(F.col("l.r"), F.lit(0).cast("long")).alias("lex_rank"),
-            F.coalesce(F.col("e.r"), F.lit(0).cast("long")).alias(
-                "dense_rank"
-            ),
-            (rrf_term(F.col("l.r")) + rrf_term(F.col("e.r"))).alias("rrf"),
-        )
-        .orderBy(F.col("rrf").desc(), "doc_id")
-        .limit(10)
-    )
-
-
-# ---------------------------------------------------------------------------
 # Label-propagation communities
 # ---------------------------------------------------------------------------
 
@@ -1119,9 +943,8 @@ def part_copurchase_pagerank_weighted(spark, sf_dir):
     tags=("graph", "pagerank", "recommendation", "deterministic"),
 )
 def related_parts_ppr(spark, sf_dir):
-    """Recommendation by graph proximity — the third 'related items'
-    mechanism in the registry, next to als_related_parts (latent factors)
-    and part_copurchase_lift (direct pair statistics): personalized
+    """Recommendation by graph proximity — the 'related items' mechanism
+    next to part_copurchase_lift (direct pair statistics): personalized
     PageRank restarts every walk at the seed part, so rank measures
     multi-hop closeness in the co-purchase graph, surfacing items related
     THROUGH shared neighbors even when never co-bought directly. Seed =
@@ -1658,328 +1481,10 @@ def copurchase_community_modularity(spark, sf_dir):
     )
 
 
-@register(
-    "dense_retrieval_ndcg",
-    oracle=f"""
-        WITH ex AS (
-            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-                   generate_subscripts(embedding, 1) AS pos
-            FROM embeddings
-        ),
-        norms AS (
-            SELECT vec_id,
-                   CAST(SUM(CAST(x * x AS DECIMAL(28,10))) AS DOUBLE) AS nrm
-            FROM ex GROUP BY 1
-        ),
-        dots AS (
-            SELECT c.vec_id AS cand_id,
-                   CAST(SUM(CAST(q.x * c.x AS DECIMAL(28,10))) AS DOUBLE)
-                       AS dot
-            FROM ex q
-            JOIN ex c ON q.pos = c.pos
-                      AND q.vec_id = {_RRF_QUERY_VEC}
-                      AND c.vec_id <> {_RRF_QUERY_VEC}
-            GROUP BY 1
-        ),
-        qlab AS (SELECT label FROM embeddings
-                 WHERE vec_id = {_RRF_QUERY_VEC}),
-        ranked AS (
-            SELECT d.cand_id,
-                   CAST(ROW_NUMBER() OVER (
-                       ORDER BY d.dot / (sqrt(nq.nrm) * sqrt(nc.nrm)) DESC,
-                                d.cand_id) AS BIGINT) AS rn,
-                   CASE WHEN e.label = qlab.label THEN 1 ELSE 0 END AS rel
-            FROM dots d
-            JOIN norms nq ON nq.vec_id = {_RRF_QUERY_VEC}
-            JOIN norms nc ON nc.vec_id = d.cand_id
-            JOIN embeddings e ON e.vec_id = d.cand_id
-            CROSS JOIN qlab
-        ),
-        nrel AS (
-            SELECT CAST(SUM(rel) AS BIGINT) AS n_rel FROM ranked
-        ),
-        dcg AS (
-            SELECT CAST(SUM(CAST(
-                       rel / (ln(CAST(rn + 1 AS DOUBLE))
-                              / ln(CAST(2.0 AS DOUBLE)))
-                       AS DECIMAL(28,10))) AS DOUBLE) AS dcg
-            FROM ranked WHERE rn <= 10
-        ),
-        idcg AS (
-            SELECT CAST(SUM(CAST(
-                       CAST(1.0 AS DOUBLE)
-                       / (ln(CAST(i + 1 AS DOUBLE))
-                          / ln(CAST(2.0 AS DOUBLE)))
-                       AS DECIMAL(28,10))) AS DOUBLE) AS idcg
-            FROM generate_series(1, 10) AS g(i) CROSS JOIN nrel
-            WHERE g.i <= LEAST(10, nrel.n_rel)
-        )
-        SELECT CAST({_RRF_QUERY_VEC} AS BIGINT) AS query_vec,
-               nrel.n_rel,
-               ROUND(dcg.dcg, 6) AS dcg_at10,
-               ROUND(idcg.idcg, 6) AS idcg_at10,
-               ROUND(dcg.dcg / idcg.idcg, 6) AS ndcg_at10
-        FROM dcg CROSS JOIN idcg CROSS JOIN nrel
-    """,
-    description=(
-        "retrieval evaluation: nDCG@10 of the exact-cosine dense ranking "
-        "against label-match relevance (decimal-exact DCG terms)"
-    ),
-    tags=("retrieval", "similarity", "ml", "evaluation", "deterministic"),
-)
-def dense_retrieval_ndcg(spark, sf_dir):
-    """Closing the retrieval loop with an EVALUATION: does the dense
-    ranking put same-label vectors first? Relevance = label match against
-    the query vector's label (the fixtures' embeddings carry a 10-class
-    label), metric = nDCG@10 — DCG terms are rel/log2(rank+1) quantized
-    to decimal before the sum (order-free), the ideal DCG normalizes by
-    the best achievable ordering. The ranking reuses the decimal-exact
-    cosine shape shared by the ANN family; the whole query touches one
-    64-dim query row broadcast against the corpus — no pairwise pass."""
-    import math
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    ex = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "xf")
-    ).select("vec_id", "pos", F.col("xf").cast("double").alias("x"))
-    norms = ex.groupBy("vec_id").agg(
-        F.sum((F.col("x") * F.col("x")).cast(DEC)).cast("double").alias("nrm")
-    )
-    q = ex.filter(F.col("vec_id") == _RRF_QUERY_VEC).select(
-        "pos", F.col("x").alias("qx")
-    )
-    dots = (
-        ex.filter(F.col("vec_id") != _RRF_QUERY_VEC)
-        .join(F.broadcast(q), "pos")
-        .groupBy(F.col("vec_id").alias("cand_id"))
-        .agg(
-            F.sum((F.col("qx") * F.col("x")).cast(DEC))
-            .cast("double")
-            .alias("dot")
-        )
-    )
-    nq = norms.filter(F.col("vec_id") == _RRF_QUERY_VEC).select(
-        F.col("nrm").alias("qnrm")
-    )
-    qrow = emb.filter(F.col("vec_id") == _RRF_QUERY_VEC).first()
-    if qrow is None:
-        raise ValueError(
-            f"query vector vec_id={_RRF_QUERY_VEC} not found in embeddings"
-        )
-    qlab = int(qrow["label"])
-    scored = (
-        dots.join(norms.withColumnRenamed("vec_id", "cand_id"), "cand_id")
-        .crossJoin(F.broadcast(nq))
-        .join(
-            emb.select(F.col("vec_id").alias("cand_id"), "label"),
-            "cand_id",
-        )
-        .select(
-            "cand_id",
-            (
-                F.col("dot")
-                / (F.sqrt(F.col("qnrm")) * F.sqrt(F.col("nrm")))
-            ).alias("cosine"),
-            F.when(F.col("label") == F.lit(qlab), 1).otherwise(0).alias(
-                "rel"
-            ),
-        )
-    )
-    # n_rel is a plain distributed aggregate; the global rank is only
-    # needed at depth 10, so rank the distributed top-10 (TakeOrdered +
-    # bounded self-join rank) instead of windowing the whole corpus
-    from ..operators.relational import bounded_ranked_topk
-
-    n_rel = int(
-        scored.agg(F.sum("rel").cast("long").alias("n_rel")).first()["n_rel"]
-        or 0
-    )
-    if n_rel == 0:
-        raise ValueError(
-            "nDCG undefined: no candidate shares the query vector's label "
-            "(ideal DCG is 0)"
-        )
-    top10 = bounded_ranked_topk(
-        scored, [("cosine", "desc"), ("cand_id", "asc")], 10, out="rn"
-    )
-    dcg = float(
-        top10.agg(
-            F.sum(
-                (
-                    F.col("rel")
-                    / (
-                        F.log((F.col("rn") + 1).cast("double"))
-                        / F.log(F.lit(2.0))
-                    )
-                ).cast(DEC)
-            )
-            .cast("double")
-            .alias("dcg")
-        ).first()["dcg"]
-    )
-    idcg = sum(
-        1.0 / (math.log(i + 1) / math.log(2.0))
-        for i in range(1, min(10, n_rel) + 1)
-    )
-    return spark.createDataFrame(
-        [
-            (
-                _RRF_QUERY_VEC,
-                n_rel,
-                round(dcg, 6),
-                round(idcg, 6),
-                round(dcg / idcg, 6),
-            )
-        ],
-        "query_vec long, n_rel long, dcg_at10 double, idcg_at10 double, "
-        "ndcg_at10 double",
-    )
-
-
 # ---------------------------------------------------------------------------
-# Round 8: retrieval quality under dimension truncation, item-item basket
-# similarity, and pseudo-relevance-feedback query expansion
+# Round 8: item-item basket similarity and pseudo-relevance-feedback query
+# expansion
 # ---------------------------------------------------------------------------
-
-_MRL_PREFIXES = (8, 16, 32)  # truncated dims evaluated against full 64
-
-
-@register(
-    "embedding_matryoshka_prefix_recall",
-    oracle=f"""
-        -- Matryoshka-style evaluation (Kusupati et al. 2022): how much of
-        -- the full-dimension exact-cosine top-10 survives when vectors are
-        -- truncated to a PREFIX of 8/16/32 dims? The production question
-        -- behind dimension-reduced ANN indexes: serve the short prefix,
-        -- keep most of the recall. All sums decimal-exact.
-        WITH ex AS (
-            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-                   generate_subscripts(embedding, 1) AS pos
-            FROM embeddings
-        ),
-        q AS (
-            SELECT pos, x AS qx FROM ex WHERE vec_id = {_RRF_QUERY_VEC}
-        ),
-        cs AS (
-            SELECT e.vec_id AS cand_id, m.m,
-                   CAST(SUM(CAST(e.x * q.qx AS DECIMAL(28,10))) AS DOUBLE)
-                       AS dot,
-                   CAST(SUM(CAST(e.x * e.x AS DECIMAL(28,10))) AS DOUBLE)
-                       AS n2,
-                   CAST(SUM(CAST(q.qx * q.qx AS DECIMAL(28,10))) AS DOUBLE)
-                       AS q2
-            FROM ex e
-            JOIN q ON q.pos = e.pos
-            CROSS JOIN (SELECT unnest([8, 16, 32, 64]) AS m) m
-            WHERE e.vec_id <> {_RRF_QUERY_VEC} AND e.pos <= m.m
-            GROUP BY 1, 2
-        ),
-        ranked AS (
-            SELECT cand_id, m,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY m
-                       ORDER BY dot / (sqrt(q2) * sqrt(n2)) DESC, cand_id
-                   ) AS rn
-            FROM cs
-        ),
-        base AS (SELECT cand_id FROM ranked WHERE m = 64 AND rn <= 10)
-        SELECT CAST(r.m AS INT) AS prefix_dim,
-               CAST(SUM(CASE WHEN b.cand_id IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS overlap_at_10,
-               CAST(SUM(CASE WHEN b.cand_id IS NOT NULL THEN 1 ELSE 0 END)
-                    AS DOUBLE) / 10.0 AS recall_at_10
-        FROM ranked r LEFT JOIN base b ON r.cand_id = b.cand_id
-        WHERE r.m <> 64 AND r.rn <= 10
-        GROUP BY 1
-    """,
-    description=(
-        "Matryoshka evaluation: exact-cosine top-10 recall of 8/16/32-dim "
-        "PREFIX embeddings against the full 64-dim ranking"
-    ),
-    tags=("similarity", "embedding", "evaluation", "llm-data", "deterministic"),
-)
-def embedding_matryoshka_prefix_recall(spark, sf_dir):
-    """Dimension-truncated retrieval quality, measured not assumed: score
-    every candidate against the query vector at each prefix length in ONE
-    grouped decimal aggregate (the conditional prefix sums share the single
-    exploded exchange), take each prefix's exact top-10 as a distributed
-    TakeOrdered + bounded rank (no corpus-wide window), and count overlap
-    with the full-dimension top-10. This is the measurement that justifies
-    serving a short-prefix ANN index at 100 TB — recall lost to truncation
-    is read off a table instead of discovered in production."""
-    from ..operators.relational import bounded_ranked_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    ex = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "xf")
-    ).select("vec_id", "pos", F.col("xf").cast("double").alias("x"))
-    q = ex.filter(F.col("vec_id") == _RRF_QUERY_VEC).select(
-        "pos", F.col("x").alias("qx")
-    )
-    dims = list(_MRL_PREFIXES) + [64]
-
-    def psum(expr, m):
-        return (
-            F.sum(
-                F.when(F.col("pos") < m, expr.cast(DEC)).otherwise(
-                    F.lit(0).cast(DEC)
-                )
-            )
-            .cast("double")
-        )
-
-    scored = (
-        ex.filter(F.col("vec_id") != _RRF_QUERY_VEC)
-        .join(F.broadcast(q), "pos")
-        .groupBy(F.col("vec_id").alias("cand_id"))
-        .agg(
-            *[
-                psum(F.col("x") * F.col("qx"), m).alias(f"dot{m}")
-                for m in dims
-            ],
-            *[psum(F.col("x") * F.col("x"), m).alias(f"n2_{m}") for m in dims],
-            *[
-                psum(F.col("qx") * F.col("qx"), m).alias(f"q2_{m}")
-                for m in dims
-            ],
-        )
-    )
-    cos = scored.select(
-        "cand_id",
-        *[
-            (
-                F.col(f"dot{m}")
-                / (F.sqrt(F.col(f"q2_{m}")) * F.sqrt(F.col(f"n2_{m}")))
-            ).alias(f"c{m}")
-            for m in dims
-        ],
-    )
-    base = (
-        cos.orderBy(F.col("c64").desc(), "cand_id")
-        .limit(10)
-        .select("cand_id", F.lit(1).alias("__hit"))
-    )
-    tops = None
-    for m in _MRL_PREFIXES:
-        t = bounded_ranked_topk(
-            cos.select("cand_id", f"c{m}"),
-            [(f"c{m}", "desc"), ("cand_id", "asc")],
-            10,
-        ).select(F.lit(m).alias("prefix_dim"), "cand_id")
-        tops = t if tops is None else tops.unionByName(t)
-    return (
-        tops.join(F.broadcast(base), "cand_id", "left")
-        .groupBy(F.col("prefix_dim").cast("int").alias("prefix_dim"))
-        .agg(
-            F.sum(F.coalesce(F.col("__hit"), F.lit(0)))
-            .cast("bigint")
-            .alias("overlap_at_10"),
-            (
-                F.sum(F.coalesce(F.col("__hit"), F.lit(0))).cast("double")
-                / F.lit(10.0)
-            ).alias("recall_at_10"),
-        )
-    )
 
 
 @register(

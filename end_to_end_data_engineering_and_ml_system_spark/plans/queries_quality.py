@@ -1007,69 +1007,6 @@ def bpe_fertility_portable(spark, sf_dir):
 
 
 @register(
-    "stream_embedding_topk",
-    oracle="""
-        WITH ex AS (
-            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-                   generate_subscripts(embedding, 1) AS pos
-            FROM embeddings
-        ),
-        norms AS (
-            SELECT vec_id,
-                   CAST(SUM(CAST(x * x AS DECIMAL(28,10))) AS DOUBLE) AS nrm
-            FROM ex GROUP BY 1
-        ),
-        dots AS (
-            SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-                   CAST(SUM(CAST(q.x * c.x AS DECIMAL(28,10))) AS DOUBLE)
-                       AS dot
-            FROM ex q
-            JOIN ex c ON q.pos = c.pos
-                      AND q.vec_id < 8 AND c.vec_id <> q.vec_id
-            GROUP BY 1, 2
-        ),
-        cos AS (
-            SELECT d.query_id, d.cand_id,
-                   d.dot / (sqrt(nq.nrm) * sqrt(nc.nrm)) AS cosine
-            FROM dots d
-            JOIN norms nq ON d.query_id = nq.vec_id
-            JOIN norms nc ON d.cand_id = nc.vec_id
-        )
-        SELECT query_id, cand_id, cosine
-        FROM (
-            SELECT *, ROW_NUMBER() OVER (
-                PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rn
-            FROM cos
-        )
-        WHERE rn <= 3
-    """,
-    description=(
-        "incremental top-k similarity search: running top-3 nearest per "
-        "query maintained across micro-batches of arriving vectors "
-        "(batch-equivalent full oracle)"
-    ),
-    tags=("streaming", "similarity", "ann", "deterministic"),
-)
-def stream_embedding_topk(spark, sf_dir):
-    """The live-retrieval-index refresh loop: candidate vectors arrive in
-    micro-batches; each batch is scored against the broadcast query set
-    with decimal-exact dot products and merged into the running top-3
-    state (rotated parquet snapshots). Running top-k under a total order
-    is an associative merge, so the final state is bit-equal to the batch
-    top-k over all vectors — the oracle IS the batch SQL. Per-batch cost
-    O(batch·queries + k·queries), independent of history."""
-    from ..streaming.pipeline import (
-        embeddings_stream,
-        run_topk_similarity_merge,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    s = embeddings_stream(spark, sf_dir)
-    return run_topk_similarity_merge(s, queries, k=3)
-
-
-@register(
     "corpus_pipeline_v2_learned",
     oracle=f"""
         -- corpus pipeline with the LEARNED gate: model filter (z >= 0)
@@ -2596,45 +2533,6 @@ def stream_contract_split_counts(spark, sf_dir):
 
 
 @register(
-    "als_training_curve",
-    oracle=None,  # alternating closed-form solves over floats — the exact
-    # non-increase guarantee and cross-partitioning determinism are pytest
-    # invariants (tests/test_als.py)
-    description=(
-        "distributed ALS matrix factorization on the customer x part "
-        "purchase matrix: regularized loss per half-step"
-    ),
-    tags=("ml", "training", "recommendation", "no-oracle"),
-)
-def als_training_curve(spark, sf_dir):
-    """Collaborative filtering joins the trainer family: the customer×part
-    implicit-feedback matrix (purchase counts) factorized by alternating
-    per-entity ridge solves — ratings stay grouped on the cluster, only
-    the small factor matrices move, and exact alternating minimization
-    makes the loss sequence non-increasing by construction. The factors
-    are DataFrame-resident end to end (``fit_als_df``): only the loss
-    scalars — one per half-step — ever reach the driver."""
-    from ..ml.als import fit_als_df
-
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    ratings = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").alias("user"),
-            F.col("l_partkey").alias("item"),
-        )
-        .agg(F.count("*").cast("double").alias("rating"))
-    )
-    fit = fit_als_df(ratings, "user", "item", k=8, iters=3)
-    fit.unpersist()
-    return spark.createDataFrame(
-        [(i, float(x)) for i, x in enumerate(fit.losses)],
-        "half_step int, reg_loss double",
-    )
-
-
-@register(
     "part_copurchase_lift",
     oracle=f"""
         -- association mining on the order basket: top part pairs by lift
@@ -2733,73 +2631,6 @@ def part_copurchase_lift(spark, sf_dir):
     return out.orderBy(
         F.desc("lift"), F.asc("part_a"), F.asc("part_b")
     ).limit(20)
-
-
-@register(
-    "als_related_parts",
-    oracle=None,  # derives from the iterative ALS factors — determinism
-    # across partitionings is the pytest invariant; the serving math
-    # itself (factor cosine top-k) mirrors the oracle-checked
-    # embedding_cosine_topk shape
-    description=(
-        "recommendation serving: top-3 related parts by ALS factor "
-        "cosine for the five most-purchased parts"
-    ),
-    tags=("ml", "recommendation", "similarity", "no-oracle"),
-)
-def als_related_parts(spark, sf_dir):
-    """The serving side of the collaborative-filtering family: train ALS
-    on the purchase matrix, then answer 'customers who bought X also
-    like...' by factor-space cosine, computed DISTRIBUTED — the query
-    parts broadcast against the item-factor table through the
-    oracle-checked ``cosine_topk_bruteforce`` shape, so serving scales
-    with the catalog instead of collecting the factor matrix to the
-    driver."""
-    from ..ml.als import fit_als_df
-    from ..operators.similarity import cosine_topk_bruteforce
-
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    ratings = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").alias("user"),
-            F.col("l_partkey").alias("item"),
-        )
-        .agg(F.count("*").cast("double").alias("rating"))
-    )
-    top_parts = (
-        ratings.groupBy("item")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), F.asc("item"))
-        .limit(5)
-        .select("item")
-    )
-    fit = fit_als_df(ratings, "user", "item", k=8, iters=3)
-    factors = fit.item_factors_df
-    out = (
-        cosine_topk_bruteforce(
-            factors,
-            factors.join(
-                F.broadcast(top_parts), factors.id == top_parts.item
-            ).select("id", "f"),
-            id_col="id",
-            vec_col="f",
-            k=3,
-        )
-        .select(
-            F.col("query_id").alias("part"),
-            F.col("cand_id").alias("related_part"),
-            F.col("rn").alias("rank"),
-            "cosine",
-        )
-        .orderBy("part", "rank")
-    )
-    rows = out.collect()  # 15 rows — materialize before unpersisting factors
-    fit.unpersist()
-    return spark.createDataFrame(
-        rows, "part long, related_part long, rank int, cosine double"
-    )
 
 
 @register(

@@ -61,128 +61,9 @@ def register(
     return deco
 
 
-# The correctness driver samples the FIRST 50 names in the dict returned by
-# ``__spark_entry__.queries()``. As of round 8 every registered name carries
-# driver evidence (zero unresolved failures across eleven rounds), so the
-# window is pure RECONFIRMATION plus any genuinely new names, filled by
-# three documented rules (each window name's reason lives in
-# tests/test_registry_order.py::RECONFIRMATION_SLOTS, which the guard test
-# enforces):
-#   0. genuinely new — registered this round, never driver-tested;
-#   1. changed-implementation — the name's driver row predates a material
-#      change to its plan (this round: 18 names changed by the r12
-#      operator reviews, plus the 13 stream_* + 5 table-format names whose
-#      latest driver row predates the round-11 late-fix commits
-#      b896baf..170e427; the 8 siblings from the committed plan's 29
-#      already carry post-fix r11 driver rows, so re-slotting them would
-#      waste slots — amendment documented in NOTES);
-#   2. evidence-freshness — with coverage complete, the window re-proves
-#      the STALEST evidence first: the remaining round-4-tier names (the
-#      4 displaced by r12-changed slots roll to round 13).
-# New queries registered mid-round go at the TOP (never driver-tested, so a
-# slot is never wasted on them) displacing freshness slots to keep the
-# 50-name window exact.
-#
-# _WINDOW_ROUND anchors "window-authoring time" for the evidence guard:
-# a name counts as proven-at-authoring iff it appears in a CORRECTNESS
-# artifact from a round STRICTLY BEFORE this one. This is invariant under
-# any number of future artifacts landing (rounds >= _WINDOW_ROUND never
-# count), which closes the r8/r9/r11 artifact-landing failure class at the
-# model level instead of per-landing point fixes.
-#
-# Rounds 15-16 are OPTIMIZATION rounds: the window is FROZEN by the driver
-# contract (a dropped or renamed declared query is a REGRESSION regardless
-# of speed, and cross-round bench/oracle comparability needs the same 50
-# names), so every slot is a deliberate reconfirmation of the r14 set —
-# documented as one reason class in RECONFIRMATION_SLOTS. Rotation resumes
-# with the next feature round.
-_WINDOW_ROUND: int = 16
-
-_DRIVER_PRIORITY: tuple[str, ...] = (
-    # --- genuinely new this round (8): oracle-checked portable siblings
-    # shrinking the rows-only set (VERDICT r13 item 5 and its mid-round
-    # continuation) — pinned-merge BPE fertility, HLL-vs-exact bound
-    # checks per-type and union-merged, KLL rank-error contract, M2
-    # inference agreement contract, integer-exact PCM frame energy, and
-    # md5-plane LSH candidates at a second banding geometry, and the
-    # MLlib Vector-pipeline scorer (M7) agreement contract ---
-    "bpe_fertility_portable",
-    "approx_distinct_users_portable",
-    "distinct_users_hll_rollup_portable",
-    "value_quantiles_kll_portable",
-    "serialized_model_scores_portable",
-    "audio_frame_energy_portable",
-    "embedding_lsh_candidates_portable",
-    "pca_reconstruction_portable",
-    # --- changed-implementation (7): r14 cosine_from_norms guard now
-    # tests the denominator PRODUCT sqrt(na)*sqrt(nb) like inline cosine
-    # (subnormal-underflow alignment, ADVICE r13) — every consumer of the
-    # hoisted-cosine paths (brute force, IVF re-rank, near-dup verify) ---
-    "embedding_ann_bruteforce",
-    "embedding_ann_bruteforce_portable",
-    "embedding_ivf_topk",
-    "embedding_ivf_topk_portable",
-    "embedding_near_dups",
-    "embedding_near_dups_portable",
-    "als_related_parts",
-    # --- changed-implementation (11): r14 txlog manifest cache +
-    # txns_complete flag (txn_seen answers the fresh-batch negative in
-    # O(1); _commit folds the full evidence once per pre-flag table) —
-    # every TxTable-consuming query ---
-    "stream_merge_into_tx_table",
-    "tx_table_zorder_pruned_scan",
-    "corpus_dedup_snapshot_pipeline",
-    "stream_pq_index_update",
-    "events_column_profile",
-    "stream_copurchase_pagerank",
-    "tx_table_time_travel_counts",
-    "tx_table_point_lookup_bloom",
-    "tx_table_delete_counts",
-    "tx_table_schema_evolution_counts",
-    "tx_table_delete_all_restore_counts",
-    # --- evidence-freshness (24): round-5 tier (the oldest ledger tier),
-    # alphabetical from corpus_manifest per the committed r14 rotation
-    # plan; the tail (source_unigram_jsd, token_cms_estimates,
-    # training_shuffle_shards, user_activity_entropy,
-    # user_feature_store_row — displaced by the 5 mid-round new names —
-    # plus user_hashed_features, value_benford_audit,
-    # value_impute_by_group) rolls to round 15 ---
-    "corpus_manifest",
-    "corpus_temperature_mix",
-    "customer_cohort_ltv_curve",
-    "customer_order_count_distribution",
-    "daily_gmv_trailing_ma",
-    "daily_growth_accounting",
-    "doc_duplicate_ngram_spans",
-    "doc_duplicate_ngram_windows",
-    "doc_label_noise_audit",
-    "doc_readability_scores",
-    "drift_psi_events",
-    "embedding_drift_by_dim",
-    "error_burst_detection",
-    "event_mix_drift_daily",
-    "events_ab_test_readout",
-    "events_duplicate_delivery_audit",
-    "events_k_anonymity_audit",
-    "float_downcast_precision_audit",
-    "join_fanout_profile",
-    "label_balance_by_split",
-    "minhash_jaccard_calibration",
-    "near_dup_cluster_size_histogram",
-    "near_dup_threshold_sensitivity",
-    "price_quantity_ols",
-)
-
-
 def all_queries() -> dict[str, Query]:
     _ensure_loaded()
-    ordered = {
-        name: _REGISTRY[name] for name in _DRIVER_PRIORITY if name in _REGISTRY
-    }
-    for name, q in _REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = q
-    return ordered
+    return dict(_REGISTRY)
 
 
 def bench_queries() -> dict[str, Query]:

@@ -24,10 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
-    FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -255,176 +252,6 @@ def documents_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(staged)
     )
-
-
-#: schema of the staged embeddings stream source
-EMBEDDINGS_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType()),
-        StructField("embedding", ArrayType(FloatType())),
-        StructField("label", IntegerType()),
-    ]
-)
-
-
-def stage_embeddings_dir(
-    spark: SparkSession, sf_dir: str, n_files: int = 8
-) -> str:
-    """Stage the embeddings fixture as an n-file parquet directory for
-    micro-batch replay — the vectors-arriving-incrementally shape of a
-    live retrieval index. Idempotent per (sf_dir, n_files)."""
-    key = sf_dir.strip("/").replace("/", "_")
-    root = scratch_root(spark, "stream_stage", local_default=_STAGE_ROOT)
-    out = os.path.join(root, f"emb_{key}_{n_files}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        from ..sources.catalog import load_table
-
-        (
-            load_table(spark, sf_dir, "embeddings")
-            .repartitionByRange(n_files, "vec_id")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-    return out
-
-
-def embeddings_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    max_files_per_trigger: int = 2,
-) -> DataFrame:
-    """Incremental file-source stream of the embeddings table."""
-    staged = stage_embeddings_dir(spark, sf_dir)
-    return (
-        spark.readStream.schema(EMBEDDINGS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged)
-    )
-
-
-def run_topk_similarity_merge(
-    stream_df: DataFrame,
-    queries_df: DataFrame,
-    k: int = 3,
-    timeout_s: int = 300,
-) -> DataFrame:
-    """Incremental top-k similarity search: as candidate vectors arrive,
-    keep the running top-k nearest per query — the index-refresh loop of a
-    live retrieval system, expressed as a foreachBatch running-state merge
-    (same rotated-snapshot discipline as ``run_latest_state_merge``).
-
-    Each micro-batch scores only ITS candidates against the broadcast
-    query set (decimal-exact dot products, so cosines are bit-identical to
-    the batch computation), takes the batch-local top-k, merges with the
-    standing top-k state, and re-ranks. Running top-k under a total order
-    (cosine desc, cand_id) is an associative merge, so the final state
-    equals the batch top-k over ALL candidates no matter how the stream
-    was split — which is exactly what lets this query share the batch SQL
-    oracle. State is k rows per query; per-batch cost is O(batch·queries
-    + state), independent of history."""
-    from pyspark.sql import Window
-
-    spark = stream_df.sparkSession
-
-    # persist both query-side frames: every micro-batch joins them, and
-    # unpersisted they would re-run the full explode + aggregation per
-    # batch (twice for qx — dots and, transitively, qnorm)
-    qx = (
-        queries_df.select(
-            F.col("vec_id").alias("query_id"),
-            F.posexplode("embedding").alias("pos", "qxf"),
-        )
-        .select("query_id", "pos", F.col("qxf").cast("double").alias("qx"))
-        .persist()
-    )
-    qnorm = qx.groupBy("query_id").agg(
-        F.sum((F.col("qx") * F.col("qx")).cast("decimal(28,10)"))
-        .cast("double")
-        .alias("nrm_q")
-    ).persist()
-
-    root = scratch_unique(spark, "topk_state")
-    state_dir = [None]
-
-    def topk(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("cand_id")
-        )
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
-        )
-
-    def score(batch_df: DataFrame) -> DataFrame:
-        ex = batch_df.select(
-            F.col("vec_id").alias("cand_id"),
-            F.posexplode("embedding").alias("pos", "xf"),
-        ).select("cand_id", "pos", F.col("xf").cast("double").alias("x"))
-        cnorm = ex.groupBy("cand_id").agg(
-            F.sum((F.col("x") * F.col("x")).cast("decimal(28,10)"))
-            .cast("double")
-            .alias("nrm_c")
-        )
-        dots = (
-            ex.join(F.broadcast(qx), "pos")
-            .filter(F.col("cand_id") != F.col("query_id"))
-            .groupBy("query_id", "cand_id")
-            .agg(
-                F.sum((F.col("qx") * F.col("x")).cast("decimal(28,10)"))
-                .cast("double")
-                .alias("dot")
-            )
-        )
-        return (
-            dots.join(F.broadcast(qnorm), "query_id")
-            .join(cnorm, "cand_id")
-            .select(
-                "query_id",
-                "cand_id",
-                # zero-norm guard: an all-zero vector has no defined
-                # cosine; under Spark 4's default ANSI mode the unguarded
-                # 0.0/0.0 would raise DIVIDE_BY_ZERO and kill the whole
-                # streaming query on one bad record. NULL cosines are
-                # filtered — zero vectors never rank.
-                F.when(
-                    (F.col("nrm_q") > 0) & (F.col("nrm_c") > 0),
-                    F.col("dot") / (F.sqrt("nrm_q") * F.sqrt("nrm_c")),
-                ).alias("cosine"),
-            )
-            .filter(F.col("cosine").isNotNull())
-        )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        scored = topk(score(batch_df))
-        if state_dir[0] is not None:
-            prev = batch_df.sparkSession.read.parquet(state_dir[0])
-            scored = topk(prev.unionByName(scored))
-        new_dir = os.path.join(root, f"state_{batch_id}")
-        scored.write.mode("overwrite").parquet(new_dir)
-        _rotate_state_dir(state_dir, new_dir)
-
-    ck = scratch_unique(spark, "topk_ck")
-    try:
-        with _replay_shuffle_partitions(spark):
-            q = (
-                stream_df.writeStream.foreachBatch(process)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ck)
-                .start()
-            )
-            _await_bounded(q, timeout_s)
-    finally:
-        qx.unpersist()
-        qnorm.unpersist()
-    if state_dir[0] is None:
-        return spark.createDataFrame(
-            [], "query_id long, cand_id long, cosine double"
-        )
-    return spark.read.parquet(state_dir[0])
 
 
 def events_stream(
@@ -1060,51 +887,6 @@ def run_merge_into_table(
     if snap is None:
         return spark.createDataFrame([], stream_df.schema)
     return snap
-
-
-def run_pq_index_append(
-    stream_df: DataFrame,
-    table,
-    codebook: DataFrame,
-    m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    timeout_s: int = 300,
-):
-    """Streaming vector-index maintenance: each micro-batch of arriving
-    embeddings is PQ-encoded against the COMMITTED codebook (broadcast,
-    a few KB) and appended as one transaction-log version — the
-    index-update loop of a live retrieval system. Encoding is per-row and
-    codebook-stationary, so the final snapshot equals the batch encode of
-    the whole corpus no matter how the stream was split; with the
-    deterministic init codebook the result is oracle-checkable
-    (decimal-exact argmin). Appends are cheap (codes only, ~bytes per
-    vector); re-training the codebook is the rare offline event, exactly
-    like production IVF-PQ deployments."""
-    from ..operators.pq import pq_encode
-
-    spark = stream_df.sparkSession
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        table.append(
-            pq_encode(
-                batch_df, codebook, id_col=id_col, vec_col=vec_col, m=m,
-                exact=True,
-            )
-        )
-
-    ck = scratch_unique(spark, "pqidx_ck")
-    with _replay_shuffle_partitions(spark):
-        q = (
-            stream_df.writeStream.foreachBatch(process)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ck)
-            .start()
-        )
-        _await_bounded(q, timeout_s)
-    return table.snapshot()
 
 
 #: schema of the staged lineitem stream source (projected to the co-purchase

@@ -273,7 +273,6 @@ def test_bm25_match_predicate_derives_from_term_constant():
     assert f"d.tf{len(qgr._BM25_TERMS)}" not in qgr._BM25_MATCH_SQL
     for name in (
         "bm25_topk_docs",
-        "hybrid_rrf_retrieval",
         "query_expansion_prf_retrieval",
     ):
         assert f"WHERE {qgr._BM25_MATCH_SQL}" in _REGISTRY[name].oracle

@@ -1,5 +1,5 @@
-"""Invariant tests for the non-oracle dedup/similarity ops (SimHash, fast
-ANN, embedding LSH)."""
+"""Invariant tests for the non-oracle dedup ops (SimHash, MinHash LSH,
+edit distance, contamination checks)."""
 
 from __future__ import annotations
 
@@ -8,9 +8,6 @@ from pyspark.sql import functions as F
 from end_to_end_data_engineering_and_ml_system_spark.operators.dedup import (
     hamming64,
     simhash64,
-)
-from end_to_end_data_engineering_and_ml_system_spark.operators.similarity import (
-    cosine_topk_bruteforce,
 )
 from end_to_end_data_engineering_and_ml_system_spark.plans.registry import all_queries
 from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import load_table
@@ -36,63 +33,6 @@ def test_simhash_identical_and_near(spark):
     assert ham.near <= 16
 
 
-def test_bruteforce_ann_sane(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = cosine_topk_bruteforce(emb, emb.filter(F.col("vec_id") < 4), k=3)
-    rows = out.collect()
-    assert len(rows) == 4 * 3
-    for r in rows:
-        assert -1.0001 <= r.cosine <= 1.0001
-        assert r.query_id != r.cand_id
-    # rn is a proper ranking per query
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r.query_id, []).append(r)
-    for q, rs in by_q.items():
-        rs.sort(key=lambda r: r.rn)
-        assert [r.rn for r in rs] == [1, 2, 3]
-        assert rs[0].cosine >= rs[1].cosine >= rs[2].cosine
-
-
-def test_lsh_candidates_subset_of_pairs(spark, sf_dir):
-    out = all_queries()["embedding_lsh_candidates"].build(spark, sf_dir)
-    rows = out.collect()
-    ids = set()
-    for r in rows:
-        assert r.id1 < r.id2
-        ids.add((r.id1, r.id2))
-    assert len(ids) == len(rows)  # distinct pairs
-
-
-def test_ivf_search_recall_vs_bruteforce(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from end_to_end_data_engineering_and_ml_system_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-        ivf_index,
-        ivf_search,
-    )
-    from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    exact = cosine_topk_bruteforce(emb, queries, k=3).select(
-        "query_id", F.col("cand_id").alias("exact_cand")
-    )
-    assigned, centroids = ivf_index(emb, k_cells=8, seed=42)
-    approx = ivf_search(assigned, centroids, queries, nprobe=4, k=3)
-    assert approx.groupBy("query_id").count().filter("count != 3").count() == 0
-    hits = exact.join(
-        approx.select("query_id", F.col("cand_id").alias("exact_cand")),
-        ["query_id", "exact_cand"],
-    ).count()
-    total = exact.count()
-    # nprobe=4 of 8 cells must recover well over half the true neighbors
-    assert hits / total >= 0.5, f"recall {hits}/{total}"
-
-
 def test_lsh_verified_matches_exact_on_candidates(spark, sf_dir):
     from end_to_end_data_engineering_and_ml_system_spark.operators.dedup import (
         jaccard_pairs,
@@ -110,33 +50,6 @@ def test_lsh_verified_matches_exact_on_candidates(spark, sf_dir):
     expected = exact.join(cands, ["id1", "id2"]).select("id1", "id2", "jaccard")
     assert verified.exceptAll(expected).count() == 0
     assert expected.exceptAll(verified).count() == 0
-
-
-def test_embedding_near_dups_subset_of_bruteforce(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from end_to_end_data_engineering_and_ml_system_spark.operators.similarity import (
-        cosine,
-        embedding_near_dups,
-    )
-    from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    got = embedding_near_dups(emb, threshold=0.9).persist()
-    # every verified pair really is >= threshold (exact check on the pair)
-    a = emb.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("v1"))
-    b = emb.select(F.col("vec_id").alias("id2"), F.col("embedding").alias("v2"))
-    back = got.join(a, "id1").join(b, "id2").select(
-        "id1", "id2", "cosine", cosine(F.col("v1"), F.col("v2")).alias("exact")
-    )
-    assert back.filter(F.abs(F.col("cosine") - F.col("exact")) > 1e-9).count() == 0
-    assert back.filter(F.col("exact") < 0.9).count() == 0
-    # pairs are canonical (id1 < id2) and unique
-    assert got.filter(F.col("id1") >= F.col("id2")).count() == 0
-    assert got.count() == got.select("id1", "id2").distinct().count()
-    got.unpersist()
 
 
 def test_hot_bucket_cap_bounds_candidates(spark):
@@ -181,22 +94,6 @@ def test_hot_bucket_cap_no_change_on_fixture(spark, sf_dir):
     capped = lsh_candidate_pairs(docs, "doc_id", "text", 8, 2, 3, max_bucket_size=50)
     assert plain.exceptAll(capped).count() == 0
     assert capped.exceptAll(plain).count() == 0
-
-
-def test_embedding_bucket_cap_subset(spark, sf_dir):
-    """Capped ANN candidate pairs are a subset of the uncapped ones."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.similarity import (
-        lsh_bucket_candidates,
-    )
-    from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    plain = lsh_bucket_candidates(emb)
-    capped = lsh_bucket_candidates(emb, max_bucket_size=20)
-    assert capped.exceptAll(plain).count() == 0
-    assert capped.count() <= plain.count()
 
 
 def test_incremental_near_dups_cross_side_only(spark):
@@ -275,23 +172,6 @@ def test_contamination_benchmark_set_broadcasts(spark, sf_dir):
 
     df = all_queries()["benchmark_contamination"].build(spark, sf_dir)
     assert "BroadcastExchange" in physical_plan(df)
-
-
-def test_int8_quantization_error_bounded(spark, sf_dir):
-    """Reconstruction error of int8 codes is bounded by half a quantization
-    step per dimension; codes stay inside [0, 255]."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.similarity import quantize_int8_stats
-    from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    rows = quantize_int8_stats(emb, "embedding").collect()
-    assert len(rows) > 0
-    for r in rows:
-        step = (r["mx"] - r["mn"]) / 255.0
-        assert 0.0 <= r["mean_code"] <= 255.0
-        # floor(x+0.5) rounds to nearest: per-value error <= step/2 (+ 1e-10
-        # quantization slack from the integer error aggregate)
-        assert r["mean_abs_err"] <= step / 2 + 1e-9
 
 
 def test_edit_distance_pairs_vs_naive(spark):
@@ -444,65 +324,6 @@ def test_simhash_pairs_exact_vs_bruteforce(spark):
     assert (0, 1) in got and (0, 3) in got and (0, 4) not in got
 
 
-def test_semdedup_identical_vectors_dropped(spark):
-    from end_to_end_data_engineering_and_ml_system_spark.operators.similarity import (
-        semdedup_portable,
-    )
-
-    # unit basis vectors -> norms and cosines are FP-exact (0.0 / 1.0)
-    rows = [
-        (1, [1.0, 0.0, 0.0]),
-        (2, [1.0, 0.0, 0.0]),   # identical to 1
-        (3, [0.0, 1.0, 0.0]),
-        (4, [0.0, 1.0, 0.0]),   # identical to 3
-        (5, [0.0, 0.0, 1.0]),   # orthogonal to everything
-    ]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    out = semdedup_portable(df, k=2, tau=0.95).collect()
-    by_id = {r.vec_id: r for r in out}
-    assert len(by_id) == 5  # one row per corpus vector
-    # identical vectors have identical centroid cosines -> same cluster,
-    # and the higher id of each identical pair sees max_cos_prev == 1.0
-    assert by_id[1].cluster_id == by_id[2].cluster_id
-    assert by_id[3].cluster_id == by_id[4].cluster_id
-    assert by_id[2].max_cos_prev == 1.0 and not by_id[2].is_kept
-    assert by_id[4].max_cos_prev == 1.0 and not by_id[4].is_kept
-    # the lowest id of every cluster always survives
-    kept = {r.vec_id for r in out if r.is_kept}
-    for cid in {r.cluster_id for r in out}:
-        members = [r.vec_id for r in out if r.cluster_id == cid]
-        assert min(members) in kept
-
-
-def test_semdedup_fixture_invariants(spark, sf_dir):
-    from end_to_end_data_engineering_and_ml_system_spark.operators.similarity import (
-        semdedup_portable,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
-    t = semdedup_portable(emb, k=8, tau=0.3).persist()
-    try:
-        assert t.count() == n  # total assignment, no dup / dropped ids
-        assert t.select("vec_id").distinct().count() == n
-        # every nonempty cluster keeps at least its lowest-id member
-        per = t.groupBy("cluster_id").agg(
-            F.count("*").alias("m"),
-            F.sum(F.col("is_kept").cast("int")).alias("k"),
-        ).collect()
-        assert all(r.k >= 1 for r in per)
-        assert sum(r.m for r in per) == n
-        # retention is monotone in tau (same pairwise maxima re-thresholded)
-        kept_at = [
-            t.filter(F.col("max_cos_prev") <= tau).count()
-            for tau in (0.2, 0.3, 0.4)
-        ]
-        assert kept_at == sorted(kept_at)
-        assert 0 < kept_at[0] <= kept_at[-1] <= n
-    finally:
-        t.unpersist()
-
-
 def test_lsh_banding_rejects_non_divisible_params(spark, sf_dir):
     """num_hashes % rows_per_band != 0 silently dropped the trailing hashes
     (lower recall than requested), and rows_per_band > num_hashes produced
@@ -523,207 +344,6 @@ def test_lsh_banding_rejects_non_divisible_params(spark, sf_dir):
         lsh_verified_near_dups(docs, "doc_id", "text", 8, 3, 3, 0.6).count()
     with pytest.raises(ValueError, match="divide num_hashes"):
         lsh_verified_near_dups(docs, "doc_id", "text", 8, 16, 3, 0.6).count()
-
-
-def test_sign_sketch_banding_rejects_width_mismatch(spark, sf_dir):
-    """Bands reaching past the signature width read all-zero bits — EVERY
-    vector lands in those tables' bucket 0 (measured: all-pairs candidate
-    blowup, the O(n^2) LSH exists to avoid) — and bands covering less than
-    the width silently ignore trailing planes. Both must raise; >64 planes
-    would wrap the bigint and collide planes, so that raises too."""
-    import pytest
-
-    from end_to_end_data_engineering_and_ml_system_spark.operators.similarity import (
-        lsh_bucket_candidates,
-        lsh_signatures_table,
-    )
-    from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").limit(20)
-    with pytest.raises(ValueError, match="signature width"):
-        lsh_bucket_candidates(emb, num_planes=8, num_tables=4, planes_per_table=4)
-    with pytest.raises(ValueError, match="signature width"):
-        lsh_bucket_candidates(emb, num_planes=16, num_tables=2, planes_per_table=4)
-    with pytest.raises(ValueError, match="wraps"):
-        lsh_signatures_table(emb, num_planes=65)
-
-
-def test_cosine_zero_norm_vector_never_tops_or_crashes(spark):
-    """A zero-norm corpus vector must not crash ANSI mode (DIVIDE_BY_ZERO,
-    Spark 4's default — one zero vector killed the whole top-k job) — it
-    gets a NULL cosine in either SQL mode, sorts last, and never enters
-    the top-k."""
-    from pyspark.sql import functions as F
-
-    from end_to_end_data_engineering_and_ml_system_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-        embedding_near_dups,
-    )
-
-    rows = [(i, [float(i + j) for j in range(4)]) for i in range(1, 6)]
-    rows.append((99, [0.0, 0.0, 0.0, 0.0]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = cosine_topk_bruteforce(emb, emb.filter("vec_id = 1"), k=3).collect()
-    assert len(out) == 3
-    assert all(r["cand_id"] != 99 for r in out)
-    assert all(r["cosine"] is not None for r in out)
-    # the verified near-dup path: zero vector's pairs drop at the threshold
-    nd = embedding_near_dups(emb, threshold=0.5).collect()
-    assert all(99 not in (r["id1"], r["id2"]) for r in nd)
-
-
-def test_semdedup_keeps_rows_with_null_or_empty_vectors(spark):
-    """'One row per corpus row' includes rows whose vector is NULL or
-    empty: they must appear with cluster_id NULL and is_kept true instead
-    of silently vanishing."""
-    from pyspark.sql import functions as F
-
-    from end_to_end_data_engineering_and_ml_system_spark.operators.similarity import (
-        semdedup_portable,
-    )
-
-    rows = [(i, [float(i + j) for j in range(4)]) for i in range(1, 9)]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    ).unionByName(
-        spark.createDataFrame(
-            [(100, None), (101, [])], "vec_id long, embedding array<double>"
-        )
-    )
-    out = semdedup_portable(emb, k=4, tau=0.9).collect()
-    assert len(out) == 10
-    by_id = {r["vec_id"]: r for r in out}
-    for vid in (100, 101):
-        assert by_id[vid]["cluster_id"] is None
-        assert by_id[vid]["is_kept"] is True
-        assert by_id[vid]["max_cos_prev"] == -1.0
-    assert all(by_id[i]["cluster_id"] is not None for i in range(1, 9))
-
-
-def test_bruteforce_exact_mode_matches_fast_path_and_guards_zero_norm(spark):
-    """exact=True keeps the brute-force contract (same neighbors, same
-    broadcast-crossJoin shape) while making scores decimal-exact for
-    cross-engine oracle checks; the zero-norm guard holds in exact mode
-    too (ANSI DIVIDE_BY_ZERO class)."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-    )
-
-    rows = [(i, [float(i * j % 7 + 1) for j in range(6)]) for i in range(1, 9)]
-    rows.append((99, [0.0] * 6))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = emb.filter("vec_id <= 2")
-    fast = cosine_topk_bruteforce(emb, q, k=3).collect()
-    exact = cosine_topk_bruteforce(emb, q, k=3, exact=True).collect()
-    key = lambda rs: sorted((r["query_id"], r["rn"], r["cand_id"]) for r in rs)
-    assert key(fast) == key(exact)
-    assert all(r["cand_id"] != 99 and r["cosine"] is not None for r in exact)
-    # scores agree to float noise; exact scores are the decimal fold
-    fa = {(r["query_id"], r["cand_id"]): r["cosine"] for r in fast}
-    for r in exact:
-        assert abs(fa[(r["query_id"], r["cand_id"])] - r["cosine"]) < 1e-9
-
-
-def test_property_hoisted_cosine_equivalent_to_inline(spark):
-    """cosine_from_norms(a, b, sq_norm(a), sq_norm(b)) must agree with the
-    inline cosine(a, b) on every pair — including zero-norm NULLs — for
-    random vectors (hypothesis): the hoist is a pure plan optimization,
-    never a semantics change."""
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-    from pyspark.sql import functions as F
-
-    from end_to_end_data_engineering_and_ml_system_spark.operators.similarity import (
-        cosine,
-        cosine_from_norms,
-        sq_norm,
-    )
-
-    finite = st.floats(
-        min_value=-1e6, max_value=1e6, allow_nan=False, allow_infinity=False
-    )
-    vec = st.one_of(
-        st.lists(finite, min_size=4, max_size=4),
-        st.just([0.0, 0.0, 0.0, 0.0]),  # force zero-norm coverage
-    )
-
-    @settings(
-        max_examples=12,
-        deadline=None,
-        suppress_health_check=list(HealthCheck),
-        derandomize=True,
-    )
-    @given(vs=st.lists(vec, min_size=2, max_size=6))
-    def run(vs):
-        rows = [(i, v) for i, v in enumerate(vs)]
-        df = spark.createDataFrame(rows, "id long, v array<double>")
-        a = df.select(F.col("id").alias("ia"), F.col("v").alias("va"))
-        b = df.select(F.col("id").alias("ib"), F.col("v").alias("vb"))
-        pairs = a.crossJoin(b)
-        both = pairs.select(
-            "ia",
-            "ib",
-            cosine(F.col("va"), F.col("vb")).alias("inline"),
-            cosine_from_norms(
-                F.col("va"),
-                F.col("vb"),
-                sq_norm(F.col("va")),
-                sq_norm(F.col("vb")),
-            ).alias("hoisted"),
-        ).collect()
-        for r in both:
-            if r["inline"] is None:
-                assert r["hoisted"] is None, (r, vs)
-            else:
-                assert r["hoisted"] is not None and (
-                    abs(r["inline"] - r["hoisted"]) < 1e-12
-                ), (r, vs)
-
-    run()
-
-
-def test_hoisted_cosine_subnormal_norms_no_infinity(spark):
-    """Subnormal-scale vectors (squared norms down in the 1e-324 denormal
-    range): the hoisted guard tests the PRODUCT sqrt(na)*sqrt(nb), same as
-    inline cosine, so NULL-rows are bit-identical between the two forms and
-    no row can ever divide by an underflowed denominator (Infinity)."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from end_to_end_data_engineering_and_ml_system_spark.operators.similarity import (
-        cosine,
-        cosine_from_norms,
-        sq_norm,
-    )
-
-    scales = [1e-170, 1e-165, 5e-324 ** 0.5, 1e-155, 1.0, 0.0]
-    rows = [(i, [s, s * 2, s * 3, s]) for i, s in enumerate(scales)]
-    df = spark.createDataFrame(rows, "id long, v array<double>")
-    a = df.select(F.col("id").alias("ia"), F.col("v").alias("va"))
-    b = df.select(F.col("id").alias("ib"), F.col("v").alias("vb"))
-    both = (
-        a.crossJoin(b)
-        .select(
-            "ia",
-            "ib",
-            cosine(F.col("va"), F.col("vb")).alias("inline"),
-            cosine_from_norms(
-                F.col("va"),
-                F.col("vb"),
-                sq_norm(F.col("va")),
-                sq_norm(F.col("vb")),
-            ).alias("hoisted"),
-        )
-        .collect()
-    )
-    for r in both:
-        assert (r["inline"] is None) == (r["hoisted"] is None), r
-        if r["hoisted"] is not None:
-            assert math.isfinite(r["hoisted"]), r
-            assert abs(r["inline"] - r["hoisted"]) < 1e-9, r
 
 
 def test_minhash_and_sets_matches_source_operators(spark, sf_dir):

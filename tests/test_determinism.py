@@ -64,8 +64,6 @@ SAMPLE = [
     "watermark_tolerance_curve",  # running-max window + delay sweep
     "sessions_per_user_histogram",  # interval-exact session gaps
     # round-6 additions
-    "embedding_semdedup_kept",    # decimal-exact cosines, md5 centroids
-    "embedding_semdedup_threshold_sweep",  # re-thresholded pairwise maxima
     "tx_table_zorder_pruned_scan",  # pruning is I/O-only, results exact
     # round-7 additions
     "nation_trade_pagerank",      # 1e-12-quantized iteration sums
@@ -73,7 +71,6 @@ SAMPLE = [
     "bm25_topk_docs",             # scalar-stats literals + rounded scores
     "events_column_profile",      # single-scan unpivot + decimal entropy
     "doc_bigram_logprob",         # decimal-exact mean over two windows
-    "hybrid_rrf_retrieval",       # integer ranks -> exact 1/(60+r) sums
     "copurchase_label_communities",  # pure integer LPA rounds
     "part_copurchase_pagerank_weighted",  # integer weight normalizers
     "related_parts_ppr",          # seeded restart, quantized iterations
@@ -85,11 +82,9 @@ SAMPLE = [
     "events_dp_noisy_counts",     # md5-uniform seeded Laplace noise
     "corpus_pipeline_v3_perplexity",  # rounded-score NTILE band + dedup
     "copurchase_community_modularity",  # integer edge counts per label
-    "dense_retrieval_ndcg",       # decimal DCG terms, rounded output
     # round-8 additions — the distributed-rank machinery uses
     # spark_partition_id over a range repartition, exactly the kind of
     # construction this suite exists to pin across shuffle widths
-    "embedding_matryoshka_prefix_recall",  # prefix decimal sums + topk
     "part_jaccard_copurchase_similarity",  # capped pairs, one division
     "query_expansion_prf_retrieval",  # posting-grain decimal BM25 sums
     "weighted_doc_sample_by_lang",    # partitioned E-S keys

@@ -124,37 +124,6 @@ def test_aqe_splits_skewed_join_partitions(spark, sf_dir):
             spark.conf.set(k, v)
 
 
-def test_ivf_cells_partition_prune(spark, sf_dir):
-    """The IVF scale story end-to-end: cells written partitioned by cell_id
-    -> a probe of nprobe cells reads ONLY those partitions (PartitionFilters
-    in the scan), and the pruned re-rank matches the in-memory search."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.similarity import (
-        ivf_index,
-        ivf_search,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    assigned, centroids = ivf_index(emb, k_cells=8)
-    dest = os.path.join(tempfile.mkdtemp(prefix="e2e_ivf_"), "cells")
-    write_partitioned(assigned, dest, ["cell_id"])
-    on_disk = spark.read.parquet(dest)
-
-    # pick 2 cells and prune-read them
-    probe_cells = [r["cell_id"] for r in centroids.limit(2).collect()]
-    pruned = on_disk.filter(F.col("cell_id").isin(probe_cells))
-    pf = scan_partition_filters(pruned)
-    assert "cell_id" in pf, f"no partition filter in scan: {pf!r}"
-
-    # the partitioned layout feeds the same probed search results
-    queries = emb.limit(3)
-    a = ivf_search(assigned, centroids, queries, nprobe=3, k=2).toPandas()
-    b = ivf_search(on_disk, centroids, queries, nprobe=3, k=2).toPandas()
-    key = ["query_id", "rn"] if "rn" in a.columns else list(a.columns[:2])
-    a = a.sort_values(key).reset_index(drop=True)
-    b = b.sort_values(key).reset_index(drop=True)
-    assert a.equals(b)
-
-
 def test_compaction_reduces_files_preserves_data(spark, sf_dir, tmp_path):
     from end_to_end_data_engineering_and_ml_system_spark.sources.partitioned import (
         compact_partitioned_dataset,

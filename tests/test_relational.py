@@ -147,24 +147,6 @@ def test_stratified_sample_invariants(spark, sf_dir):
     assert s.select("event_id").exceptAll(s2.select("event_id")).count() == 0
 
 
-def test_centroids_long_partitioning_invariant(spark, sf_dir):
-    from end_to_end_data_engineering_and_ml_system_spark.operators.similarity import (
-        centroids_long,
-    )
-    from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = centroids_long(emb, "label").toPandas().sort_values(["label", "dim"])
-    b = (
-        centroids_long(emb.repartition(17), "label")
-        .toPandas()
-        .sort_values(["label", "dim"])
-    )
-    assert (a["mean_val"].to_numpy() == b["mean_val"].to_numpy()).all()
-
-
 def test_deterministic_split_leakage_safe(spark, sf_dir):
     from end_to_end_data_engineering_and_ml_system_spark.operators.relational import (
         deterministic_split,

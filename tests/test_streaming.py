@@ -583,35 +583,6 @@ def test_progress_listener_keeps_duration_breakdown(spark, tmp_path):
         assert m.batch_duration_ms == m.durations["triggerExecution"]
 
 
-def test_stream_topk_similarity_invariant_to_batch_split(spark, sf_dir):
-    """The running top-k merge must produce the BATCH top-k no matter how
-    the vector stream is split into micro-batches (associative merge under
-    a total order) — replay with 1-file and 4-file triggers and compare
-    row sets exactly."""
-    from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import (
-        load_table,
-    )
-    from end_to_end_data_engineering_and_ml_system_spark.streaming.pipeline import (
-        embeddings_stream,
-        run_topk_similarity_merge,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 4)
-
-    def run(mfpt):
-        s = embeddings_stream(spark, sf_dir, max_files_per_trigger=mfpt)
-        out = run_topk_similarity_merge(s, queries, k=3)
-        return {
-            (r["query_id"], r["cand_id"], r["cosine"]) for r in out.collect()
-        }
-
-    fine = run(1)
-    coarse = run(4)
-    assert fine == coarse
-    assert len(fine) == 4 * 3
-
-
 def test_stream_merge_into_tx_table_versions_and_state(spark, sf_dir, tmp_path):
     from end_to_end_data_engineering_and_ml_system_spark.sources.txlog import (
         TxTable,

@@ -12,7 +12,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_NO_SPARK", "1")
 
 from end_to_end_data_engineering_and_ml_system_spark.plans.registry import (  # noqa: E402
-    _DRIVER_PRIORITY,
     all_queries,
 )
 
@@ -28,8 +27,7 @@ def main() -> None:
         f"{len(qs)} registered queries — {n_oracle} DuckDB-oracle-checked, "
         f"{len(qs) - n_oracle} rows-only (non-SQL-expressible; each carries "
         "an invariant test and, where noted in COVERAGE.md, an "
-        "oracle-checked sibling). The first 50 names are the current "
-        f"driver window ({len(_DRIVER_PRIORITY)} priority-pinned). "
+        "oracle-checked sibling), in registration order. "
         "Run any of them: `python -m end_to_end_data_engineering_and_ml_system_spark "
         "run <name>`.",
         "",

@@ -42,12 +42,10 @@ EXTRA_SNAPSHOTS = (
     "events_column_profile",
     "doc_bigram_logprob",
     # round 8: the distributed-rank shapes — equi-depth NTILE via
-    # range-repartition + prefix offsets (no single-partition Exchange),
-    # vocabulary-coverage global rank, and the bounded top-k-then-rank
-    # RRF fusion (TakeOrderedAndProject feeding an O(k^2) broadcast rank)
+    # range-repartition + prefix offsets (no single-partition Exchange)
+    # and vocabulary-coverage global rank
     "order_price_equidepth_histogram",
     "token_coverage_curve",
-    "hybrid_rrf_retrieval",
 )
 
 

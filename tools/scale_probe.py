@@ -120,19 +120,10 @@ def pathological(n: int, sf_dir: str) -> None:
 
 
 def trainers(n: int, sf_dir: str) -> None:
-    """ALS + k-means scale probe: per-iteration wall at 1x and Nx data.
-
-    For ALS the point is the executor-resident design: factors are
-    DataFrames, so when the USER dimension is replicated Nx (ratings and
-    distinct users both grow Nx) nothing O(users) crosses to the driver —
-    per-half-step wall must be bound by the grouped solve (≈linear in
-    ratings), and driver-side resident memory must stay flat. The probe
-    prints both, plus the monotone-loss check at each scale."""
+    """GBDT + k-means scale probe: per-round/iteration wall at 1x and Nx
+    data, plus driver-side resident memory growth for GBDT."""
     import resource
 
-    from end_to_end_data_engineering_and_ml_system_spark.ml.als import (
-        fit_als_df,
-    )
     from end_to_end_data_engineering_and_ml_system_spark.ml.training import (
         fit_kmeans_lloyd,
     )
@@ -144,39 +135,8 @@ def trainers(n: int, sf_dir: str) -> None:
     spark = get_spark(app_name="scale-probe-trainers", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
 
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    base = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").alias("user"),
-            F.col("l_partkey").alias("item"),
-        )
-        .agg(F.count("*").cast("double").alias("rating"))
-    )
-
     def rss_mb() -> float:
         return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
-
-    for mult in (1, n):
-        r = base if mult == 1 else replicate(base, "user", mult)
-        r = r.persist()
-        n_ratings = r.count()
-        n_users = r.select("user").distinct().count()
-        before = rss_mb()
-        t0 = time.perf_counter()
-        fit = fit_als_df(r, "user", "item", k=8, iters=2)
-        wall = time.perf_counter() - t0
-        mono = all(
-            b <= a + 1e-6 for a, b in zip(fit.losses, fit.losses[1:])
-        )
-        print(
-            f"als {mult}x: ratings={n_ratings} users={n_users} "
-            f"wall={wall:.2f}s per_half_step={wall / 4:.2f}s "
-            f"monotone={mono} driver_maxrss_delta={rss_mb() - before:.0f}MB"
-        )
-        fit.unpersist()
-        r.unpersist()
 
     # gbdt: per-round wall bound by the histogram aggregation (linear in
     # rows); driver state O(rounds) stumps regardless of data size
@@ -244,68 +204,20 @@ def trainers(n: int, sf_dir: str) -> None:
         d.unpersist()
 
 
-def pq_dsir(n: int, sf_dir: str) -> None:
-    """PQ / IVF-PQ / DSIR scale probe at 1x and Nx corpora.
-
-    PQ training is one mapInPandas pass per iteration with O(m*ks*dsub)
-    driver state (corpus-size independent), encoding and ADC search are
-    pure JVM joins, and the DSIR distributions are <=B-row aggregates —
-    so all three walls must grow ~linearly with the corpus, and the ADC
-    candidate join must be bound by codes x queries, never floats."""
+def dsir(n: int, sf_dir: str) -> None:
+    """DSIR scale probe at 1x and Nx corpora: the importance-weight
+    distributions are <=B-row aggregates, so the wall must grow ~linearly
+    with the corpus."""
     from end_to_end_data_engineering_and_ml_system_spark.operators.dsir import (
         dsir_log_weights,
-    )
-    from end_to_end_data_engineering_and_ml_system_spark.operators.pq import (
-        codebook_df,
-        fit_pq,
-        ivfpq_index,
-        ivfpq_search,
-        pq_adc_topk,
-        pq_encode,
     )
     from end_to_end_data_engineering_and_ml_system_spark.session import get_spark
     from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import (
         load_table,
     )
 
-    spark = get_spark(app_name="scale-probe-pq-dsir", cpus=32)
+    spark = get_spark(app_name="scale-probe-dsir", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    for mult in (1, n):
-        d = (emb if mult == 1 else replicate(emb, "vec_id", mult)).persist()
-        rows = d.count()
-        t0 = time.perf_counter()
-        fit = fit_pq(d, m=32, ks=64, iters=3)
-        t_fit = time.perf_counter() - t0
-        cb = codebook_df(spark, fit.codebooks)
-        t0 = time.perf_counter()
-        enc = pq_encode(d, cb, m=32).persist()
-        n_codes = enc.count()
-        t_enc = time.perf_counter() - t0
-        q = d.filter(F.col("vec_id") < 8)
-        t0 = time.perf_counter()
-        pq_adc_topk(enc, cb, q, m=32, k=3).count()
-        t_adc = time.perf_counter() - t0
-        mono = all(
-            a >= b - 1e-6 for a, b in zip(fit.distortions, fit.distortions[1:])
-        )
-        print(
-            f"pq {mult}x: rows={rows} fit={t_fit:.2f}s encode={t_enc:.2f}s "
-            f"({n_codes} codes) adc_topk={t_adc:.2f}s monotone={mono}"
-        )
-        enc.unpersist()
-        t0 = time.perf_counter()
-        enc2, cent, cb2, _ = ivfpq_index(d, k_cells=8, m=32, ks=64, iters=2)
-        enc2 = enc2.persist()
-        enc2.count()
-        t_idx = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        ivfpq_search(enc2, cent, cb2, q, m=32, nprobe=2, k=3).count()
-        t_srch = time.perf_counter() - t0
-        print(f"ivfpq {mult}x: index={t_idx:.2f}s search_nprobe2={t_srch:.2f}s")
-        enc2.unpersist()
-        d.unpersist()
 
     docs = load_table(spark, sf_dir, "documents")
     for mult in (1, n):
@@ -1094,10 +1006,10 @@ def main() -> None:
         sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
         pathological(n, sf_dir)
         return
-    if len(sys.argv) > 1 and sys.argv[1] == "--pq-dsir":
+    if len(sys.argv) > 1 and sys.argv[1] == "--dsir":
         n = int(sys.argv[2]) if len(sys.argv) > 2 else 10
         sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
-        pq_dsir(n, sf_dir)
+        dsir(n, sf_dir)
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--graph":
         n = int(sys.argv[2]) if len(sys.argv) > 2 else 10
