@@ -1,293 +1,52 @@
 """The correctness driver samples the first 50 names from
-``__spark_entry__.queries()``; ``registry._DRIVER_PRIORITY`` pins that
-window. These tests keep the pin honest: every priority name must resolve,
-the window must be exactly the priority list, and reordering must not drop
-or duplicate any registered query.
-
-Evidence model (round 12, replacing the r8/r9/r11 point fixes): the window
-declares its own round number (``registry._WINDOW_ROUND``); a name counts
-as proven-at-window-authoring-time iff it appears in a CORRECTNESS artifact
-from a round STRICTLY BEFORE that number. Artifacts from the window's own
-round or later never count, so the guard is invariant under ANY number of
-future artifacts landing — not just the next one.
+``__spark_entry__.queries()``. No list pins that window: the priority
+order is the registry's registration order, which ``all_queries()``
+returns. These tests keep that order honest: every name resolves to its
+own query, no name is registered twice, and neither ``all_queries()`` nor
+the driver contract drops or reorders a registered query.
 """
 
 from __future__ import annotations
 
+import pytest
+
 from end_to_end_data_engineering_and_ml_system_spark.plans.registry import (
-    _DRIVER_PRIORITY,
     _REGISTRY,
-    _WINDOW_ROUND,
     _ensure_loaded,
     all_queries,
+    register,
 )
 
 DRIVER_WINDOW = 50
 
 
 def test_priority_names_exist():
-    _ensure_loaded()
-    missing = [n for n in _DRIVER_PRIORITY if n not in _REGISTRY]
-    assert not missing, f"_DRIVER_PRIORITY names not registered: {missing}"
+    qs = all_queries()
+    broken = [n for n, q in qs.items() if q.name != n or not callable(q.build)]
+    assert not broken, f"names that do not resolve to their own query: {broken}"
 
 
 def test_priority_no_duplicates():
-    assert len(set(_DRIVER_PRIORITY)) == len(_DRIVER_PRIORITY)
+    names = list(all_queries())
+    assert len(set(names)) == len(names)
+    # a second @register under a taken name raises and leaves the first
+    taken = _REGISTRY[names[0]]
+    with pytest.raises(ValueError, match="duplicate query name"):
+        register(names[0])(lambda spark, sf_dir: None)
+    assert _REGISTRY[names[0]] is taken
 
 
 def test_driver_window_is_priority_list():
-    # names past the 50-slot window are legal (mid-round additions queue as
-    # the next rotation's candidates) but the window itself must be full
-    head = list(all_queries())[: len(_DRIVER_PRIORITY)]
-    assert head == list(_DRIVER_PRIORITY)
-    # EXACTLY the window size: a longer list silently parks its tail
-    # outside the driver's 50-name sample while the ledger still claims
-    # those names get re-proven (the round-11 52-entry bug)
-    assert len(_DRIVER_PRIORITY) == DRIVER_WINDOW
+    import __spark_entry__ as entrymod
+
+    window = list(entrymod.queries())[:DRIVER_WINDOW]
+    assert window == list(all_queries())[:DRIVER_WINDOW]
+    assert len(window) == DRIVER_WINDOW
 
 
 def test_reorder_preserves_registry():
     _ensure_loaded()
     assert set(all_queries()) == set(_REGISTRY)
     assert len(all_queries()) == len(_REGISTRY)
-
-
-def test_registry_never_shrinks():
-    """A rename or deleted @register can't silently shrink driver coverage:
-    the registry held 155 queries at the round-3 snapshot and only grows."""
-    _ensure_loaded()
-    assert len(_REGISTRY) >= 156
-
-
-def _artifact_rounds() -> list[tuple[int, set[str]]]:
-    """Per-round driver-tested (round, name-set) pairs, ascending round."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pairs = []
-    for f in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        rnd = int(f.rsplit("_r", 1)[1].split(".")[0])
-        with open(f) as fh:
-            pairs.append((rnd, set(json.load(fh))))
-    pairs.sort(key=lambda p: p[0])
-    return pairs
-
-
-def _proven_at_window_time(
-    artifacts: list[tuple[int, set[str]]], window_round: int
-) -> set[str]:
-    """Names proven BEFORE the window could have been authored.
-
-    The window for round N is committed during round N, so only artifacts
-    from rounds < N can have informed it. Anchoring to the window's OWN
-    round number (instead of positional heuristics like "all artifacts
-    minus the newest") makes the answer independent of how many artifacts
-    have landed since: rounds >= N are excluded forever. This is the model
-    the r8, r9, and r11 failures all demanded — each of those shipped a
-    positional point fix that broke on the NEXT landing.
-    """
-    proven: set[str] = set()
-    for rnd, names in artifacts:
-        if rnd < window_round:
-            proven |= names
-    return proven
-
-
-def _shipped_driver_tested() -> set[str]:
-    """Every name with ANY driver evidence (evidence-path ledger: here the
-    full union is correct — evidence is evidence regardless of recency)."""
-    tested: set[str] = set()
-    for _, s in _artifact_rounds():
-        tested |= s
-    return tested
-
-
-# Rounds 15-16 are OPTIMIZATION rounds: the driver contract freezes the
-# window (a dropped/renamed declared query is a REGRESSION regardless of
-# speed, and cross-round bench totals / oracle hashes are only comparable
-# over the same 50 names), so the r14 window is deliberately re-proven
-# as-is. One reason class covers every slot; per-name "changed:" /
-# "freshness:"bookkeeping resumes with the next feature round's rotation
-# (the r14 reasons this block replaces are in git history at be7d4b4^).
-RECONFIRMATION_SLOTS: dict[str, str] = {
-    n: "frozen: optimization rounds 15-16 re-prove the r14 window "
-    "unchanged - rotation would drop declared queries (driver contract: "
-    "REGRESSION) and break cross-round bench/oracle comparability"
-    for n in _DRIVER_PRIORITY
-}
-
-
-def _wasted_slots(
-    window, slots: dict[str, str], tested: set[str]
-) -> list[str]:
-    """Window names that already have a driver row but no documented
-    reconfirmation reason — the condition the guard rejects."""
-    return [n for n in window if n in tested and n not in slots]
-
-
-def test_window_slots_all_documented():
-    """Every window slot is either unproven at window-authoring time (a
-    genuinely new query — no artifact from a round before _WINDOW_ROUND
-    names it) or carries a documented reconfirmation reason."""
-    tested = _proven_at_window_time(_artifact_rounds(), _WINDOW_ROUND)
-    if not tested:  # fresh clone without round artifacts
-        return
-    overlap = _wasted_slots(_DRIVER_PRIORITY, RECONFIRMATION_SLOTS, tested)
-    assert not overlap, f"window wastes slots on already-proven queries: {overlap}"
-
-
-def test_window_guard_survives_future_artifact_landings():
-    """Simulate the next TWO rounds' driver runs recording this very window
-    (the r11 failure needed two landings to surface: the window's own
-    round's artifact proving its new names, then one more artifact pushing
-    that one out of the positional exclusion). Under the round-anchored
-    model both synthetic futures are excluded by round number, so the
-    guard's answer is bit-identical to the no-landing answer."""
-    real = _artifact_rounds()
-    if not real:
-        return
-    own = (_WINDOW_ROUND, set(_DRIVER_PRIORITY) | {"__r12_new_query__"})
-    later = (_WINDOW_ROUND + 1, set(_DRIVER_PRIORITY) | {"__r13_new_query__"})
-    baseline = _proven_at_window_time(real, _WINDOW_ROUND)
-    for future in ([own], [own, later]):
-        tested = _proven_at_window_time(real + future, _WINDOW_ROUND)
-        assert tested == baseline, (
-            "proven-at-authoring set changed when a future artifact landed "
-            f"({len(future)} landings) — the guard is not landing-invariant"
-        )
-        overlap = _wasted_slots(_DRIVER_PRIORITY, RECONFIRMATION_SLOTS, tested)
-        assert not overlap, (
-            f"guard would break after {len(future)} future landings: {overlap}"
-        )
-    # synthetic new names never count as proven for THIS window
-    assert "__r12_new_query__" not in _proven_at_window_time(
-        real + [own, later], _WINDOW_ROUND
-    )
-
-
-def test_window_round_is_current():
-    """_WINDOW_ROUND must not lag the artifact ledger: the newest shipped
-    artifact may be at most the window's own round (the round's driver run
-    records the window it was given). A newer artifact means a new round
-    started and the window was never rotated — stale bookkeeping."""
-    real = _artifact_rounds()
-    if not real:
-        return
-    newest = max(r for r, _ in real)
-    assert _WINDOW_ROUND >= newest, (
-        f"newest CORRECTNESS artifact is round {newest} but _WINDOW_ROUND "
-        f"is {_WINDOW_ROUND}: rotate the window (and bump _WINDOW_ROUND) "
-        "for the new round"
-    )
-
-
-def test_window_guard_negative_control():
-    """The guard must still FAIL on a deliberately wasteful window: an
-    already-proven name squatting a slot with no documented reason."""
-    tested = _proven_at_window_time(_artifact_rounds(), _WINDOW_ROUND)
-    if not tested:
-        return
-    proven_unslotted = sorted(tested - set(RECONFIRMATION_SLOTS))
-    assert proven_unslotted, "control needs a proven name outside the slots"
-    bad_window = list(_DRIVER_PRIORITY) + [proven_unslotted[0]]
-    assert _wasted_slots(bad_window, RECONFIRMATION_SLOTS, tested) == [
-        proven_unslotted[0]
-    ]
-
-
-def test_reconfirmation_slots_all_in_window():
-    """A slot entry for a name not in the window is stale bookkeeping."""
-    stale = sorted(set(RECONFIRMATION_SLOTS) - set(_DRIVER_PRIORITY))
-    assert not stale, f"RECONFIRMATION_SLOTS entries not in the window: {stale}"
-
-
-# Rows-only queries deliberately excluded from the driver window (each needs
-# an invariant test and/or a driver-green oracle-checked sibling — see the
-# _DRIVER_PRIORITY comment in plans/registry.py). Round 8 rotates the four
-# formerly-excluded names through the window, so the set is empty; it stays
-# as the documented mechanism should a future query ever need it.
-DOCUMENTED_EXCLUSIONS: set[str] = set()
-
-
-def test_every_query_has_driver_evidence_path():
-    """Evidence-ledger guard: a registered query may not silently live
-    gate-only forever. Every name must be (a) already driver-tested in a
-    shipped CORRECTNESS round, (b) queued in the current driver window, or
-    (c) on the documented exclusion list. New queries added mid-round must
-    be appended to _DRIVER_PRIORITY (beyond the 50-slot window is fine —
-    they become the next rotation's candidates) or justified above."""
-    _ensure_loaded()
-    tested = _shipped_driver_tested()
-    if not tested:  # fresh clone without round artifacts
-        return
-    unaccounted = sorted(
-        set(_REGISTRY)
-        - tested
-        - set(_DRIVER_PRIORITY)
-        - DOCUMENTED_EXCLUSIONS
-    )
-    assert not unaccounted, (
-        "queries with no driver-evidence path (add to _DRIVER_PRIORITY or "
-        f"document an exclusion): {unaccounted}"
-    )
-
-
-# ---- property tests: the guard must hold for ANY artifact history ----
-
-try:
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    _names = st.text(alphabet="abcdefgh_", min_size=1, max_size=8)
-    _artifact_histories = st.lists(
-        st.tuples(st.integers(min_value=1, max_value=40), st.sets(_names, max_size=12)),
-        min_size=0,
-        max_size=8,
-        unique_by=lambda p: p[0],
-    ).map(lambda ps: sorted(ps, key=lambda p: p[0]))
-    _rounds = st.integers(min_value=1, max_value=40)
-
-    @given(_artifact_histories, _rounds)
-    @settings(max_examples=200, deadline=None)
-    def test_window_time_proven_set_properties(history, window_round):
-        """For any artifact history and window round: (1) the proven set is
-        exactly the union of strictly-earlier-round artifacts; (2) landing
-        any artifact with round >= window_round NEVER changes the answer
-        (full landing invariance, not just next-landing); (3) landing an
-        earlier-round artifact only grows it (evidence monotonicity)."""
-        proven = _proven_at_window_time(history, window_round)
-        assert proven == set().union(
-            set(), *(s for r, s in history if r < window_round)
-        )
-        # landing invariance: ANY future-or-own-round artifact is inert
-        for future_round in (window_round, window_round + 1, window_round + 7):
-            landed = _proven_at_window_time(
-                history + [(future_round, {"__new__"})], window_round
-            )
-            assert landed == proven
-        # monotonicity: a strictly-earlier artifact only grows the set
-        grown = _proven_at_window_time(
-            history + [(window_round - 1, {"__old__"})], window_round
-        )
-        assert proven | {"__old__"} == grown
-
-    @given(_artifact_histories, _rounds, st.sets(_names, max_size=8))
-    @settings(max_examples=200, deadline=None)
-    def test_wasted_slots_never_flags_unproven_or_slotted(
-        history, window_round, window_set
-    ):
-        """_wasted_slots flags a window name iff it is window-time proven
-        AND unslotted — no false positives on unproven names, and slotting
-        a name always legalizes it."""
-        tested = _proven_at_window_time(history, window_round)
-        window = sorted(window_set)
-        wasted = _wasted_slots(window, {}, tested)
-        assert set(wasted) == set(window) & tested
-        # full slotting always clears the guard
-        slots = {n: "freshness: property" for n in window}
-        assert _wasted_slots(window, slots, tested) == []
-
-except ImportError:  # pragma: no cover — hypothesis is baked in
-    pass
+    # registration order, unchanged
+    assert list(all_queries()) == list(_REGISTRY)
