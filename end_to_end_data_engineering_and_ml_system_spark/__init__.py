@@ -2,8 +2,7 @@
 capabilities of the reference system (a network-anomaly-detection pipeline:
 batch ETL, streaming scoring, windowed dashboard analytics, ML scoring), plus
 the large-scale training-data operators (dedup, text analysis, multimodal
-columns, learned quality filtering, tokenizer training, versioned tables)
-required at 100 TB scale.
+columns, versioned tables) required at 100 TB scale.
 
 Everything here is built on public Apache Spark APIs only: DataFrame/SQL for
 batch, Structured Streaming for streams, MLlib for feature/ML pipelines, and
@@ -29,12 +28,6 @@ _EXPORTS = {
     # dedup
     "lsh_verified_near_dups": ("end_to_end_data_engineering_and_ml_system_spark.operators.dedup", "lsh_verified_near_dups"),
     "dedup_cluster_labels": ("end_to_end_data_engineering_and_ml_system_spark.operators.graph", "dedup_cluster_labels"),
-    # learned quality filter
-    "fit_quality_classifier": ("end_to_end_data_engineering_and_ml_system_spark.ml.quality", "fit_quality_classifier"),
-    "score_documents": ("end_to_end_data_engineering_and_ml_system_spark.ml.quality", "score_documents"),
-    # tokenizer training
-    "learn_bpe_merges": ("end_to_end_data_engineering_and_ml_system_spark.operators.bpe", "learn_bpe_merges"),
-    "bpe_token_lengths": ("end_to_end_data_engineering_and_ml_system_spark.operators.bpe", "bpe_token_lengths"),
     # tracking / registry
     "Tracker": ("end_to_end_data_engineering_and_ml_system_spark.ml.registry", "Tracker"),
     "ModelRegistry": ("end_to_end_data_engineering_and_ml_system_spark.ml.registry", "ModelRegistry"),

@@ -1,6 +1,5 @@
 """Distributed gradient-boosted stumps — the boosting trainer family,
-alongside the linear/MLP autoencoders, the logistic classifier and
-k-means.
+alongside the linear/MLP autoencoders and k-means.
 
 LS-Boost (Friedman 2001, "Greedy Function Approximation", Algorithm 2)
 with depth-1 regression trees over BUCKETIZED integer features — the

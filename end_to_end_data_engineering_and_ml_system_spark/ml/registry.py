@@ -369,8 +369,8 @@ class ModelRegistry:
 # run.log_artifact / run.end) and reads back through runs()/
 # find_latest_run_id()/get_run(). A deployment with a real MLflow tracking
 # server swaps the file backend by passing an ``MlflowTracker`` anywhere a
-# ``Tracker`` is accepted — the trainers (ml/training.py, ml/quality.py)
-# only ever touch the run verbs, so no caller changes. The adapter is
+# ``Tracker`` is accepted — the trainers (ml/training.py) only ever touch
+# the run verbs, so no caller changes. The adapter is
 # import-gated: this container ships no ``mlflow`` package, so it exists as
 # the documented seam plus an interface-parity test
 # (tests/test_registry_ml.py); on an environment with MLflow installed it

@@ -117,104 +117,6 @@ def fit_linear_autoencoder(
     return FitResult(weights=w, losses=losses)
 
 
-LOGIT_SCHEMA = "grad array<double>, loss double, n long, correct long"
-
-
-def _logistic_partials(w: np.ndarray):
-    """Per-partition partial sums of log-loss and its gradient for binary
-    logistic regression.  For each row (x, y): p = σ(wᵀx),
-    loss = −[y ln p + (1−y) ln(1−p)], ∇ = (p − y)·x.  Batched numpy over
-    Arrow frames — no per-row Python.  ``correct`` counts p≥0.5 hits so
-    the training loop can log accuracy alongside loss."""
-
-    def fn(batches):
-        import pandas as pd
-
-        g = np.zeros(w.shape[0])
-        loss = 0.0
-        n = 0
-        correct = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf["features"].to_numpy())  # (b, d)
-            y = pdf["label"].to_numpy().astype(float)  # (b,)
-            z = x @ w
-            p = 1.0 / (1.0 + np.exp(-z))
-            pc = np.clip(p, 1e-12, 1.0 - 1e-12)
-            loss += float(-(y * np.log(pc) + (1.0 - y) * np.log(1.0 - pc)).sum())
-            g += x.T @ (p - y)
-            correct += int(((p >= 0.5).astype(float) == y).sum())
-            n += len(x)
-        yield pd.DataFrame(
-            {
-                "grad": [g.tolist()],
-                "loss": [loss],
-                "n": [n],
-                "correct": [correct],
-            }
-        )
-
-    return fn
-
-
-@dataclass
-class LogisticFitResult:
-    weights: np.ndarray
-    losses: list[float]  # mean log-loss per epoch, BEFORE that epoch's step
-    accuracies: list[float]  # training accuracy at the same point
-
-
-def fit_logistic_classifier(
-    examples: DataFrame,
-    dim: int,
-    epochs: int = 8,
-    lr: float = 0.5,
-    tracker_run=None,
-    init_weights=None,
-) -> LogisticFitResult:
-    """Distributed binary logistic regression — the fastText-style
-    quality-filter trainer every LLM data pipeline runs before pre-training
-    (CCNet / Gopher / LLaMA corpus filtering).  Same parameter-server shape
-    as ``fit_linear_autoencoder``: the data never leaves the cluster, one
-    ``mapInPandas`` aggregation per epoch collects ``#partitions`` rows of
-    (d-vector gradient, loss, n), and only the d-dim weight vector rides in
-    the closure.  Full-batch GD on the convex log-loss from a zero init:
-    deterministic given the data (up to float summation order) and the loss
-    series is monotone decreasing for a small enough step — both are
-    pytest invariants.
-
-    ``examples`` needs columns ``features array<double>`` (include the bias
-    term as a leading 1.0) and ``label`` (0/1).  ``init_weights``
-    warm-starts from a previous model (the drift-triggered retraining
-    pattern, same as ``fit_linear_autoencoder``)."""
-    if init_weights is not None:
-        w = np.array(init_weights, dtype=float)
-        if w.shape != (dim,):
-            raise ValueError(f"init_weights shape {w.shape} != ({dim},)")
-    else:
-        w = np.zeros(dim)
-    df = examples.select("features", "label")
-    losses: list[float] = []
-    accs: list[float] = []
-    for epoch in range(epochs):
-        parts = df.mapInPandas(_logistic_partials(w), LOGIT_SCHEMA).collect()
-        n = sum(p["n"] for p in parts)
-        if n == 0:
-            raise ValueError("empty training frame")
-        grad = sum(np.asarray(p["grad"]) for p in parts) / float(n)
-        loss = sum(p["loss"] for p in parts) / float(n)
-        acc = sum(p["correct"] for p in parts) / float(n)
-        losses.append(loss)
-        accs.append(acc)
-        if tracker_run is not None:
-            tracker_run.log_metrics(
-                {"train_logloss": loss, "train_accuracy": acc}, step=epoch
-            )
-        w = w - lr * grad
-    return LogisticFitResult(weights=w, losses=losses, accuracies=accs)
-
-
 def reconstruction_mse_stats(features: DataFrame, w: np.ndarray) -> dict:
     """The reference's post-training mse_min/max/mean over the train set
     (train_autoencoder.py:209-216) as one distributed aggregation."""
@@ -320,7 +222,7 @@ def fit_kmeans_lloyd(
     """Distributed Lloyd's k-means with a DETERMINISTIC md5-medoid init
     (the k rows with the smallest ``md5(id)`` become the initial
     centroids — engine-portable, no RNG), completing the trainer family
-    (linear AE, logistic classifier, now clustering).  Same
+    (linear AE, now clustering).  Same
     parameter-server shape: per iteration one ``mapInPandas`` aggregation
     collects ``#partitions × k`` partial rows; only the k×d centroid
     matrix rides in the closure.  Lloyd's guarantees the inertia sequence

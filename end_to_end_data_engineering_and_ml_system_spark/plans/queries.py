@@ -10975,137 +10975,6 @@ def daily_growth_accounting(spark, sf_dir):
     )
 
 
-_DSIR_ORACLE_CORE = """
-        tokarr AS (
-            SELECT doc_id, source,
-                   list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                               tk -> tk <> '') AS ts
-            FROM documents
-        ),
-        bg AS (
-            SELECT doc_id, source,
-                   unnest(list_transform(range(1, len(ts)),
-                                         i -> ts[i] || ' ' || ts[i+1])) AS ngram
-            FROM tokarr
-        ),
-        pd AS (
-            SELECT doc_id, source,
-                   CAST(concat('0x', substr(md5(ngram), 1, 8)) AS BIGINT)
-                       % 256 AS bucket,
-                   COUNT(*) AS c
-            FROM bg GROUP BY 1, 2, 3
-        ),
-        raw AS (
-            SELECT bucket, SUM(c) AS r_c,
-                   SUM(CASE WHEN source IN ('src0','src1','src2')
-                            THEN c ELSE 0 END) AS t_c
-            FROM pd GROUP BY 1
-        ),
-        tot AS (SELECT SUM(r_c) AS r_tot, SUM(t_c) AS t_tot FROM raw),
-        ratios AS (
-            SELECT bucket,
-                   ln((t_c + 1) / CAST(t_tot + 256 AS DOUBLE))
-                 - ln((r_c + 1) / CAST(r_tot + 256 AS DOUBLE)) AS logratio
-            FROM raw CROSS JOIN tot
-        ),
-        w AS (
-            SELECT pd.doc_id,
-                   any_value(pd.source) AS source,
-                   CAST(SUM(c) AS BIGINT) AS n_ngrams,
-                   SUM(c * logratio) AS dsir_logweight
-            FROM pd JOIN ratios USING (bucket)
-            GROUP BY 1
-        )
-"""
-
-_DSIR_TARGET_SOURCES = ("src0", "src1", "src2")
-
-
-def _dsir_weights_df(spark, sf_dir):
-    from ..operators.dsir import dsir_log_weights
-
-    docs = load_table(spark, sf_dir, "documents")
-    return dsir_log_weights(
-        docs,
-        target=F.col("source").isin(*_DSIR_TARGET_SOURCES),
-        buckets=256,
-        carry=("source",),
-    )
-
-
-@register(
-    "dsir_importance_weights",
-    oracle="WITH " + _DSIR_ORACLE_CORE + """
-        SELECT doc_id, source, n_ngrams,
-               ROUND(dsir_logweight, 6) AS dsir_logweight
-        FROM w
-    """,
-    description=(
-        "DSIR hashed-bigram importance log-weights (Xie et al. 2023) "
-        "against the curated-source target, oracle-checked per document"
-    ),
-    tags=("text", "quality", "dsir", "llm-data"),
-)
-def dsir_importance_weights(spark, sf_dir):
-    """Per-document DSIR importance weight (operators/dsir.py): hashed
-    bigram buckets, +1-smoothed target/raw distributions from ONE
-    exploded aggregate, per-doc grouped sum of c*logratio. Rounded to 6
-    decimals so both engines rank identically downstream — well above
-    the cross-engine libm ulp, well below any real weight gap."""
-    w = _dsir_weights_df(spark, sf_dir)
-    return w.select(
-        "doc_id",
-        "source",
-        "n_ngrams",
-        F.round("dsir_logweight", 6).alias("dsir_logweight"),
-    )
-
-
-@register(
-    "dsir_selection_by_source",
-    oracle="WITH " + _DSIR_ORACLE_CORE + """
-        , ranked AS (
-            SELECT source,
-                   ROW_NUMBER() OVER (
-                       ORDER BY ROUND(dsir_logweight, 6) DESC, doc_id
-                   ) AS rn
-            FROM w
-        )
-        SELECT source,
-               CAST(COUNT(*) FILTER (WHERE rn <= 100) AS BIGINT) AS n_selected,
-               CAST(COUNT(*) AS BIGINT) AS n_docs
-        FROM ranked
-        GROUP BY 1
-    """,
-    description=(
-        "DSIR top-100 selection audit: docs kept per source — the "
-        "enrichment check that selection actually pulls target-like data"
-    ),
-    tags=("text", "quality", "dsir", "llm-data"),
-)
-def dsir_selection_by_source(spark, sf_dir):
-    """The selection step + its audit: global top-100 by rounded weight
-    (6-decimal round makes the rank boundary engine-portable; doc_id
-    tie-break), then per-source kept/total counts. orderBy().limit(100)
-    plans as TakeOrderedAndProject — per-partition heaps, never a global
-    single-partition sort — and the 100-row selection rides a broadcast
-    back onto the weights. The audit exposes whether DSIR enriches the
-    curated sources it was pointed at."""
-    w = _dsir_weights_df(spark, sf_dir)
-    sel = (
-        w.orderBy(F.round("dsir_logweight", 6).desc(), "doc_id")
-        .limit(100)
-        .select(F.col("doc_id").alias("sel_id"))
-    )
-    flagged = w.join(
-        F.broadcast(sel), w.doc_id == F.col("sel_id"), "left"
-    )
-    return flagged.groupBy("source").agg(
-        F.count("sel_id").cast("bigint").alias("n_selected"),
-        F.count("*").cast("bigint").alias("n_docs"),
-    )
-
-
 @register(
     "mlp_ae_detect_loop",
     oracle=None,  # the scores come from the iterative nonlinear fit — not

@@ -21,7 +21,7 @@ data-profiling surface at all) does not:
 Determinism contract (NOTES.md rules): cross-engine-compared doubles are
 either bit-identical by construction (PageRank's quantized sums; single
 divisions of exact integers) or fixed-expression pointwise math rounded to 6
-decimals where a libm `ln` is involved (the established dsir/logprob
+decimals where a libm `ln` is involved (the established logprob
 convention; sub-ulp libm variation is absorbed by the rounding).
 """
 
@@ -317,7 +317,7 @@ _BM25_DF_COLS_SQL = ",\n               ".join(
 )
 # one score term per query term, mirrored exactly by the Spark expression
 # tree below: idf uses the engine's own ln over identical double inputs and
-# the final fixed-order 3-term sum is rounded to 6 decimals (the dsir/libm
+# the final fixed-order 3-term sum is rounded to 6 decimals (the logprob/libm
 # convention), everything else is pointwise double math over exact integers
 _BM25_TERM_SQL = " + ".join(
     f"""(ln(CAST(1.0 AS DOUBLE)

@@ -1,13 +1,7 @@
-"""Learned-quality-filter, preference-data, and robust-monitoring queries.
+"""Privacy-audit, robust-monitoring, trainer and versioned-table queries.
 
 Round-5 surface growth on top of the SURVEY.md §2 parity set:
 
-- the fastText-style LEARNED quality classifier (train + score + audit) that
-  LLM data pipelines run after the rule-based heuristics — reference analog:
-  the trained-model scoring path of scripts/stream_anomaly_detector.py:230-260
-  re-expressed as corpus filtering instead of flow scoring;
-- RLHF preference-pair construction (chosen/rejected with a margin) — the
-  data-prep step between corpus curation and reward-model training;
 - l-diversity (the privacy audit k-anonymity alone misses);
 - median/MAD robust outlier detection over event-time buckets (the monitor
   that survives the heavy-tailed traffic a mean/stddev z-score drowns in).
@@ -24,313 +18,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..ml.quality import (
-    FROZEN_QUALITY_WEIGHTS,
-    fluency_bp,
-    quality_feature_counts,
-    quality_logit,
-    quality_probability,
-    weak_label,
-)
 from ..sources.catalog import load_table
 from .queries import _SQL_SHINGLES, _SQL_VERIFIED_PAIRS
 from .queries_graph_retrieval import _MAX_BASKET as _MB
 from .registry import register
-
-# DuckDB mirror of ml.quality.quality_feature_counts: the exact integer
-# counts every feature and label derives from.
-_SQL_QCOUNTS = r"""
-    SELECT
-        doc_id,
-        lang,
-        CAST(length(text) AS BIGINT) AS chars,
-        CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                             tk -> tk <> '')) AS BIGINT) AS toks,
-        CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                             tk -> list_contains(
-                                 ['the','a','an','and','or','of','to',
-                                  'in','is','it'], tk)))
-             AS BIGINT) AS nstop,
-        CAST(length(regexp_replace(text, '[^.!?,;:]', '', 'g'))
-             AS BIGINT) AS npunct,
-        CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-             AS BIGINT) AS nupper,
-        CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
-             AS BIGINT) AS ndigit
-    FROM documents
-"""
-
-# DuckDB mirror of ml.quality.weak_label: fluency (stopword ratio >= 5%)
-# AND substance (>= 200 chars), exact integer comparisons.
-_SQL_WL = """(CASE WHEN toks > 0 AND nstop * 100 >= toks * 5
-                   AND chars >= 200 THEN 1 ELSE 0 END)"""
-
-# DuckDB mirror of ml.quality.fluency_bp: stopword fluency in basis points.
-_SQL_FBP = """(CASE WHEN toks > 0
-               THEN CAST(floor(CAST(nstop * 10000 AS DOUBLE)
-                               / CAST(toks AS DOUBLE)) AS BIGINT)
-               ELSE 0 END)"""
-
-# DuckDB mirror of ml.quality.quality_logit(FROZEN_QUALITY_WEIGHTS): the
-# SAME left-to-right fold and term order, literals generated from the one
-# frozen constant so the two engines can never drift apart.
-_W = [repr(float(w)) for w in FROZEN_QUALITY_WEIGHTS]
-_SQL_Z = (
-    f"({_W[0]}) * 1.0"
-    f" + ({_W[1]}) * (ln(1.0 + CAST(chars AS DOUBLE)) / 10.0)"
-    f" + ({_W[2]}) * (CASE WHEN toks > 0 THEN CAST(nstop AS DOUBLE)"
-    f" / CAST(toks AS DOUBLE) ELSE 0.0 END)"
-    f" + ({_W[3]}) * (CASE WHEN chars > 0 THEN CAST(npunct AS DOUBLE)"
-    f" / CAST(chars AS DOUBLE) ELSE 0.0 END)"
-    f" + ({_W[4]}) * (CASE WHEN chars > 0 THEN CAST(nupper AS DOUBLE)"
-    f" / CAST(chars AS DOUBLE) ELSE 0.0 END)"
-    f" + ({_W[5]}) * (CASE WHEN chars > 0 THEN CAST(ndigit AS DOUBLE)"
-    f" / CAST(chars AS DOUBLE) ELSE 0.0 END)"
-)
-
-
-@register(
-    "quality_classifier_training_curve",
-    oracle=None,  # iterative float optimization: loss depends on float
-    # summation order across partitions — invariant-tested instead
-    # (monotone decreasing convex loss, accuracy beats majority class)
-    description=(
-        "distributed logistic-regression quality-filter training: per-epoch "
-        "log-loss/accuracy series (fastText-style corpus filter trainer)"
-    ),
-    tags=("ml", "training", "text"),
-)
-def quality_classifier_training_curve(spark, sf_dir):
-    """M7/A13-shape training loop on the LEARNED quality filter: weak labels
-    from the rule heuristic, one mapInPandas gradient aggregation per epoch
-    (data never leaves the cluster; only the 6-dim weight vector and
-    #partitions partial rows move). The returned frame IS the reference's
-    ``history.history`` analog (train_autoencoder.py:200-206)."""
-    from ..ml.quality import fit_quality_classifier
-
-    docs = load_table(spark, sf_dir, "documents")
-    fit = fit_quality_classifier(docs, epochs=12, lr=4.0)
-    rows = [
-        (e, float(ls), float(ac))
-        for e, (ls, ac) in enumerate(zip(fit.losses, fit.accuracies))
-    ]
-    return spark.createDataFrame(
-        rows, "epoch int, train_logloss double, train_accuracy double"
-    )
-
-
-@register(
-    "quality_classifier_score_deciles",
-    oracle=f"""
-        WITH c AS ({_SQL_QCOUNTS}),
-        z AS (
-            SELECT
-                {_SQL_WL} AS wl,
-                {_SQL_Z} AS z
-            FROM c
-        )
-        SELECT
-            CAST(floor((1.0 / (1.0 + exp(-z))) * 10.0) AS BIGINT) AS decile,
-            COUNT(*) AS n_docs,
-            CAST(SUM(wl) AS BIGINT) AS n_weak_pos,
-            MIN(1.0 / (1.0 + exp(-z))) AS min_prob,
-            MAX(1.0 / (1.0 + exp(-z))) AS max_prob
-        FROM z
-        GROUP BY 1
-    """,
-    description=(
-        "frozen-weights quality-model score deciles vs weak labels — the "
-        "calibration table for the learned corpus filter"
-    ),
-    tags=("ml", "text", "aggregate", "deterministic"),
-)
-def quality_classifier_score_deciles(spark, sf_dir):
-    """Scoring is a pure projection (scan → codegen'd sigmoid of a 6-term
-    dot product) + one grouped count on a 10-value key — the 100 TB filter
-    pass. Doubles appear only per-row with a fixed fold order; the grouped
-    outputs are counts and order-independent min/max."""
-    docs = load_table(spark, sf_dir, "documents")
-    counted = quality_feature_counts(docs)
-    p = quality_probability()
-    scored = counted.select(
-        F.floor(p * 10.0).cast("bigint").alias("decile"),
-        weak_label().alias("wl"),
-        p.alias("p"),
-    )
-    return scored.groupBy("decile").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("wl").cast("bigint").alias("n_weak_pos"),
-        F.min("p").alias("min_prob"),
-        F.max("p").alias("max_prob"),
-    )
-
-
-@register(
-    "quality_classifier_confusion",
-    oracle=f"""
-        WITH c AS ({_SQL_QCOUNTS}),
-        z AS (
-            SELECT {_SQL_WL} AS wl, {_SQL_Z} AS z
-            FROM c
-        )
-        SELECT
-            CAST(wl AS INT) AS weak_label,
-            CAST(CASE WHEN z >= 0.0 THEN 1 ELSE 0 END AS INT) AS predicted,
-            COUNT(*) AS n_docs
-        FROM z
-        GROUP BY 1, 2
-    """,
-    description=(
-        "confusion matrix of the frozen learned quality filter vs the "
-        "rule-based weak labels"
-    ),
-    tags=("ml", "text", "aggregate", "deterministic"),
-)
-def quality_classifier_confusion(spark, sf_dir):
-    """The model-vs-heuristic audit a data curator reads before swapping the
-    learned filter in: 4-cell confusion, one projection + one tiny groupBy.
-    The decision threshold is z ≥ 0 (p ≥ 0.5) — compared on the logit so no
-    sigmoid is needed on the decision path."""
-    docs = load_table(spark, sf_dir, "documents")
-    counted = quality_feature_counts(docs)
-    return (
-        counted.select(
-            weak_label().alias("weak_label"),
-            (quality_logit() >= 0.0).cast("int").alias("predicted"),
-        )
-        .groupBy("weak_label", "predicted")
-        .agg(F.count("*").alias("n_docs"))
-    )
-
-
-@register(
-    "preference_pairs",
-    oracle=f"""
-        WITH c AS ({_SQL_QCOUNTS}),
-        q AS (
-            SELECT doc_id, lang, {_SQL_FBP} AS fbp FROM c
-        ),
-        r AS (
-            SELECT
-                doc_id, lang, fbp,
-                ROW_NUMBER() OVER (
-                    PARTITION BY lang ORDER BY fbp DESC, doc_id
-                ) AS rk,
-                COUNT(*) OVER (PARTITION BY lang) AS n
-            FROM q
-        )
-        SELECT
-            a.lang AS lang,
-            a.doc_id AS chosen_doc_id,
-            b.doc_id AS rejected_doc_id,
-            CAST(a.fbp - b.fbp AS BIGINT) AS margin_bp
-        FROM r a
-        JOIN r b
-          ON a.lang = b.lang AND b.rk = a.n - a.rk + 1 AND a.rk < b.rk
-        WHERE a.fbp - b.fbp >= 300
-    """,
-    description=(
-        "RLHF preference-pair construction: best-vs-worst quality pairing "
-        "per language with a minimum margin"
-    ),
-    tags=("ml", "text", "window", "join", "deterministic"),
-)
-def preference_pairs(spark, sf_dir):
-    """Chosen/rejected pair mining for reward-model training: rank docs per
-    language by integer fluency basis points, mirror-pair rank i with rank
-    n+1−i, keep pairs with margin ≥ 300 bp — a clear quality gap between
-    the two sides of every pair. One window (shuffle by lang) + a self-join
-    on (lang, rank): the join key is the partitioning the window already
-    produced, and at 100 TB the per-lang rank would ride a range-partitioned
-    sort rather than a single-reducer window (lang cardinality bounds
-    parallelism here, same as the oracle semantics)."""
-    docs = load_table(spark, sf_dir, "documents")
-    q = quality_feature_counts(docs).select(
-        "doc_id", "lang", fluency_bp().alias("fbp")
-    )
-    w = Window.partitionBy("lang").orderBy(
-        F.desc("fbp"), F.asc("doc_id")
-    )
-    r = q.select(
-        "doc_id",
-        "lang",
-        "fbp",
-        F.row_number().over(w).alias("rk"),
-        F.count("*").over(Window.partitionBy("lang")).alias("n"),
-    )
-    a = r.alias("a")
-    b = r.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("b.rk") == F.col("a.n") - F.col("a.rk") + 1)
-            & (F.col("a.rk") < F.col("b.rk")),
-        )
-        .where(F.col("a.fbp") - F.col("b.fbp") >= 300)
-        .select(
-            F.col("a.lang").alias("lang"),
-            F.col("a.doc_id").alias("chosen_doc_id"),
-            F.col("b.doc_id").alias("rejected_doc_id"),
-            (F.col("a.fbp") - F.col("b.fbp")).cast("bigint").alias(
-                "margin_bp"
-            ),
-        )
-    )
-
-
-@register(
-    "reward_margin_stats",
-    oracle=f"""
-        WITH c AS ({_SQL_QCOUNTS}),
-        q AS (
-            SELECT doc_id, lang, {_SQL_FBP} AS fbp FROM c
-        ),
-        r AS (
-            SELECT
-                doc_id, lang, fbp,
-                ROW_NUMBER() OVER (
-                    PARTITION BY lang ORDER BY fbp DESC, doc_id
-                ) AS rk,
-                COUNT(*) OVER (PARTITION BY lang) AS n
-            FROM q
-        ),
-        p AS (
-            SELECT a.lang AS lang, a.fbp - b.fbp AS margin_bp
-            FROM r a
-            JOIN r b
-              ON a.lang = b.lang AND b.rk = a.n - a.rk + 1 AND a.rk < b.rk
-            WHERE a.fbp - b.fbp >= 300
-        )
-        SELECT
-            lang,
-            COUNT(*) AS n_pairs,
-            CAST(SUM(margin_bp) AS BIGINT) AS sum_margin_bp,
-            CAST(SUM(margin_bp) AS DOUBLE) / COUNT(*) AS avg_margin_bp,
-            CAST(MIN(margin_bp) AS BIGINT) AS min_margin_bp,
-            CAST(MAX(margin_bp) AS BIGINT) AS max_margin_bp
-        FROM p
-        GROUP BY 1
-    """,
-    description=(
-        "per-language preference-pair margin distribution (reward-model "
-        "training-data audit)"
-    ),
-    tags=("ml", "text", "aggregate", "deterministic"),
-)
-def reward_margin_stats(spark, sf_dir):
-    """How much signal the preference pairs carry per language: pair count
-    and exact-integer margin stats; the only double is one final division."""
-    pairs = preference_pairs(spark, sf_dir)
-    return pairs.groupBy("lang").agg(
-        F.count("*").alias("n_pairs"),
-        F.sum("margin_bp").cast("bigint").alias("sum_margin_bp"),
-        (F.sum("margin_bp").cast("double") / F.count("*")).alias(
-            "avg_margin_bp"
-        ),
-        F.min("margin_bp").cast("bigint").alias("min_margin_bp"),
-        F.max("margin_bp").cast("bigint").alias("max_margin_bp"),
-    )
 
 
 @register(
@@ -433,58 +124,6 @@ def events_mad_outlier_hours(spark, sf_dir):
             "is_outlier"
         ),
     )
-
-
-@register(
-    "bpe_learned_merges",
-    oracle=None,  # iterative argmax loop — not SQL-expressible; the exact
-    # merge sequence is verified against a pure-Python reference BPE in
-    # tests/test_bpe.py (deterministic: integer counts, lexicographic
-    # tie-break, no floats anywhere)
-    description=(
-        "distributed BPE tokenizer training: learned merge table with "
-        "pair counts (vocab-table iteration, corpus scanned once)"
-    ),
-    tags=("ml", "text", "tokenizer", "no-oracle"),
-)
-def bpe_learned_merges(spark, sf_dir):
-    """Tokenizer training as a first-class pipeline op: the corpus
-    collapses to the word-frequency table in ONE shuffle, and every merge
-    iteration runs on that vocab-bounded table (operators/bpe.py). Only
-    the 1-row argmax reaches the driver per iteration."""
-    from ..operators.bpe import learn_bpe_merges
-
-    docs = load_table(spark, sf_dir, "documents")
-    result = learn_bpe_merges(docs, n_merges=24)
-    rows = [
-        (i, left, right, cnt)
-        for i, (left, right, cnt) in enumerate(result.merges)
-    ]
-    return spark.createDataFrame(
-        rows, "merge_rank int, left string, right string, pair_count long"
-    )
-
-
-@register(
-    "doc_bpe_learned_token_counts",
-    oracle=None,  # depends on the learned merge sequence (see above);
-    # application is greedy sequential within-word — verified against the
-    # same pure-Python reference end to end
-    description=(
-        "per-document token counts under the learned BPE (distinct-word "
-        "tokenization joined back to the corpus)"
-    ),
-    tags=("ml", "text", "tokenizer", "no-oracle"),
-)
-def doc_bpe_learned_token_counts(spark, sf_dir):
-    """The corpus-side application shape: distinct words tokenized once
-    with all learned merges, lengths broadcast-joined back — the corpus is
-    never rewritten per merge, scanned exactly twice total."""
-    from ..operators.bpe import bpe_token_lengths, learn_bpe_merges
-
-    docs = load_table(spark, sf_dir, "documents")
-    merges = learn_bpe_merges(docs, n_merges=24).merges
-    return bpe_token_lengths(docs, merges, broadcast_vocab=True)
 
 
 @register(
@@ -651,117 +290,6 @@ def events_data_contract_report(spark, sf_dir):
 
 
 @register(
-    "stream_doc_quality_deciles",
-    oracle=f"""
-        WITH c AS ({_SQL_QCOUNTS}),
-        z AS (
-            SELECT {_SQL_WL} AS wl, {_SQL_Z} AS z
-            FROM c
-        )
-        SELECT
-            CAST(floor((1.0 / (1.0 + exp(-z))) * 10.0) AS BIGINT) AS decile,
-            COUNT(*) AS n_docs,
-            CAST(SUM(wl) AS BIGINT) AS n_weak_pos
-        FROM z
-        GROUP BY 1
-    """,
-    description=(
-        "learned quality filter applied IN the stream: per-decile counts "
-        "over micro-batch corpus ingestion (batch-equivalent full oracle)"
-    ),
-    tags=("streaming", "ml", "text", "deterministic"),
-)
-def stream_doc_quality_deciles(spark, sf_dir):
-    """The reference's flagship shape — a trained model scoring a stream
-    (stream_anomaly_detector.py:230-260) — applied to corpus curation: as
-    crawl shards land, each micro-batch rides the same codegen'd sigmoid
-    projection as the batch filter, and the running decile histogram is an
-    associative count aggregation, so the streamed result is bit-equal to
-    the batch query over the full corpus (the oracle is exactly that batch
-    SQL — a full oracle, not a rows-only check). No watermark needed:
-    counts are monotone accumulators with no event-time eviction."""
-    from ..streaming.pipeline import documents_stream, run_to_memory_sink
-
-    s = documents_stream(spark, sf_dir)
-    counted = quality_feature_counts(s)
-    p = quality_probability()
-    agg = (
-        counted.select(
-            F.floor(p * 10.0).cast("bigint").alias("decile"),
-            weak_label().alias("wl"),
-        )
-        .groupBy("decile")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("wl").cast("bigint").alias("n_weak_pos"),
-        )
-    )
-    return run_to_memory_sink(agg)
-
-
-#: fixed decision thresholds for the PR sweep — committed constants, so the
-#: oracle literals and the Spark plan can never drift apart
-_PR_THRESHOLDS = (0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9)
-
-
-@register(
-    "quality_classifier_pr_curve",
-    oracle=f"""
-        WITH c AS ({_SQL_QCOUNTS}),
-        z AS (
-            SELECT {_SQL_WL} AS wl,
-                   1.0 / (1.0 + exp(-({_SQL_Z}))) AS p
-            FROM c
-        ),
-        t(thr) AS (VALUES {", ".join(f"({t})" for t in (0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))})
-        SELECT
-            thr AS threshold,
-            CAST(SUM(CASE WHEN p >= thr AND wl = 1 THEN 1 ELSE 0 END)
-                 AS BIGINT) AS tp,
-            CAST(SUM(CASE WHEN p >= thr AND wl = 0 THEN 1 ELSE 0 END)
-                 AS BIGINT) AS fp,
-            CAST(SUM(CASE WHEN p < thr AND wl = 1 THEN 1 ELSE 0 END)
-                 AS BIGINT) AS fn
-        FROM z, t
-        GROUP BY 1
-    """,
-    description=(
-        "precision-recall sweep of the frozen quality filter over 9 fixed "
-        "thresholds — exact TP/FP/FN counts in one pass"
-    ),
-    tags=("ml", "text", "aggregate", "deterministic"),
-)
-def quality_classifier_pr_curve(spark, sf_dir):
-    """Operating-point selection for the learned filter: the corpus is
-    scanned ONCE; the 9-threshold sweep is a tiny constant-table cross join
-    (9x row multiplier on the already-projected (label, score) pair, far
-    cheaper than 9 scans), then exact integer TP/FP/FN per threshold.
-    Precision/recall/F1 derive from these counts downstream — keeping the
-    compared surface pure integers sidesteps ratio-rounding divergence."""
-    docs = load_table(spark, sf_dir, "documents")
-    counted = quality_feature_counts(docs)
-    scored = counted.select(
-        weak_label().alias("wl"), quality_probability().alias("p")
-    )
-    thr = spark.createDataFrame(
-        [(t,) for t in _PR_THRESHOLDS], "threshold double"
-    )
-    j = scored.crossJoin(F.broadcast(thr))
-    pred = F.col("p") >= F.col("threshold")
-    return j.groupBy("threshold").agg(
-        F.sum(F.when(pred & (F.col("wl") == 1), 1).otherwise(0))
-        .cast("bigint")
-        .alias("tp"),
-        F.sum(F.when(pred & (F.col("wl") == 0), 1).otherwise(0))
-        .cast("bigint")
-        .alias("fp"),
-        F.sum(F.when(~pred & (F.col("wl") == 1), 1).otherwise(0))
-        .cast("bigint")
-        .alias("fn"),
-    )
-
-
-@register(
     "event_series_correlation_matrix",
     oracle="""
         WITH bounds AS (
@@ -884,551 +412,6 @@ def event_series_correlation_matrix(spark, sf_dir):
                 * F.sqrt((n * syy - sy * sy).cast("double"))
             )
         ).alias("corr"),
-    )
-
-
-@register(
-    "bpe_fertility_by_lang",
-    oracle=None,  # depends on the learned merge sequence (iterative) —
-    # covered by the pure-Python reference parity tests in tests/test_bpe.py
-    description=(
-        "tokenizer fertility per language (BPE tokens per word) under the "
-        "corpus-learned merges — the standard tokenizer-quality metric"
-    ),
-    tags=("ml", "text", "tokenizer", "no-oracle"),
-)
-def bpe_fertility_by_lang(spark, sf_dir):
-    """Fertility (tokens/word) is how tokenizer quality is judged per
-    language: high fertility means the vocab under-serves that language.
-    Exact integer token/word sums per lang; one double division at the
-    end. Reuses the twice-scanned-corpus tokenization shape of
-    doc_bpe_learned_token_counts, plus one broadcast-joinable lang
-    lookup."""
-    from ..operators.bpe import bpe_token_lengths, learn_bpe_merges
-
-    docs = load_table(spark, sf_dir, "documents")
-    merges = learn_bpe_merges(docs, n_merges=24).merges
-    per_doc = bpe_token_lengths(docs, merges, broadcast_vocab=True)
-    with_lang = per_doc.join(docs.select("doc_id", "lang"), "doc_id")
-    return with_lang.groupBy("lang").agg(
-        F.sum("n_words").cast("bigint").alias("total_words"),
-        F.sum("n_bpe_tokens").cast("bigint").alias("total_bpe_tokens"),
-        # a language whose docs are ALL empty has zero words: fertility
-        # is undefined -> NULL, never an ANSI DIVIDE_BY_ZERO
-        F.when(
-            F.sum("n_words") > 0,
-            F.sum("n_bpe_tokens").cast("double")
-            / F.sum("n_words").cast("double"),
-        ).alias("fertility"),
-    )
-
-
-# Pinned merge fixture for the portable fertility sibling. The pairs are
-# single chars, left != right, with PAIRWISE-DISJOINT character sets across
-# merges — under those constraints greedy sequential application provably
-# never interacts across merges (a merge consumes only its own two chars
-# and its 2-char output can never equal a later merge's single-char
-# operand), so each merge's symbol reduction equals the non-overlapping
-# substring count of left||right in the ORIGINAL word. That makes the
-# token length SQL-expressible: len(word) + 1 (end-of-word) - sum of
-# per-merge substring counts — validated against the real _merge_word on
-# 20k random words. Breaking any constraint (shared chars, multi-char
-# operands) breaks the identity; change the SQL if you change the fixture.
-_BPE_FIXTURE_MERGES: tuple = (("t", "h"), ("e", "r"), ("i", "n"), ("a", "s"))
-
-_SQL_BPE_SUBCOUNT = (
-    "(length(word) - length(replace(word, '{pair}', ''))) // 2"
-)
-
-
-@register(
-    "bpe_fertility_portable",
-    oracle=r"""
-        WITH words AS (
-            SELECT d.lang, t.w AS word
-            FROM documents d,
-                 unnest(list_filter(
-                     regexp_split_to_array(trim(d.text), '\s+'),
-                     tk -> tk <> '')) AS t(w)
-        ),
-        tok AS (
-            SELECT lang,
-                   CAST(length(word) + 1
-                     - {th} - {er} - {in_} - {as_}
-                     AS BIGINT) AS n_tok
-            FROM words
-        )
-        SELECT lang,
-               CAST(COUNT(*) AS BIGINT) AS total_words,
-               CAST(SUM(n_tok) AS BIGINT) AS total_bpe_tokens,
-               CASE WHEN COUNT(*) > 0
-                    THEN CAST(SUM(n_tok) AS DOUBLE)
-                         / CAST(COUNT(*) AS DOUBLE)
-               END AS fertility
-        FROM tok
-        GROUP BY 1
-    """.format(
-        th=_SQL_BPE_SUBCOUNT.format(pair="th"),
-        er=_SQL_BPE_SUBCOUNT.format(pair="er"),
-        in_=_SQL_BPE_SUBCOUNT.format(pair="in"),
-        as_=_SQL_BPE_SUBCOUNT.format(pair="as"),
-    ),
-    description=(
-        "tokenizer fertility per language under a PINNED merge table — the "
-        "oracle-checked sibling of bpe_fertility_by_lang (only the merge "
-        "LEARNING loop is iterative; the application step is the same "
-        "mapInPandas tokenize + vocab join + agg, hash-checked here)"
-    ),
-    tags=("ml", "text", "tokenizer", "deterministic"),
-)
-def bpe_fertility_portable(spark, sf_dir):
-    """Same plan as ``bpe_fertility_by_lang`` — distinct-word table
-    tokenized once through the real merge-application pandas UDF, token
-    lengths joined back, exact integer sums per lang, one double division
-    — but with ``_BPE_FIXTURE_MERGES`` pinned instead of learned, which
-    makes every output value cross-engine reproducible (see the fixture's
-    disjointness contract above; fixtures are ASCII, so Spark's UTF-16
-    split and DuckDB's codepoint length agree)."""
-    from ..operators.bpe import bpe_token_lengths
-
-    docs = load_table(spark, sf_dir, "documents")
-    merges = [(l, r, i) for i, (l, r) in enumerate(_BPE_FIXTURE_MERGES)]
-    per_doc = bpe_token_lengths(docs, merges, broadcast_vocab=True)
-    with_lang = per_doc.join(docs.select("doc_id", "lang"), "doc_id")
-    return with_lang.groupBy("lang").agg(
-        F.sum("n_words").cast("bigint").alias("total_words"),
-        F.sum("n_bpe_tokens").cast("bigint").alias("total_bpe_tokens"),
-        F.when(
-            F.sum("n_words") > 0,
-            F.sum("n_bpe_tokens").cast("double")
-            / F.sum("n_words").cast("double"),
-        ).alias("fertility"),
-    )
-
-
-@register(
-    "corpus_pipeline_v2_learned",
-    oracle=f"""
-        -- corpus pipeline with the LEARNED gate: model filter (z >= 0)
-        -- -> exact dedup (keep lowest doc_id per normalized-content md5)
-        -- -> per-language kept-doc/token accounting
-        WITH c AS ({_SQL_QCOUNTS}),
-        scored AS (
-            SELECT doc_id, lang, toks, {_SQL_Z} AS z
-            FROM c
-        ),
-        kept AS (
-            SELECT s.doc_id, s.lang, s.toks
-            FROM scored s
-            WHERE s.z >= 0.0
-        ),
-        fp AS (
-            SELECT k.doc_id, k.lang, k.toks,
-                   md5(regexp_replace(lower(trim(d.text)), '\\s+', ' ', 'g'))
-                       AS fp
-            FROM kept k JOIN documents d USING (doc_id)
-        ),
-        dedup AS (
-            SELECT * FROM (
-                SELECT *, ROW_NUMBER() OVER (
-                    PARTITION BY fp ORDER BY doc_id) AS rn
-                FROM fp
-            ) WHERE rn = 1
-        )
-        SELECT
-            lang,
-            COUNT(*) AS kept_docs,
-            CAST(SUM(toks) AS BIGINT) AS kept_tokens
-        FROM dedup
-        GROUP BY 1
-    """,
-    description=(
-        "corpus pipeline v2: learned-model quality gate -> exact dedup -> "
-        "per-language kept accounting, one declarative plan"
-    ),
-    tags=("llm-data", "ml", "text", "dedup", "deterministic"),
-)
-def corpus_pipeline_v2_learned(spark, sf_dir):
-    """The round-5 capstone composition: the trained filter replaces the
-    rule heuristic as the corpus gate (decision on the logit, z ≥ 0 — no
-    sigmoid needed), then exact dedup on the normalized-content
-    fingerprint, then per-language yield accounting. Still ONE declarative
-    plan: scan → projection gate → fingerprint window dedup → grouped
-    rollup; the only shuffles are the dedup key and the final tiny
-    group-by — identical shape to the v1 rule-based pipeline, so swapping
-    the model in costs nothing at 100 TB."""
-    from ..operators.text import fingerprint
-    from pyspark.sql.window import Window as W
-
-    docs = load_table(spark, sf_dir, "documents")
-    counted = quality_feature_counts(docs)
-    kept = counted.where(quality_logit() >= 0.0).select(
-        "doc_id", "lang", F.col("n_toks_q").alias("toks"),
-        fingerprint("text").alias("fp"),
-    )
-    w = W.partitionBy("fp").orderBy("doc_id")
-    dedup = (
-        kept.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-    )
-    return dedup.groupBy("lang").agg(
-        F.count("*").alias("kept_docs"),
-        F.sum("toks").cast("bigint").alias("kept_tokens"),
-    )
-
-
-@register(
-    "bpe_initial_pair_counts",
-    oracle="""
-        -- the BPE trainer's core statistic, SQL-expressible for the
-        -- FIRST iteration (before any merge rewrites the symbols):
-        -- adjacent character-pair counts over the word-frequency table,
-        -- including the end-of-word marker pair
-        WITH w AS (
-            SELECT word, CAST(COUNT(*) AS BIGINT) AS wcount
-            FROM (
-                SELECT unnest(list_filter(
-                    regexp_split_to_array(trim(text), '\\s+'),
-                    tk -> tk <> '')) AS word
-                FROM documents
-            )
-            GROUP BY 1
-        ),
-        pairs AS (
-            SELECT substring(w.word, s.i, 1) AS left_sym,
-                   CASE WHEN s.i = length(w.word)
-                        THEN '▁'
-                        ELSE substring(w.word, s.i + 1, 1) END AS right_sym,
-                   w.wcount
-            FROM w
-            CROSS JOIN LATERAL (
-                SELECT unnest(generate_series(1, length(w.word))) AS i
-            ) s
-        ),
-        counted AS (
-            SELECT left_sym, right_sym,
-                   CAST(SUM(wcount) AS BIGINT) AS pair_count
-            FROM pairs
-            GROUP BY 1, 2
-        )
-        SELECT left_sym, right_sym, pair_count
-        FROM (
-            SELECT *, ROW_NUMBER() OVER (
-                ORDER BY pair_count DESC, left_sym, right_sym) AS rn
-            FROM counted
-        )
-        WHERE rn <= 10
-    """,
-    description=(
-        "BPE trainer core, oracle-checked: top-10 adjacent symbol-pair "
-        "counts over the word-frequency table (iteration-0 statistic)"
-    ),
-    tags=("ml", "text", "tokenizer", "deterministic"),
-)
-def bpe_initial_pair_counts(spark, sf_dir):
-    """Cross-engine proof of the distributed BPE core: the iteration-0
-    pair-count table (explode-free zip_with pairs, weighted grouped sum,
-    deterministic tie-broken top-10) checked against a from-scratch SQL
-    recomputation. Later iterations aren't SQL-expressible (the merge
-    rewrites symbols), so the full loop rides the pure-Python reference
-    parity in tests/test_bpe.py — this query pins the one piece an oracle
-    CAN see."""
-    from ..operators.bpe import (
-        _initial_symbols,
-        _pair_counts,
-        word_frequency_table,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    counts = _pair_counts(_initial_symbols(word_frequency_table(docs)))
-    # top-10 via distributed TakeOrderedAndProject, not a global window
-    return (
-        counts.orderBy(F.desc("pair_count"), F.asc("left"), F.asc("right"))
-        .limit(10)
-        .select(
-            F.col("left").alias("left_sym"),
-            F.col("right").alias("right_sym"),
-            F.col("pair_count").cast("bigint").alias("pair_count"),
-        )
-    )
-
-
-@register(
-    "bpe_merges_by_lang",
-    oracle=None,  # iterative per-group training — per-group equality with
-    # the single-corpus trainer and the pure-Python reference is asserted
-    # in tests/test_bpe.py
-    description=(
-        "multilingual tokenizer training: per-language BPE merge tables "
-        "from one corpus scan"
-    ),
-    tags=("ml", "text", "tokenizer", "no-oracle"),
-)
-def bpe_merges_by_lang(spark, sf_dir):
-    """Per-language merge sequences — the multilingual tokenizer path.
-    One corpus scan builds the (lang, word, count) table; each language's
-    iterations then run on its own vocab-bounded slice (driver-local under
-    the adaptive threshold, distributed above it)."""
-    from ..operators.bpe import learn_bpe_merges_by_group
-
-    docs = load_table(spark, sf_dir, "documents")
-    by_lang = learn_bpe_merges_by_group(docs, "lang", n_merges=12)
-    rows = [
-        (lang, i, left, right, cnt)
-        for lang, merges in sorted(by_lang.items())
-        for i, (left, right, cnt) in enumerate(merges)
-    ]
-    return spark.createDataFrame(
-        rows,
-        "lang string, merge_rank int, left string, right string, "
-        "pair_count long",
-    )
-
-
-@register(
-    "quality_classifier_auc",
-    oracle=f"""
-        WITH c AS ({_SQL_QCOUNTS}),
-        z AS (
-            SELECT doc_id, {_SQL_WL} AS wl, {_SQL_Z} AS zz
-            FROM c
-        ),
-        ranked AS (
-            SELECT wl,
-                   ROW_NUMBER() OVER (ORDER BY zz, doc_id) AS rk
-            FROM z
-        ),
-        s AS (
-            SELECT
-                CAST(SUM(CASE WHEN wl = 1 THEN rk ELSE 0 END) AS BIGINT)
-                    AS pos_rank_sum,
-                CAST(SUM(wl) AS BIGINT) AS n_pos,
-                CAST(SUM(1 - wl) AS BIGINT) AS n_neg
-            FROM ranked
-        )
-        SELECT
-            n_pos, n_neg,
-            CAST(pos_rank_sum - n_pos * (n_pos + 1) / 2 AS DOUBLE)
-                / (CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)) AS auc
-        FROM s
-    """,
-    description=(
-        "exact ROC-AUC of the frozen quality filter via the Mann-Whitney "
-        "rank-sum (integer rank sums, one final division)"
-    ),
-    tags=("ml", "text", "aggregate", "deterministic"),
-)
-def quality_classifier_auc(spark, sf_dir):
-    """Threshold-free model quality in one number: AUC as the normalized
-    Mann-Whitney U from a global rank over (logit, doc_id).  Ranks and
-    their sums are exact integers; the only double is the final division
-    — so the statistic is bit-identical on any engine.  The rank comes
-    from ``relational.global_row_number`` (range-repartition + broadcast
-    prefix offsets — rank-identical to the window form under the
-    ``(zz, doc_id)`` total order, with NO single-partition WindowExec),
-    so the query scales with cluster width; the even leaner
-    aggregation-only form is ``quality_classifier_auc_distributed``."""
-    docs = load_table(spark, sf_dir, "documents")
-    counted = quality_feature_counts(docs)
-    from ..operators.relational import global_row_number
-
-    z = counted.select(
-        "doc_id", weak_label().alias("wl"), quality_logit().alias("zz")
-    )
-    ranked = global_row_number(
-        z, [("zz", "asc"), ("doc_id", "asc")], out="rk"
-    ).select("wl", "rk")
-    # rank sums in DECIMAL(38,0): a BIGINT rank sum wraps silently once
-    # n(n+1)/2 passes 2^63 (n ~ 4.3e9 rows — well inside 100-TB corpora);
-    # decimal stays exact to 1e38 and casts to the identical double below
-    s = ranked.agg(
-        F.sum(
-            F.when(F.col("wl") == 1, F.col("rk"))
-            .otherwise(0)
-            .cast("decimal(38,0)")
-        ).alias("pos_rank_sum"),
-        F.sum("wl").cast("bigint").alias("n_pos"),
-        F.sum(1 - F.col("wl")).cast("bigint").alias("n_neg"),
-    )
-    return s.select(
-        "n_pos",
-        "n_neg",
-        (
-            (
-                F.col("pos_rank_sum")
-                - F.col("n_pos").cast("decimal(38,0)")
-                * (F.col("n_pos") + 1)
-                / 2
-            ).cast("double")
-            / (F.col("n_pos").cast("double") * F.col("n_neg").cast("double"))
-        ).alias("auc"),
-    )
-
-
-_LONG_MAX = (1 << 63) - 1
-
-
-def _check_local_rank_partials(parts) -> None:
-    """Refuse partition sizes whose local-rank LONG sum could have wrapped.
-
-    ``pos_lrk_sum`` is a LONG sum of local ranks, bounded above by
-    n_i*(n_i+1)/2 for partition row count n_i. Counts are exact LONGs
-    (a COUNT cannot overflow below 2^63 rows per partition), so checking
-    them AFTER the collect soundly proves whether the already-computed
-    partial could have exceeded LONG range — non-ANSI Spark wraps
-    silently, and a wrapped partial would merge into a plausible-looking
-    but wrong AUC. Raises with sizing guidance instead."""
-    worst = max((int(r["n_rows"]) for r in parts), default=0)
-    if worst * (worst + 1) // 2 > _LONG_MAX:
-        raise ValueError(
-            "quality_classifier_auc_distributed: a range partition holds "
-            f"{worst} rows; its local rank sum can exceed LONG range "
-            "(n*(n+1)/2 >= 2^63) and may have silently wrapped. Raise "
-            "spark.sql.shuffle.partitions so every partition stays below "
-            "~4.29e9 rows."
-        )
-
-
-@register(
-    "quality_classifier_auc_distributed",
-    bench=True,  # the 100-TB flagship statistic: exact AUC with no global rank
-    oracle=f"""
-        WITH c AS ({_SQL_QCOUNTS}),
-        z AS (
-            SELECT doc_id, {_SQL_WL} AS wl, {_SQL_Z} AS zz
-            FROM c
-        ),
-        ranked AS (
-            SELECT wl,
-                   ROW_NUMBER() OVER (ORDER BY zz, doc_id) AS rk
-            FROM z
-        ),
-        s AS (
-            SELECT
-                CAST(SUM(CASE WHEN wl = 1 THEN rk ELSE 0 END) AS BIGINT)
-                    AS pos_rank_sum,
-                CAST(SUM(wl) AS BIGINT) AS n_pos,
-                CAST(SUM(1 - wl) AS BIGINT) AS n_neg
-            FROM ranked
-        )
-        SELECT
-            n_pos, n_neg,
-            CAST(pos_rank_sum - n_pos * (n_pos + 1) / 2 AS DOUBLE)
-                / (CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)) AS auc
-        FROM s
-    """,
-    description=(
-        "exact ROC-AUC via per-range-partition Mann-Whitney partials — "
-        "aggregation-only, no row-level global rank materialized"
-    ),
-    tags=("ml", "text", "aggregate", "deterministic"),
-)
-def quality_classifier_auc_distributed(spark, sf_dir):
-    """The 100-TB AUC plan: U is associative over disjoint score ranges,
-    so the exact statistic needs NO global rank column at all.  Rows are
-    range-partitioned on ``(zz, doc_id)`` (each partition owns a disjoint
-    slice of the global order); within each partition a partitionBy
-    window assigns LOCAL ranks (fully parallel, no single-reducer
-    stage), and one grouped pass reduces each partition to three
-    integers ``(n_rows, n_pos, pos_local_rank_sum)``.  The global
-    positive-rank sum is then
-
-        sum_i pos_local_rank_sum_i + n_pos_i * offset_i,
-        offset_i = sum over j<i of n_rows_j
-
-    — computed from an O(num_partitions)-row collect (bounded by cluster
-    width, never data size).  Every intermediate is an exact integer;
-    the final division runs in a Spark expression identical to
-    ``quality_classifier_auc``'s, so the double is bit-identical.  No
-    persist, no broadcast-back join: ONE materialization of the scored
-    corpus.
-
-    Overflow bounds: the global U is merged in arbitrary-precision Python
-    and shipped as DECIMAL(38,0) (exact past the BIGINT wrap at ~4.3e9
-    rows); the per-partition LONG partial ``pos_lrk_sum`` is bounded by
-    n_i*(n_i+1)/2 for partition row count n_i, safe while n_i < ~4.29e9
-    rows per partition. That bound is ENFORCED after the partials
-    collect: partition counts (plain LONG counts, which cannot themselves
-    overflow) prove whether the summed partial could have wrapped, and
-    the merge raises with sizing guidance instead of returning a silently
-    wrong AUC (non-ANSI Spark wraps LONG sums without error).
-    Degenerate inputs: an empty corpus
-    returns the oracle's (NULL, NULL, NULL) row; a single-class corpus
-    divides by zero, which Spark surfaces as NULL auc (same behavior as
-    the sibling windowed-rank form; engines differ here — IEEE engines
-    return inf)."""
-    return auc_distributed_from_docs(spark, load_table(spark, sf_dir, "documents"))
-
-
-def auc_distributed_from_docs(spark, docs):
-    """The plan body of ``quality_classifier_auc_distributed``, lifted to
-    take the documents DataFrame directly so harnesses (the 10x scale
-    probe) can run the exact shipped plan on replicated corpora.
-    Expression-identical to the pre-lift registered query."""
-    from ..operators.relational import _track_persist
-    from ..sources.catalog import spread_for_compute
-
-    # spread before the quality regexes/tokenize (guide §2.5 — one task on a
-    # single-row-group scan otherwise) and persist the 3-column z frame: the
-    # range exchange below SAMPLES its child to pick boundaries, so an
-    # uncached z pays the full feature pass twice. The cache is 3 scalars a
-    # row; the AUC merge is partitioning-independent, so results are
-    # unchanged under the spread (exact integer partials).
-    counted = quality_feature_counts(
-        spread_for_compute(docs.select("doc_id", "text"), "doc_id")
-    )
-    z = _track_persist(
-        counted.select(
-            "doc_id", weak_label().alias("wl"), quality_logit().alias("zz")
-        )
-    )
-    p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    ranged = z.repartitionByRange(
-        p, F.col("zz").asc(), F.col("doc_id").asc()
-    ).withColumn("__pid", F.spark_partition_id())
-    local = Window.partitionBy("__pid").orderBy("zz", "doc_id")
-    parts = sorted(
-        ranged.withColumn("__lrk", F.row_number().over(local).cast("long"))
-        .groupBy("__pid")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("wl").cast("long").alias("n_pos"),
-            F.sum(F.when(F.col("wl") == 1, F.col("__lrk")).otherwise(0))
-            .cast("long")
-            .alias("pos_lrk_sum"),
-        )
-        .collect(),
-        key=lambda r: r["__pid"],
-    )
-    if not parts:  # empty corpus: aggregates over zero rows are NULL —
-        # mirror the oracle's (NULL, NULL, NULL) row exactly
-        return spark.createDataFrame(
-            [(None, None, None)], "n_pos long, n_neg long, auc double"
-        )
-    _check_local_rank_partials(parts)
-    pos_rank_sum, n_pos, n_rows = 0, 0, 0
-    for r in parts:  # exact integer merge of per-range U partials
-        pos_rank_sum += int(r["pos_lrk_sum"]) + int(r["n_pos"]) * n_rows
-        n_pos += int(r["n_pos"])
-        n_rows += int(r["n_rows"])
-    # U computed in arbitrary-precision Python (the merge is driver-side
-    # anyway): a BIGINT U wraps at n ~ 4.3e9 rows; shipped to Spark as
-    # DECIMAL(38,0) so only the final double conversion rounds — the same
-    # one rounding CAST(... AS DOUBLE) performs in the oracle
-    from decimal import Decimal
-
-    u = pos_rank_sum - n_pos * (n_pos + 1) // 2
-    s = spark.createDataFrame(
-        [(Decimal(u), n_pos, n_rows - n_pos)],
-        "u decimal(38,0), n_pos long, n_neg long",
-    )
-    return s.select(
-        "n_pos",
-        "n_neg",
-        (
-            F.col("u").cast("double")
-            / (F.col("n_pos").cast("double") * F.col("n_neg").cast("double"))
-        ).alias("auc"),
     )
 
 
@@ -1600,77 +583,6 @@ def cross_source_duplicate_matrix(spark, sf_dir):
 
 
 @register(
-    "preference_pairs_split_counts",
-    oracle=f"""
-        WITH c AS ({_SQL_QCOUNTS}),
-        q AS (
-            SELECT doc_id, lang, {_SQL_FBP} AS fbp FROM c
-        ),
-        r AS (
-            SELECT
-                doc_id, lang, fbp,
-                ROW_NUMBER() OVER (
-                    PARTITION BY lang ORDER BY fbp DESC, doc_id
-                ) AS rk,
-                COUNT(*) OVER (PARTITION BY lang) AS n
-            FROM q
-        ),
-        p AS (
-            SELECT a.lang AS lang, a.doc_id AS chosen_doc_id,
-                   a.fbp - b.fbp AS margin_bp
-            FROM r a
-            JOIN r b
-              ON a.lang = b.lang AND b.rk = a.n - a.rk + 1 AND a.rk < b.rk
-            WHERE a.fbp - b.fbp >= 300
-        ),
-        s AS (
-            SELECT lang, margin_bp,
-                   CASE WHEN u < 0.8 THEN 'train'
-                        WHEN u < 0.9 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM (
-                SELECT p.*,
-                       CAST(concat('0x', substr(md5(
-                            CAST(chosen_doc_id AS VARCHAR)), 1, 8))
-                            AS BIGINT) / 4294967296.0 AS u
-                FROM p
-            )
-        )
-        SELECT split,
-               CAST(COUNT(*) AS BIGINT) AS n_pairs,
-               CAST(SUM(margin_bp) AS BIGINT) AS sum_margin_bp,
-               CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs
-        FROM s
-        GROUP BY 1
-    """,
-    description=(
-        "leakage-safe RLHF pair splits: whole pairs assigned to "
-        "train/val/test by hash of the pair key — no pair straddles splits"
-    ),
-    tags=("ml", "sampling", "split", "deterministic"),
-)
-def preference_pairs_split_counts(spark, sf_dir):
-    """The split step a reward-model pipeline must get right: the UNIT of
-    assignment is the pair, keyed on chosen_doc_id (each doc appears in at
-    most one pair per side, so the key is unique per pair) — a random
-    row-level split would put a pair's two documents' gradient signal on
-    both sides of the eval boundary. Membership is the engine-portable
-    md5-range projection; no extra shuffle beyond the pair pipeline's
-    own."""
-    from ..operators.relational import deterministic_split
-
-    pairs = preference_pairs(spark, sf_dir)
-    split = deterministic_split(
-        pairs, "chosen_doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}
-    )
-    return split.groupBy("split").agg(
-        F.count("*").alias("n_pairs"),
-        F.sum("margin_bp").cast("bigint").alias("sum_margin_bp"),
-        F.countDistinct("lang").alias("n_langs"),
-    )
-
-
-@register(
     "value_trimmed_mean_by_type",
     oracle="""
         WITH c AS (
@@ -1815,8 +727,8 @@ def stream_merge_into_tx_table(spark, sf_dir):
     tags=("ml", "training", "clustering", "no-oracle"),
 )
 def kmeans_inertia_curve(spark, sf_dir):
-    """The third canonical trainer (after the linear AE and the logistic
-    filter): one mapInPandas aggregation per Lloyd's iteration collects
+    """The clustering trainer beside the linear AE: one mapInPandas
+    aggregation per Lloyd's iteration collects
     #partitions × k partial rows; only the k×d centroid matrix moves.
     Inertia is non-increasing by construction — the invariant pytest
     pins."""
@@ -1890,8 +802,8 @@ def kmeans_init_assignment_portable(spark, sf_dir):
     """Cross-engine proof of the k-means core: the deterministic init and
     the nearest-centroid assignment recomputed declaratively (posexplode +
     pos-join + decimal-exact squared distances + rank-tie argmin) and
-    checked against a from-scratch SQL oracle — the same pin-the-portable-
-    core pattern as bpe_initial_pair_counts. Later iterations average
+    checked against a from-scratch SQL oracle — pinning the portable
+    core. Later iterations average
     floats and stay rows-only by necessity."""
     from pyspark.sql.window import Window as W
 
@@ -2448,44 +1360,6 @@ def signup_to_purchase_latency_quantiles(spark, sf_dir):
 
 
 @register(
-    "quality_classifier_brier",
-    oracle=f"""
-        WITH c AS ({_SQL_QCOUNTS}),
-        z AS (
-            SELECT {_SQL_WL} AS wl,
-                   1.0 / (1.0 + exp(-({_SQL_Z}))) AS p
-            FROM c
-        )
-        SELECT
-            CAST(COUNT(*) AS BIGINT) AS n_docs,
-            CAST(SUM(CAST((p - wl) * (p - wl) AS DECIMAL(28,10)))
-                 AS DOUBLE) / COUNT(*) AS brier
-        FROM z
-    """,
-    description=(
-        "Brier score of the frozen quality filter (decimal-exact sum of "
-        "squared probability errors)"
-    ),
-    tags=("ml", "text", "aggregate", "deterministic"),
-)
-def quality_classifier_brier(spark, sf_dir):
-    """Proper-scoring-rule calibration in one number, completing the eval
-    suite (deciles, confusion, PR, AUC, Brier). Each row's (p−y)² is the
-    identical fixed-fold double expression on both engines; quantizing to
-    DECIMAL(28,10) before the sum makes the aggregation order-free, so
-    the mean is bit-stable on any partitioning."""
-    docs = load_table(spark, sf_dir, "documents")
-    counted = quality_feature_counts(docs)
-    p = quality_probability()
-    err = p - weak_label().cast("double")
-    scored = counted.select((err * err).cast("decimal(28,10)").alias("e2"))
-    return scored.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        (F.sum("e2").cast("double") / F.count("*")).alias("brier"),
-    )
-
-
-@register(
     "stream_contract_split_counts",
     oracle="""
         SELECT
@@ -2963,7 +1837,7 @@ _GBDT_B = 16
 def gbdt_best_first_stump(spark, sf_dir):
     """The oracle-checked core of the fifth trainer family (LS-Boost over
     histogram stumps, ml/boosting.py) — same device as
-    kmeans_init_assignment_portable and bpe_initial_pair_counts: the
+    kmeans_init_assignment_portable: the
     first training step recomputed from scratch by DuckDB must match the
     distributed trainer bit for bit (decimal-exact residual histogram,
     exact integer bucketization, fixed-order double gains), proving the
@@ -3223,179 +2097,6 @@ def tx_table_delete_counts(spark, sf_dir):
 
 
 @register(
-    "corpus_pipeline_v3_perplexity",
-    oracle=f"""
-        -- v3 capstone: learned gate -> bigram-LM perplexity BAND (cut the
-        -- extreme deciles: low = boilerplate, high = gibberish — the
-        -- CCNet shape) -> exact dedup -> per-language accounting
-        WITH c AS ({_SQL_QCOUNTS}),
-        scored AS (
-            SELECT doc_id, lang, toks, {_SQL_Z} AS z FROM c
-        ),
-        gate AS (
-            SELECT doc_id, lang, toks FROM scored WHERE z >= 0.0
-        ),
-        t AS (
-            SELECT doc_id,
-                   list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                               tk -> tk <> '') AS tk
-            FROM documents
-        ),
-        v AS (
-            SELECT CAST(COUNT(DISTINCT tok) AS BIGINT) AS v
-            FROM (SELECT unnest(tk) AS tok FROM t)
-        ),
-        bi AS (
-            SELECT doc_id,
-                   unnest(list_transform(range(1, len(tk)),
-                                         i -> tk[i])) AS w1,
-                   unnest(list_transform(range(1, len(tk)),
-                                         i -> tk[i+1])) AS w2
-            FROM t WHERE len(tk) >= 2
-        ),
-        g AS (SELECT doc_id, w1, w2, CAST(COUNT(*) AS BIGINT) AS m
-              FROM bi GROUP BY 1, 2, 3),
-        w AS (
-            SELECT doc_id, m,
-                   CAST(SUM(m) OVER (PARTITION BY w1, w2) AS BIGINT) AS c2,
-                   CAST(SUM(m) OVER (PARTITION BY w1) AS BIGINT) AS c1
-            FROM g
-        ),
-        ppl AS (
-            SELECT doc_id,
-                   ROUND(CAST(SUM(CAST(m AS DECIMAL(9,0))
-                            * CAST(ln(CAST(c1 + v.v AS DOUBLE))
-                                   - ln(CAST(c2 + 1 AS DOUBLE))
-                                   AS DECIMAL(28,10))) AS DOUBLE)
-                       / SUM(m), 6) AS nlp
-            FROM w CROSS JOIN v
-            GROUP BY doc_id
-        ),
-        banded AS (
-            SELECT gate.doc_id, gate.lang, gate.toks
-            FROM gate JOIN (
-                SELECT doc_id,
-                       NTILE(10) OVER (ORDER BY nlp, doc_id) AS dec
-                FROM ppl
-            ) d ON d.doc_id = gate.doc_id
-            WHERE d.dec BETWEEN 2 AND 9
-        ),
-        fp AS (
-            SELECT b.doc_id, b.lang, b.toks,
-                   md5(regexp_replace(lower(trim(d.text)), '\\s+', ' ', 'g'))
-                       AS fp
-            FROM banded b JOIN documents d USING (doc_id)
-        ),
-        dedup AS (
-            SELECT * FROM (
-                SELECT *, ROW_NUMBER() OVER (
-                    PARTITION BY fp ORDER BY doc_id) AS rn
-                FROM fp
-            ) WHERE rn = 1
-        )
-        SELECT lang,
-               COUNT(*) AS kept_docs,
-               CAST(SUM(toks) AS BIGINT) AS kept_tokens
-        FROM dedup
-        GROUP BY 1
-    """,
-    description=(
-        "corpus pipeline v3: learned gate -> bigram-perplexity decile "
-        "band (CCNet shape) -> exact dedup -> per-language accounting"
-    ),
-    tags=("llm-data", "ml", "text", "dedup", "quality", "deterministic"),
-)
-def corpus_pipeline_v3_perplexity(spark, sf_dir):
-    """The capstone composition grows an LM stage: after the learned
-    gate, every doc is scored by the corpus's own add-one bigram LM
-    (doc_bigram_logprob's single-scan double-window shape) and the
-    extreme DECILES are cut — decile 1 is boilerplate (too predictable),
-    decile 10 is gibberish (too surprising): the CCNet perplexity-band
-    idea with the band defined by ranks, not absolute thresholds, so the
-    same query works at every corpus size. Scores are rounded to 6
-    decimals BEFORE the NTILE ordering (ties then break on doc_id), so
-    decile membership is cross-engine deterministic. The tiling is the
-    distributed exact NTILE (relational.global_ntile: range-repartition +
-    local rank + broadcast prefix offsets — no single-reducer stage); at
-    100 TB a cheaper variant is two approx-quantile cuts broadcast into
-    the filter, same result set up to quantile error."""
-    from pyspark.sql.window import Window as W
-
-    from ..operators.text import fingerprint, tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    counted = quality_feature_counts(docs)
-    gate = counted.where(quality_logit() >= 0.0).select(
-        "doc_id", "lang", F.col("n_toks_q").alias("toks")
-    )
-    toks = docs.select("doc_id", tokens("text").alias("tk"))
-    vocab = int(
-        # explode_outer + isNotNull: see dedup.exploded_shingles (guard device)
-        toks.select(F.explode_outer("tk").alias("tok"))
-        .filter(F.col("tok").isNotNull())
-        .agg(F.countDistinct("tok"))
-        .first()[0]
-    )
-    sz = F.size("tk")
-    pairs = (
-        toks.filter(sz >= 2)
-        .select(
-            "doc_id",
-            F.explode_outer(
-                F.arrays_zip(
-                    F.slice("tk", 1, sz - 1).alias("w1"),
-                    F.slice("tk", 2, sz - 1).alias("w2"),
-                )
-            ).alias("p"),
-        )
-        .filter(F.col("p").isNotNull())
-        .select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    )
-    g = pairs.groupBy("doc_id", "w1", "w2").agg(
-        F.count("*").cast("long").alias("m")
-    )
-    c2 = F.sum("m").over(W.partitionBy("w1", "w2")).cast("long")
-    c1 = F.sum("m").over(W.partitionBy("w1")).cast("long")
-    term = F.log((c1 + F.lit(vocab)).cast("double")) - F.log(
-        (c2 + F.lit(1)).cast("double")
-    )
-    ppl = (
-        g.select(
-            "doc_id",
-            "m",
-            (F.col("m").cast("decimal(9,0)") * term.cast("decimal(28,10)")).alias("__t"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.round(
-                F.sum("__t").cast("double") / F.sum("m"), 6
-            ).alias("nlp")
-        )
-    )
-    # exact deciles WITHOUT a global-window single reducer: distributed
-    # NTILE (range-repartition + local rank + broadcast prefix offsets)
-    from ..operators.relational import global_ntile
-
-    deciles = global_ntile(
-        ppl, 10, [("nlp", "asc"), ("doc_id", "asc")], out="dec"
-    ).select("doc_id", "dec")
-    banded = gate.join(
-        deciles.filter(F.col("dec").between(2, 9)), "doc_id"
-    )
-    fp = banded.join(docs.select("doc_id", "text"), "doc_id").select(
-        "doc_id", "lang", "toks", fingerprint("text").alias("fp")
-    )
-    w = W.partitionBy("fp").orderBy("doc_id")
-    dedup = fp.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") == 1
-    )
-    return dedup.groupBy("lang").agg(
-        F.count("*").alias("kept_docs"),
-        F.sum("toks").cast("long").alias("kept_tokens"),
-    )
-
-
-@register(
     "tx_table_schema_evolution_counts",
     oracle="""
         -- rows ingested BEFORE the ADD COLUMN read back NULL; rows after
@@ -3453,8 +2154,8 @@ def tx_table_schema_evolution_counts(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round 8: per-language weighted sampling, vocabulary coverage, classifier
-# calibration, corpus-mix divergence, txlog delete-all/restore
+# Round 8: per-language weighted sampling, vocabulary coverage, corpus-mix
+# divergence, txlog delete-all/restore
 # ---------------------------------------------------------------------------
 
 
@@ -3606,70 +2307,6 @@ def token_coverage_curve(spark, sf_dir):
             .cast("bigint")
             .alias("types_used"),
         )
-    )
-
-
-@register(
-    "quality_classifier_reliability_bins",
-    oracle=f"""
-        -- calibration (reliability diagram): per predicted-probability
-        -- decile, the mean prediction vs the observed weak-positive rate.
-        -- Mean prediction via an order-free quantized sum (floor(p*1e10
-        -- + 0.5) summed as DECIMAL(38,0) — the Brier-score convention);
-        -- both rates are single double divisions of exact integers.
-        WITH c AS ({_SQL_QCOUNTS}),
-        z AS (
-            SELECT {_SQL_WL} AS wl,
-                   1.0 / (1.0 + exp(-({_SQL_Z}))) AS p
-            FROM c
-        ),
-        b AS (
-            SELECT CAST(floor(p * 10.0) AS BIGINT) AS bin, wl,
-                   CAST(floor(p * 1e10 + 0.5) AS BIGINT) AS pq
-            FROM z
-        )
-        SELECT bin,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(wl) AS BIGINT) AS n_weak_pos,
-               CAST(SUM(CAST(pq AS DECIMAL(38,0))) AS DOUBLE)
-                   / (1e10 * COUNT(*)) AS mean_pred,
-               CAST(SUM(wl) AS DOUBLE) / COUNT(*) AS frac_pos
-        FROM b
-        GROUP BY 1
-    """,
-    description=(
-        "reliability diagram of the frozen quality filter: mean predicted "
-        "probability vs observed weak-positive rate per decile bin"
-    ),
-    tags=("ml", "evaluation", "calibration", "deterministic"),
-)
-def quality_classifier_reliability_bins(spark, sf_dir):
-    """The eval the deciles/PR/AUC/Brier suite still lacked: CALIBRATION.
-    A filter whose scores are used as sampling weights or thresholds must
-    mean what it says — bin predictions into deciles and compare the mean
-    predicted probability with the observed positive rate. Mean-of-doubles
-    is order-dependent, so the mean comes from the established quantized
-    integer sum (floor(p*1e10 + 0.5) into DECIMAL(38,0) — exact under any
-    partitioning; sigmoid outputs are transcendental, so the quantization
-    is tie-safe)."""
-    docs = load_table(spark, sf_dir, "documents")
-    counted = quality_feature_counts(docs)
-    p = quality_probability()
-    b = counted.select(
-        F.floor(p * 10.0).cast("bigint").alias("bin"),
-        weak_label().alias("wl"),
-        F.floor(p * F.lit(1e10) + F.lit(0.5))
-        .cast("bigint")
-        .alias("pq"),
-    )
-    return b.groupBy("bin").agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("wl").cast("bigint").alias("n_weak_pos"),
-        (
-            F.sum(F.col("pq").cast("decimal(38,0)")).cast("double")
-            / (F.lit(1e10) * F.count("*"))
-        ).alias("mean_pred"),
-        (F.sum("wl").cast("double") / F.count("*")).alias("frac_pos"),
     )
 
 

@@ -205,55 +205,6 @@ def _write_sentinel_files(spark: SparkSession, out: str, mtime_base: int) -> Non
         os.utime(dest, (t, t))
 
 
-#: schema of the staged documents stream source
-DOCUMENTS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-        StructField("source", StringType()),
-        StructField("n_chars", LongType()),
-    ]
-)
-
-
-def stage_documents_dir(
-    spark: SparkSession, sf_dir: str, n_files: int = 8
-) -> str:
-    """Stage the documents fixture as an n-file parquet directory for
-    micro-batch replay — the incremental-corpus-ingestion shape (a crawl
-    lands shard by shard; each shard is one micro-batch). Idempotent per
-    (sf_dir, n_files)."""
-    key = sf_dir.strip("/").replace("/", "_")
-    root = scratch_root(spark, "stream_stage", local_default=_STAGE_ROOT)
-    out = os.path.join(root, f"docs_{key}_{n_files}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        from ..sources.catalog import load_table
-
-        (
-            load_table(spark, sf_dir, "documents")
-            .repartitionByRange(n_files, "doc_id")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-    return out
-
-
-def documents_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    max_files_per_trigger: int = 2,
-) -> DataFrame:
-    """Incremental file-source stream of the documents corpus."""
-    staged = stage_documents_dir(spark, sf_dir)
-    return (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged)
-    )
-
-
 def events_stream(
     spark: SparkSession,
     sf_dir: str,

@@ -276,3 +276,14 @@ def test_bm25_match_predicate_derives_from_term_constant():
         "query_expansion_prf_retrieval",
     ):
         assert f"WHERE {qgr._BM25_MATCH_SQL}" in _REGISTRY[name].oracle
+
+
+def test_lazy_exports_resolve():
+    """Every name the package advertises in ``__all__`` resolves through the
+    PEP 562 lazy ``__getattr__``: a stale entry pointing at a deleted module
+    or attribute fails here, not when a user first touches it."""
+    import end_to_end_data_engineering_and_ml_system_spark as pkg
+
+    assert pkg.__all__
+    for name in pkg.__all__:
+        assert getattr(pkg, name) is not None, name

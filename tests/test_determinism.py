@@ -33,22 +33,13 @@ SAMPLE = [
     "source_unigram_jsd",         # ln-domain decimal sums
     "doc_readability_scores",     # regex counts + fixed IEEE formula
     # round-5 additions
-    "quality_classifier_score_deciles",  # fixed-fold sigmoid + min/max
-    "quality_classifier_confusion",      # logit-threshold integer cells
-    "quality_classifier_pr_curve",       # threshold sweep, integer TP/FP/FN
-    "preference_pairs",           # integer-bp rank + mirror self-join
-    "reward_margin_stats",        # integer margins, one final division
     "events_mad_outlier_hours",   # dyadic medians -> integer comparison
     "events_l_diversity_audit",   # count + count_distinct grain
     "events_data_contract_report",# one-pass conditional sums
     "user_rate_limit_violations", # interval RANGE frame (rule 4)
     "event_series_correlation_matrix",  # DECIMAL(38,0) stats + sqrt
-    "quality_classifier_auc",     # integer rank sums -> one division
-    "corpus_pipeline_v2_learned", # logit gate + fingerprint dedup
-    "bpe_initial_pair_counts",    # weighted pair counts, tie-broken topk
     "events_t_closeness_audit",   # exact-integer TV numerator
     "cross_source_duplicate_matrix",  # verified pairs -> source grain
-    "preference_pairs_split_counts",  # md5-range pair membership
     "value_trimmed_mean_by_type", # UDAF over exact cents
     "hourly_seasonal_naive_mase", # integer error sums over the spine
     "kmeans_init_assignment_portable",  # decimal-exact distances
@@ -59,7 +50,6 @@ SAMPLE = [
     "order_price_equidepth_histogram",      # NTILE over exact cents
     "weighted_doc_sample",        # md5-uniform sample keys
     "part_copurchase_lift",       # basket pairs, fixed-order lift
-    "quality_classifier_brier",   # quantized decimal error sum
     "signup_to_purchase_latency_quantiles",  # dyadic quartiles
     "watermark_tolerance_curve",  # running-max window + delay sweep
     "sessions_per_user_histogram",  # interval-exact session gaps
@@ -80,7 +70,6 @@ SAMPLE = [
     "copurchase_bfs_hop_histogram",  # integer min-propagation rounds
     "gbdt_best_first_stump",      # decimal histogram + fixed-order gains
     "events_dp_noisy_counts",     # md5-uniform seeded Laplace noise
-    "corpus_pipeline_v3_perplexity",  # rounded-score NTILE band + dedup
     "copurchase_community_modularity",  # integer edge counts per label
     # round-8 additions — the distributed-rank machinery uses
     # spark_partition_id over a range repartition, exactly the kind of
@@ -89,13 +78,9 @@ SAMPLE = [
     "query_expansion_prf_retrieval",  # posting-grain decimal BM25 sums
     "weighted_doc_sample_by_lang",    # partitioned E-S keys
     "token_coverage_curve",           # global_row_number over the vocab
-    "quality_classifier_reliability_bins",  # quantized mean prediction
     "source_mix_kl_divergence",       # shares + rounded ln terms
     "revenue_pareto_deciles",         # global_ntile over the aggregate
     "vocab_growth_heaps",             # global_running_sum prefix offsets
-    # round-9 additions
-    "quality_classifier_auc_distributed",  # per-partition U partials: the
-    # merge MUST be partition-count-invariant (exact integer associativity)
 ]
 
 

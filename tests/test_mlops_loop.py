@@ -102,35 +102,3 @@ def test_drift_triggered_warm_start_retraining(cohorts, tmp_path):
     assert abs(m2.losses[0] - before * 64) / (before * 64) < 5e-2
 
 
-def test_quality_filter_registry_lifecycle(spark, tmp_path):
-    """Round-5 model through the same lifecycle: train the logistic
-    quality filter with tracked metrics, register + promote, reload from
-    the registry, and verify the reloaded weights reproduce the live
-    scoring decision for every document."""
-    from end_to_end_data_engineering_and_ml_system_spark.ml.quality import (
-        fit_quality_classifier,
-        score_documents,
-    )
-    from tests.conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    tracker = Tracker(str(tmp_path / "mlruns"))
-    run = tracker.start_run("quality_filter")
-    fit = fit_quality_classifier(docs, epochs=6, lr=4.0, tracker_run=run)
-    run.log_artifact("weights.pkl", pickle.dumps(fit.weights))
-    run.end()
-
-    reg = ModelRegistry(str(tmp_path / "models"))
-    version = reg.register("QualityFilter", run, "weights.pkl")
-    reg.transition("QualityFilter", version, "Production")
-
-    loaded = pickle.loads(reg.load_artifact("QualityFilter", "Production"))
-    assert np.allclose(loaded, fit.weights, rtol=0, atol=0)
-
-    live = score_documents(docs, weights=tuple(float(w) for w in loaded))
-    direct = score_documents(docs, weights=tuple(float(w) for w in fit.weights))
-    assert live.collect() == direct.collect()
-    # tracked epoch series present, step-indexed
-    meta = tracker.get_run("quality_filter", run.run_id)._meta()
-    series = meta["metrics"]["train_logloss"]
-    assert [m["step"] for m in series] == list(range(6))

@@ -205,43 +205,6 @@ def test_unigram_logprob_single_scan_no_joins(spark, sf_dir):
     assert "Join" not in plan
 
 
-def test_quality_scoring_is_single_scan_single_agg(spark, sf_dir):
-    # the 100 TB filter pass: scan -> codegen'd projection -> one grouped
-    # aggregate on the 10-value decile key; no joins, no extra exchanges.
-    # clearCache first: a cached full-width relation left by another test
-    # would replace the pruned parquet scan in this plan
-    spark.catalog.clearCache()
-    q = all_queries()["quality_classifier_score_deciles"].build(spark, sf_dir)
-    plan = _plan(q)
-    assert "Join" not in plan, plan
-    shuffles = [
-        ln
-        for ln in plan.splitlines()
-        if "Exchange hashpartitioning" in ln and "Broadcast" not in ln
-    ]
-    assert len(shuffles) == 1, shuffles
-    # only the text column (plus doc-irrelevant pruning) is read
-    m = [
-        s
-        for s in re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-        if "text" in s
-    ]
-    assert m and all(len(s.split(",")) <= 1 for s in m), m
-
-
-def test_preference_pairs_reuses_window_exchange(spark, sf_dir):
-    # rank window and self-join both key on lang: the join must not add
-    # data shuffles beyond the two window sorts over the lang partitioning
-    q = all_queries()["preference_pairs"].build(spark, sf_dir)
-    plan = _plan(q)
-    shuffles = [
-        ln
-        for ln in plan.splitlines()
-        if "Exchange hashpartitioning" in ln and "Broadcast" not in ln
-    ]
-    assert len(shuffles) <= 2, shuffles
-
-
 def test_rate_limit_audit_single_user_shuffle(spark, sf_dir):
     q = all_queries()["user_rate_limit_violations"].build(spark, sf_dir)
     plan = _plan(q)
@@ -274,10 +237,6 @@ def test_distributed_rank_queries_have_no_single_partition_exchange(
         "weighted_doc_sample",
         "term_posting_stats",
         "vocab_growth_heaps",
-        # r9: the last global-window site, retired (global_row_number) +
-        # the aggregation-only U-partials form
-        "quality_classifier_auc",
-        "quality_classifier_auc_distributed",
     )
     # the anti-pattern prints as Window -> Sort -> Exchange SinglePartition
     # (children below parents in explain output)

@@ -721,69 +721,3 @@ def test_population_stability_matches_numpy_reference(spark, rows):
         assert (ga, gb) == (n_a[b], n_b[b])
         assert abs(gt - want) < 1e-12
     assert set(got) == set(n_a)
-
-
-# ---------------------------------------------------------------------------
-# round-5: quality feature counts vs a pure-Python reference on adversarial
-# unicode text (whitespace runs, empty strings, CJK, digits, punctuation)
-# ---------------------------------------------------------------------------
-
-_QF_STOPWORDS = {"the", "a", "an", "and", "or", "of", "to", "in", "is", "it"}
-
-
-def _ref_quality_counts(text: str) -> tuple:
-    import re
-
-    # ASCII \s by contract: Java regex (Spark) and RE2 (DuckDB oracle)
-    # both treat \s as ASCII-only, so unicode spaces (U+00A0 etc.) are
-    # TOKEN CHARACTERS in this engine — a unicode-aware reference would
-    # disagree on e.g. '0\xa00' (hypothesis found exactly that). The strip
-    # must be ASCII too: str.strip() is unicode-aware and eats '\xa0',
-    # turning the one-token text '\xa0' into zero tokens (hypothesis
-    # found that as well — the engine and the DuckDB oracle both agree
-    # it is one token)
-    stripped = re.sub(r"^\s+|\s+$", "", text, flags=re.ASCII)
-    toks = [t for t in re.split(r"\s+", stripped, flags=re.ASCII) if t]
-    return (
-        len(text),
-        len(toks),
-        sum(1 for t in toks if t in _QF_STOPWORDS),
-        sum(1 for ch in text if ch in ".!?,;:"),
-        sum(1 for ch in text if "A" <= ch <= "Z"),
-        sum(1 for ch in text if "0" <= ch <= "9"),
-    )
-
-
-text_st = st.text(
-    alphabet=st.characters(
-        whitelist_categories=("L", "N", "P", "Z"),
-        whitelist_characters=" \t\n的是the to in.!123ABC",
-        max_codepoint=0x9FFF,
-    ),
-    max_size=80,
-)
-
-
-@given(st.lists(text_st, min_size=1, max_size=8))
-@SLOW
-def test_quality_feature_counts_match_reference(spark, texts):
-    from end_to_end_data_engineering_and_ml_system_spark.ml.quality import (
-        quality_feature_counts,
-    )
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    got = {
-        r["doc_id"]: (
-            r["n_chars_q"],
-            r["n_toks_q"],
-            r["n_stop_q"],
-            r["n_punct_q"],
-            r["n_upper_q"],
-            r["n_digit_q"],
-        )
-        for r in quality_feature_counts(df).collect()
-    }
-    want = {i: _ref_quality_counts(t) for i, t in enumerate(texts)}
-    assert got == want

@@ -1,116 +1,12 @@
-"""Learned quality filter (distributed logistic regression) + the round-5
-preference-pair / robust-monitoring queries.
-
-The iterative fit has no SQL oracle (float summation order across
-partitions), so correctness rides invariants: the partial-gradient
-aggregation matches a numpy reference bit-for-bit on one partition, the
-convex full-batch loss series is monotone non-increasing at the shipped
-step size, and the trained filter beats the majority class.
-"""
+"""The round-5 robust-monitoring query: median/MAD outlier hours over
+event-time buckets, checked against a numpy reference."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from end_to_end_data_engineering_and_ml_system_spark.ml.quality import (
-    FROZEN_QUALITY_WEIGHTS,
-    QUALITY_FEATURE_DIM,
-    fit_quality_classifier,
-    quality_training_frame,
-    score_documents,
-)
-from end_to_end_data_engineering_and_ml_system_spark.ml.training import (
-    fit_logistic_classifier,
-)
-from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import (
-    load_table,
-)
-
 from .conftest import SF_CORRECT
-
-
-def _numpy_fit(X, y, epochs, lr):
-    w = np.zeros(X.shape[1])
-    losses, accs = [], []
-    for _ in range(epochs):
-        z = X @ w
-        p = 1.0 / (1.0 + np.exp(-z))
-        pc = np.clip(p, 1e-12, 1.0 - 1e-12)
-        losses.append(
-            float(-(y * np.log(pc) + (1.0 - y) * np.log(1.0 - pc)).mean())
-        )
-        accs.append(float((((p >= 0.5).astype(float)) == y).mean()))
-        w = w - lr * (X.T @ (p - y)) / len(y)
-    return w, losses, accs
-
-
-def test_logistic_fit_matches_numpy_reference(spark):
-    rng = np.random.default_rng(7)
-    X = np.hstack([np.ones((40, 1)), rng.normal(size=(40, 2))])
-    y = (X[:, 1] + 0.5 * X[:, 2] > 0).astype(float)
-    rows = [(x.tolist(), int(lbl)) for x, lbl in zip(X, y)]
-    df = spark.createDataFrame(
-        rows, "features array<double>, label int"
-    ).repartition(1)  # one partition -> one float summation order
-    fit = fit_logistic_classifier(df, dim=3, epochs=5, lr=0.8)
-    w_ref, losses_ref, accs_ref = _numpy_fit(X, y, epochs=5, lr=0.8)
-    assert np.allclose(fit.weights, w_ref, rtol=0, atol=1e-12)
-    assert np.allclose(fit.losses, losses_ref, rtol=0, atol=1e-12)
-    assert fit.accuracies == accs_ref
-
-
-def test_quality_fit_monotone_and_beats_majority(spark):
-    docs = load_table(spark, SF_CORRECT, "documents")
-    fit = fit_quality_classifier(docs, epochs=12, lr=4.0)
-    # convex full-batch GD below 2/L: loss never increases
-    for a, b in zip(fit.losses, fit.losses[1:]):
-        assert b <= a + 1e-9
-    labels = quality_training_frame(docs).groupBy("label").count().collect()
-    counts = {r["label"]: r["count"] for r in labels}
-    n = sum(counts.values())
-    majority = max(counts.values()) / n
-    assert 0.2 < counts.get(1, 0) / n < 0.8, "weak label must split corpus"
-    # warm-started from the shipped model, accuracy beats majority from
-    # the first epoch and fine-tuning keeps the loss monotone
-    warm = fit_quality_classifier(
-        docs, epochs=3, lr=4.0, init_weights=FROZEN_QUALITY_WEIGHTS
-    )
-    assert warm.accuracies[0] > majority
-    for a, b in zip(warm.losses, warm.losses[1:]):
-        assert b <= a + 1e-9
-
-
-def test_frozen_weights_score_documents(spark):
-    docs = load_table(spark, SF_CORRECT, "documents")
-    scored = score_documents(docs).collect()
-    assert len(scored) == docs.count()
-    probs = [r["quality_prob"] for r in scored]
-    assert all(0.0 < p < 1.0 for p in probs)
-    # the frozen model must agree with its own training labels far above
-    # chance (converged train accuracy was 0.81)
-    agree = sum(
-        1
-        for r in scored
-        if (r["quality_prob"] >= 0.5) == bool(r["weak_label"])
-    ) / len(scored)
-    assert agree > 0.75
-    assert len(FROZEN_QUALITY_WEIGHTS) == QUALITY_FEATURE_DIM
-
-
-def test_preference_pairs_invariants(spark):
-    from end_to_end_data_engineering_and_ml_system_spark.plans.queries_quality import (  # noqa: E501
-        preference_pairs,
-    )
-
-    pairs = preference_pairs(spark, SF_CORRECT).collect()
-    assert pairs, "pair mining must be non-vacuous on the fixture corpus"
-    chosen = [r["chosen_doc_id"] for r in pairs]
-    rejected = [r["rejected_doc_id"] for r in pairs]
-    assert len(set(chosen)) == len(chosen), "a doc may be chosen once"
-    assert len(set(rejected)) == len(rejected), "a doc may be rejected once"
-    assert not set(chosen) & set(rejected), "sides are disjoint"
-    assert all(r["margin_bp"] >= 300 for r in pairs)
 
 
 def test_mad_outlier_matches_numpy(spark):
@@ -132,91 +28,3 @@ def test_mad_outlier_matches_numpy(spark):
     row = out[0]
     assert row["median_events"] == pytest.approx(med)
     assert row["mad"] == pytest.approx(mad)
-
-
-def test_auc_rank_sum_decimal_survives_long_overflow(spark):
-    """The AUC rank-sum aggregate must be exact past the BIGINT wrap
-    (n(n+1)/2 > 2^63 at n ~ 4.3e9 rows): DECIMAL(38,0) sums of two 2^62
-    ranks give exactly 2^63, where a long sum silently wraps negative."""
-    from pyspark.sql import functions as F
-
-    rows = [(1, 2**62), (1, 2**62), (0, 5)]
-    df = spark.createDataFrame(rows, "wl int, rk long")
-    dec = (
-        df.agg(
-            F.sum(
-                F.when(F.col("wl") == 1, F.col("rk"))
-                .otherwise(0)
-                .cast("decimal(38,0)")
-            ).alias("prs")
-        )
-        .collect()[0]["prs"]
-    )
-    assert int(dec) == 2**63
-    # the long path FAILS at this magnitude — ArithmeticException under
-    # ANSI (Spark 4 default), silent negative wrap otherwise; either way
-    # the decimal path is what makes the query survive ~4.3e9+ rows.
-    # Collect inside the try, assert OUTSIDE it: an except that swallowed
-    # the AssertionError made the wrap half of this test vacuous.
-    wrapped = None
-    try:
-        wrapped = (
-            df.agg(
-                F.sum(
-                    F.when(F.col("wl") == 1, F.col("rk")).otherwise(0)
-                ).alias("prs")
-            )
-            .collect()[0]["prs"]
-        )
-    except Exception:
-        pass  # overflow raised — the ANSI failure mode
-    if wrapped is not None:  # non-ANSI: must have wrapped negative
-        assert wrapped < 0
-
-
-def test_auc_distributed_partial_guard():
-    """_check_local_rank_partials raises once a partition's row count
-    could wrap the LONG local-rank sum, and stays silent below the bound
-    (the runtime guard behind queries_quality.quality_classifier_auc_
-    distributed's 100-TB claim)."""
-    from end_to_end_data_engineering_and_ml_system_spark.plans.queries_quality import (  # noqa: E501
-        _check_local_rank_partials,
-    )
-
-    ok = 4_294_967_294  # n(n+1)/2 just below 2^63
-    bad = 4_294_967_296  # n(n+1)/2 just above 2^63
-    _check_local_rank_partials([])  # empty corpus: no-op
-    _check_local_rank_partials([{"n_rows": 1000}, {"n_rows": ok}])
-    with pytest.raises(ValueError, match="shuffle.partitions"):
-        _check_local_rank_partials([{"n_rows": 1000}, {"n_rows": bad}])
-
-
-def test_auc_distributed_partial_guard_property():
-    """Property form of the LONG-partial guard: raises iff SOME partition's
-    n(n+1)/2 exceeds LONG range — exact at the boundary for any mix of
-    partition sizes."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from end_to_end_data_engineering_and_ml_system_spark.plans.queries_quality import (  # noqa: E501
-        _check_local_rank_partials,
-    )
-
-    LONG_MAX = (1 << 63) - 1
-
-    @given(
-        st.lists(
-            st.integers(min_value=0, max_value=10_000_000_000), max_size=8
-        )
-    )
-    @settings(max_examples=300, deadline=None)
-    def check(sizes):
-        parts = [{"n_rows": n} for n in sizes]
-        should_raise = any(n * (n + 1) // 2 > LONG_MAX for n in sizes)
-        if should_raise:
-            with pytest.raises(ValueError, match="shuffle.partitions"):
-                _check_local_rank_partials(parts)
-        else:
-            _check_local_rank_partials(parts)
-
-    check()

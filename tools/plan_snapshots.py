@@ -27,10 +27,7 @@ SKIP_TAGS = {"streaming"}
 
 # flagship (non-bench) queries worth pinning alongside the bench set
 EXTRA_SNAPSHOTS = (
-    "quality_classifier_score_deciles",
-    "corpus_pipeline_v2_learned",
     "user_rate_limit_violations",
-    "preference_pairs",
     "event_series_correlation_matrix",
     # round 6: the materialize-once dedup pipeline — the snapshot shows the
     # derived consumers are plain rollups over one committed parquet read

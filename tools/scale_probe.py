@@ -204,34 +204,6 @@ def trainers(n: int, sf_dir: str) -> None:
         d.unpersist()
 
 
-def dsir(n: int, sf_dir: str) -> None:
-    """DSIR scale probe at 1x and Nx corpora: the importance-weight
-    distributions are <=B-row aggregates, so the wall must grow ~linearly
-    with the corpus."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.dsir import (
-        dsir_log_weights,
-    )
-    from end_to_end_data_engineering_and_ml_system_spark.session import get_spark
-    from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import (
-        load_table,
-    )
-
-    spark = get_spark(app_name="scale-probe-dsir", cpus=32)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    docs = load_table(spark, sf_dir, "documents")
-    for mult in (1, n):
-        d = (docs if mult == 1 else replicate(docs, "doc_id", mult)).persist()
-        rows = d.count()
-        t0 = time.perf_counter()
-        dsir_log_weights(
-            d, target=F.col("source").isin("src0", "src1", "src2")
-        ).count()
-        wall = time.perf_counter() - t0
-        print(f"dsir_log_weights {mult}x: docs={rows} wall={wall:.2f}s")
-        d.unpersist()
-
-
 def graph_rank(n: int, sf_dir: str) -> None:
     """PageRank scale probe: per-iteration wall at 1x and Nx edge lists.
 
@@ -390,67 +362,6 @@ def baskets(n: int, sf_dir: str) -> None:
         copurchase_edges_from_baskets(dirty, False, max_basket=1 << 62),
     )
     dirty.unpersist()
-
-
-def auc(n: int, sf_dir: str) -> None:
-    """Distributed-AUC scale probe: the 100 TB flagship statistic at 1x
-    and Nx corpora.
-
-    Contract being checked (plans/queries_quality.py::
-    auc_distributed_from_docs): ONE materialization of the scored corpus,
-    a partitionBy-__pid window (local ranks, fully parallel — never a
-    single-reducer global window), and an O(num_partitions) collect of
-    three-integer partials. Wall must grow ~linearly with the corpus;
-    driver resident memory must stay flat (the merge is O(partitions)
-    integers). The replicated corpus shifts doc_ids only, so every
-    replica scores identically — ties across replicas are the worst case
-    for rank-based statistics and the AUC must still come out exact (the
-    probe cross-checks 1x and Nx AUC: with N identical copies of every
-    (wl, zz) pair the tie-free U statistic shifts deterministically, so
-    we check both values lie in [0,1] and the Nx run returns the same
-    n_pos ratio)."""
-    import resource
-
-    from end_to_end_data_engineering_and_ml_system_spark.plans.queries_quality import (  # noqa: E501
-        auc_distributed_from_docs,
-    )
-    from end_to_end_data_engineering_and_ml_system_spark.session import get_spark
-    from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import (
-        load_table,
-    )
-
-    spark = get_spark(app_name="scale-probe-auc", cpus=32)
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = load_table(spark, sf_dir, "documents")
-
-    def rss_mb() -> float:
-        return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
-
-    auc_distributed_from_docs(spark, docs).first()  # JVM/codegen warm-up
-    results: dict[int, dict] = {}
-    for mult in (1, n):
-        d = (docs if mult == 1 else replicate(docs, "doc_id", mult)).persist()
-        rows = d.count()
-        before = rss_mb()
-        t0 = time.perf_counter()
-        row = auc_distributed_from_docs(spark, d).first()
-        wall = time.perf_counter() - t0
-        assert row["auc"] is not None and 0.0 <= row["auc"] <= 1.0
-        results[mult] = {"auc": row["auc"], "n_pos": row["n_pos"]}
-        print(
-            f"auc_distributed {mult}x: docs={rows} wall={wall:.2f}s "
-            f"auc={row['auc']:.6f} n_pos={row['n_pos']} "
-            f"driver_maxrss_delta={rss_mb() - before:.0f}MB"
-        )
-        d.unpersist()
-    # the docstring's cross-checks, ASSERTED (not eyeballed): replicas
-    # score identically, so U and n_pos*n_neg both scale by exactly N^2 —
-    # the AUC is the same rational number and Python's bigint / is
-    # correctly rounded, so the float must be bit-identical; n_pos must
-    # scale by exactly N
-    assert results[n]["auc"] == results[1]["auc"], results
-    assert results[n]["n_pos"] == results[1]["n_pos"] * n, results
-    print(f"cross-check: {n}x AUC bit-identical, n_pos scaled exactly {n}x")
 
 
 def top5(n: int, sf_dir: str) -> None:
@@ -991,11 +902,6 @@ def main() -> None:
         sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
         top5(n, sf_dir)
         return
-    if len(sys.argv) > 1 and sys.argv[1] == "--auc":
-        n = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-        sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
-        auc(n, sf_dir)
-        return
     if len(sys.argv) > 1 and sys.argv[1] == "--baskets":
         n = int(sys.argv[2]) if len(sys.argv) > 2 else 5
         sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
@@ -1005,11 +911,6 @@ def main() -> None:
         n = int(sys.argv[2]) if len(sys.argv) > 2 else 100
         sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
         pathological(n, sf_dir)
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--dsir":
-        n = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-        sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
-        dsir(n, sf_dir)
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--graph":
         n = int(sys.argv[2]) if len(sys.argv) > 2 else 10
@@ -1085,67 +986,6 @@ def main() -> None:
         ),
     )
 
-    # round-5 operators
-    from end_to_end_data_engineering_and_ml_system_spark.ml.quality import (
-        quality_feature_counts,
-        quality_probability,
-        weak_label,
-    )
-
-    def score_deciles(d):
-        p = quality_probability()
-        return (
-            quality_feature_counts(d)
-            .select(F.floor(p * 10).alias("dc"), weak_label().alias("wl"))
-            .groupBy("dc")
-            .count()
-        )
-
-    probe("quality_score_deciles", score_deciles)
-
-    from pyspark.sql.window import Window as W
-
-    from end_to_end_data_engineering_and_ml_system_spark.ml.quality import (
-        fluency_bp,
-    )
-
-    def pref_pairs(d):
-        q = quality_feature_counts(d).select(
-            "doc_id", "lang", fluency_bp().alias("fbp")
-        )
-        w = W.partitionBy("lang").orderBy(F.desc("fbp"), F.asc("doc_id"))
-        r = q.select(
-            "doc_id",
-            "lang",
-            "fbp",
-            F.row_number().over(w).alias("rk"),
-            F.count("*").over(W.partitionBy("lang")).alias("n"),
-        )
-        a, b = r.alias("a"), r.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.lang") == F.col("b.lang"))
-                & (F.col("b.rk") == F.col("a.n") - F.col("a.rk") + 1)
-                & (F.col("a.rk") < F.col("b.rk")),
-            )
-            .where(F.col("a.fbp") - F.col("b.fbp") >= 300)
-        )
-
-    probe("preference_pairs", pref_pairs)
-
-    from end_to_end_data_engineering_and_ml_system_spark.operators.bpe import (
-        learn_bpe_merges,
-    )
-
-    for mult in (1, n):
-        d = docs if mult == 1 else replicate(docs, "doc_id", mult)
-        t0 = time.perf_counter()
-        merges = learn_bpe_merges(d, n_merges=16, local_vocab_threshold=0)
-        print(
-            f"bpe_learn_distributed {mult}x: "
-            f"{time.perf_counter() - t0:.2f}s ({len(merges.merges)} merges)"
-        )
     probe(
         "cluster_labels",
         lambda d: dedup_cluster_labels(
