@@ -62,7 +62,9 @@ def main(argv: list[str] | None = None) -> int:
     det.add_argument("--threshold", type=float, default=2.0)
 
     trn = sub.add_parser(
-        "train", help="distributed linear-AE training run tracked + registered"
+        "train",
+        help="distributed 64-64-16-64-64 autoencoder training run, tracked "
+        "+ registered",
     )
     trn.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
@@ -166,7 +168,7 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
 
         from .ml.registry import ModelRegistry, Tracker
-        from .ml.training import fit_linear_autoencoder, reconstruction_mse_stats
+        from .ml.training import fit_mlp_autoencoder, mlp_reconstruction_mse_stats
         from .scratch import scratch_unique
         from .session import get_spark
         from .sources.catalog import load_table
@@ -175,8 +177,8 @@ def main(argv: list[str] | None = None) -> int:
         spark.sparkContext.setLogLevel("ERROR")
         root = args.registry_root or scratch_unique(spark, "mlruns")
         tracker = Tracker(root)
-        run = tracker.start_run("linear_ae")
-        run.log_params({"epochs": args.epochs, "k": 8, "lr": 5e-3})
+        run = tracker.start_run("mlp_ae")
+        run.log_params({"epochs": args.epochs, "hidden": 64, "code": 16, "lr": 1e-3})
         feats = (
             load_table(spark, args.sf_dir, "embeddings")
             .select(
@@ -186,18 +188,18 @@ def main(argv: list[str] | None = None) -> int:
             )
             .cache()
         )
-        res = fit_linear_autoencoder(
-            feats, dim=64, k=8, epochs=args.epochs, lr=5e-3, tracker_run=run
+        res = fit_mlp_autoencoder(
+            feats, dim=64, epochs=args.epochs, lr=1e-3, tracker_run=run
         )
-        stats = reconstruction_mse_stats(feats, res.weights)
+        stats = mlp_reconstruction_mse_stats(feats, res)
         run.log_metrics(stats)
         import pickle
 
-        run.log_artifact("linear_ae.pkl", pickle.dumps(res.weights))
+        run.log_artifact("mlp_ae.pkl", pickle.dumps(res))
         run.end()
         reg = ModelRegistry(root)
-        v = reg.register("linear_ae", run, "linear_ae.pkl")
-        reg.transition("linear_ae", v, "Production")
+        v = reg.register("mlp_ae", run, "mlp_ae.pkl")
+        reg.transition("mlp_ae", v, "Production")
         print(
             f"run={run.run_id} losses={[round(x, 6) for x in res.losses]} "
             f"mse_mean={stats['mse_mean']:.6f} version={v} -> Production "

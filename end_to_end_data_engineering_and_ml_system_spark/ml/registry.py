@@ -17,9 +17,9 @@ lifecycle verbs:
 - ``ModelRegistry.transition``: move a version to Staging/Production and
   archive whatever held that stage before — the reference's
   transition_model_version_stage(..., archive_existing_versions=True)
-- ``ModelRegistry.latest`` / ``load_artifact``: resolve by stage and feed
-  the bytes straight into ``serialized_model_inference`` /
-  ``batched_inference`` (the swap-in point the M2 docstring promises)
+- ``ModelRegistry.latest`` / ``load_artifact``: resolve by stage and
+  return the artifact bytes; a pickled ``MlpFitResult`` loads straight
+  into ``mlp_reconstruction_scores`` (ml/training.py)
 
 Storage layout (one JSON per run/version, content-addressed artifacts):
 
@@ -31,8 +31,8 @@ Storage layout (one JSON per run/version, content-addressed artifacts):
 Writes go through write-to-temp + atomic rename, so a crashed writer never
 leaves a half-readable version. The root should live on a shared
 filesystem in cluster deployments (same contract as scratch.py — only the
-DRIVER reads/writes the registry; executors receive model bytes via Spark
-broadcast, never by reading these paths).
+DRIVER reads/writes the registry; executors receive the model inside the
+scoring closure, never by reading these paths).
 """
 
 from __future__ import annotations
@@ -344,9 +344,10 @@ class ModelRegistry:
         return versions[-1] if versions else None
 
     def load_artifact(self, model_name: str, stage: str = "Production") -> bytes:
-        """Model bytes for the newest version in ``stage`` — feed directly to
-        serialized_model_inference (ml/pipeline.py), which broadcasts them
-        to executors."""
+        """Model bytes for the newest version in ``stage`` — for a pickled
+        ``MlpFitResult``, unpickle and pass to mlp_reconstruction_scores
+        (ml/training.py), which ships the parameters to executors in its
+        closure."""
         meta = self.latest(model_name, stage)
         if meta is None:
             raise FileNotFoundError(f"no {model_name} version in stage {stage}")

@@ -12,18 +12,15 @@ distributed-training loop:
   the full-batch gradient as ONE Spark aggregation (``mapInPandas``
   partial sums per partition — vectorized numpy, Arrow batches — then a
   driver-side reduce of `#partitions` small rows);
-- only the PARAMETERS (a d×k matrix, kilobytes) live on the driver and
+- only the PARAMETERS (~10k doubles, kilobytes) live on the driver and
   ride to executors inside the closure each epoch — the parameter-server
   shape, same as Spark MLlib's own iterative algorithms;
 - per-epoch losses go to ``ml.registry.Tracker`` step-indexed, exactly
   like the reference's ``mlflow.log_metric(..., step=epoch)`` pattern,
   so ``history``-style series extraction (A13) is a metrics query.
 
-The model is a tied-weights linear autoencoder ``x̂ = W Wᵀ x`` trained by
-full-batch gradient descent: honest distributed optimization (loss
-provably decreases under a small enough step), not a toy that pretends
-nonlinear-Keras parity — pca_scorer / serialized AE inference in
-ml/pipeline.py remain the serving-side analogs.
+The model is the reference's 64-64-16-64-64 autoencoder trained by
+full-batch Adam; ``mlp_reconstruction_scores`` is its per-row scorer.
 """
 
 from __future__ import annotations
@@ -34,233 +31,6 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 GRAD_SCHEMA = "grad array<double>, loss double, n long"
-
-
-def _partial_grad(w: np.ndarray):
-    """Per-partition partial sums of loss and tied-AE gradient.
-
-    For each row x: z = Wᵀx, r = x - Wz, loss = rᵀr,
-    ∇_W = -2 (r zᵀ + x (Wᵀ r)ᵀ). Everything is batched numpy over the
-    Arrow-delivered pandas frames — no per-row Python.
-    """
-
-    def fn(batches):
-        import pandas as pd
-
-        d, k = w.shape
-        g = np.zeros((d, k))
-        loss = 0.0
-        n = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf["features"].to_numpy())  # (b, d)
-            z = x @ w  # (b, k)
-            r = x - z @ w.T  # (b, d)
-            loss += float((r * r).sum())
-            g += -2.0 * (r.T @ z + x.T @ (r @ w))
-            n += len(x)
-        yield pd.DataFrame(
-            {"grad": [g.ravel().tolist()], "loss": [loss], "n": [n]}
-        )
-
-    return fn
-
-
-@dataclass
-class FitResult:
-    weights: np.ndarray
-    losses: list[float]  # mean loss per epoch, BEFORE that epoch's step
-
-
-def fit_linear_autoencoder(
-    features: DataFrame,
-    dim: int,
-    k: int = 8,
-    epochs: int = 5,
-    lr: float = 1e-3,
-    seed: int = 42,
-    tracker_run=None,
-    init_weights: np.ndarray | None = None,
-) -> FitResult:
-    """Full-batch GD on the tied linear AE over a ``features``
-    array<double> column. One Spark job per epoch; the collect is
-    ``#partitions`` rows of (d·k grads, loss, n) — the documented
-    parameter-server exception to the no-collect rule (kilobytes,
-    independent of row count). Pass a ``Tracker`` run to step-log the
-    loss series (A13). ``init_weights`` warm-starts from a previous
-    model's parameters — the retraining pattern a drift monitor
-    triggers; full-batch GD then improves on the old model's loss over
-    the new data monotonically (for a small enough step)."""
-    if init_weights is not None:
-        w = np.array(init_weights, dtype=float)
-        if w.shape != (dim, k):
-            raise ValueError(f"init_weights shape {w.shape} != ({dim}, {k})")
-    else:
-        rng = np.random.default_rng(seed)
-        w = rng.standard_normal((dim, k)) * 0.1
-    df = features.select("features")
-    losses: list[float] = []
-    for epoch in range(epochs):
-        parts = df.mapInPandas(_partial_grad(w), GRAD_SCHEMA).collect()
-        n = sum(p["n"] for p in parts)
-        if n == 0:
-            raise ValueError("empty training frame")
-        grad = sum(
-            np.asarray(p["grad"]).reshape(w.shape) for p in parts
-        ) / float(n)
-        loss = sum(p["loss"] for p in parts) / float(n)
-        losses.append(loss)
-        if tracker_run is not None:
-            tracker_run.log_metrics({"train_loss": loss}, step=epoch)
-        w = w - lr * grad
-    return FitResult(weights=w, losses=losses)
-
-
-def reconstruction_mse_stats(features: DataFrame, w: np.ndarray) -> dict:
-    """The reference's post-training mse_min/max/mean over the train set
-    (train_autoencoder.py:209-216) as one distributed aggregation."""
-    parts = features.select("features").mapInPandas(
-        _mse_partials(w), "s double, mn double, mx double, n long"
-    )
-    from pyspark.sql import functions as F
-
-    row = parts.agg(
-        F.sum("s").alias("s"),
-        F.min("mn").alias("mn"),
-        F.max("mx").alias("mx"),
-        F.sum("n").alias("n"),
-    ).first()
-    if not row["n"]:
-        raise ValueError("reconstruction_mse_stats: empty features frame")
-    return {
-        "mse_mean": row["s"] / row["n"],
-        "mse_min": row["mn"],
-        "mse_max": row["mx"],
-    }
-
-
-def _mse_partials(w: np.ndarray):
-    def fn(batches):
-        import pandas as pd
-
-        s = 0.0
-        mn = float("inf")
-        mx = float("-inf")
-        n = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf["features"].to_numpy())
-            r = x - (x @ w) @ w.T
-            mse = (r * r).mean(axis=1)
-            s += float(mse.sum())
-            mn = min(mn, float(mse.min()))
-            mx = max(mx, float(mse.max()))
-            n += len(x)
-        if n:
-            yield pd.DataFrame({"s": [s], "mn": [mn], "mx": [mx], "n": [n]})
-
-    return fn
-
-
-KMEANS_SCHEMA = (
-    "cluster int, vec_sum array<double>, n long, inertia double"
-)
-
-
-def _kmeans_partials(centroids: np.ndarray):
-    """Per-partition Lloyd's partials: each row assigns to its nearest
-    centroid (squared euclidean, ties to the lowest centroid id via
-    argmin), contributing its vector to that cluster's sum and its
-    distance to the inertia.  Vectorized numpy over Arrow batches."""
-
-    def fn(batches):
-        import pandas as pd
-
-        k, d = centroids.shape
-        sums = np.zeros((k, d))
-        counts = np.zeros(k, dtype=np.int64)
-        inertia = np.zeros(k)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf["features"].to_numpy())  # (b, d)
-            # (b, k) squared distances
-            d2 = ((x[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(k):
-                m = assign == c
-                if m.any():
-                    sums[c] += x[m].sum(axis=0)
-                    counts[c] += int(m.sum())
-                    inertia[c] += float(d2[m, c].sum())
-        yield pd.DataFrame(
-            {
-                "cluster": np.arange(k, dtype=np.int32),
-                "vec_sum": [s.tolist() for s in sums],
-                "n": counts,
-                "inertia": inertia,
-            }
-        )
-
-    return fn
-
-
-@dataclass
-class KMeansFitResult:
-    centroids: np.ndarray
-    inertias: list[float]  # total inertia per iteration, BEFORE the update
-
-
-def fit_kmeans_lloyd(
-    features: DataFrame,
-    id_col: str,
-    k: int = 8,
-    iters: int = 5,
-) -> KMeansFitResult:
-    """Distributed Lloyd's k-means with a DETERMINISTIC md5-medoid init
-    (the k rows with the smallest ``md5(id)`` become the initial
-    centroids — engine-portable, no RNG), completing the trainer family
-    (linear AE, now clustering).  Same
-    parameter-server shape: per iteration one ``mapInPandas`` aggregation
-    collects ``#partitions × k`` partial rows; only the k×d centroid
-    matrix rides in the closure.  Lloyd's guarantees the inertia sequence
-    is non-increasing — the pytest invariant."""
-    from pyspark.sql import functions as F
-
-    init_rows = (
-        features.select(id_col, "features")
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(k)
-        .collect()
-    )
-    if len(init_rows) < k:
-        raise ValueError(f"need at least {k} rows, got {len(init_rows)}")
-    centroids = np.array([r["features"] for r in init_rows], dtype=float)
-    df = features.select("features")
-    inertias: list[float] = []
-    for _ in range(iters):
-        parts = df.mapInPandas(
-            _kmeans_partials(centroids), KMEANS_SCHEMA
-        ).collect()
-        k_, d = centroids.shape
-        sums = np.zeros((k_, d))
-        counts = np.zeros(k_)
-        total_inertia = 0.0
-        for p in parts:
-            c = p["cluster"]
-            sums[c] += np.asarray(p["vec_sum"])
-            counts[c] += p["n"]
-            total_inertia += p["inertia"]
-        inertias.append(total_inertia)
-        # empty clusters keep their centroid (standard Lloyd's fallback)
-        nonempty = counts > 0
-        centroids = centroids.copy()
-        centroids[nonempty] = (
-            sums[nonempty] / counts[nonempty, None]
-        )
-    return KMeansFitResult(centroids=centroids, inertias=inertias)
 
 
 # ---------------------------------------------------------------------------
@@ -455,6 +225,8 @@ def mlp_reconstruction_mse_stats(features: DataFrame, fit: MlpFitResult) -> dict
         )
         .first()
     )
+    if not row["n"]:
+        raise ValueError("mlp_reconstruction_mse_stats: empty features frame")
     return {
         "mse_mean": row["s"] / row["n"],
         "mse_min": row["mn"],

@@ -1290,10 +1290,9 @@ def doc_simhash(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# ML pipeline (§2.11): distributed scaler fit/apply, MSE anomaly scoring,
-# threshold routing (the scored_flows contract), PCA reconstruction scorer,
-# Arrow-batched inference. The z-score math mirrors the oracle formula
-# literally, so results are bit-identical.
+# ML pipeline (§2.11): distributed scaler fit and a deterministic
+# random-projection reconstruction scorer. The fit's math mirrors the oracle
+# formula literally, so results are bit-identical.
 # ---------------------------------------------------------------------------
 
 _FEATURES = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
@@ -1335,201 +1334,15 @@ def scaler_fit_stats(spark, sf_dir):
 
 
 @register(
-    "anomaly_score_routing",
-    oracle=f"""
-        WITH stats AS ({_SQL_STATS}),
-        z AS (
-            SELECT
-                l.l_orderkey, l.l_linenumber,
-                {", ".join(
-                    f"(CAST(l.{c} AS DOUBLE) - s.mean_{c}) / s.std_{c} AS z_{c}"
-                    for c in _FEATURES
-                )}
-            FROM lineitem l CROSS JOIN stats s
-        ),
-        scored AS (
-            SELECT
-                ({" + ".join(f"z_{c} * z_{c}" for c in _FEATURES)}) / 4.0
-                    AS anomaly_score
-            FROM z
-        )
-        SELECT
-            CASE WHEN anomaly_score > 2.0 THEN 'anomaly' ELSE 'normal' END
-                AS prediction,
-            COUNT(*) AS n,
-            CAST(SUM(CAST(1.0 / (1.0 + abs(anomaly_score)) AS DECIMAL(28,10)))
-                 AS DOUBLE) / COUNT(*) AS avg_confidence
-        FROM scored
-        GROUP BY 1
-    """,
-    bench=True,
-    description="end-to-end scoring envelope: standardize -> MSE score -> threshold route (M5/F11/F12/P12)",
-    tags=("ml", "scoring"),
-)
-def anomaly_score_routing(spark, sf_dir):
-    from ..ml.pipeline import fit_standardizer, score_and_route_literal
-    from ..operators.relational import _track_persist
-    from ..sources.catalog import spread_for_compute
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # stats to literals: same two data passes (fit, score), but the scoring
-    # plan no longer embeds the fit subplan — avoids re-analyzing/compiling
-    # the aggregate inside the BNLJ build side (~20% of query wall at sf0.1).
-    # Both passes consume ONE spread, persisted feature projection: the fit's
-    # decimal sums and the scoring's z/route arithmetic otherwise each run on
-    # the raw scan's task layout (single-threaded on one-row-group fixtures,
-    # guide §2.5) and the table is read twice. The cache carries only the
-    # feature columns (guide §2.3); every consumer is an exact aggregate.
-    feats = _track_persist(
-        spread_for_compute(li.select(*_FEATURES), F.xxhash64(*_FEATURES))
-    )
-    stats_row = fit_standardizer(feats, _FEATURES).first()
-    scored = score_and_route_literal(feats, stats_row, _FEATURES, threshold=2.0)
-    return scored.groupBy("prediction").agg(
-        F.count("*").alias("n"),
-        (
-            F.sum(F.col("confidence").cast("decimal(28,10)")).cast("double")
-            / F.count("*")
-        ).alias("avg_confidence"),
-    )
-
-
-@register(
-    "zscore_features_sample",
-    oracle=f"""
-        WITH stats AS ({_SQL_STATS})
-        SELECT
-            l.l_orderkey, l.l_linenumber,
-            {", ".join(
-                f"(CAST(l.{c} AS DOUBLE) - s.mean_{c}) / s.std_{c} AS z_{c}"
-                for c in _FEATURES
-            )}
-        FROM lineitem l CROSS JOIN stats s
-        WHERE l.l_orderkey < 100
-    """,
-    description="standardized feature rows (F15 element-wise (x-mean)/std, distributed)",
-    tags=("ml", "scaler"),
-)
-def zscore_features_sample(spark, sf_dir):
-    from ..ml.pipeline import apply_standardizer, fit_standardizer
-
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100)
-    stats = fit_standardizer(load_table(spark, sf_dir, "lineitem"), _FEATURES)
-    z = apply_standardizer(li, stats, _FEATURES)
-    return z.select("l_orderkey", "l_linenumber", *[f"z_{c}" for c in _FEATURES])
-
-
-@register(
-    "pca_reconstruction",
-    oracle=None,
-    description="MLlib PCA reconstruction-error scorer (M7 autoencoder analog; rows-only)",
-    tags=("ml", "pca"),
-)
-def pca_reconstruction(spark, sf_dir):
-    from ..ml.pipeline import pca_reconstruction_scores
-
-    li = load_table(spark, sf_dir, "lineitem").withColumn(
-        "row_id",
-        F.col("l_orderkey") * 10 + F.col("l_linenumber"),
-    )
-    return pca_reconstruction_scores(li, _FEATURES, k=2, id_col="row_id")
-
-
-@register(
-    "pca_reconstruction_portable",
-    oracle="""
-        SELECT COUNT(*) AS n_rows,
-               COUNT(*) AS n_within,
-               TRUE AS all_within
-        FROM lineitem
-    """,
-    description=(
-        "M7 MLlib-scorer CONTRACT, oracle-checked: every Vector-pipeline "
-        "reconstruction error agrees with a scalar-SQL recompute of the "
-        "same fitted weights to 1e-9 — the sibling of rows-only "
-        "pca_reconstruction (the mapInPandas inference class has its own "
-        "contract in serialized_model_scores_portable; this one pins the "
-        "JVM Vector/StandardScaler/PCA transform class)"
-    ),
-    tags=("ml", "pca", "deterministic"),
-)
-def pca_reconstruction_portable(spark, sf_dir):
-    """Same contract shape as serialized_model_scores_portable but for the
-    OTHER scoring execution class: MLlib's Vector pipeline (VectorAssembler
-    → StandardScaler → PCA → vector_to_array fold). Both paths consume ONE
-    fitted model (fit_pca_pipeline — the r14-ADVICE refactor that removed
-    the duplicate fit and its cross-fit-determinism assumption) — and the
-    SQL recompute err = max(||z||² − ||zW||², 0)/d runs whole-stage-codegen.
-    Agreement within 1e-9 absolute per row, pinned TRUE by the oracle.
-    Join key is a feature-tuple hash (fixtures' (orderkey, linenumber) is
-    non-unique); identical features ⇒ identical errors on both paths."""
-    import pickle
-
-    import numpy as np
-
-    from ..ml.pipeline import (
-        fit_pca_pipeline,
-        pca_reconstruction_scores,
-        train_serialized_autoencoder,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem").withColumn(
-        "row_id",
-        F.xxhash64("l_orderkey", "l_linenumber", *_FEATURES),
-    )
-    # ONE Pipeline fit feeds both scoring paths (ADVICE r14: the double fit
-    # doubled the treeAggregate cost and leaned on cross-fit determinism)
-    fitted = fit_pca_pipeline(li, _FEATURES, k=2)
-    scored = pca_reconstruction_scores(
-        li, _FEATURES, k=2, id_col="row_id", model=fitted
-    )
-
-    m = pickle.loads(
-        train_serialized_autoencoder(li, _FEATURES, k=2, model=fitted)
-    )
-    mean = m["mean"]
-    std = np.where(m["std"] == 0, 1.0, m["std"])
-    w = m["w"]  # (d, k)
-    d = len(m["cols"])
-    z = [
-        (F.col(c).cast("double") - float(mean[i])) / float(std[i])
-        for i, c in enumerate(m["cols"])
-    ]
-    sq = sum(zi * zi for zi in z)
-    proj_sq = sum(
-        sum(z[i] * float(w[i][j]) for i in range(d)) ** 2
-        for j in range(w.shape[1])
-    )
-    err = F.greatest(sq - proj_sq, F.lit(0.0)) / float(d)
-    ref = li.select("row_id", err.alias("sql_err")).distinct()
-
-    j = scored.join(ref, "row_id")
-    agg = j.agg(
-        F.count("*").alias("n_rows"),
-        F.sum(
-            F.when(
-                F.abs(F.col("recon_error") - F.col("sql_err")) <= 1e-9, 1
-            ).otherwise(0)
-        ).alias("n_within"),
-    )
-    return agg.select(
-        "n_rows",
-        "n_within",
-        (F.col("n_within") == F.col("n_rows")).alias("all_within"),
-    )
-
-
-@register(
     "embedding_random_projection_mse",
     oracle="""
-        -- Johnson-Lindenstrauss sibling of the MLlib PCA scorer: project
+        -- Johnson-Lindenstrauss reconstruction scorer: project
         -- 64-dim embeddings through a DETERMINISTIC +-1 matrix (md5 parity)
         -- to 16 dims, reconstruct via the transpose (R^T R ~ k*I for
         -- Rademacher matrices), report per-vector reconstruction MSE stats.
         -- Decimal-exact sums at every contraction so any engine derives
-        -- identical numbers; MLlib PCA stays rows-only because its SVD is
-        -- engine-specific, while this sibling oracle-checks the same
-        -- project->reconstruct->score mechanism.
+        -- identical numbers, so the project->reconstruct->score mechanism
+        -- is oracle-checked.
         WITH ex AS (
             SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
                    generate_subscripts(embedding, 1) - 1 AS j
@@ -1574,15 +1387,15 @@ def pca_reconstruction_portable(spark, sf_dir):
         FROM mse
     """,
     description=(
-        "deterministic random-projection reconstruction error (oracle-"
-        "checked sibling of the MLlib PCA scorer)"
+        "deterministic random-projection reconstruction error "
+        "(oracle-checked)"
     ),
     tags=("ml", "projection", "deterministic"),
 )
 def embedding_random_projection_mse(spark, sf_dir):
     """The M7 autoencoder-analog surface with hash-level cross-engine
-    evidence: MLlib PCA's SVD is engine-specific (rows-only), but a
-    Rademacher random projection is just a deterministic +-1 matrix — built
+    evidence: a Rademacher random projection is a deterministic +-1
+    matrix (an SVD is engine-specific) — built
     here from md5 parity, broadcast (16x64 rows), applied and inverted as
     two long-format contractions with decimal-exact sums. Same
     project -> reconstruct -> per-row-MSE mechanism, bit-identical on any
@@ -1672,124 +1485,6 @@ def embedding_random_projection_mse(spark, sf_dir):
             / F.count("*")
         ).alias("mean_mse"),
         F.max("m").alias("max_mse"),
-    )
-
-
-@register(
-    "batched_model_inference",
-    oracle=None,
-    description="Arrow-batched mapInPandas inference, model init per partition (M2 replacement)",
-    tags=("ml", "inference"),
-)
-def batched_model_inference(spark, sf_dir):
-    from ..ml.pipeline import batched_inference
-
-    li = load_table(spark, sf_dir, "lineitem").withColumn(
-        "row_id",
-        F.col("l_orderkey") * 10 + F.col("l_linenumber"),
-    )
-    return batched_inference(li, _FEATURES, id_col="row_id")
-
-
-@register(
-    "serialized_model_scores",
-    oracle=None,
-    description=(
-        "full M2 path: distributed fit -> serialized weights -> broadcast -> "
-        "per-partition deserialize -> Arrow-batched numpy scoring (rows-only)"
-    ),
-    tags=("ml", "inference"),
-)
-def serialized_model_scores(spark, sf_dir):
-    from ..ml.pipeline import serialized_model_inference, train_serialized_autoencoder
-
-    li = load_table(spark, sf_dir, "lineitem").withColumn(
-        "row_id",
-        F.col("l_orderkey") * 10 + F.col("l_linenumber"),
-    )
-    model_bytes = train_serialized_autoencoder(li, _FEATURES, k=2)
-    return serialized_model_inference(li, model_bytes, id_col="row_id")
-
-
-@register(
-    "serialized_model_scores_portable",
-    oracle="""
-        SELECT COUNT(*) AS n_rows,
-               COUNT(*) AS n_within,
-               TRUE AS all_within
-        FROM lineitem
-    """,
-    description=(
-        "M2 inference CONTRACT, oracle-checked: every Arrow-batched "
-        "mapInPandas score agrees with a pure-Spark-SQL recompute of the "
-        "same fitted weights to 1e-9 — the oracle pins the agreement as a "
-        "literal, the sibling of rows-only serialized_model_scores"
-    ),
-    tags=("ml", "inference", "deterministic"),
-)
-def serialized_model_scores_portable(spark, sf_dir):
-    """The serialized-model scores themselves depend on distributed-fit
-    float weights, so they can't hash-match a DuckDB recompute — but the
-    inference path's CONTRACT can: score = 1/(1 + max(||z||² - ||zW||², 0)/d)
-    for the exact (mean, std, W) the model artifact carries. This query runs
-    the REAL path (distributed fit → pickle → broadcast → per-partition
-    deserialize → numpy batch scoring) AND a whole-stage-codegen SQL
-    recompute with the same weights injected as literals, then asserts
-    per-row agreement within 1e-9 absolute (scores live in (0, 1]; the two
-    paths differ only in float summation order over d=4 terms, ~1e-15).
-    A broken batch-inference path (wrong column order, stale broadcast,
-    batch-boundary bug) flips the boolean and hash-mismatches.
-
-    The fixtures' (l_orderkey, l_linenumber) is NOT unique (synthetic
-    generator), so the id joining the two paths is a hash of the full
-    feature tuple: rows sharing the id are bit-identical inputs, hence
-    bit-identical scores on both paths, and the SQL side deduped to one
-    row per id keeps the join 1:1 with the fact."""
-    import pickle
-
-    import numpy as np
-
-    from ..ml.pipeline import serialized_model_inference, train_serialized_autoencoder
-
-    li = load_table(spark, sf_dir, "lineitem").withColumn(
-        "row_id",
-        F.xxhash64("l_orderkey", "l_linenumber", *_FEATURES),
-    )
-    model_bytes = train_serialized_autoencoder(li, _FEATURES, k=2)
-    scored = serialized_model_inference(li, model_bytes, id_col="row_id")
-
-    m = pickle.loads(model_bytes)
-    mean = m["mean"]
-    std = np.where(m["std"] == 0, 1.0, m["std"])
-    w = m["w"]  # (d, k)
-    d = len(m["cols"])
-    z = [
-        (F.col(c).cast("double") - float(mean[i])) / float(std[i])
-        for i, c in enumerate(m["cols"])
-    ]
-    sq = sum(zi * zi for zi in z)
-    proj_sq = sum(
-        sum(z[i] * float(w[i][j]) for i in range(d)) ** 2
-        for j in range(w.shape[1])
-    )
-    err = F.greatest(sq - proj_sq, F.lit(0.0)) / float(d)
-    ref = li.select(
-        "row_id", (F.lit(1.0) / (F.lit(1.0) + err)).alias("sql_score")
-    ).distinct()
-
-    j = scored.join(ref, "row_id")
-    agg = j.agg(
-        F.count("*").alias("n_rows"),
-        F.sum(
-            F.when(
-                F.abs(F.col("model_score") - F.col("sql_score")) <= 1e-9, 1
-            ).otherwise(0)
-        ).alias("n_within"),
-    )
-    return agg.select(
-        "n_rows",
-        "n_within",
-        (F.col("n_within") == F.col("n_rows")).alias("all_within"),
     )
 
 
@@ -1986,9 +1681,9 @@ def multimodal_feature_extract(spark, sf_dir):
 def etl_end_to_end(spark, sf_dir):
     """The reference's full preprocess flow (preprocess_cicids2017.py:98-342)
     as one lazy composed plan: dirty-value masking (P7) -> null drop (P9) ->
-    canonical label mapping (F5, when/contains) -> distributed scaler fit +
-    apply (M9) -> grouped summary (A1). One pipeline, zero driver collects,
-    zero redundant count jobs."""
+    canonical label mapping (F5, when/contains) -> distributed scaler fit,
+    its one stats row applied as literals (M9) -> grouped summary (A1). No
+    data-path driver collects, no redundant count jobs."""
     df, _obs = _etl_end_to_end_plan(spark, sf_dir, instrument=False)
     return df
 
@@ -1997,14 +1692,15 @@ def etl_end_to_end_observed(spark, sf_dir):
     """The same ETL plan with per-stage row counts riding ``observe()`` —
     the reference's ``safe_count`` parity (preprocess_cicids2017.py logs a
     count() per stage, re-scanning the data each time; here the input and
-    post-clean counts fill during the ONE action that computes the summary).
+    post-clean counts fill during the standardizer fit, the first action
+    over the cleaned rows, with no count job of their own).
     Returns ``(summary_df, observations)`` where observations maps stage
     name -> pyspark Observation; read ``obs.get`` after an action."""
     return _etl_end_to_end_plan(spark, sf_dir, instrument=True)
 
 
 def _etl_end_to_end_plan(spark, sf_dir, instrument: bool):
-    from ..ml.pipeline import apply_standardizer, fit_standardizer
+    from ..ml.pipeline import apply_standardizer_literal, fit_standardizer
     from ..operators.aggregations import with_stage_observation
 
     observations = {}
@@ -2049,8 +1745,8 @@ def _etl_end_to_end_plan(spark, sf_dir, instrument: bool):
     # — the spread exchange costs more than the single-task aggregate it
     # parallelizes (r16 same-JVM A/B: −16% with it off; the 4-col lineitem
     # fits keep the spread, where it measures 2.7× the other way)
-    stats = fit_standardizer(labeled, ["value"], spread=False)
-    z = apply_standardizer(labeled, stats, ["value"])
+    stats_row = fit_standardizer(labeled, ["value"], spread=False).first()
+    z = apply_standardizer_literal(labeled, stats_row, ["value"])
     summary = z.groupBy("label").agg(
         F.count("*").alias("n_rows"),
         (
@@ -4438,84 +4134,6 @@ def user_rfm_features(spark, sf_dir):
         (F.unix_timestamp("mx") - F.unix_timestamp("user_mx")).alias("recency_s"),
         "frequency",
         "monetary",
-    )
-
-
-@register(
-    "threshold_sweep_anomaly_rates",
-    oracle=f"""
-        -- M8 calibration as data: anomaly rate at each candidate threshold,
-        -- from ONE pass over the scored rows (conditional counts, no
-        -- row-blowup cross join).
-        WITH stats AS ({{stats}}),
-        scored AS (
-            SELECT ({{score}}) / 4.0 AS anomaly_score
-            FROM lineitem l CROSS JOIN stats s
-        )
-        SELECT t.threshold,
-               CAST(SUM(CASE WHEN anomaly_score > t.threshold
-                             THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalies,
-               CAST(SUM(CASE WHEN anomaly_score > t.threshold
-                             THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)
-                   AS anomaly_rate
-        FROM scored CROSS JOIN (
-            SELECT unnest([0.5,1.0,1.5,2.0,2.5,3.0,3.5,4.0]) AS threshold
-        ) t
-        GROUP BY 1
-    """.format(
-        stats=_SQL_STATS,
-        score=" + ".join(
-            f"((CAST(l.{c} AS DOUBLE) - s.mean_{c}) / s.std_{c})"
-            f" * ((CAST(l.{c} AS DOUBLE) - s.mean_{c}) / s.std_{c})"
-            for c in _FEATURES
-        ),
-    ),
-    description=(
-        "threshold calibration sweep: anomaly rate per candidate threshold "
-        "in one scored pass (M8 as a curve, not a point)"
-    ),
-    tags=("ml", "scoring", "calibration"),
-)
-def threshold_sweep_anomaly_rates(spark, sf_dir):
-    """Threshold calibration wants the whole rate curve, not one operating
-    point. The scored pass runs ONCE; all 8 thresholds fold into a single
-    aggregate as conditional counts, then unpivot to long form — the
-    oracle's cross join is the same math, but at 100 TB the conditional-
-    count shape never multiplies the fact rows."""
-    from ..ml.pipeline import fit_standardizer, score_and_route_literal
-
-    li = load_table(spark, sf_dir, "lineitem")
-    stats_row = fit_standardizer(li, _FEATURES).first()
-    scored = score_and_route_literal(li, stats_row, _FEATURES, threshold=2.0)
-    thresholds = [0.5, 1.0, 1.5, 2.0, 2.5, 3.0, 3.5, 4.0]
-    aggs = [
-        F.sum(
-            F.when(F.col("anomaly_score") > F.lit(t), 1).otherwise(0)
-        ).alias(f"c{i}")
-        for i, t in enumerate(thresholds)
-    ] + [F.count("*").alias("n")]
-    one = scored.agg(*aggs)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("threshold"),
-                F.col(f"c{i}").alias("n_anomalies"),
-            )
-            for i, t in enumerate(thresholds)
-        ]
-    )
-    return (
-        one.select(F.col("n"), F.explode(pairs).alias("p"))
-        .select(
-            F.col("p.threshold").alias("threshold"),
-            F.col("p.n_anomalies").alias("n_anomalies"),
-            # n == 0 on an empty input frame: rate undefined -> NULL
-            # (DuckDB 0/0), never an ANSI DIVIDE_BY_ZERO
-            F.when(
-                F.col("n") > 0,
-                F.col("p.n_anomalies").cast("double") / F.col("n"),
-            ).alias("anomaly_rate"),
-        )
     )
 
 
@@ -8161,38 +7779,6 @@ def label_balance_by_split(spark, sf_dir):
         (F.col("n").cast("double") / F.sum("n").over(w)).alias(
             "share_in_split"
         ),
-    )
-
-
-@register(
-    "linear_ae_training_curve",
-    oracle=None,  # iterative distributed optimization — not SQL-expressible;
-    # invariants (loss strictly decreases, partitioning-independent fit)
-    # are pinned by tests/test_training.py
-    description=(
-        "A13/M7 analog: per-epoch loss series of a distributed linear-AE "
-        "fit (one Spark aggregation per epoch, parameter-server shape)"
-    ),
-    tags=("ml", "training", "rows-only"),
-)
-def linear_ae_training_curve(spark, sf_dir):
-    """The reference's history.history['loss'] series (A13,
-    train_autoencoder.py:190-206) produced by honest distributed training:
-    each epoch's full-batch gradient + loss is ONE mapInPandas partial-sum
-    aggregation; only the d x k parameter matrix ever leaves the cluster.
-    Deterministic by construction (exact sums, seeded init), so the curve
-    is reproducible across partitionings — pinned by
-    test_training_deterministic_under_repartition."""
-    from ..ml.training import fit_linear_autoencoder
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    feats = emb.select(
-        F.transform("embedding", lambda v: v.cast("double")).alias("features")
-    )
-    res = fit_linear_autoencoder(feats, dim=64, k=8, epochs=5, lr=5e-3)
-    return spark.createDataFrame(
-        [(i, l) for i, l in enumerate(res.losses)],
-        "epoch bigint, train_loss double",
     )
 
 

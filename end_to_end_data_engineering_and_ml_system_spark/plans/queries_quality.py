@@ -715,148 +715,6 @@ def stream_merge_into_tx_table(spark, sf_dir):
 
 
 @register(
-    "kmeans_inertia_curve",
-    oracle=None,  # iterative float optimization (centroid means depend on
-    # float summation order) — Lloyd's monotone-inertia guarantee and the
-    # deterministic init are pytest invariants; iteration 0 is
-    # oracle-checked below
-    description=(
-        "distributed Lloyd's k-means on embeddings: per-iteration total "
-        "inertia (deterministic md5-medoid init, parameter-server loop)"
-    ),
-    tags=("ml", "training", "clustering", "no-oracle"),
-)
-def kmeans_inertia_curve(spark, sf_dir):
-    """The clustering trainer beside the linear AE: one mapInPandas
-    aggregation per Lloyd's iteration collects
-    #partitions × k partial rows; only the k×d centroid matrix moves.
-    Inertia is non-increasing by construction — the invariant pytest
-    pins."""
-    from ..ml.training import fit_kmeans_lloyd
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda v: v.cast("double")).alias(
-            "features"
-        ),
-    )
-    fit = fit_kmeans_lloyd(emb, "vec_id", k=8, iters=6)
-    return spark.createDataFrame(
-        [(i, float(x)) for i, x in enumerate(fit.inertias)],
-        "iteration int, inertia double",
-    )
-
-
-@register(
-    "kmeans_init_assignment_portable",
-    oracle="""
-        -- iteration 0 of Lloyd's under the deterministic md5-medoid init,
-        -- recomputed from scratch: cluster sizes of the first assignment.
-        -- squared distances sum DECIMAL-exact (order-free), ties broken by
-        -- medoid rank.
-        WITH m AS (
-            SELECT vec_id AS medoid_id,
-                   ROW_NUMBER() OVER (
-                       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-                   ) - 1 AS cluster_rank
-            FROM embeddings
-            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-            LIMIT 8
-        ),
-        ex AS (
-            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-                   generate_subscripts(embedding, 1) AS pos
-            FROM embeddings
-        ),
-        cx AS (
-            SELECT m.cluster_rank, e.pos, e.x AS c
-            FROM m JOIN ex e ON e.vec_id = m.medoid_id
-        ),
-        d AS (
-            SELECT e.vec_id, c.cluster_rank,
-                   SUM(CAST((e.x - c.c) * (e.x - c.c) AS DECIMAL(28,10)))
-                       AS d2
-            FROM ex e JOIN cx c ON e.pos = c.pos
-            GROUP BY 1, 2
-        ),
-        a AS (
-            SELECT vec_id, cluster_rank,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY vec_id ORDER BY d2, cluster_rank
-                   ) AS rn
-            FROM d
-        )
-        SELECT CAST(cluster_rank AS INT) AS cluster_rank,
-               CAST(COUNT(*) AS BIGINT) AS n_assigned
-        FROM a
-        WHERE rn = 1
-        GROUP BY 1
-    """,
-    description=(
-        "Lloyd's iteration-0 assignment under the md5-medoid init, "
-        "oracle-checked (decimal-exact distances, rank tie-break)"
-    ),
-    tags=("ml", "clustering", "deterministic"),
-)
-def kmeans_init_assignment_portable(spark, sf_dir):
-    """Cross-engine proof of the k-means core: the deterministic init and
-    the nearest-centroid assignment recomputed declaratively (posexplode +
-    pos-join + decimal-exact squared distances + rank-tie argmin) and
-    checked against a from-scratch SQL oracle — pinning the portable
-    core. Later iterations average
-    floats and stay rows-only by necessity."""
-    from pyspark.sql.window import Window as W
-
-    from ..operators.relational import bounded_ranked_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # top-8 medoids by md5 order via distributed TakeOrdered + bounded
-    # self-join rank — no global-window single reducer on the corpus
-    m = bounded_ranked_topk(
-        emb.select(
-            F.col("vec_id").alias("medoid_id"),
-            F.md5(F.col("vec_id").cast("string")).alias("__h"),
-        ),
-        [("__h", "asc"), ("medoid_id", "asc")],
-        8,
-        out="__rk",
-    ).select(
-        "medoid_id", (F.col("__rk") - 1).cast("int").alias("cluster_rank")
-    )
-    ex = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "xf")
-    ).select("vec_id", "pos", F.col("xf").cast("double").alias("x"))
-    cx = m.join(
-        ex.select(
-            F.col("vec_id").alias("medoid_id"),
-            "pos",
-            F.col("x").alias("c"),
-        ),
-        "medoid_id",
-    )
-    d = (
-        ex.join(F.broadcast(cx.select("cluster_rank", "pos", "c")), "pos")
-        .groupBy("vec_id", "cluster_rank")
-        .agg(
-            F.sum(
-                (
-                    (F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))
-                ).cast("decimal(28,10)")
-            ).alias("d2")
-        )
-    )
-    a = d.withColumn(
-        "rn",
-        F.row_number().over(
-            W.partitionBy("vec_id").orderBy("d2", "cluster_rank")
-        ),
-    ).where(F.col("rn") == 1)
-    return a.groupBy(
-        F.col("cluster_rank").cast("int").alias("cluster_rank")
-    ).agg(F.count("*").cast("bigint").alias("n_assigned"))
-
-
-@register(
     "hourly_seasonal_naive_mase",
     oracle="""
         -- seasonal-naive benchmark forecast (yhat[h] = y[h-168]) scored
@@ -1712,202 +1570,6 @@ def tx_table_zorder_pruned_scan(spark, sf_dir):
 
     return scan("value", 200.0, 500.0, "value").unionByName(
         scan("user_id", 0, 20, "user_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Gradient-boosted stumps — fifth trainer family (round 7)
-# ---------------------------------------------------------------------------
-
-_GBDT_FEATURES_SQL = """
-        SELECT l.l_orderkey AS okey,
-               CAST(COUNT(*) AS BIGINT) AS n_items,
-               CAST(SUM(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-               CAST(COUNT(DISTINCT l.l_partkey) AS BIGINT) AS n_parts,
-               CAST(MAX(CAST(ROUND(l.l_discount * 10000) AS BIGINT))
-                    AS BIGINT) AS max_disc_bp,
-               CAST(ROUND(ANY_VALUE(o.o_totalprice) * 100) AS BIGINT)
-                   AS price_cents
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        GROUP BY 1
-"""
-
-
-def _gbdt_feature_frame(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        li.groupBy(F.col("l_orderkey").alias("okey"))
-        .agg(
-            F.count("*").cast("long").alias("n_items"),
-            F.sum(F.col("l_quantity").cast("long")).cast("long").alias(
-                "sum_qty"
-            ),
-            F.countDistinct("l_partkey").cast("long").alias("n_parts"),
-            F.max(F.round(F.col("l_discount") * 10000).cast("long"))
-            .cast("long")
-            .alias("max_disc_bp"),
-        )
-        .join(
-            orders.select(
-                F.col("o_orderkey").alias("okey"),
-                F.round(F.col("o_totalprice") * 100)
-                .cast("long")
-                .alias("price_cents"),
-            ),
-            "okey",
-        )
-    )
-
-
-_GBDT_FEATS = ("max_disc_bp", "n_items", "n_parts", "sum_qty")
-_GBDT_B = 16
-
-
-@register(
-    "gbdt_best_first_stump",
-    oracle="WITH feat AS MATERIALIZED ("
-    + _GBDT_FEATURES_SQL
-    + """),
-        st AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(CAST(price_cents AS DECIMAL(28,10)))
-                        AS DOUBLE) AS sy,
-                   """
-    + ", ".join(
-        f"CAST(MIN({c}) AS BIGINT) AS mn_{c},"
-        f" CAST(MAX({c}) AS BIGINT) AS mx_{c}"
-        for c in _GBDT_FEATS
-    )
-    + """
-            FROM feat
-        ),
-        resid AS (
-            SELECT f.*, CAST(f.price_cents AS DOUBLE) - st.sy / st.n AS r
-            FROM feat f CROSS JOIN st
-        ),
-        hist AS (
-            """
-    + "\nUNION ALL\n".join(
-        f"""SELECT '{c}' AS feature,
-                   (({c} - st.mn_{c}) * {_GBDT_B})
-                       // (st.mx_{c} - st.mn_{c} + 1) AS bucket,
-                   SUM(CAST(r AS DECIMAL(28,10))) AS s,
-                   CAST(COUNT(*) AS BIGINT) AS cnt
-            FROM resid CROSS JOIN st GROUP BY 1, 2"""
-        for c in _GBDT_FEATS
-    )
-    + """
-        ),
-        pref AS (
-            SELECT feature, bucket,
-                   SUM(s) OVER (PARTITION BY feature ORDER BY bucket)
-                       AS run_s,
-                   SUM(cnt) OVER (PARTITION BY feature ORDER BY bucket)
-                       AS run_n,
-                   SUM(s) OVER (PARTITION BY feature) AS tot_s,
-                   SUM(cnt) OVER (PARTITION BY feature) AS tot_n
-            FROM hist
-        ),
-        gains AS (
-            SELECT feature, CAST(bucket AS BIGINT) AS threshold_bucket,
-                   CAST(run_s AS DOUBLE) * CAST(run_s AS DOUBLE) / run_n
-                   + CAST(tot_s - run_s AS DOUBLE)
-                     * CAST(tot_s - run_s AS DOUBLE) / (tot_n - run_n)
-                       AS gain,
-                   CAST(run_s AS DOUBLE) / run_n AS gamma_l,
-                   CAST(tot_s - run_s AS DOUBLE) / (tot_n - run_n)
-                       AS gamma_r
-            FROM pref
-            WHERE run_n < tot_n
-        )
-        SELECT feature, threshold_bucket, gain, gamma_l, gamma_r
-        FROM gains
-        ORDER BY gain DESC, feature, threshold_bucket
-        LIMIT 1
-    """,
-    description=(
-        "boosting trainer core, oracle-checked: the exact best first "
-        "stump (feature, bucket threshold, leaf values) from the "
-        "residual histogram — from-scratch SQL vs the distributed fit"
-    ),
-    tags=("ml", "training", "boosting", "deterministic"),
-)
-def gbdt_best_first_stump(spark, sf_dir):
-    """The oracle-checked core of the fifth trainer family (LS-Boost over
-    histogram stumps, ml/boosting.py) — same device as
-    kmeans_init_assignment_portable: the
-    first training step recomputed from scratch by DuckDB must match the
-    distributed trainer bit for bit (decimal-exact residual histogram,
-    exact integer bucketization, fixed-order double gains), proving the
-    iteration machinery rather than just the curve's shape."""
-    from ..ml.boosting import fit_gbdt_stumps
-
-    fit = fit_gbdt_stumps(
-        _gbdt_feature_frame(spark, sf_dir),
-        list(_GBDT_FEATS),
-        "price_cents",
-        rounds=1,
-        n_buckets=_GBDT_B,
-    )
-    s = fit.stumps[0]
-    return spark.createDataFrame(
-        [
-            (
-                s.feature,
-                s.threshold_bucket,
-                s.gain,
-                s.gamma_l,
-                s.gamma_r,
-            )
-        ],
-        "feature string, threshold_bucket long, gain double, "
-        "gamma_l double, gamma_r double",
-    )
-
-
-@register(
-    "gbdt_training_curve",
-    oracle=None,  # 5 greedy rounds over double residuals — the exact
-    # non-increase guarantee and cross-partitioning determinism are pytest
-    # invariants (tests/test_ml.py); the round-0 machinery is oracle-checked
-    # by gbdt_best_first_stump
-    description=(
-        "gradient-boosted stumps on order features predicting order value: "
-        "training SSE and chosen split per round (monotone by construction)"
-    ),
-    tags=("ml", "training", "boosting", "no-oracle"),
-)
-def gbdt_training_curve(spark, sf_dir):
-    """LS-Boost training curve: per round the SSE before adding that
-    round's stump, plus the stump chosen. One histogram aggregation per
-    round; predictions live in the expression tree (never materialized),
-    so the whole 5-round fit is 6 Spark jobs over one cached-free scan
-    chain. The SSE sequence is non-increasing by construction."""
-    from ..ml.boosting import fit_gbdt_stumps
-
-    fit = fit_gbdt_stumps(
-        _gbdt_feature_frame(spark, sf_dir),
-        list(_GBDT_FEATS),
-        "price_cents",
-        rounds=5,
-        n_buckets=_GBDT_B,
-    )
-    rows = [
-        (
-            i,
-            fit.sses[i],
-            fit.stumps[i].feature if i < len(fit.stumps) else None,
-            fit.stumps[i].threshold_bucket if i < len(fit.stumps) else None,
-            fit.stumps[i].gain if i < len(fit.stumps) else None,
-        )
-        for i in range(len(fit.sses))
-    ]
-    return spark.createDataFrame(
-        rows,
-        "round int, sse double, feature string, threshold_bucket long, "
-        "gain double",
     )
 
 

@@ -30,14 +30,14 @@ def test_cli_train_tracks_and_promotes(spark, sf_dir, tmp_path, capsys):
     out = capsys.readouterr().out
     assert "-> Production" in out
     # registry artifacts exist and version 1 is Production
-    vdir = os.path.join(root, "models", "linear_ae", "versions", "1")
+    vdir = os.path.join(root, "models", "mlp_ae", "versions", "1")
     with open(os.path.join(vdir, "version.json")) as f:
         meta = json.load(f)
     assert meta["stage"] == "Production"
     # tracker holds the step-indexed loss series
-    runs = os.listdir(os.path.join(root, "experiments", "linear_ae", "runs"))
+    runs = os.listdir(os.path.join(root, "experiments", "mlp_ae", "runs"))
     with open(
-        os.path.join(root, "experiments", "linear_ae", "runs", runs[0], "run.json")
+        os.path.join(root, "experiments", "mlp_ae", "runs", runs[0], "run.json")
     ) as f:
         run_meta = json.load(f)
     assert [m["step"] for m in run_meta["metrics"]["train_loss"]] == [0, 1]

@@ -42,7 +42,6 @@ SAMPLE = [
     "cross_source_duplicate_matrix",  # verified pairs -> source grain
     "value_trimmed_mean_by_type", # UDAF over exact cents
     "hourly_seasonal_naive_mase", # integer error sums over the spine
-    "kmeans_init_assignment_portable",  # decimal-exact distances
     "near_dup_triangle_census",   # ordered-edge triple join
     "tx_table_time_travel_counts",  # committed-manifest reads
     "term_posting_stats",         # posting-grain reduce, tie-broken topk
@@ -68,7 +67,6 @@ SAMPLE = [
     "nation_trade_graph_stats",   # exact counts, single divisions
     "events_daily_quality_drift", # ppm floor + dyadic median/MAD
     "copurchase_bfs_hop_histogram",  # integer min-propagation rounds
-    "gbdt_best_first_stump",      # decimal histogram + fixed-order gains
     "events_dp_noisy_counts",     # md5-uniform seeded Laplace noise
     "copurchase_community_modularity",  # integer edge counts per label
     # round-8 additions — the distributed-rank machinery uses

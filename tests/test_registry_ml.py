@@ -67,13 +67,15 @@ def test_register_transition_archives_previous(tmp_path):
 def test_registry_feeds_spark_inference(spark, sf_dir, tmp_path):
     """The full loop the reference runs across three services, on one
     engine: distributed fit -> artifact in the registry -> Production
-    lookup -> broadcast scoring; registry scores must equal scoring with
-    the raw bytes."""
+    lookup -> per-partition scoring; scores from the loaded model must
+    equal scoring with the in-memory fit."""
+    import pickle
+
     from pyspark.sql import functions as F
 
-    from end_to_end_data_engineering_and_ml_system_spark.ml.pipeline import (
-        serialized_model_inference,
-        train_serialized_autoencoder,
+    from end_to_end_data_engineering_and_ml_system_spark.ml.training import (
+        fit_mlp_autoencoder,
+        mlp_reconstruction_scores,
     )
     from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import (
         load_table,
@@ -84,31 +86,33 @@ def test_registry_feeds_spark_inference(spark, sf_dir, tmp_path):
         load_table(spark, sf_dir, "lineitem")
         .select(
             F.monotonically_increasing_id().alias("row_id"),
-            *[F.col(c).cast("double").alias(c) for c in cols],
+            F.array(*[F.col(c).cast("double") for c in cols]).alias("features"),
         )
         .limit(500)
+        .cache()
     )
-    blob = train_serialized_autoencoder(li, cols, k=2)
+    fit = fit_mlp_autoencoder(li, dim=len(cols), epochs=2)
 
     t = Tracker(str(tmp_path))
     run = t.start_run("anomaly")
-    run.log_params({"k": 2, "features": ",".join(cols)})
-    run.log_artifact("autoencoder.pkl", blob)
+    run.log_params({"epochs": 2, "features": ",".join(cols)})
+    run.log_artifact("autoencoder.pkl", pickle.dumps(fit))
     run.end()
     reg = ModelRegistry(str(tmp_path))
     v = reg.register("NetworkAnomalyDetector", run, "autoencoder.pkl")
     reg.transition("NetworkAnomalyDetector", v, "Production")
 
-    served = reg.load_artifact("NetworkAnomalyDetector", "Production")
+    served = pickle.loads(reg.load_artifact("NetworkAnomalyDetector", "Production"))
     got = {
-        r["row_id"]: r["model_score"]
-        for r in serialized_model_inference(li, served, "row_id").collect()
+        r["row_id"]: r["recon_mse"]
+        for r in mlp_reconstruction_scores(li, served, "row_id").collect()
     }
     want = {
-        r["row_id"]: r["model_score"]
-        for r in serialized_model_inference(li, blob, "row_id").collect()
+        r["row_id"]: r["recon_mse"]
+        for r in mlp_reconstruction_scores(li, fit, "row_id").collect()
     }
     assert got == want and len(got) == 500
+    li.unpersist()
 
 
 def test_mlflow_adapter_interface_parity():

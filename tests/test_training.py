@@ -6,16 +6,14 @@ history.history extraction + mlflow.log_metric
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_data_engineering_and_ml_system_spark.ml.registry import Tracker
 from end_to_end_data_engineering_and_ml_system_spark.ml.training import (
-    fit_linear_autoencoder,
-    reconstruction_mse_stats,
+    fit_mlp_autoencoder,
+    mlp_reconstruction_mse_stats,
 )
 from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import load_table
 
@@ -28,80 +26,10 @@ def features(spark, sf_dir):
     ).cache()
 
 
-def test_epoch_losses_decrease_and_are_tracked(features, tmp_path):
-    tracker = Tracker(str(tmp_path))
-    run = tracker.start_run("linear_ae")
-    res = fit_linear_autoencoder(
-        features, dim=64, k=8, epochs=5, lr=5e-3, tracker_run=run
-    )
-    run.end()
-    assert len(res.losses) == 5
-    assert all(b < a for a, b in zip(res.losses, res.losses[1:])), res.losses
-    # A13: the step-indexed series is recoverable from the tracker exactly
-    # like history.history['loss']
-    meta = tracker.runs("linear_ae")[-1]
-    series = meta["metrics"]["train_loss"]
-    assert [m["step"] for m in series] == [0, 1, 2, 3, 4]
-    assert [m["value"] for m in series] == res.losses
-    final_train_loss = series[-1]["value"]  # reference's train_losses[-1]
-    assert final_train_loss == res.losses[-1]
-
-
-def test_training_deterministic_under_repartition(features):
-    # full-batch gradients are exact sums -> the fit is independent of
-    # partitioning (the reproducibility property minibatch SGD can't give)
-    a = fit_linear_autoencoder(features, dim=64, k=8, epochs=3, lr=5e-3)
-    b = fit_linear_autoencoder(
-        features.repartition(7), dim=64, k=8, epochs=3, lr=5e-3
-    )
-    assert np.allclose(a.weights, b.weights, atol=1e-12)
-    assert np.allclose(a.losses, b.losses, atol=1e-12)
-
-
-def test_mse_stats_match_local_numpy(features):
-    res = fit_linear_autoencoder(features, dim=64, k=8, epochs=2, lr=5e-3)
-    stats = reconstruction_mse_stats(features, res.weights)
-    x = np.stack([r["features"] for r in features.collect()])
-    r = x - (x @ res.weights) @ res.weights.T
-    mse = (r * r).mean(axis=1)
-    assert abs(stats["mse_mean"] - mse.mean()) < 1e-9
-    assert abs(stats["mse_min"] - mse.min()) < 1e-12
-    assert abs(stats["mse_max"] - mse.max()) < 1e-12
-
-
 def test_empty_frame_raises(spark):
     empty = spark.createDataFrame([], "features array<double>")
     with pytest.raises(ValueError, match="empty training frame"):
-        fit_linear_autoencoder(empty, dim=4, k=2, epochs=1)
-
-
-def test_kmeans_lloyd_monotone_and_deterministic(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from end_to_end_data_engineering_and_ml_system_spark.ml.training import (
-        fit_kmeans_lloyd,
-    )
-    from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda v: v.cast("double")).alias(
-            "features"
-        ),
-    )
-    fit = fit_kmeans_lloyd(emb, "vec_id", k=4, iters=5)
-    # Lloyd's guarantee: inertia never increases
-    for a, b in zip(fit.inertias, fit.inertias[1:]):
-        assert b <= a + 1e-9
-    assert fit.inertias[-1] < fit.inertias[0], "must actually improve"
-    # deterministic init: same result across partitionings (float sums in
-    # centroid means can differ in low bits — compare assignments shape)
-    again = fit_kmeans_lloyd(emb.repartition(7), "vec_id", k=4, iters=5)
-    import numpy as np
-
-    assert np.allclose(fit.centroids, again.centroids, atol=1e-9)
+        fit_mlp_autoencoder(empty, dim=4, epochs=1)
 
 
 # ---------------------------------------------------------------------------
@@ -249,13 +177,11 @@ def test_mlp_detect_loop_routing_partition_invariant(spark, sf_dir):
 
 
 def test_reconstruction_mse_stats_empty_frame_raises(spark):
-    import numpy as np
-    import pytest
-
-    from end_to_end_data_engineering_and_ml_system_spark.ml.training import (
-        reconstruction_mse_stats,
-    )
-
     empty = spark.createDataFrame([], "features array<double>")
+    fit = fit_mlp_autoencoder(
+        spark.createDataFrame([([1.0, 2.0, 3.0, 4.0],)], "features array<double>"),
+        dim=4,
+        epochs=1,
+    )
     with pytest.raises(ValueError, match="empty"):
-        reconstruction_mse_stats(empty, np.zeros((4, 2)))
+        mlp_reconstruction_mse_stats(empty, fit)
