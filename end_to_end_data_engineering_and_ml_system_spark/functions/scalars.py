@@ -61,13 +61,6 @@ def classify_by_threshold(
     return F.when(s > F.lit(threshold), F.lit(above)).otherwise(F.lit(below))
 
 
-def parse_ts_with_fallback(col: Column | str) -> Column:
-    """ISO timestamp parse, falling back to processing time on failure
-    (ref: F7, streamlit_dashboard.py:73-77)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(F.to_timestamp(c), F.current_timestamp())
-
-
 def trimmed_mean_cents_udaf():
     """Grouped-aggregate pandas UDF (the declared UDAF surface, SURVEY
     §2.11): 10–90% trimmed mean over integer cents.  Arrow ships each

@@ -55,7 +55,10 @@ def fit_standardizer(
     for c in cols:
         x = F.col(c).cast("double")
         mean = F.sum(x.cast(DEC)).cast("double") / F.count(x)
-        msq = F.sum((x * x).cast(DEC)).cast("double") / F.count(x)
+        # squares need the wider integral range: DEC holds 18 integer
+        # digits, so |x| > 1e9 would overflow (same width as the quadratic
+        # terms in pairwise_correlations)
+        msq = F.sum((x * x).cast("decimal(38,10)")).cast("double") / F.count(x)
         aggs.append(mean.alias(f"mean_{c}"))
         aggs.append(msq.alias(f"msq_{c}"))
     stats = df.agg(*aggs)

@@ -113,17 +113,6 @@ def replace_values_with_null(
     )
 
 
-def cast_columns(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:
-    """Cast columns by name in one projection (ref: P6,
-    stream_anomaly_detector.py:186-189)."""
-    return df.select(
-        *[
-            F.col(c).cast(casts[c]).alias(c) if c in casts else F.col(c)
-            for c in df.columns
-        ]
-    )
-
-
 def conditional_counts(df: DataFrame, conds: Mapping[str, Column]) -> DataFrame:
     """One-row DataFrame counting rows satisfying each named condition, in a
     single pass (ref: A3 — replaces the reference's N filter+count jobs,

@@ -20,7 +20,6 @@ from pyspark.sql.window import Window
 
 from ..sources.catalog import load_table
 from .queries import _SQL_SHINGLES, _SQL_VERIFIED_PAIRS
-from .queries_graph_retrieval import _MAX_BASKET as _MB
 from .registry import register
 
 
@@ -1262,107 +1261,6 @@ def stream_contract_split_counts(spark, sf_dir):
         F.count("*").alias("n_events")
     )
     return run_to_memory_sink(agg)
-
-
-@register(
-    "part_copurchase_lift",
-    oracle=f"""
-        -- association mining on the order basket: top part pairs by lift
-        -- = P(a,b) / (P(a)·P(b)) over orders, all from exact integer
-        -- counts (support floor 3 kills noise pairs)
-        WITH po0 AS (
-            SELECT DISTINCT l_orderkey AS okey, l_partkey AS part
-            FROM lineitem
-        ),
-        -- k^2 guard (the shared cap_baskets constant): baskets over
-        -- {_MB} distinct parts are dropped from the analysis entirely
-        -- (inert on TPC-H: baskets hold <= 7 parts)
-        ok AS (SELECT okey FROM po0 GROUP BY 1 HAVING COUNT(*) <= {_MB}),
-        po AS (SELECT po0.* FROM po0 JOIN ok ON po0.okey = ok.okey),
-        n AS (SELECT CAST(COUNT(DISTINCT okey) AS BIGINT) AS n_orders
-              FROM po),
-        pc AS (
-            SELECT part, CAST(COUNT(*) AS BIGINT) AS n_part
-            FROM po GROUP BY 1
-        ),
-        pairs AS (
-            SELECT a.part AS part_a, b.part AS part_b,
-                   CAST(COUNT(*) AS BIGINT) AS n_both
-            FROM po a JOIN po b
-              ON a.okey = b.okey AND a.part < b.part
-            GROUP BY 1, 2
-            HAVING COUNT(*) >= 3
-        )
-        SELECT part_a, part_b, n_both,
-               CAST(n_both AS DOUBLE) * CAST(n.n_orders AS DOUBLE)
-                   / (CAST(ca.n_part AS DOUBLE)
-                      * CAST(cb.n_part AS DOUBLE)) AS lift
-        FROM pairs
-        JOIN pc ca ON ca.part = pairs.part_a
-        JOIN pc cb ON cb.part = pairs.part_b
-        CROSS JOIN n
-        ORDER BY lift DESC, part_a, part_b
-        LIMIT 20
-    """,
-    description=(
-        "market-basket association mining: top part pairs by lift over "
-        "order baskets (support floor, exact integer counts)"
-    ),
-    tags=("analytics", "association", "join", "deterministic"),
-)
-def part_copurchase_lift(spark, sf_dir):
-    """The classic basket analysis on the relational side (the events
-    bigram-lift query's heavyweight sibling): distinct (order, part) pairs
-    self-join within the basket, guarded by the max-basket cap (baskets
-    over 64 distinct parts are dropped before the self-join — the pair
-    blowup is quadratic in basket size, and one viral basket would emit
-    k^2 pairs; inert on TPC-H where baskets hold <= 7). Lift from exact
-    integer counts with a fixed multiply/divide order; deterministic
-    top-20 with lexicographic tie-breaks."""
-    from .queries_graph_retrieval import cap_baskets
-
-    li = load_table(spark, sf_dir, "lineitem")
-    po = cap_baskets(
-        li.select(
-            F.col("l_orderkey").alias("okey"),
-            F.col("l_partkey").alias("part"),
-        ).distinct()
-    )
-    n_orders = po.select("okey").distinct().count()
-    pc = po.groupBy("part").agg(F.count("*").cast("bigint").alias("n_part"))
-    a = po.alias("a")
-    b = po.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.okey") == F.col("b.okey"))
-            & (F.col("a.part") < F.col("b.part")),
-        )
-        .groupBy(
-            F.col("a.part").alias("part_a"), F.col("b.part").alias("part_b")
-        )
-        .agg(F.count("*").cast("bigint").alias("n_both"))
-        .where(F.col("n_both") >= 3)
-    )
-    ca = pc.select(F.col("part").alias("part_a"), F.col("n_part").alias("na"))
-    cb = pc.select(F.col("part").alias("part_b"), F.col("n_part").alias("nb"))
-    out = (
-        pairs.join(ca, "part_a")
-        .join(cb, "part_b")
-        .select(
-            "part_a",
-            "part_b",
-            "n_both",
-            (
-                F.col("n_both").cast("double")
-                * F.lit(float(n_orders))
-                / (F.col("na").cast("double") * F.col("nb").cast("double"))
-            ).alias("lift"),
-        )
-    )
-    return out.orderBy(
-        F.desc("lift"), F.asc("part_a"), F.asc("part_b")
-    ).limit(20)
 
 
 @register(

@@ -81,4 +81,3 @@ def _ensure_loaded() -> None:
     _loaded = True
     from . import queries  # noqa: F401  (registers on import)
     from . import queries_quality  # noqa: F401
-    from . import queries_graph_retrieval  # noqa: F401

@@ -208,9 +208,9 @@ def get_spark(
         # minPartitionSize), so any stage bigger than parallelism×1m
         # behaves exactly as before — at 100 TB this conf is inert; it only
         # re-parallelizes the small compute-bound stages. r16 same-JVM A/B,
-        # order-reversed, medians of 7: pagerank −22%, jaccard −16%,
-        # events_window_counts −15%, nothing slower; value sweep flat
-        # 256k→4k, 64k picked as the conservative middle.
+        # order-reversed, medians of 7: a co-purchase graph query −22%,
+        # jaccard −16%, events_window_counts −15%, nothing slower; value
+        # sweep flat 256k→4k, 64k picked as the conservative middle.
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
             os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),

@@ -25,10 +25,6 @@ TABLES = (
     "embeddings",
 )
 
-#: dimension tables small enough to broadcast at any scale factor
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
-
-
 #: columns written as parquet TIMESTAMP(NANOS), which Spark cannot read
 #: natively — read as ns-since-epoch longs and convert to TimestampType.
 _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
@@ -83,13 +79,3 @@ def spread_for_compute(df: DataFrame, *keys) -> DataFrame:
     if current >= p:
         return df
     return df.repartition(p, *keys)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for ``spark.sql`` use."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -103,23 +103,6 @@ def kafka_sink_batch(df: DataFrame, bootstrap_servers: str, topic: str) -> None:
     )
 
 
-def kafka_sink_streaming(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint_dir: str,
-):
-    """Continuous Kafka sink with checkpointed offsets (the exactly-once-ish
-    alternative to per-batch writes; still at-least-once into Kafka)."""
-    return (
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
 def ensure_topics(
     topics: list[str],
     bootstrap_servers: str = "localhost:9092",

@@ -838,57 +838,3 @@ def run_merge_into_table(
     if snap is None:
         return spark.createDataFrame([], stream_df.schema)
     return snap
-
-
-#: schema of the staged lineitem stream source (projected to the co-purchase
-#: grain — the columns the graph accumulation consumes)
-LINEITEM_PAIRS_SCHEMA = StructType(
-    [
-        StructField("okey", LongType()),
-        StructField("part", LongType()),
-    ]
-)
-
-
-def stage_lineitem_pairs_dir(
-    spark: SparkSession, sf_dir: str, n_files: int = 8
-) -> str:
-    """Stage the lineitem fixture projected to distinct (order, part)
-    pairs as an n-file parquet directory for file-stream replay.
-    Range-partitioned on the order key, so one order's pairs usually —
-    but not always — arrive in the same micro-batch: the boundary orders
-    are exactly the interesting case for incremental graph accumulation
-    (edges discoverable only after a later batch lands)."""
-    key = sf_dir.strip("/").replace("/", "_")
-    root = scratch_root(spark, "stream_stage", local_default=_STAGE_ROOT)
-    out = os.path.join(root, f"li_pairs_{key}_{n_files}")
-    marker = os.path.join(out, _STAGED_MARKER)
-    if not os.path.exists(marker):
-        from ..sources.catalog import load_table
-
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .select(
-                F.col("l_orderkey").cast("long").alias("okey"),
-                F.col("l_partkey").cast("long").alias("part"),
-            )
-            .distinct()
-            .repartitionByRange(n_files, "okey")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-        _pin_mtimes(out)
-        _mark_staged(out)
-    return out
-
-
-def lineitem_pairs_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 2
-) -> DataFrame:
-    """Incremental file-source stream of distinct (order, part) pairs."""
-    staged = stage_lineitem_pairs_dir(spark, sf_dir)
-    return (
-        spark.readStream.schema(LINEITEM_PAIRS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged)
-    )

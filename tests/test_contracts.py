@@ -255,29 +255,6 @@ def test_gate_artifact_name_covers_all_sweep_dimensions(monkeypatch):
     )
 
 
-def test_bm25_match_predicate_derives_from_term_constant():
-    """The >=1-term match filter must be generated from _BM25_TERMS in
-    BOTH engines: a hardcoded 'tf0 + tf1 + tf2' would silently drop docs
-    matching only a later-added term."""
-    from end_to_end_data_engineering_and_ml_system_spark.plans import (
-        queries_graph_retrieval as qgr,
-    )
-    from end_to_end_data_engineering_and_ml_system_spark.plans.registry import (
-        _REGISTRY,
-        _ensure_loaded,
-    )
-
-    _ensure_loaded()
-    for i in range(len(qgr._BM25_TERMS)):
-        assert f"d.tf{i}" in qgr._BM25_MATCH_SQL
-    assert f"d.tf{len(qgr._BM25_TERMS)}" not in qgr._BM25_MATCH_SQL
-    for name in (
-        "bm25_topk_docs",
-        "query_expansion_prf_retrieval",
-    ):
-        assert f"WHERE {qgr._BM25_MATCH_SQL}" in _REGISTRY[name].oracle
-
-
 def test_lazy_exports_resolve():
     """Every name the package advertises in ``__all__`` resolves through the
     PEP 562 lazy ``__getattr__``: a stale entry pointing at a deleted module

@@ -48,32 +48,16 @@ SAMPLE = [
     "join_cardinality_estimate_vs_actual",  # exact counts + floored est
     "order_price_equidepth_histogram",      # NTILE over exact cents
     "weighted_doc_sample",        # md5-uniform sample keys
-    "part_copurchase_lift",       # basket pairs, fixed-order lift
     "signup_to_purchase_latency_quantiles",  # dyadic quartiles
     "watermark_tolerance_curve",  # running-max window + delay sweep
     "sessions_per_user_histogram",  # interval-exact session gaps
     # round-6 additions
     "tx_table_zorder_pruned_scan",  # pruning is I/O-only, results exact
     # round-7 additions
-    "nation_trade_pagerank",      # 1e-12-quantized iteration sums
-    "part_copurchase_pagerank_topk",  # same contract, tie-broken topk
-    "bm25_topk_docs",             # scalar-stats literals + rounded scores
-    "events_column_profile",      # single-scan unpivot + decimal entropy
-    "doc_bigram_logprob",         # decimal-exact mean over two windows
-    "copurchase_label_communities",  # pure integer LPA rounds
-    "part_copurchase_pagerank_weighted",  # integer weight normalizers
-    "related_parts_ppr",          # seeded restart, quantized iterations
-    "top_phrase_docs",            # integer trigram counts, tie-broken
-    "nation_trade_graph_stats",   # exact counts, single divisions
-    "events_daily_quality_drift", # ppm floor + dyadic median/MAD
-    "copurchase_bfs_hop_histogram",  # integer min-propagation rounds
     "events_dp_noisy_counts",     # md5-uniform seeded Laplace noise
-    "copurchase_community_modularity",  # integer edge counts per label
     # round-8 additions — the distributed-rank machinery uses
     # spark_partition_id over a range repartition, exactly the kind of
     # construction this suite exists to pin across shuffle widths
-    "part_jaccard_copurchase_similarity",  # capped pairs, one division
-    "query_expansion_prf_retrieval",  # posting-grain decimal BM25 sums
     "weighted_doc_sample_by_lang",    # partitioned E-S keys
     "token_coverage_curve",           # global_row_number over the vocab
     "source_mix_kl_divergence",       # shares + rounded ln terms

@@ -82,30 +82,7 @@ def test_components_raise_on_nonconvergence(spark):
         connected_components(chain, max_iters=1)
 
 
-def test_stars_long_chain_and_parity_with_propagation(spark):
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import (
-        connected_components_stars,
-    )
-
-    # a 40-hop path: far beyond the propagation variant's round budget,
-    # logarithmic for star contraction
-    chain = _edges(spark, [(i, i + 1) for i in range(40)])
-    got = {r["id"]: r["comp"] for r in connected_components_stars(chain).collect()}
-    assert set(got.values()) == {0} and len(got) == 41
-    # same answer as propagation on a propagation-friendly graph
-    small = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)]
-    a = sorted(map(tuple, connected_components(_edges(spark, small)).collect()))
-    b = sorted(
-        map(tuple, connected_components_stars(_edges(spark, small)).collect())
-    )
-    assert a == b
-
-
 def test_reliable_checkpoints_mode(spark, tmp_path):
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import (
-        connected_components_stars,
-    )
-
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ck"))
     e = _edges(spark, [(1, 2), (2, 3), (7, 8)])
     got = {
@@ -113,11 +90,6 @@ def test_reliable_checkpoints_mode(spark, tmp_path):
         for r in connected_components(e, reliable_checkpoints=True).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
-    got2 = {
-        r["id"]: r["comp"]
-        for r in connected_components_stars(e, reliable_checkpoints=True).collect()
-    }
-    assert got2 == got
 
 
 def test_reliable_checkpoints_autodetect_runs_dedup_clusters(spark, tmp_path):
@@ -213,246 +185,6 @@ def test_snapshot_pipeline_matches_standalone_queries(spark):
         ]
 
 
-# ---------------------------------------------------------------------------
-# PageRank
-# ---------------------------------------------------------------------------
-
-
-def _pagerank_numpy(edges, iters=3, damping=0.85):
-    """Reference implementation mirroring the operator's quantized
-    arithmetic (1e-12 grid on every shuffle-summed term). Rounding must be
-    HALF_UP like Spark's F.round / DuckDB's ROUND — Python's builtin
-    round() is half-to-even and diverges by one grid unit on boundaries."""
-    import math
-
-    import numpy as np
-
-    def _round_half_up(x):
-        return int(math.floor(x + 0.5))
-
-    nodes = sorted({u for e in edges for u in e})
-    idx = {v: i for i, v in enumerate(nodes)}
-    n = len(nodes)
-    out = {v: 0 for v in nodes}
-    for s, _ in edges:
-        out[s] += 1
-    r = np.full(n, 1.0 / n)
-    for _ in range(iters):
-        q = np.zeros(n, dtype=np.int64)
-        for s, d in edges:
-            q[idx[d]] += _round_half_up(damping * r[idx[s]] / out[s] * 1e12)
-        dq = sum(
-            _round_half_up(damping * r[idx[v]] * 1e12)
-            for v in nodes
-            if out[v] == 0
-        )
-        r = (1.0 - damping) / n + (float(dq) / n) / 1e12 + q / 1e12
-    return {v: r[idx[v]] for v in nodes}
-
-
-def test_pagerank_matches_numpy_with_dangling(spark):
-    """Graph with a dangling node (4 has no out-edges) — exercises the
-    redistribution term against an independent reference."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import pagerank
-
-    edges = [(1, 2), (1, 3), (2, 3), (3, 4), (2, 4)]
-    got = {
-        r["id"]: r["rank"]
-        for r in pagerank(_edges(spark, edges)).collect()
-    }
-    want = _pagerank_numpy(edges)
-    assert set(got) == set(want)
-    for v in want:
-        assert got[v] == want[v], (v, got[v], want[v])  # bit-identical
-
-
-def test_pagerank_mass_conserved(spark):
-    """Each iteration redistributes all rank mass: Σrank == 1 up to the
-    quantization grid (5 nodes × 3 iterations × 1e-12)."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import pagerank
-
-    edges = [(1, 2), (2, 3), (3, 1), (3, 5), (5, 9)]
-    total = (
-        pagerank(_edges(spark, edges))
-        .agg(F.sum("rank").alias("s"))
-        .first()["s"]
-    )
-    assert abs(total - 1.0) < 1e-9
-
-
-def test_pagerank_uniform_on_cycle(spark):
-    """A directed cycle is perfectly symmetric — every node must hold
-    exactly 1/n after any number of iterations."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import pagerank
-
-    n = 6
-    cyc = [(i, (i + 1) % n) for i in range(n)]
-    ranks = {
-        r["id"]: r["rank"] for r in pagerank(_edges(spark, cyc)).collect()
-    }
-    assert len(set(ranks.values())) == 1
-    assert abs(next(iter(ranks.values())) - 1.0 / n) < 1e-9
-
-
-def test_pagerank_partitioning_invariant(spark):
-    """The quantized-sum contract: bit-identical ranks at 1 and 16 shuffle
-    partitions (the cross-partitioning determinism rule every trainer in
-    ml/ also satisfies)."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import pagerank
-
-    edges = [(i, (i * 7) % 23) for i in range(1, 40)] + [(2, 9), (9, 2)]
-    base = None
-    for parts in ("1", "16"):
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-        try:
-            got = sorted(
-                map(
-                    tuple,
-                    pagerank(_edges(spark, edges)).collect(),
-                )
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        if base is None:
-            base = got
-        else:
-            assert got == base
-
-
-def test_label_propagation_keeps_bridged_cliques_apart(spark):
-    """Two 4-cliques joined by one bridge edge: connected components merges
-    them into one group; LPA must keep two dense communities."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import (
-        connected_components,
-        label_propagation,
-    )
-
-    def clique(ids):
-        return [(a, b) for a in ids for b in ids if a != b]
-
-    edges = clique([1, 2, 3, 4]) + clique([10, 11, 12, 13]) + [(4, 10), (10, 4)]
-    e = _edges(spark, edges)
-    cc = {r["id"]: r["comp"] for r in connected_components(e).collect()}
-    assert len(set(cc.values())) == 1  # reachability merges everything
-    lpa = {r["id"]: r["lbl"] for r in label_propagation(e, iters=2).collect()}
-    low = {lpa[i] for i in (1, 2, 3)}
-    high = {lpa[i] for i in (11, 12, 13)}
-    assert low.isdisjoint(high)  # density keeps the cliques apart
-
-
-def test_label_propagation_partitioning_invariant(spark):
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import (
-        label_propagation,
-    )
-
-    edges = [(i, (i * 5) % 17) for i in range(1, 30)] + [(3, 8), (8, 3)]
-    base = None
-    for parts in ("1", "16"):
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-        try:
-            got = sorted(
-                map(tuple, label_propagation(_edges(spark, edges)).collect())
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        if base is None:
-            base = got
-        else:
-            assert got == base
-
-
-def test_pagerank_weighted_vs_uniform(spark):
-    """With all weights equal, weighted PageRank must equal the uniform
-    variant bit for bit; with skewed weights the heavier target gains."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import pagerank
-
-    edges = [(1, 2), (1, 3), (2, 3), (3, 1)]
-    e_u = _edges(spark, edges)
-    e_w1 = spark.createDataFrame(
-        [(s, d, 7) for s, d in edges], ["src", "dst", "w"]
-    )
-    uni = sorted(map(tuple, pagerank(e_u, assume_distinct=True).collect()))
-    w1 = sorted(
-        map(
-            tuple,
-            pagerank(e_w1, weight="w", assume_distinct=True).collect(),
-        )
-    )
-    assert uni == w1  # equal weights: w/W_out == 1/outdeg exactly
-    e_skew = spark.createDataFrame(
-        [(1, 2, 9), (1, 3, 1), (2, 3, 1), (3, 1, 1)], ["src", "dst", "w"]
-    )
-    skew = {
-        r["id"]: r["rank"]
-        for r in pagerank(e_skew, weight="w", assume_distinct=True).collect()
-    }
-    uni_d = dict((i, r) for i, r in uni)
-    assert skew[2] > uni_d[2]  # node 2 receives 9/10 of node 1's mass
-
-
-def test_pagerank_personalized_teleport(spark):
-    """PPR from a seed: restart mass lands only on the seed; nodes
-    unreachable from the seed hold rank exactly 0."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import pagerank
-
-    # two components; seed is in the first
-    edges = [(1, 2), (2, 1), (2, 3), (3, 1), (10, 11), (11, 10)]
-    ranks = {
-        r["id"]: r["rank"]
-        for r in pagerank(
-            _edges(spark, edges), teleport=[1], assume_distinct=True
-        ).collect()
-    }
-    assert ranks[10] == 0.0 and ranks[11] == 0.0
-    assert ranks[1] > ranks[3] > 0.0
-    assert abs(sum(ranks.values()) - 1.0) < 1e-9  # mass still conserved
-
-
-def test_bfs_levels_chain_and_multisource(spark):
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import bfs_levels
-
-    chain = _edges(spark, [(i, i + 1) for i in range(6)])
-    got = {r["id"]: r["hop"] for r in bfs_levels(chain, [0], max_hops=3).collect()}
-    assert got == {0: 0, 1: 1, 2: 2, 3: 3}  # nodes beyond 3 hops absent
-    # multi-source: min distance over both seeds
-    got2 = {
-        r["id"]: r["hop"]
-        for r in bfs_levels(chain, [0, 4], max_hops=2).collect()
-    }
-    assert got2 == {0: 0, 4: 0, 1: 1, 5: 1, 2: 2, 6: 2}
-
-
-def test_pagerank_weighted_personalized_combined(spark):
-    """Weights and teleport compose: restart mass on the seed, heavy edge
-    pulls proportionally more of the seed's walk mass."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import pagerank
-
-    e = spark.createDataFrame(
-        [(1, 2, 9), (1, 3, 1), (2, 1, 1), (3, 1, 1)], ["src", "dst", "w"]
-    )
-    ranks = {
-        r["id"]: r["rank"]
-        for r in pagerank(
-            e, weight="w", teleport=[1], assume_distinct=True
-        ).collect()
-    }
-    assert ranks[2] > ranks[3]  # 9x edge weight from the seed
-    assert abs(sum(ranks.values()) - 1.0) < 1e-9
-
-
-def test_pagerank_empty_edges_raises(spark):
-    import pytest
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import pagerank
-
-    empty = spark.createDataFrame(
-        [], StructType([StructField("src", LongType()), StructField("dst", LongType())])
-    )
-    with pytest.raises(ValueError, match="empty edge list"):
-        pagerank(empty)
-
-
 def test_connected_components_string_ids(spark):
     """The convergence probe must work for NON-numeric ids: the old
     decimal-sum fingerprint cast string ids to NULL and declared
@@ -470,65 +202,6 @@ def test_connected_components_string_ids(spark):
     got = {r["id"]: r["comp"] for r in connected_components(edges).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "e": "a",
                    "x": "x", "y": "x"}
-
-
-def test_pagerank_rejects_bad_weights_and_teleport(spark):
-    import pytest
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import (
-        pagerank,
-    )
-
-    edges = spark.createDataFrame(
-        [(1, 2, 1.0), (2, 1, 0.0)], "src long, dst long, w double"
-    )
-    with pytest.raises(ValueError, match="weights"):
-        pagerank(edges, weight="w", iters=1)
-    frac = spark.createDataFrame(
-        [(1, 2, 1.5), (2, 1, 2.0)], "src long, dst long, w double"
-    )
-    with pytest.raises(ValueError, match="weights"):
-        pagerank(frac, weight="w", iters=1)
-    plain = edges.select("src", "dst")
-    with pytest.raises(ValueError, match="empty"):
-        pagerank(plain, teleport=[], iters=1)
-    with pytest.raises(ValueError, match="not nodes"):
-        pagerank(plain, teleport=[999], iters=1)
-
-
-def test_pagerank_weighted_parallel_edges_sum(spark):
-    """Parallel edges in a weighted multigraph sum their support: two
-    (u,v,w=3) rows must behave exactly like one (u,v,w=6) row — the old
-    distinct() collapsed equal weights but kept unequal ones."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import (
-        pagerank,
-    )
-
-    dup = spark.createDataFrame(
-        [(1, 2, 3), (1, 2, 3), (2, 1, 6)], "src long, dst long, w long"
-    )
-    merged = spark.createDataFrame(
-        [(1, 2, 6), (2, 1, 6)], "src long, dst long, w long"
-    )
-    got = {r["id"]: r["rank"] for r in pagerank(dup, weight="w", iters=2).collect()}
-    want = {r["id"]: r["rank"] for r in pagerank(merged, weight="w", iters=2).collect()}
-    assert got == want
-
-
-def test_stars_keeps_self_loop_only_nodes(spark):
-    """connected_components_stars must return self-loop-only nodes as
-    singleton components — identical to connected_components, as its
-    docstring promises."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import (
-        connected_components,
-        connected_components_stars,
-    )
-
-    edges = spark.createDataFrame(
-        [(5, 5), (1, 2)], "src long, dst long"
-    )
-    want = {(r["id"], r["comp"]) for r in connected_components(edges).collect()}
-    got = {(r["id"], r["comp"]) for r in connected_components_stars(edges).collect()}
-    assert got == want == {(5, 5), (1, 1), (2, 1)}
 
 
 def test_dedup_cluster_labels_rejects_output_column_collisions(spark):
@@ -606,133 +279,3 @@ def test_observed_row_falls_back_to_direct_aggregate_on_timeout(
     df.observe(obs, F.count(F.lit(1)).alias("n"))  # plan built, NEVER run
     row = graph._observed_row(obs, df, F.count(F.lit(1)).alias("n"))
     assert row["n"] == 10
-
-
-def test_pagerank_iteration1_fold_matches_explicit_initial_ranks(spark):
-    """Iteration 1 evaluates the restart distribution directly on the edge
-    table instead of joining a materialized rank table. Pin the fold
-    against the UNFOLDED construction: materialize the initial rank table
-    explicitly (restart values created as Python doubles — 0.25, 1.0, 0.0,
-    all exactly representable), run one iteration with the operator's own
-    expression shapes reading rank from that join, and assert bit-equality
-    with pagerank(iters=1) — uniform AND personalized restart. The test
-    graph has no dangling node (every node has an out-edge), so the
-    explicit mirror is exactly one join + one aggregate."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import (
-        pagerank,
-    )
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (1, 3), (9, 9)], "src long, dst long"
-    )
-    nodes = [1, 2, 3, 9]
-    d, q_grid = 0.85, 1e12
-    for kw, restart in (
-        ({}, {n: 1.0 / len(nodes) for n in nodes}),
-        ({"teleport": [1]}, {1: 1.0, 2: 0.0, 3: 0.0, 9: 0.0}),
-    ):
-        # explicit initial rank table, materialized from driver literals
-        r0 = spark.createDataFrame(
-            [(n, restart[n]) for n in nodes], "src long, rank double"
-        )
-        ew = edges.select(
-            "src",
-            "dst",
-            F.count("*")
-            .over(Window.partitionBy("src"))
-            .cast("long")
-            .alias("outdeg"),
-        )
-        contrib = ew.join(r0, "src").select(
-            F.col("dst").alias("id"),
-            F.round(F.lit(d) * F.col("rank") / F.col("outdeg") * F.lit(q_grid))
-            .cast("long")
-            .alias("q"),
-        )
-        qs = contrib.groupBy("id").agg(F.sum("q").alias("qs"))
-        if "teleport" in kw:
-            base = (F.lit(1.0) - F.lit(d)) / F.lit(1.0) * F.when(
-                F.col("id").isin([1]), F.lit(1.0)
-            ).otherwise(F.lit(0.0))
-        else:
-            base = (F.lit(1.0) - F.lit(d)) / F.lit(float(len(nodes)))
-        node_df = spark.createDataFrame([(n,) for n in nodes], "id long")
-        explicit = {
-            (r["id"], r["rank"])
-            for r in node_df.join(qs, "id", "left")
-            .select(
-                "id",
-                (
-                    base
-                    + F.coalesce(F.col("qs"), F.lit(0).cast("long")).cast(
-                        "double"
-                    )
-                    / F.lit(q_grid)
-                ).alias("rank"),
-            )
-            .collect()
-        }
-        folded = {
-            (r["id"], r["rank"])
-            for r in pagerank(edges, iters=1, **kw).collect()
-        }
-        assert folded == explicit  # bit-equal: same ops, same input doubles
-        # mass conservation still holds exactly on the 1e-12 grid
-        total = sum(r for _, r in folded)
-        assert abs(total - 1.0) < 1e-9
-
-
-def test_copurchase_canonical_pair_mirror_equals_both_directions(spark):
-    """copurchase_edges_from_baskets explodes only canonical (src < dst)
-    pairs and mirrors after the support count. Pin edge-set equality
-    against the naive both-directions formulation on a basket table with
-    duplicate lines, a capped giant basket, and a NULL order key."""
-    from pyspark.sql import functions as F
-
-    from end_to_end_data_engineering_and_ml_system_spark.plans.queries_graph_retrieval import (  # noqa: E501
-        copurchase_edges_from_baskets,
-    )
-
-    rows = [(1, 10), (1, 11), (1, 10), (2, 10), (2, 11), (2, 12),
-            (3, 10), (3, 11), (None, 10), (None, 11)]
-    rows += [(4, p) for p in range(100)]  # over the max_basket cap -> dropped
-    po = spark.createDataFrame(rows, "okey int, part long")
-
-    def naive(po, keep_weight):
-        b = (
-            po.filter(F.col("okey").isNotNull())
-            .groupBy("okey")
-            .agg(F.collect_set("part").alias("ps"))
-            .filter(F.size("ps") <= 64)
-        )
-        pairs = F.flatten(
-            F.transform(
-                "ps",
-                lambda x: F.filter(
-                    F.transform(
-                        "ps",
-                        lambda y: F.struct(x.alias("src"), y.alias("dst")),
-                    ),
-                    lambda p: p["src"] != p["dst"],
-                ),
-            )
-        )
-        e = (
-            b.select(F.explode(pairs).alias("p"))
-            .select("p.src", "p.dst")
-            .groupBy("src", "dst")
-            .agg(F.count("*").cast("long").alias("w"))
-            .filter(F.col("w") >= 2)
-        )
-        return e if keep_weight else e.select("src", "dst")
-
-    for kw in (False, True):
-        got = sorted(
-            map(tuple, copurchase_edges_from_baskets(po, kw).collect())
-        )
-        want = sorted(map(tuple, naive(po, kw).collect()))
-        assert got == want
-        assert got  # non-degenerate: (10, 11) has support 3

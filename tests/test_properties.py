@@ -8,7 +8,7 @@ from __future__ import annotations
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -166,6 +166,7 @@ def test_asof_join_matches_naive_reference(spark, left_rows, right_rows):
 
 
 @given(st.lists(st.floats(-1e6, 1e6, allow_nan=False), min_size=2, max_size=50))
+@example(xs=[2.0e9, 2.1e9, 2.2e9])  # squares past DECIMAL(28,10)'s range
 @SLOW
 def test_fit_standardizer_partitioning_invariant(spark, xs):
     """The decimal-sum fit must be bit-identical under any partitioning —
@@ -376,50 +377,6 @@ def test_hash_uniform_matches_duckdb_bit_for_bit(spark, keys):
             [str(k)],
         ).fetchone()[0]
         assert got[str(k)] == want, (k, got[str(k)], want)
-
-
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 25), st.integers(0, 25)),
-        min_size=1,
-        max_size=20,
-    )
-)
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_star_contraction_matches_union_find(spark, edges):
-    """large-star/small-star must agree with union-find on arbitrary graphs
-    — INCLUDING self-loop-only nodes, which label themselves (the same
-    contract as connected_components; the round-11 fix re-attaches them
-    after the a != b pre-filter)."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import (
-        connected_components_stars,
-    )
-
-    nodes = {x for a, b in edges for x in (a, b)}
-    real_edges = [(a, b) for a, b in edges if a != b]
-    parent: dict[int, int] = {n: n for n in nodes}
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in real_edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    expected = {
-        n: min(m for m in nodes if find(m) == find(n)) for n in nodes
-    }
-
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r["id"]: r["comp"] for r in connected_components_stars(df).collect()}
-    assert got == expected
 
 
 # --- repetition signals vs a pure-Python reference ------------------------

@@ -32,12 +32,6 @@ EXTRA_SNAPSHOTS = (
     # round 6: the materialize-once dedup pipeline — the snapshot shows the
     # derived consumers are plain rollups over one committed parquet read
     "corpus_dedup_snapshot_pipeline",
-    # round 7: iterative PageRank (plan shows the final update over
-    # checkpointed rank state), the profiling single-scan unpivot, and the
-    # bigram-LM double-window single-scan shape
-    "nation_trade_pagerank",
-    "events_column_profile",
-    "doc_bigram_logprob",
     # round 8: the distributed-rank shapes — equi-depth NTILE via
     # range-repartition + prefix offsets (no single-partition Exchange)
     # and vocabulary-coverage global rank
@@ -127,9 +121,8 @@ def build_snapshots() -> str:
         "PLANS.md.\n",
     ]
     snap = dict(bench_queries())
-    snap.update(
-        (n, all_queries()[n]) for n in EXTRA_SNAPSHOTS if n in all_queries()
-    )
+    # a stale name raises KeyError rather than silently unpinning a plan
+    snap.update((n, all_queries()[n]) for n in EXTRA_SNAPSHOTS)
     for name, q in sorted(snap.items()):
         if SKIP_TAGS & set(q.tags):
             parts.append(f"## {name}\n\n(streaming — plan not snapshotted; "
