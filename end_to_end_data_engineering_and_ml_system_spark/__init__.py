@@ -1,8 +1,8 @@
 """PySpark-native analytics engine with the query and data-processing
 capabilities of the reference system (a network-anomaly-detection pipeline:
 batch ETL, streaming scoring, windowed dashboard analytics, ML scoring), plus
-the large-scale training-data operators (dedup, text analysis, multimodal
-columns, versioned tables) required at 100 TB scale.
+the large-scale training-data operators (text analysis, multimodal columns,
+versioned tables) required at 100 TB scale.
 
 Everything here is built on public Apache Spark APIs only: DataFrame/SQL for
 batch, Structured Streaming for streams, MLlib for feature/ML pipelines, and
@@ -25,9 +25,6 @@ _EXPORTS = {
     "load_table": ("end_to_end_data_engineering_and_ml_system_spark.sources.catalog", "load_table"),
     # query registry (the driver contract)
     "all_queries": ("end_to_end_data_engineering_and_ml_system_spark.plans.registry", "all_queries"),
-    # dedup
-    "lsh_verified_near_dups": ("end_to_end_data_engineering_and_ml_system_spark.operators.dedup", "lsh_verified_near_dups"),
-    "dedup_cluster_labels": ("end_to_end_data_engineering_and_ml_system_spark.operators.graph", "dedup_cluster_labels"),
     # tracking / registry
     "Tracker": ("end_to_end_data_engineering_and_ml_system_spark.ml.registry", "Tracker"),
     "ModelRegistry": ("end_to_end_data_engineering_and_ml_system_spark.ml.registry", "ModelRegistry"),

@@ -437,28 +437,6 @@ def bounded_ranked_topk(
     )
 
 
-def ranked_topk(
-    df: DataFrame,
-    order_specs: OrderSpec,
-    k: int,
-    out: str = "rn",
-    on_null: str = "drop",
-) -> DataFrame:
-    """Exact global ranks 1..k for ANY k, choosing the strategy by k:
-    ``bounded_ranked_topk`` (TakeOrdered + O(k^2) broadcast recovery)
-    while k fits under its ceiling, else ``global_row_number`` + filter
-    (range-repartition + O(num_partitions) offsets — linear in the data,
-    no quadratic term). Both paths produce identical (row, rank) sets on
-    NULL-free keys; callers whose k scales with the data must come
-    through here, not the bounded form. NULL-order-key rows are dropped
-    (``on_null="strict"`` raises instead — see ``bounded_ranked_topk``)."""
-    if k <= BOUNDED_TOPK_MAX_K:
-        return bounded_ranked_topk(df, order_specs, k, out=out, on_null=on_null)
-    clean = _enforce_null_policy(df, order_specs, on_null, "ranked_topk")
-    ranked, _n = _global_rank(clean, order_specs, out)
-    return ranked.filter(F.col(out) <= k)
-
-
 def seeded_split(
     df: DataFrame, weights: Sequence[float], seed: int = 42
 ) -> list[DataFrame]:

@@ -6,7 +6,21 @@ a 100 TB corpus streams through scans without serde hops.
 
 Components: whitespace/regex tokenization, token statistics, quality scoring
 (punctuation / stopword / uppercase ratios), marker-word language ID, and
-content fingerprinting (normalized md5) for exact dedup keys.
+content fingerprinting (normalized md5) for exact dedup keys, and the
+benchmark-contamination scan (n-gram overlap with a broadcast benchmark set).
+
+The explode guard (referenced by every ``explode_outer`` + ``isNotNull``
+pair in this repo): a plain ``explode(e)`` makes Catalyst infer a
+``size(e) > 0 AND isnotnull(e)`` Filter below the Generate
+(InferFiltersFromGenerate), and filter pushdown then substitutes the column
+away, so the inferred condition re-expands the whole derived-array pipeline
+(tokenize + n-grams) and FilterExec does not share those evaluations with
+the projection. ``explode_outer`` gets no inferred guard; the explicit
+``isNotNull`` on the generated column cannot be pushed below the Generate
+(the column does not exist there), so it costs one null check per row.
+Results are identical whenever the array's elements are never NULL
+(split/concat_ws-derived arrays): outer emits exactly one null-element row
+for each empty/NULL array, the rows explode dropped.
 """
 
 from __future__ import annotations
@@ -18,14 +32,13 @@ from pyspark.sql import functions as F
 
 
 def _spread_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, text) projection, hash-spread by id across the session's cores —
-    the same guarded repartition the dedup module applies before its
-    per-shingle hashing (dedup._spread_text): tokenize + n-gram assembly +
-    per-window hashing are the expensive per-row work here, and on a
-    single-row-group fixture scan they would otherwise run in ONE task
-    (guide §2.5). No-op whenever the scan already feeds the session's
-    parallelism; every consumer below is an exact aggregate or per-row
-    projection, so the result is partition-order independent."""
+    """(id, text) projection, hash-spread by id across the session's cores:
+    tokenize + n-gram assembly + per-window hashing are the expensive
+    per-row work here, and on a single-row-group fixture scan they would
+    otherwise run in ONE task (guide §2.5). No-op whenever the scan already
+    feeds the session's parallelism; every consumer below is an exact
+    aggregate or per-row projection, so the result is partition-order
+    independent."""
     from ..sources.catalog import spread_for_compute
 
     return spread_for_compute(
@@ -67,8 +80,7 @@ def token_count(col: Column | str) -> Column:
 def ngrams(toks: Column, n: int) -> Column:
     """Word n-grams (duplicates kept, document order) from a materialized
     token array, as zip_with over shifted slices — one array walk, codegen'd.
-    ``dedup.shingles`` is ``array_distinct`` over this; repetition metrics
-    need the raw multiset."""
+    Repetition metrics need the raw multiset, so duplicates stay."""
     ng = toks
     for j in range(1, n):
         shifted = F.slice(toks, j + 1, F.greatest(F.size(toks) - j, F.lit(0)))
@@ -115,8 +127,8 @@ def repetition_signals(df, id_col: str, text_col: str):
         ).alias("dup_trigram_frac"),
     )
     top = (
-        # explode_outer + isNotNull: see dedup.exploded_shingles — a plain
-        # explode's inferred guard re-expands the bigram pipeline in a
+        # explode_outer + isNotNull: the explode guard (module docstring) —
+        # a plain explode's inferred guard re-expands the bigram pipeline in a
         # pushed-down Filter; bigram elements (concat_ws) are never NULL
         arrays.select(id_col, F.explode_outer("__bi").alias("__b"))
         .filter(F.col("__b").isNotNull())
@@ -240,13 +252,12 @@ def tf_idf_topk(df, id_col: str, text_col: str, k: int = 3):
     over (doc, k) rows. The idf table is VOCABULARY-sized — a web-scale
     corpus holds 10^8-10^9 distinct terms, so it must NOT carry a forced
     broadcast hint (an O(vocab) broadcast is a hard 8 GB failure at
-    corpus scale — the same class as the forced O(corpus) broadcast
-    removed from dedup.jaccard_pairs); AQE broadcasts when it actually
-    fits and shuffles the equi-join when it doesn't."""
+    corpus scale); AQE broadcasts when it actually fits and shuffles the
+    equi-join when it doesn't."""
     from pyspark.sql import DataFrame, Window
 
     assert isinstance(df, DataFrame)
-    # explode_outer + isNotNull: see dedup.exploded_shingles (guard device)
+    # explode_outer + isNotNull: the explode guard (module docstring)
     toked = df.select(
         F.col(id_col), F.explode_outer(tokens(text_col)).alias("term")
     ).filter(F.col("term").isNotNull())
@@ -491,14 +502,14 @@ def duplicate_ngram_windows(
     Scale shape: the explode runs ONCE (an inverted-index build + flag-join
     would evaluate it twice — the two subplans differ, so their exchanges
     can't be reused); windows travel as 8-byte ``xxhash64`` keys, never
-    strings (same collision trade as ``dedup.jaccard_pairs``). The pipeline
+    strings (64-bit collisions are the accepted trade). The pipeline
     is explode → (hash, doc)-grain reduce with map-side combine → a count
     window over the hash (replacing any join: groups are 1-2 rows — no
     skew) → per-doc rollup. Three keyed exchanges over the reduced grain,
     no join, cost O(windows) — never O(docs^2)."""
     from pyspark.sql import Window
 
-    # explode_outer + isNotNull: see dedup.exploded_shingles (guard device).
+    # explode_outer + isNotNull: the explode guard (module docstring).
     # Tokens are materialized as a column BEFORE the n-gram zip_with chain:
     # inlined, the Generate's expression re-expands the tokenize once per
     # zip_with reference (plan showed 16 copies) — measured a wash at this
@@ -571,6 +582,68 @@ def duplicate_ngram_spans(
         )
         .drop("grp")
     )
+
+
+def _exploded_shingles(
+    df: DataFrame, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """(id, n_sh, shingle) long format over each document's DISTINCT word
+    n-grams; ``n_sh`` is the distinct count. explode_outer + isNotNull: the
+    explode guard (module docstring)."""
+    sh = _spread_text(df, id_col, text_col).select(
+        F.col(id_col), tokens(text_col).alias("__toks")
+    ).select(
+        F.col(id_col), F.array_distinct(ngrams(F.col("__toks"), n)).alias("sh")
+    )
+    return sh.select(
+        id_col,
+        F.size("sh").alias("n_sh"),
+        F.explode_outer("sh").alias("shingle"),
+    ).filter(F.col("shingle").isNotNull())
+
+
+def contamination_check(
+    corpus: DataFrame,
+    benchmark: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    threshold: float = 0.2,
+) -> DataFrame:
+    """Benchmark-contamination scan: for each corpus document, the fraction
+    of its distinct word n-grams that also occur anywhere in a benchmark
+    corpus (the standard train/test-leakage check run before LLM training).
+
+    Returns (id, n_ngrams, shared_ngrams, contamination) for documents at or
+    above ``threshold``.
+
+    Scale shape (100 TB corpus vs MB-scale benchmark): eval suites are tiny,
+    so the benchmark's distinct-shingle set is built once and **broadcast**;
+    the corpus is exploded exactly once and inner-joined against that
+    broadcast set, so only matching shingle rows ever reach the per-document
+    count shuffle. No corpus self-join, no pairwise comparison, and the
+    corpus-side explode is map-side only."""
+    cand = _exploded_shingles(corpus, id_col, text_col, n)
+    bench_sh = (
+        _exploded_shingles(benchmark, id_col, text_col, n)
+        .select("shingle")
+        .distinct()
+    )
+    shared = (
+        cand.join(F.broadcast(bench_sh), "shingle")
+        .groupBy(id_col)
+        .agg(
+            F.min("n_sh").cast("bigint").alias("n_ngrams"),
+            F.count("*").alias("shared_ngrams"),
+        )
+    )
+    contamination = F.col("shared_ngrams").cast("double") / F.col("n_ngrams")
+    return shared.select(
+        id_col,
+        "n_ngrams",
+        "shared_ngrams",
+        contamination.alias("contamination"),
+    ).filter(F.col("contamination") >= threshold)
 
 
 def chunk_documents_udtf(spark):

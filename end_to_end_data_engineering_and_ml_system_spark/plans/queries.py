@@ -1166,7 +1166,7 @@ def token_frequency_topk(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     return (
-        # explode_outer + isNotNull: see dedup.exploded_shingles (guard device)
+        # explode_outer + isNotNull: see operators/text.py (explode guard)
         docs.select(F.explode_outer(tokens("text")).alias("token"))
         .filter(F.col("token").isNotNull())
         .groupBy("token")
@@ -1174,119 +1174,6 @@ def token_frequency_topk(spark, sf_dir):
         .orderBy(F.col("n").desc(), "token")
         .limit(50)
     )
-
-
-# ---------------------------------------------------------------------------
-# Near-dedup + similarity search (LLM-data pipeline surface): n-gram Jaccard
-# similarity join, MinHash signatures, LSH candidate pairs, embedding cosine
-# top-k. SimHash and the fast zip_with/LSH ANN paths are rows-only (bit/float
-# fold order is engine-specific) with invariant tests.
-# ---------------------------------------------------------------------------
-
-_SQL_SHINGLES = """
-    SELECT doc_id,
-           list_distinct(list_transform(range(1, len(toks)-1),
-               i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))) AS sh
-    FROM (SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                             tk -> tk <> '') AS toks
-          FROM documents)
-"""
-
-
-@register(
-    "doc_jaccard_near_dups",
-    oracle=f"""
-        WITH t AS ({_SQL_SHINGLES}),
-        s AS (SELECT doc_id, len(sh) AS n_sh, unnest(sh) AS shingle FROM t),
-        p AS (
-            SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS shared,
-                   any_value(a.n_sh) AS n1, any_value(b.n_sh) AS n2
-            FROM s a JOIN s b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        )
-        SELECT id1, id2,
-               CAST(shared AS DOUBLE) / (n1 + n2 - shared) AS jaccard
-        FROM p
-        WHERE CAST(shared AS DOUBLE) / (n1 + n2 - shared) >= 0.6
-    """,
-    bench=True,
-    description="n-gram Jaccard similarity join via inverted shingle index (near-dedup)",
-    tags=("dedup", "similarity"),
-)
-def doc_jaccard_near_dups(spark, sf_dir):
-    from ..operators.dedup import jaccard_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    return jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.6)
-
-
-@register(
-    "doc_minhash_signatures",
-    oracle="""
-        WITH t AS ({shingles}),
-        s AS (SELECT doc_id, unnest(sh) AS shingle FROM t)
-        SELECT s.doc_id, r.seed,
-               MIN(md5(r.seed::VARCHAR || ':' || s.shingle)) AS minhash
-        FROM s CROSS JOIN (SELECT unnest(range(8)) AS seed) r
-        GROUP BY 1, 2
-    """.format(shingles=_SQL_SHINGLES),
-    description="MinHash signatures, long format (id, seed, minhash); md5-order permutations",
-    tags=("dedup", "minhash"),
-)
-def doc_minhash_signatures(spark, sf_dir):
-    from ..operators.dedup import minhash_signatures
-
-    docs = load_table(spark, sf_dir, "documents")
-    return minhash_signatures(docs, "doc_id", "text", num_hashes=8, n=3)
-
-
-@register(
-    "doc_lsh_candidates",
-    oracle="""
-        WITH t AS ({shingles}),
-        s AS (SELECT doc_id, unnest(sh) AS shingle FROM t),
-        sig AS (
-            SELECT s.doc_id, r.seed,
-                   MIN(md5(r.seed::VARCHAR || ':' || s.shingle)) AS minhash
-            FROM s CROSS JOIN (SELECT unnest(range(8)) AS seed) r
-            GROUP BY 1, 2
-        ),
-        buckets AS (
-            SELECT doc_id, seed // 2 AS band,
-                   md5(string_agg(minhash, '|' ORDER BY seed)) AS bucket
-            FROM sig
-            GROUP BY 1, 2
-        )
-        SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        FROM buckets a
-        JOIN buckets b ON a.band = b.band AND a.bucket = b.bucket
-                       AND a.doc_id < b.doc_id
-    """.format(shingles=_SQL_SHINGLES),
-    bench=True,
-    description="MinHash-LSH banding: candidate pairs sharing a band bucket",
-    tags=("dedup", "minhash", "lsh"),
-)
-def doc_lsh_candidates(spark, sf_dir):
-    from ..operators.dedup import lsh_candidate_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    return lsh_candidate_pairs(
-        docs, "doc_id", "text", num_hashes=8, rows_per_band=2, n=3
-    )
-
-
-@register(
-    "doc_simhash",
-    oracle=None,
-    description="64-bit SimHash signatures (xxhash64 bit votes - Spark-side hash, rows-only)",
-    tags=("dedup", "simhash"),
-)
-def doc_simhash(spark, sf_dir):
-    from ..operators.dedup import simhash_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return simhash_table(docs, "doc_id", "text")
 
 
 # ---------------------------------------------------------------------------
@@ -2336,62 +2223,6 @@ def stream_flow_scoring(spark, sf_dir):
 
 
 @register(
-    "doc_lsh_verified_near_dups",
-    oracle="""
-        WITH t AS ({shingles}),
-        s AS (SELECT doc_id, unnest(sh) AS shingle FROM t),
-        sig AS (
-            SELECT s.doc_id, r.seed,
-                   MIN(md5(r.seed::VARCHAR || ':' || s.shingle)) AS minhash
-            FROM s CROSS JOIN (SELECT unnest(range(8)) AS seed) r
-            GROUP BY 1, 2
-        ),
-        buckets AS (
-            SELECT doc_id, seed // 2 AS band,
-                   md5(string_agg(minhash, '|' ORDER BY seed)) AS bucket
-            FROM sig
-            GROUP BY 1, 2
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-            FROM buckets a
-            JOIN buckets b ON a.band = b.band AND a.bucket = b.bucket
-                           AND a.doc_id < b.doc_id
-        ),
-        sz AS (SELECT doc_id, len(sh) AS n_sh FROM t),
-        shared AS (
-            SELECT c.id1, c.id2, COUNT(*) AS shared
-            FROM cand c
-            JOIN s s1 ON s1.doc_id = c.id1
-            JOIN s s2 ON s2.doc_id = c.id2 AND s2.shingle = s1.shingle
-            GROUP BY 1, 2
-        )
-        SELECT sh.id1, sh.id2,
-               CAST(sh.shared AS DOUBLE) / (z1.n_sh + z2.n_sh - sh.shared)
-                   AS jaccard
-        FROM shared sh
-        JOIN sz z1 ON sh.id1 = z1.doc_id
-        JOIN sz z2 ON sh.id2 = z2.doc_id
-        WHERE CAST(sh.shared AS DOUBLE) / (z1.n_sh + z2.n_sh - sh.shared) >= 0.6
-    """.format(shingles=_SQL_SHINGLES),
-    bench=True,
-    description="scale near-dedup: LSH candidates + exact Jaccard verify on candidates only",
-    tags=("dedup", "minhash", "lsh", "scale"),
-)
-def doc_lsh_verified_near_dups(spark, sf_dir):
-    """The corpus-scale near-dedup pipeline (operators/dedup.py::
-    lsh_verified_near_dups): banding proposes ~linear candidates, one
-    array_intersect per pair verifies — no quadratic inverted-index blowup
-    on replica-heavy corpora (measured 9x faster at 10x corpus)."""
-    from ..operators.dedup import lsh_verified_near_dups
-
-    docs = load_table(spark, sf_dir, "documents")
-    return lsh_verified_near_dups(
-        docs, "doc_id", "text", num_hashes=8, rows_per_band=2, n=3, threshold=0.6
-    )
-
-
-@register(
     "doc_tfidf_topk",
     oracle="""
         WITH toked AS (
@@ -3116,188 +2947,6 @@ def doc_token_packing(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     return pack_tokens_into_bins(docs, "lang", "doc_id", "text", bin_tokens=2048)
 
-
-# ---------------------------------------------------------------------------
-# Dedup clustering (LLM-data surface): the near-dup operators produce verified
-# PAIRS; these queries close the loop — transitive closure into groups, one
-# canonical doc kept per group. The reference stops at pairwise similarity,
-# so this extends, not ports. Oracle: DuckDB WITH RECURSIVE reachability
-# (min reachable id == the min-label fixpoint the Spark operator converges to).
-# ---------------------------------------------------------------------------
-
-_SQL_VERIFIED_PAIRS = """
-        s AS (SELECT doc_id, unnest(sh) AS shingle FROM t),
-        sig AS (
-            SELECT s.doc_id, r.seed,
-                   MIN(md5(r.seed::VARCHAR || ':' || s.shingle)) AS minhash
-            FROM s CROSS JOIN (SELECT unnest(range(8)) AS seed) r
-            GROUP BY 1, 2
-        ),
-        buckets AS (
-            SELECT doc_id, seed // 2 AS band,
-                   md5(string_agg(minhash, '|' ORDER BY seed)) AS bucket
-            FROM sig
-            GROUP BY 1, 2
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-            FROM buckets a
-            JOIN buckets b ON a.band = b.band AND a.bucket = b.bucket
-                           AND a.doc_id < b.doc_id
-        ),
-        sz AS (SELECT doc_id, len(sh) AS n_sh FROM t),
-        shared AS (
-            SELECT c.id1, c.id2, COUNT(*) AS shared
-            FROM cand c
-            JOIN s s1 ON s1.doc_id = c.id1
-            JOIN s s2 ON s2.doc_id = c.id2 AND s2.shingle = s1.shingle
-            GROUP BY 1, 2
-        ),
-        vp AS (
-            SELECT sh.id1, sh.id2
-            FROM shared sh
-            JOIN sz z1 ON sh.id1 = z1.doc_id
-            JOIN sz z2 ON sh.id2 = z2.doc_id
-            WHERE CAST(sh.shared AS DOUBLE)
-                  / (z1.n_sh + z2.n_sh - sh.shared) >= 0.6
-        ),
-        e AS (
-            SELECT id1 AS src, id2 AS dst FROM vp
-            UNION
-            SELECT id2, id1 FROM vp
-        ),
-        reach AS (
-            SELECT doc_id AS id, doc_id AS comp FROM documents
-            UNION
-            SELECT e.dst AS id, r.comp AS comp
-            FROM e JOIN reach r ON e.src = r.id
-        ),
-        labels AS (SELECT id AS doc_id, MIN(comp) AS cluster_id
-                   FROM reach GROUP BY 1)
-"""
-
-
-@register(
-    "doc_dedup_clusters",
-    oracle=f"""
-        WITH RECURSIVE t AS ({_SQL_SHINGLES}),
-        {_SQL_VERIFIED_PAIRS}
-        SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_docs
-        FROM labels
-        GROUP BY 1
-    """,
-    bench=True,
-    description=(
-        "near-dup pairs -> connected components -> cluster sizes "
-        "(min-label propagation; singletons are their own cluster)"
-    ),
-    tags=("dedup", "graph", "scale"),
-)
-def doc_dedup_clusters(spark, sf_dir):
-    """LSH-verified pairs (dedup.py:305) fed through min-label propagation
-    (graph.py:41) — the step that turns pairwise similarity into dedup
-    groups. Cluster id = min doc_id in the component (deterministic across
-    engines and partitionings)."""
-    from ..operators.dedup import lsh_verified_near_dups
-    from ..operators.graph import dedup_cluster_labels
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = lsh_verified_near_dups(
-        docs, "doc_id", "text", num_hashes=8, rows_per_band=2, n=3, threshold=0.6
-    )
-    labeled = dedup_cluster_labels(docs, pairs, "doc_id")
-    return labeled.groupBy("cluster_id").agg(F.count("*").alias("n_docs"))
-
-
-@register(
-    "corpus_near_dedup_kept",
-    oracle=f"""
-        WITH RECURSIVE t AS ({_SQL_SHINGLES}),
-        {_SQL_VERIFIED_PAIRS}
-        SELECT d.doc_id, d.lang, d.source
-        FROM documents d
-        JOIN labels l ON d.doc_id = l.doc_id
-        WHERE l.doc_id = l.cluster_id
-    """,
-    description=(
-        "the deduplicated corpus: keep each cluster's canonical doc "
-        "(minimum doc_id), drop the rest"
-    ),
-    tags=("dedup", "graph"),
-)
-def corpus_near_dedup_kept(spark, sf_dir):
-    """End-to-end near-dedup output — what a 100 TB pipeline would write
-    back out: every document whose id is its cluster's canonical id."""
-    from ..operators.dedup import lsh_verified_near_dups
-    from ..operators.graph import dedup_cluster_labels
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = lsh_verified_near_dups(
-        docs, "doc_id", "text", num_hashes=8, rows_per_band=2, n=3, threshold=0.6
-    )
-    labeled = dedup_cluster_labels(docs, pairs, "doc_id")
-    return labeled.filter("is_canonical").select("doc_id", "lang", "source")
-
-
-@register(
-    "cluster_aware_split_counts",
-    oracle=f"""
-        -- Leakage-safe split done right: membership is keyed on the
-        -- near-dup CLUSTER id, not the document id, so near-duplicates can
-        -- never straddle train/test (the standard eval-contamination
-        -- failure a per-doc split allows).
-        WITH RECURSIVE t AS ({_SQL_SHINGLES}),
-        {_SQL_VERIFIED_PAIRS},
-        splits AS (
-            SELECT doc_id, cluster_id,
-                   CASE WHEN u < 0.8 THEN 'train'
-                        WHEN u < 0.9 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM (SELECT doc_id, cluster_id,
-                         CAST(concat('0x',
-                              substr(md5(CAST(cluster_id AS VARCHAR)), 1, 8))
-                              AS BIGINT) / 4294967296.0 AS u
-                  FROM labels)
-        )
-        SELECT split,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(COUNT(DISTINCT cluster_id) AS BIGINT) AS n_clusters
-        FROM splits
-        GROUP BY 1
-    """,
-    bench=True,
-    description=(
-        "dedup-cluster-aware train/val/test split: near-dup groups move as "
-        "a unit, so no pair leaks across splits"
-    ),
-    tags=("dedup", "graph", "sampling", "split"),
-)
-def cluster_aware_split_counts(spark, sf_dir):
-    """Composition of the engine's pieces into the split a real training
-    pipeline needs: LSH-verified pairs -> connected components -> keyed
-    deterministic split on the CLUSTER id. Splitting on doc_id lets two
-    near-duplicates land in train and test (silent eval contamination);
-    hashing the cluster's canonical id moves each dedup group atomically.
-    Membership stays a pure projection (md5 hash range) on top of the
-    cluster labels, so the only non-map work is the clustering itself."""
-    from ..operators.dedup import lsh_verified_near_dups
-    from ..operators.graph import dedup_cluster_labels
-    from ..operators.relational import deterministic_split
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = lsh_verified_near_dups(
-        docs, "doc_id", "text", num_hashes=8, rows_per_band=2, n=3, threshold=0.6
-    )
-    labeled = dedup_cluster_labels(docs, pairs, "doc_id")
-    split = deterministic_split(
-        labeled, "cluster_id", {"train": 0.8, "val": 0.1, "test": 0.1}
-    )
-    return split.groupBy("split").agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct("cluster_id").alias("n_clusters"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Changelog semantics (CDC analogs on the events table): latest-state
 # compaction (SCD1 upsert view) and validity intervals (SCD2). One shuffle
@@ -3695,163 +3344,6 @@ def user_retention_cohorts(spark, sf_dir):
 
 
 @register(
-    "doc_simhash_portable",
-    oracle="""
-        WITH tok AS (
-            SELECT doc_id,
-                   unnest(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                                      tk -> tk <> '')) AS tok
-            FROM documents
-        ),
-        h AS (
-            SELECT doc_id,
-                   CAST(concat('0x', substr(md5(tok), 1, 15)) AS BIGINT) AS h
-            FROM tok
-        ),
-        v AS (
-            SELECT doc_id, b.j,
-                   SUM(CASE WHEN (h >> b.j) & 1 = 1 THEN 1 ELSE -1 END) AS votes
-            FROM h CROSS JOIN (SELECT unnest(range(60)) AS j) b
-            GROUP BY 1, 2
-        )
-        SELECT doc_id,
-               CAST(SUM(CASE WHEN votes > 0 THEN (CAST(1 AS BIGINT) << j)
-                        ELSE 0 END) AS BIGINT) AS simhash
-        FROM v
-        GROUP BY 1
-    """,
-    description=(
-        "engine-portable 60-bit SimHash (md5 token hashes) — oracle-checked "
-        "bit-for-bit, unlike the xxhash64 fast path"
-    ),
-    tags=("dedup", "simhash", "deterministic"),
-)
-def doc_simhash_portable(spark, sf_dir):
-    from ..operators.dedup import simhash_table_portable
-
-    docs = load_table(spark, sf_dir, "documents")
-    return simhash_table_portable(docs, "doc_id", "text")
-
-
-@register(
-    "doc_simhash_near_dups",
-    oracle="""
-        -- EXACT hamming-radius (<=3) SimHash pairs by pigeonhole banding:
-        -- 60-bit signatures split into 4 x 15-bit chunks; <=3 flips forces
-        -- >=1 identical chunk, so chunk-join candidates + bit_count(xor)
-        -- verify lose nothing (unlike probabilistic LSH banding).
-        WITH tok AS (
-            SELECT doc_id,
-                   unnest(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                                      tk -> tk <> '')) AS tok
-            FROM documents
-        ),
-        h AS (
-            SELECT doc_id,
-                   CAST(concat('0x', substr(md5(tok), 1, 15)) AS BIGINT) AS h
-            FROM tok
-        ),
-        v AS (
-            SELECT doc_id, b.j,
-                   SUM(CASE WHEN (h >> b.j) & 1 = 1 THEN 1 ELSE -1 END) AS votes
-            FROM h CROSS JOIN (SELECT unnest(range(60)) AS j) b
-            GROUP BY 1, 2
-        ),
-        sig AS (
-            SELECT doc_id,
-                   CAST(SUM(CASE WHEN votes > 0 THEN (CAST(1 AS BIGINT) << j)
-                            ELSE 0 END) AS BIGINT) AS simhash
-            FROM v GROUP BY 1
-        ),
-        banded AS (
-            SELECT doc_id, simhash, c.chunk_no,
-                   (simhash >> (c.chunk_no * 15)) & 32767 AS chunk_val
-            FROM sig CROSS JOIN (SELECT unnest(range(4)) AS chunk_no) c
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-                            a.simhash AS sig1, b.simhash AS sig2
-            FROM banded a
-            JOIN banded b ON a.chunk_no = b.chunk_no
-                         AND a.chunk_val = b.chunk_val
-                         AND a.doc_id < b.doc_id
-        )
-        SELECT id1, id2,
-               CAST(bit_count(xor(sig1, sig2)) AS INTEGER) AS hamming
-        FROM cand
-        WHERE bit_count(xor(sig1, sig2)) <= 3
-    """,
-    description=(
-        "exact hamming<=3 SimHash near-dup pairs (pigeonhole chunk "
-        "banding, bit_count verify — zero recall loss)"
-    ),
-    tags=("dedup", "simhash", "deterministic"),
-)
-def doc_simhash_near_dups(spark, sf_dir):
-    """Completes the SimHash dedup path: signatures -> pairs
-    (operators/dedup.py::simhash_near_dup_pairs). The pigeonhole guarantee
-    makes this the rare EXACT near-dup method whose candidate stage is
-    still an equi-join — at a 100 TB corpus the chunk join shuffles 4 rows
-    per doc and the verify is two integer instructions per candidate."""
-    from ..operators.dedup import simhash_near_dup_pairs, simhash_table_portable
-
-    docs = load_table(spark, sf_dir, "documents")
-    sigs = simhash_table_portable(docs, "doc_id", "text")
-    return simhash_near_dup_pairs(
-        sigs, "doc_id", bits=60, chunks=4, max_hamming=3
-    )
-
-
-@register(
-    "doc_edit_distance_near_dups",
-    oracle="""
-        -- Blocked Levenshtein near-dup pairs. Text normalized to printable
-        -- ASCII so byte-based (DuckDB) and char-based (Spark) edit distance
-        -- agree; blocking = same lang + same first 8 normalized chars +
-        -- length within 32. Empty normalizations (all non-ASCII docs) are
-        -- excluded — they would all share block '' at distance 0.
-        WITH t AS (
-            SELECT doc_id, lang,
-                   substr(regexp_replace(text, '[^ -~]', '', 'g'), 1, 64)
-                       AS pfx,
-                   substr(regexp_replace(text, '[^ -~]', '', 'g'), 1, 8)
-                       AS blk,
-                   length(regexp_replace(text, '[^ -~]', '', 'g')) AS n
-            FROM documents
-            WHERE length(regexp_replace(text, '[^ -~]', '', 'g')) >= 1
-        )
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               CAST(levenshtein(a.pfx, b.pfx) AS INTEGER)
-                   AS prefix_edit_distance
-        FROM t a JOIN t b
-          ON a.lang = b.lang AND a.blk = b.blk AND a.doc_id < b.doc_id
-         AND abs(a.n - b.n) <= 32
-        WHERE levenshtein(a.pfx, b.pfx) <= 8
-    """,
-    description="blocked Levenshtein near-dup pairs (prefix blocking, JVM-side levenshtein)",
-    tags=("dedup", "text"),
-)
-def doc_edit_distance_near_dups(spark, sf_dir):
-    """Edit-distance dedup sibling (operators/dedup.py::edit_distance_pairs):
-    prefix-blocked candidate generation, Levenshtein only on candidates —
-    the entity-resolution shape that survives corpus scale because work is
-    quadratic only within tiny blocks, never across the corpus."""
-    from ..operators.dedup import edit_distance_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    return edit_distance_pairs(
-        docs,
-        "doc_id",
-        "text",
-        prefix_len=64,
-        block_len=8,
-        length_band=32,
-        max_dist=8,
-        extra_block_cols=("lang",),
-    )
-
-
-@register(
     "event_time_disorder_stats",
     oracle="""
         -- How out-of-order is the stream, per user lane? The statistic that
@@ -4134,100 +3626,6 @@ def user_rfm_features(spark, sf_dir):
         (F.unix_timestamp("mx") - F.unix_timestamp("user_mx")).alias("recency_s"),
         "frequency",
         "monetary",
-    )
-
-
-@register(
-    "near_dup_similarity_histogram",
-    oracle=f"""
-        -- Threshold calibration for the dedup pipeline: the exact-Jaccard
-        -- distribution over LSH candidate pairs, bucketed to 0.1 — pick the
-        -- verify threshold from data instead of folklore.
-        WITH t AS ({_SQL_SHINGLES}),
-        s AS (SELECT doc_id, unnest(sh) AS shingle FROM t),
-        sig AS (
-            SELECT s.doc_id, r.seed,
-                   MIN(md5(r.seed::VARCHAR || ':' || s.shingle)) AS minhash
-            FROM s CROSS JOIN (SELECT unnest(range(8)) AS seed) r
-            GROUP BY 1, 2
-        ),
-        buckets AS (
-            SELECT doc_id, seed // 2 AS band,
-                   md5(string_agg(minhash, '|' ORDER BY seed)) AS bucket
-            FROM sig
-            GROUP BY 1, 2
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-            FROM buckets a
-            JOIN buckets b ON a.band = b.band AND a.bucket = b.bucket
-                           AND a.doc_id < b.doc_id
-        ),
-        sz AS (SELECT doc_id, len(sh) AS n_sh FROM t),
-        shared AS (
-            SELECT c.id1, c.id2, COUNT(*) AS shared
-            FROM cand c
-            JOIN s s1 ON s1.doc_id = c.id1
-            JOIN s s2 ON s2.doc_id = c.id2 AND s2.shingle = s1.shingle
-            GROUP BY 1, 2
-        )
-        SELECT CAST(floor(CAST(sh.shared AS DOUBLE)
-                    / (z1.n_sh + z2.n_sh - sh.shared) * 10) AS BIGINT)
-                   AS sim_bucket,
-               CAST(COUNT(*) AS BIGINT) AS n_pairs
-        FROM shared sh
-        JOIN sz z1 ON sh.id1 = z1.doc_id
-        JOIN sz z2 ON sh.id2 = z2.doc_id
-        GROUP BY 1
-    """,
-    description=(
-        "exact-Jaccard histogram over LSH candidate pairs (dedup threshold "
-        "calibration from data)"
-    ),
-    tags=("dedup", "minhash", "calibration"),
-)
-def near_dup_similarity_histogram(spark, sf_dir):
-    """Where should the verify threshold sit? The similarity distribution
-    over candidates answers it. Same banding + per-pair array_intersect
-    machinery as the verified-pairs path, minus the threshold filter, plus
-    a 0.1 bucketing (floor of double*10 — identical IEEE ops per engine)."""
-    from ..operators.dedup import (
-        exploded_shingles,
-        lsh_candidate_pairs,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    cand = lsh_candidate_pairs(docs, "doc_id", "text", 8, 2, 3)
-    sh = exploded_shingles(docs, "doc_id", "text", 3)
-    s1 = sh.select(
-        F.col("doc_id").alias("id1"),
-        F.col("n_sh").alias("n1"),
-        "shingle",
-    )
-    s2 = sh.select(
-        F.col("doc_id").alias("id2"),
-        F.col("n_sh").alias("n2"),
-        "shingle",
-    )
-    shared = (
-        cand.join(s1, "id1")
-        .join(s2, ["id2", "shingle"])
-        .groupBy("id1", "id2")
-        .agg(
-            F.count("*").alias("shared"),
-            F.min("n1").alias("n1"),
-            F.min("n2").alias("n2"),
-        )
-    )
-    jacc = F.col("shared").cast("double") / (
-        F.col("n1") + F.col("n2") - F.col("shared")
-    )
-    return (
-        shared.select(
-            F.floor(jacc * F.lit(10)).cast("bigint").alias("sim_bucket")
-        )
-        .groupBy("sim_bucket")
-        .agg(F.count("*").alias("n_pairs"))
     )
 
 
@@ -5136,68 +4534,6 @@ def events_table_profile(spark, sf_dir):
 
 
 @register(
-    "new_docs_vs_corpus_near_dups",
-    oracle=f"""
-        WITH t AS ({_SQL_SHINGLES}),
-        s AS (SELECT doc_id, unnest(sh) AS shingle FROM t),
-        sig AS (
-            SELECT s.doc_id, r.seed,
-                   MIN(md5(r.seed::VARCHAR || ':' || s.shingle)) AS minhash
-            FROM s CROSS JOIN (SELECT unnest(range(8)) AS seed) r
-            GROUP BY 1, 2
-        ),
-        buckets AS (
-            SELECT doc_id, seed // 2 AS band,
-                   md5(string_agg(minhash, '|' ORDER BY seed)) AS bucket
-            FROM sig
-            GROUP BY 1, 2
-        ),
-        new_ids AS (SELECT doc_id FROM documents
-                    WHERE source IN ('src18', 'src19')),
-        corpus_ids AS (SELECT doc_id FROM documents
-                       WHERE source NOT IN ('src18', 'src19')),
-        cand AS (
-            SELECT DISTINCT bn.doc_id AS new_id, bc.doc_id AS corpus_id
-            FROM buckets bn
-            JOIN new_ids ni ON bn.doc_id = ni.doc_id
-            JOIN buckets bc ON bn.band = bc.band AND bn.bucket = bc.bucket
-            JOIN corpus_ids ci ON bc.doc_id = ci.doc_id
-        ),
-        sz AS (SELECT doc_id, len(sh) AS n_sh FROM t),
-        shared AS (
-            SELECT c.new_id, c.corpus_id, COUNT(*) AS shared
-            FROM cand c
-            JOIN s s1 ON s1.doc_id = c.new_id
-            JOIN s s2 ON s2.doc_id = c.corpus_id AND s2.shingle = s1.shingle
-            GROUP BY 1, 2
-        )
-        SELECT sh.new_id, sh.corpus_id,
-               CAST(sh.shared AS DOUBLE) / (z1.n_sh + z2.n_sh - sh.shared)
-                   AS jaccard
-        FROM shared sh
-        JOIN sz z1 ON sh.new_id = z1.doc_id
-        JOIN sz z2 ON sh.corpus_id = z2.doc_id
-        WHERE CAST(sh.shared AS DOUBLE) / (z1.n_sh + z2.n_sh - sh.shared) >= 0.6
-    """,
-    description=(
-        "incremental dedup: near-dups of a new batch (src18/19) vs the "
-        "existing corpus — the daily-increment-vs-100TB production shape"
-    ),
-    tags=("dedup", "lsh", "incremental", "scale"),
-)
-def new_docs_vs_corpus_near_dups(spark, sf_dir):
-    from ..operators.dedup import incremental_near_dups
-
-    docs = load_table(spark, sf_dir, "documents")
-    new = docs.filter(F.col("source").isin("src18", "src19"))
-    corpus = docs.filter(~F.col("source").isin("src18", "src19"))
-    return incremental_near_dups(
-        corpus, new, "doc_id", "text",
-        num_hashes=8, rows_per_band=2, n=3, threshold=0.6,
-    )
-
-
-@register(
     "multimodal_feature_histogram",
     oracle="""
         WITH hx AS (
@@ -5664,9 +5000,8 @@ def orders_priority_summary_sql(spark, sf_dir):
 # OLAP analog pack 2 (declared §2.3/§2.4 parity): the remaining classic
 # TPC-H query shapes expressible over the fixture schema — conditional-
 # aggregate ratios (Q14), derived-aggregate self-joins (Q17), OR-of-ANDs
-# pushdown predicates (Q19), scalar-subquery + anti-join (Q22) — plus the
-# benchmark-contamination scan (train/test leakage) and IQR outlier
-# detection for the training-data pipeline surface.
+# pushdown predicates (Q19), scalar-subquery + anti-join (Q22) — plus IQR
+# outlier detection.
 # ---------------------------------------------------------------------------
 
 
@@ -5896,7 +5231,7 @@ def idle_rich_customers(spark, sf_dir):
     tags=("dedup", "llm-data"),
 )
 def benchmark_contamination(spark, sf_dir):
-    from ..operators.dedup import contamination_check
+    from ..operators.text import contamination_check
 
     docs = load_table(spark, sf_dir, "documents")
     return contamination_check(
@@ -6164,58 +5499,6 @@ def token_budget_selection(spark, sf_dir):
 
 
 @register(
-    "doc_ngram_novelty",
-    oracle=f"""
-        -- Novelty curve for curation: what fraction of each document's
-        -- distinct 3-gram shingles appear for the FIRST time in that
-        -- document (first = lowest doc_id)? Repetitive feeds trend to 0;
-        -- fresh content stays high. One explode + one min-per-shingle
-        -- aggregate — the same inverted-index backbone as the dedup path.
-        WITH t AS ({_SQL_SHINGLES}),
-        s AS (SELECT doc_id, unnest(sh) AS shingle FROM t),
-        first AS (
-            SELECT shingle, MIN(doc_id) AS first_doc FROM s GROUP BY 1
-        )
-        SELECT s.doc_id,
-               CAST(COUNT(*) AS BIGINT) AS n_shingles,
-               CAST(SUM(CASE WHEN f.first_doc = s.doc_id THEN 1 ELSE 0 END)
-                    AS BIGINT) AS novel_shingles,
-               CAST(SUM(CASE WHEN f.first_doc = s.doc_id THEN 1 ELSE 0 END)
-                    AS DOUBLE) / COUNT(*) AS novelty
-        FROM s JOIN first f ON f.shingle = s.shingle
-        GROUP BY 1
-    """,
-    description=(
-        "per-doc n-gram novelty (share of shingles first seen in this doc) "
-        "— the freshness signal for feed curation"
-    ),
-    tags=("llm-data", "text", "quality"),
-)
-def doc_ngram_novelty(spark, sf_dir):
-    """Repetition across documents, not within them (doc_repetition_signals
-    covers within): the share of a doc's shingles whose corpus-wide first
-    appearance IS this doc. The first-appearance table is one
-    min-aggregate over the exploded shingles — the inverted index the
-    dedup path already builds — and the join back is on the shingle key
-    both sides already shuffle on."""
-    from ..operators.dedup import exploded_shingles
-
-    docs = load_table(spark, sf_dir, "documents")
-    s = exploded_shingles(docs, "doc_id", "text", 3)
-    first = s.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
-    novel = F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
-    return (
-        s.join(first, "shingle")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_shingles"),
-            F.sum(novel).alias("novel_shingles"),
-            (F.sum(novel).cast("double") / F.count("*")).alias("novelty"),
-        )
-    )
-
-
-@register(
     "corpus_yield_by_source",
     oracle=f"""
         -- Where does the corpus lose documents? Per-source yield through
@@ -6397,7 +5680,7 @@ def vocab_coverage_top100(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     counts = (
-        # explode_outer + isNotNull: see dedup.exploded_shingles (guard device)
+        # explode_outer + isNotNull: see operators/text.py (explode guard)
         docs.select(F.explode_outer(tokens("text")).alias("token"))
         .filter(F.col("token").isNotNull())
         .groupBy("token")
@@ -6460,7 +5743,7 @@ def doc_rare_token_stats(spark, sf_dir):
     from ..operators.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    # explode_outer + isNotNull: see dedup.exploded_shingles (guard device)
+    # explode_outer + isNotNull: see operators/text.py (explode guard)
     occ = docs.select(
         "doc_id", F.explode_outer(tokens("text")).alias("token")
     ).filter(F.col("token").isNotNull())
@@ -7306,7 +6589,7 @@ def doc_duplicate_ngram_windows(spark, sf_dir):
     """Cross-document duplicated window detection (the signal behind
     substring-level training-data dedup). The operator keys every window on
     xxhash64, so the oracle's string grouping and Spark's hash grouping agree
-    up to 64-bit collisions (same documented trade as jaccard_pairs)."""
+    up to 64-bit collisions."""
     from ..operators.text import duplicate_ngram_windows
 
     docs = load_table(spark, sf_dir, "documents")
@@ -7576,7 +6859,7 @@ def doc_unigram_logprob(spark, sf_dir):
         )
     total = int(_t)
     dt = (
-        # explode_outer + isNotNull: see dedup.exploded_shingles (guard device)
+        # explode_outer + isNotNull: see operators/text.py (explode guard)
         docs.select("doc_id", F.explode_outer(tokens("text")).alias("tok"))
         .filter(F.col("tok").isNotNull())
         .groupBy("doc_id", "tok")
@@ -7819,72 +7102,6 @@ def mlp_ae_training_curve(spark, sf_dir):
 
 
 @register(
-    "minhash_jaccard_calibration",
-    oracle="""
-        WITH t AS ({shingles}),
-        s AS (SELECT doc_id, unnest(sh) AS shingle FROM t),
-        sig AS (
-            SELECT s.doc_id, r.seed,
-                   MIN(md5(r.seed::VARCHAR || ':' || s.shingle)) AS minhash
-            FROM s CROSS JOIN (SELECT unnest(range(8)) AS seed) r
-            GROUP BY 1, 2
-        ),
-        buckets AS (
-            SELECT doc_id, seed // 2 AS band,
-                   md5(string_agg(minhash, '|' ORDER BY seed)) AS bucket
-            FROM sig
-            GROUP BY 1, 2
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-            FROM buckets a
-            JOIN buckets b ON a.band = b.band AND a.bucket = b.bucket
-                           AND a.doc_id < b.doc_id
-        ),
-        est AS (
-            SELECT c.id1, c.id2,
-                   SUM(CASE WHEN sa.minhash = sb.minhash THEN 1 ELSE 0 END)
-                       / 8.0 AS est_jaccard
-            FROM cand c
-            JOIN sig sa ON sa.doc_id = c.id1
-            JOIN sig sb ON sb.doc_id = c.id2 AND sb.seed = sa.seed
-            GROUP BY 1, 2
-        ),
-        ex AS (
-            SELECT c.id1, c.id2,
-                   CAST(len(list_intersect(ta.sh, tb.sh)) AS DOUBLE)
-                     / (len(ta.sh) + len(tb.sh)
-                        - len(list_intersect(ta.sh, tb.sh))) AS exact_jaccard
-            FROM cand c
-            JOIN t ta ON ta.doc_id = c.id1
-            JOIN t tb ON tb.doc_id = c.id2
-        )
-        SELECT e.id1, e.id2, e.est_jaccard, x.exact_jaccard,
-               abs(e.est_jaccard - x.exact_jaccard) AS abs_err
-        FROM est e
-        JOIN ex x ON e.id1 = x.id1 AND e.id2 = x.id2
-    """.format(shingles=_SQL_SHINGLES),
-    description=(
-        "MinHash estimator calibration: signature-agreement estimate vs "
-        "exact Jaccard per LSH candidate pair, with absolute error"
-    ),
-    tags=("dedup", "minhash", "quality"),
-)
-def minhash_jaccard_calibration(spark, sf_dir):
-    """Answers 'is num_hashes=8 enough on THIS corpus?' before trusting
-    banding thresholds: per candidate pair, the MinHash estimate next to
-    ground truth. All joins are keyed on doc ids over ~linear candidates;
-    the estimate is a projection over the wide signature join (no per-seed
-    explode). See operators/dedup.py::minhash_estimate_vs_exact."""
-    from ..operators.dedup import minhash_estimate_vs_exact
-
-    docs = load_table(spark, sf_dir, "documents")
-    return minhash_estimate_vs_exact(
-        docs, "doc_id", "text", num_hashes=8, rows_per_band=2, n=3
-    )
-
-
-@register(
     "doc_duplicate_ngram_spans",
     oracle=r"""
         WITH toks AS (
@@ -8063,7 +7280,7 @@ def token_cms_estimates(spark, sf_dir):
     from ..operators.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    # explode_outer + isNotNull: see dedup.exploded_shingles (guard device)
+    # explode_outer + isNotNull: see operators/text.py (explode guard)
     toks = docs.select(
         F.explode_outer(tokens("text")).alias("tok")
     ).filter(F.col("tok").isNotNull())
@@ -8235,154 +7452,6 @@ def discount_band_revenue(spark, sf_dir):
             F.count("*").alias("n_lines"),
         )
     )
-
-
-@register(
-    "near_dup_cluster_size_histogram",
-    oracle=f"""
-        WITH RECURSIVE t AS ({_SQL_SHINGLES}),
-        {_SQL_VERIFIED_PAIRS},
-        sizes AS (
-            SELECT cluster_id, COUNT(*) AS sz FROM labels GROUP BY 1
-        )
-        SELECT CAST(sz AS BIGINT) AS cluster_size,
-               CAST(COUNT(*) AS BIGINT) AS n_clusters,
-               CAST(SUM(sz) AS BIGINT) AS n_docs,
-               CAST(SUM(sz) - COUNT(*) AS BIGINT) AS docs_removed
-        FROM sizes
-        GROUP BY 1
-    """,
-    description=(
-        "dedup-cluster size distribution: clusters/docs/removals per "
-        "cluster size — the dedup QA histogram"
-    ),
-    tags=("dedup", "graph", "quality"),
-)
-def near_dup_cluster_size_histogram(spark, sf_dir):
-    """The QA view of near-dedup: a healthy corpus shows mostly
-    singletons and a thin tail; a fat tail means the threshold is too
-    loose (or boilerplate needs its own pass). docs_removed per size row
-    = (size - 1) per cluster — the exact cost of keeping one canonical
-    doc per cluster. Adds two tiny rollups over the cluster-label table
-    the pipeline already computes."""
-    from ..operators.dedup import lsh_verified_near_dups
-    from ..operators.graph import dedup_cluster_labels
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = lsh_verified_near_dups(
-        docs, "doc_id", "text", num_hashes=8, rows_per_band=2, n=3,
-        threshold=0.6,
-    )
-    labeled = dedup_cluster_labels(docs, pairs, "doc_id")
-    sizes = labeled.groupBy("cluster_id").agg(F.count("*").alias("sz"))
-    return sizes.groupBy(F.col("sz").alias("cluster_size")).agg(
-        F.count("*").alias("n_clusters"),
-        F.sum("sz").alias("n_docs"),
-        (F.sum("sz") - F.count("*")).alias("docs_removed"),
-    )
-
-
-@register(
-    "corpus_dedup_snapshot_pipeline",
-    oracle=f"""
-        -- the oracle RECOMPUTES everything from the raw corpus; the Spark
-        -- side derives the same three summaries from a committed
-        -- cluster-label snapshot — matching hashes prove
-        -- derive-from-snapshot ≡ recompute
-        WITH RECURSIVE t AS ({{shingles}}),
-        {{verified_pairs}},
-        sizes AS (
-            SELECT cluster_id, COUNT(*) AS sz FROM labels GROUP BY 1
-        ),
-        splits AS (
-            SELECT doc_id,
-                   cluster_id,
-                   CASE WHEN u < 0.8 THEN 'train'
-                        WHEN u < 0.9 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM (SELECT doc_id, cluster_id,
-                         CAST(concat('0x',
-                              substr(md5(CAST(cluster_id AS VARCHAR)), 1, 8))
-                              AS BIGINT) / 4294967296.0 AS u
-                  FROM labels)
-        )
-        SELECT 'kept_docs' AS metric, 'corpus' AS key,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM labels WHERE doc_id = cluster_id
-        UNION ALL
-        SELECT 'split', split, CAST(COUNT(*) AS BIGINT)
-        FROM splits GROUP BY 2
-        UNION ALL
-        SELECT 'cluster_size', CAST(sz AS VARCHAR), CAST(COUNT(*) AS BIGINT)
-        FROM sizes GROUP BY 2
-    """.format(shingles=_SQL_SHINGLES, verified_pairs=_SQL_VERIFIED_PAIRS),
-    description=(
-        "materialize-once dedup: LSH-verify + connected components run "
-        "ONCE, labels committed to a transaction-log table, and the kept "
-        "corpus / leakage-safe split / cluster-size histogram all derived "
-        "from the committed snapshot (oracle recomputes from scratch)"
-    ),
-    tags=("dedup", "graph", "table-format", "pipeline"),
-)
-def corpus_dedup_snapshot_pipeline(spark, sf_dir):
-    """How a real 100 TB pipeline runs the dedup family: the expensive
-    work (LSH banding -> verify -> iterative min-label clustering) happens
-    ONCE, the per-doc cluster labels are committed atomically to a
-    ``TxTable`` (the published ``dedup_cluster_labels`` artifact), and
-    every downstream consumer — dedup'd corpus writer, cluster-aware
-    splitter, QA histogram — is a cheap rollup over the committed
-    snapshot. The per-query-independent siblings (doc_dedup_clusters,
-    corpus_near_dedup_kept, cluster_aware_split_counts,
-    near_dup_cluster_size_histogram) each rebuild this pipeline because
-    the driver contract requires it; this query is the composed form, and
-    its oracle recomputes everything from the raw corpus — a hash match
-    proves deriving from the snapshot is equivalent to recomputing."""
-    from ..operators.dedup import lsh_verified_near_dups
-    from ..operators.graph import dedup_cluster_labels
-    from ..operators.relational import hash_uniform
-    from ..scratch import scratch_unique
-    from ..sources.txlog import TxTable
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = lsh_verified_near_dups(
-        docs, "doc_id", "text", num_hashes=8, rows_per_band=2, n=3,
-        threshold=0.6,
-    )
-    labeled = dedup_cluster_labels(docs, pairs, "doc_id")
-
-    table = TxTable(spark, scratch_unique(spark, "dedup_labels"))
-    table.overwrite(labeled.select("doc_id", "cluster_id", "is_canonical"))
-    snap = table.snapshot()  # all three consumers read the COMMITTED table
-
-    kept = snap.filter("is_canonical").agg(
-        F.lit("kept_docs").alias("metric"),
-        F.lit("corpus").alias("key"),
-        F.count("*").alias("n"),
-    )
-    u = hash_uniform("cluster_id")
-    split = (
-        snap.withColumn(
-            "split",
-            F.when(u < 0.8, "train").when(u < 0.9, "val").otherwise("test"),
-        )
-        .groupBy("split")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.lit("split").alias("metric"), F.col("split").alias("key"), "n"
-        )
-    )
-    hist = (
-        snap.groupBy("cluster_id")
-        .agg(F.count("*").alias("sz"))
-        .groupBy("sz")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.lit("cluster_size").alias("metric"),
-            F.col("sz").cast("string").alias("key"),
-            "n",
-        )
-    )
-    return kept.unionByName(split).unionByName(hist)
 
 
 @register(
@@ -8953,7 +8022,7 @@ def corpus_boilerplate_ngrams(spark, sf_dir):
     from ..operators.text import ngrams, tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    # explode_outer + isNotNull: see dedup.exploded_shingles (guard device)
+    # explode_outer + isNotNull: see operators/text.py (explode guard)
     g = docs.select(
         "doc_id",
         F.explode_outer(
@@ -9553,95 +8622,6 @@ def chunk_level_dedup_stats(spark, sf_dir):
 
 
 @register(
-    "near_dup_threshold_sensitivity",
-    oracle=f"""
-        -- ONE candidate+verify computation, three thresholds read off the
-        -- same jaccard values — the tuning table for picking a dedup
-        -- threshold without re-running the pipeline per candidate value
-        WITH t AS ({{shingles}}),
-        s AS (SELECT doc_id, unnest(sh) AS shingle FROM t),
-        sig AS (
-            SELECT s.doc_id, r.seed,
-                   MIN(md5(r.seed::VARCHAR || ':' || s.shingle)) AS minhash
-            FROM s CROSS JOIN (SELECT unnest(range(8)) AS seed) r
-            GROUP BY 1, 2
-        ),
-        buckets AS (
-            SELECT doc_id, seed // 2 AS band,
-                   md5(string_agg(minhash, '|' ORDER BY seed)) AS bucket
-            FROM sig GROUP BY 1, 2
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-            FROM buckets a
-            JOIN buckets b ON a.band = b.band AND a.bucket = b.bucket
-                           AND a.doc_id < b.doc_id
-        ),
-        sz AS (SELECT doc_id, len(sh) AS n_sh FROM t),
-        j AS (
-            SELECT sh.id1, sh.id2,
-                   CAST(sh.shared AS DOUBLE)
-                       / (z1.n_sh + z2.n_sh - sh.shared) AS jac
-            FROM (
-                SELECT c.id1, c.id2, COUNT(*) AS shared
-                FROM cand c
-                JOIN s s1 ON s1.doc_id = c.id1
-                JOIN s s2 ON s2.doc_id = c.id2 AND s2.shingle = s1.shingle
-                GROUP BY 1, 2
-            ) sh
-            JOIN sz z1 ON sh.id1 = z1.doc_id
-            JOIN sz z2 ON sh.id2 = z2.doc_id
-        )
-        SELECT th.threshold,
-               CAST(SUM(CASE WHEN j.jac >= th.threshold THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_pairs,
-               CAST(COUNT(DISTINCT CASE WHEN j.jac >= th.threshold
-                                        THEN j.id1 END)
-                    + COUNT(DISTINCT CASE WHEN j.jac >= th.threshold
-                                          THEN j.id2 END) AS BIGINT)
-                   AS n_docs_touched_ub
-        FROM j
-        CROSS JOIN (SELECT unnest([0.5, 0.6, 0.7]) AS threshold) th
-        GROUP BY 1
-    """.format(shingles=_SQL_SHINGLES),
-    description=(
-        "dedup threshold tuning: pairs surviving 0.5/0.6/0.7 from ONE "
-        "candidate+verify pass (upper-bound docs touched per threshold)"
-    ),
-    tags=("dedup", "quality"),
-)
-def near_dup_threshold_sensitivity(spark, sf_dir):
-    """Pick the dedup threshold from data, not folklore: candidates are
-    generated and exact-verified ONCE (at the loosest threshold banding
-    supports), then every candidate threshold is a conditional aggregate
-    over the same jaccard column — no pipeline re-runs. n_docs_touched_ub
-    sums the two distinct-endpoint counts (an upper bound on affected
-    docs; the exact union-size needs the clustering pass the chosen
-    threshold then feeds)."""
-    from ..operators.dedup import lsh_verified_near_dups
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = lsh_verified_near_dups(
-        docs, "doc_id", "text", num_hashes=8, rows_per_band=2, n=3,
-        threshold=0.0,
-    )
-    ths = F.explode(F.array(*[F.lit(x) for x in (0.5, 0.6, 0.7)])).alias(
-        "threshold"
-    )
-    expanded = pairs.select("id1", "id2", F.col("jaccard").alias("jac")).select(
-        "id1", "id2", "jac", ths
-    )
-    hit = F.col("jac") >= F.col("threshold")
-    return expanded.groupBy("threshold").agg(
-        F.sum(F.when(hit, 1).otherwise(0)).alias("n_pairs"),
-        (
-            F.count_distinct(F.when(hit, F.col("id1")))
-            + F.count_distinct(F.when(hit, F.col("id2")))
-        ).alias("n_docs_touched_ub"),
-    )
-
-
-@register(
     "token_zipf_fit",
     oracle=r"""
         -- Zipf exponent of the corpus: OLS of ln(freq) on ln(rank) over
@@ -9704,7 +8684,7 @@ def token_zipf_fit(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     freq = (
-        # explode_outer + isNotNull: see dedup.exploded_shingles (guard device)
+        # explode_outer + isNotNull: see operators/text.py (explode guard)
         docs.select(F.explode_outer(tokens("text")).alias("tok"))
         .filter(F.col("tok").isNotNull())
         .groupBy("tok")
@@ -9786,7 +8766,7 @@ def vocab_growth_heaps(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     firsts = (
-        # explode_outer + isNotNull: see dedup.exploded_shingles (guard device)
+        # explode_outer + isNotNull: see operators/text.py (explode guard)
         docs.select("doc_id", F.explode_outer(tokens("text")).alias("tok"))
         .filter(F.col("tok").isNotNull())
         .groupBy("tok")
@@ -10011,7 +8991,7 @@ def source_unigram_jsd(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     st = (
-        # explode_outer + isNotNull: see dedup.exploded_shingles (guard device)
+        # explode_outer + isNotNull: see operators/text.py (explode guard)
         docs.select("source", F.explode_outer(tokens("text")).alias("tok"))
         .filter(F.col("tok").isNotNull())
         .groupBy("source", "tok")

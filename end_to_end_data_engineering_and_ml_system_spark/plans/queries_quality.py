@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.catalog import load_table
-from .queries import _SQL_SHINGLES, _SQL_VERIFIED_PAIRS
 from .registry import register
 
 
@@ -528,60 +527,6 @@ def events_t_closeness_audit(spark, sf_dir):
 
 
 @register(
-    "cross_source_duplicate_matrix",
-    oracle=f"""
-        WITH RECURSIVE t AS ({_SQL_SHINGLES}),
-        {_SQL_VERIFIED_PAIRS}
-        SELECT
-            least(d1.source, d2.source) AS source_a,
-            greatest(d1.source, d2.source) AS source_b,
-            CAST(COUNT(*) AS BIGINT) AS near_dup_pairs
-        FROM vp
-        JOIN documents d1 ON vp.id1 = d1.doc_id
-        JOIN documents d2 ON vp.id2 = d2.doc_id
-        GROUP BY 1, 2
-    """,
-    description=(
-        "cross-source duplication matrix: verified near-dup pairs per "
-        "source pair (mirror/scrape detection; diagonal = within-source "
-        "duplication load)"
-    ),
-    tags=("llm-data", "dedup", "aggregate", "deterministic"),
-)
-def cross_source_duplicate_matrix(spark, sf_dir):
-    """Mirror detection: many near-dup pairs between two sources means one
-    scrapes the other — drop the copy, not random halves of both; the
-    diagonal rows expose each source's internal duplication load. Rides
-    the standard LSH-verified pair pipeline (banding projection,
-    candidates ~linear, array_intersect verify), then joins only the pair
-    ids against the doc→source lookup and rolls up to the |sources|² grain
-    — no text moves after the verify."""
-    from ..operators.dedup import lsh_verified_near_dups
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = lsh_verified_near_dups(docs, "doc_id", "text", threshold=0.6)
-    s1 = docs.select(
-        F.col("doc_id").alias("id1"), F.col("source").alias("src1")
-    )
-    s2 = docs.select(
-        F.col("doc_id").alias("id2"), F.col("source").alias("src2")
-    )
-    # s1/s2 are the CORPUS-sized doc->source projections: forcing them
-    # into broadcasts ships the whole corpus's metadata to every executor
-    # (hard 8 GB kill at web scale) — AQE broadcasts the actually-small
-    # side (usually the verified-pair list) instead
-    return (
-        pairs.join(s1, "id1")
-        .join(s2, "id2")
-        .groupBy(
-            F.least("src1", "src2").alias("source_a"),
-            F.greatest("src1", "src2").alias("source_b"),
-        )
-        .agg(F.count("*").cast("bigint").alias("near_dup_pairs"))
-    )
-
-
-@register(
     "value_trimmed_mean_by_type",
     oracle="""
         WITH c AS (
@@ -822,55 +767,6 @@ def hourly_seasonal_naive_mase(spark, sf_dir):
 
 
 @register(
-    "near_dup_triangle_census",
-    oracle=f"""
-        WITH RECURSIVE t AS ({_SQL_SHINGLES}),
-        {_SQL_VERIFIED_PAIRS}
-        SELECT
-            CAST((SELECT COUNT(*) FROM vp) AS BIGINT) AS n_edges,
-            CAST(COUNT(*) AS BIGINT) AS n_triangles
-        FROM vp ab
-        JOIN vp bc ON ab.id2 = bc.id1
-        JOIN vp ac ON ac.id1 = ab.id1 AND ac.id2 = bc.id2
-    """,
-    description=(
-        "triangle census of the verified near-dup graph: cliquish replica "
-        "groups vs chain-like gradual drift (second graph primitive after "
-        "connected components)"
-    ),
-    tags=("dedup", "graph", "aggregate", "deterministic"),
-)
-def near_dup_triangle_census(spark, sf_dir):
-    """Whether near-dups form CLIQUES (replica floods — safe to keep one
-    canonical doc) or CHAINS (gradual drift — transitive clustering may
-    over-merge) is the triangle density question. Edges are ordered
-    (id1<id2), so each triangle is counted exactly once by the
-    ab⋈bc⋈ac join; at corpus scale the standard degree-ordered orientation
-    keeps the join linear in edges (near-dup graphs are sparse — the
-    candidates are ~linear by construction)."""
-    from ..operators.dedup import lsh_verified_near_dups
-
-    docs = load_table(spark, sf_dir, "documents")
-    vp = lsh_verified_near_dups(docs, "doc_id", "text", threshold=0.6)
-    n_edges = vp.count()
-    ab = vp.alias("ab")
-    bc = vp.alias("bc")
-    ac = vp.alias("ac")
-    tri = (
-        ab.join(bc, F.col("ab.id2") == F.col("bc.id1"))
-        .join(
-            ac,
-            (F.col("ac.id1") == F.col("ab.id1"))
-            & (F.col("ac.id2") == F.col("bc.id2")),
-        )
-        .count()
-    )
-    return spark.createDataFrame(
-        [(n_edges, tri)], "n_edges long, n_triangles long"
-    )
-
-
-@register(
     "term_posting_stats",
     oracle="""
         -- inverted-index build, summarized: per-term document frequency,
@@ -918,7 +814,7 @@ def term_posting_stats(spark, sf_dir):
     from ..operators.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    # explode_outer + isNotNull: see dedup.exploded_shingles (guard device)
+    # explode_outer + isNotNull: see operators/text.py (explode guard)
     tok = docs.select(
         "doc_id", F.explode_outer(tokens("text")).alias("term")
     ).filter(F.col("term").isNotNull())
@@ -1831,7 +1727,7 @@ def token_coverage_curve(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     freq = (
-        # explode_outer + isNotNull: see dedup.exploded_shingles (guard device)
+        # explode_outer + isNotNull: see operators/text.py (explode guard)
         docs.select(F.explode_outer(tokens("text")).alias("tok"))
         .filter(F.col("tok").isNotNull())
         .groupBy("tok")

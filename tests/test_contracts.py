@@ -178,6 +178,27 @@ def test_scratch_headroom_sees_env_local_dirs(monkeypatch):
     assert S.scratch_headroom_ok(_FakeSession()) is True
 
 
+def test_scratch_dir_conf_overrides_tempfile(spark):
+    """spark.e2e.scratchDir redirects every materialization/staging/
+    checkpoint path resolver away from driver-local tempfile."""
+    from end_to_end_data_engineering_and_ml_system_spark.scratch import (
+        SCRATCH_DIR_CONF,
+        scratch_root,
+        scratch_unique,
+    )
+
+    assert scratch_root(spark, "x", local_default="/dflt") == "/dflt"
+    spark.conf.set(SCRATCH_DIR_CONF, "/shared/scratch/")
+    try:
+        assert scratch_root(spark, "x", local_default="/dflt") == "/shared/scratch/x"
+        u = scratch_unique(spark, "job")
+        assert u.startswith("/shared/scratch/job_") and len(u) > len(
+            "/shared/scratch/job_"
+        )
+    finally:
+        spark.conf.unset(SCRATCH_DIR_CONF)
+
+
 DEBUG_CONF = "spark.python.sql.dataFrameDebugging.enabled"
 
 

@@ -39,10 +39,8 @@ SAMPLE = [
     "user_rate_limit_violations", # interval RANGE frame (rule 4)
     "event_series_correlation_matrix",  # DECIMAL(38,0) stats + sqrt
     "events_t_closeness_audit",   # exact-integer TV numerator
-    "cross_source_duplicate_matrix",  # verified pairs -> source grain
     "value_trimmed_mean_by_type", # UDAF over exact cents
     "hourly_seasonal_naive_mase", # integer error sums over the spine
-    "near_dup_triangle_census",   # ordered-edge triple join
     "tx_table_time_travel_counts",  # committed-manifest reads
     "term_posting_stats",         # posting-grain reduce, tie-broken topk
     "join_cardinality_estimate_vs_actual",  # exact counts + floored est

@@ -292,50 +292,6 @@ def test_banded_range_join_matches_naive_reference(
 
 @given(
     st.lists(
-        st.tuples(st.integers(0, 30), st.integers(0, 30)),
-        min_size=1,
-        max_size=25,
-    )
-)
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_connected_components_match_union_find(spark, edges):
-    """Distributed min-label propagation must agree with a driver-side
-    union-find on arbitrary small graphs (self-loops and duplicates included)."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.graph import (
-        connected_components,
-    )
-
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    # canonical label = min node id in the component
-    expected = {}
-    for node in parent:
-        root = find(node)
-        members = [n for n in parent if find(n) == root]
-        expected[node] = min(members)
-
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r["id"]: r["comp"] for r in connected_components(df).collect()}
-    assert got == expected
-
-
-@given(
-    st.lists(
         st.one_of(
             st.integers(-(2**31), 2**31),
             st.text(
@@ -430,7 +386,7 @@ def _py_shingles(text: str, n: int = 3):
 )
 @SLOW
 def test_contamination_matches_python_reference(spark, corpus, benchmark):
-    from end_to_end_data_engineering_and_ml_system_spark.operators.dedup import contamination_check
+    from end_to_end_data_engineering_and_ml_system_spark.operators.text import contamination_check
 
     corp = spark.createDataFrame(list(enumerate(corpus)), ["doc_id", "text"])
     bench = spark.createDataFrame(
@@ -506,53 +462,6 @@ def test_asof_tolerance_matches_naive_reference(
                 best = (rt, v)
         match = best[1] if best is not None and best[0] >= t - tol else None
         want.add((k, ts(t), match))
-    assert got == want
-
-
-_word_st = st.text(alphabet="ab ", min_size=0, max_size=30)
-
-
-@given(st.lists(st.tuples(_word_st, st.sampled_from(["en", "fr"])),
-                min_size=2, max_size=12))
-@SLOW
-def test_edit_distance_pairs_match_naive_reference(spark, docs_raw):
-    from end_to_end_data_engineering_and_ml_system_spark.operators.dedup import (
-        edit_distance_pairs,
-    )
-
-    docs = [(i, text, lang) for i, (text, lang) in enumerate(docs_raw)]
-    df = spark.createDataFrame(docs, "doc_id long, text string, lang string")
-    got = {
-        (r.doc_a, r.doc_b): r.prefix_edit_distance
-        for r in edit_distance_pairs(
-            df, "doc_id", "text", prefix_len=10, block_len=2,
-            length_band=5, max_dist=4, extra_block_cols=("lang",),
-        ).collect()
-    }
-
-    def lev(a, b):
-        prev = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            cur = [i]
-            for j, cb in enumerate(b, 1):
-                cur.append(min(prev[j] + 1, cur[-1] + 1,
-                               prev[j - 1] + (ca != cb)))
-            prev = cur
-        return prev[-1]
-
-    want = {}
-    for i, (ida, ta, la) in enumerate(docs):
-        for idb, tb, lb in docs[i + 1:]:
-            # operator contract: rows with empty normalization are excluded
-            # (min_norm_len=1 — the all-non-ASCII guard; docs here are
-            # ASCII-only so normalization is identity)
-            if len(ta) == 0 or len(tb) == 0:
-                continue
-            if la != lb or ta[:2] != tb[:2] or abs(len(ta) - len(tb)) > 5:
-                continue
-            d = lev(ta[:10], tb[:10])
-            if d <= 4:
-                want[(min(ida, idb), max(ida, idb))] = d
     assert got == want
 
 

@@ -558,8 +558,7 @@ def test_dead_thread_rank_handles_counts_forgotten_releases(spark):
 
 def test_ranked_topk_strict_null_policy(spark):
     """on_null='strict' raises (with the dropped-row count) instead of
-    silently shrinking the result set; the NULL-free case is unaffected;
-    both dispatch paths enforce it."""
+    silently shrinking the result set; the NULL-free case is unaffected."""
     import pytest as _pytest
 
     from end_to_end_data_engineering_and_ml_system_spark.operators import (
@@ -571,8 +570,6 @@ def test_ranked_topk_strict_null_policy(spark):
     spec = [("score", "desc"), ("id", "asc")]
     with _pytest.raises(ValueError, match="2 rows hold NULL"):
         R.bounded_ranked_topk(df, spec, 10, on_null="strict")
-    with _pytest.raises(ValueError, match="rows hold NULL"):
-        R.ranked_topk(df, spec, R.BOUNDED_TOPK_MAX_K + 5, on_null="strict")
     with _pytest.raises(ValueError, match="on_null"):
         R.bounded_ranked_topk(df, spec, 10, on_null="typo")
     clean = df.filter(F.col("score").isNotNull())
@@ -584,10 +581,9 @@ def test_ranked_topk_strict_null_policy(spark):
     assert got == [(1, 1), (3, 3), (5, 2)]
 
 
-def test_ranked_topk_paths_agree(spark, monkeypatch):
+def test_ranked_topk_paths_agree(spark):
     # the large-k path (global_row_number + filter) must produce the same
-    # (row, rank) set as the bounded O(k^2) path — forced by shrinking the
-    # ceiling so k=20 dispatches to the global-rank branch
+    # (row, rank) set as the bounded O(k^2) path
     from end_to_end_data_engineering_and_ml_system_spark.operators import (
         relational as R,
     )
@@ -599,11 +595,15 @@ def test_ranked_topk_paths_agree(spark, monkeypatch):
     )
     spec = [("v", "asc"), ("id", "asc")]
     small = sorted(
-        R.ranked_topk(df, spec, 20, out="rn").select("id", "v", "rn").collect()
+        R.bounded_ranked_topk(df, spec, 20, out="rn")
+        .select("id", "v", "rn")
+        .collect()
     )
-    monkeypatch.setattr(R, "BOUNDED_TOPK_MAX_K", 10)
     large = sorted(
-        R.ranked_topk(df, spec, 20, out="rn").select("id", "v", "rn").collect()
+        R.global_row_number(df, spec, out="rn")
+        .filter(F.col("rn") <= 20)
+        .select("id", "v", "rn")
+        .collect()
     )
     assert small == large and len(small) == 20
 

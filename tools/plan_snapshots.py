@@ -29,9 +29,6 @@ SKIP_TAGS = {"streaming"}
 EXTRA_SNAPSHOTS = (
     "user_rate_limit_violations",
     "event_series_correlation_matrix",
-    # round 6: the materialize-once dedup pipeline — the snapshot shows the
-    # derived consumers are plain rollups over one committed parquet read
-    "corpus_dedup_snapshot_pipeline",
     # round 8: the distributed-rank shapes — equi-depth NTILE via
     # range-repartition + prefix offsets (no single-partition Exchange)
     # and vocabulary-coverage global rank
