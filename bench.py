@@ -61,12 +61,12 @@ def main() -> None:
     )
 
     # TWO warm sweeps: pass 1 pays codegen compilation, but C2 JIT keeps
-    # deepening well past it (measured: 9.5 / 2.97 / 2.85 / 2.76 / 2.60s on
-    # the same LSH query — NOTES round 9). A second sweep moves the timed
-    # passes onto the flat part of that curve, shrinking the cross-session
-    # band that made r5-r8 comparisons need per-query ratios.
-    warm_sweeps = max(1, int(os.environ.get("SPARK_GRAFT_WARM_SWEEPS", "2")))
-    for _ in range(warm_sweeps):
+    # deepening well past it (measured over five passes of one query:
+    # 9.5 / 2.97 / 2.85 / 2.76 / 2.60s — NOTES round 9). A second sweep
+    # moves the timed passes onto the flat part of that curve, shrinking
+    # the cross-session band that made r5-r8 comparisons need per-query
+    # ratios.
+    for _ in range(2):
         for name, q in qs.items():
             try:
                 q.build(spark, sf_dir).count()
@@ -80,7 +80,7 @@ def main() -> None:
         scratch_headroom_ok,
     )
 
-    passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")))
+    passes = 3
     scratch_low_water = False
     for name, q in qs.items():
         walls, n = [], 0

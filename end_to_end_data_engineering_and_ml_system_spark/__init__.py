@@ -1,8 +1,8 @@
 """PySpark-native analytics engine with the query and data-processing
 capabilities of the reference system (a network-anomaly-detection pipeline:
 batch ETL, streaming scoring, windowed dashboard analytics, ML scoring), plus
-the large-scale training-data operators (text analysis, multimodal columns,
-versioned tables) required at 100 TB scale.
+the large-scale training-data operators (text analysis, versioned tables)
+required at 100 TB scale.
 
 Everything here is built on public Apache Spark APIs only: DataFrame/SQL for
 batch, Structured Streaming for streams, MLlib for feature/ML pipelines, and

@@ -347,36 +347,6 @@ def global_running_sum(
 BOUNDED_TOPK_MAX_K = 10_000
 
 
-def _non_null_keys(order_specs: OrderSpec) -> Column:
-    cond = F.lit(True)
-    for name, _ in order_specs:
-        cond = cond & F.col(name).isNotNull()
-    return cond
-
-
-def _enforce_null_policy(
-    df: DataFrame, order_specs: OrderSpec, on_null: str, caller: str
-) -> DataFrame:
-    """Shared NULL-order-key policy for the rank family. ``"drop"``
-    silently excludes NULL-key rows (the documented default); ``"strict"``
-    spends one extra count job to RAISE when any exist, so a data-quality
-    problem upstream of a ranker can't shrink the result set unnoticed.
-    Returns the NULL-free frame."""
-    if on_null not in ("drop", "strict"):
-        raise ValueError(f"{caller}: on_null must be 'drop' or 'strict'")
-    if on_null == "strict":
-        n_bad = df.filter(~_non_null_keys(order_specs)).count()
-        if n_bad:
-            cols = [name for name, _ in order_specs]
-            raise ValueError(
-                f"{caller}: {n_bad} rows hold NULL in an order column "
-                f"{cols} and would be silently dropped from the ranking "
-                "(on_null='strict'); clean the keys upstream or rank with "
-                "on_null='drop'"
-            )
-    return df.filter(_non_null_keys(order_specs))
-
-
 def bounded_ranked_topk(
     df: DataFrame,
     order_specs: OrderSpec,
@@ -414,8 +384,22 @@ def bounded_ranked_topk(
             "global_row_number for large-k global ranks"
         )
     _check_fresh_cols(df, [out], "bounded_ranked_topk")
-    clean = _enforce_null_policy(df, order_specs, on_null, "bounded_ranked_topk")
-    top = clean.orderBy(*_sort_cols(order_specs)).limit(k)
+    if on_null not in ("drop", "strict"):
+        raise ValueError("bounded_ranked_topk: on_null must be 'drop' or 'strict'")
+    keys_ok = F.lit(True)
+    for name, _ in order_specs:
+        keys_ok = keys_ok & F.col(name).isNotNull()
+    if on_null == "strict":
+        n_bad = df.filter(~keys_ok).count()
+        if n_bad:
+            cols = [name for name, _ in order_specs]
+            raise ValueError(
+                f"bounded_ranked_topk: {n_bad} rows hold NULL in an order "
+                f"column {cols} and would be silently dropped from the "
+                "ranking (on_null='strict'); clean the keys upstream or "
+                "rank with on_null='drop'"
+            )
+    top = df.filter(keys_ok).orderBy(*_sort_cols(order_specs)).limit(k)
     _track_persist(top)
     a, b = top.alias("__rk_a"), top.alias("__rk_b")
     before = F.lit(False)

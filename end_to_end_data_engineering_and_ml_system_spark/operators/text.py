@@ -5,9 +5,9 @@ hashing) — no Python UDFs in the hot path, so whole-stage codegen applies and
 a 100 TB corpus streams through scans without serde hops.
 
 Components: whitespace/regex tokenization, token statistics, quality scoring
-(punctuation / stopword / uppercase ratios), marker-word language ID, and
-content fingerprinting (normalized md5) for exact dedup keys, and the
-benchmark-contamination scan (n-gram overlap with a broadcast benchmark set).
+(punctuation / stopword / uppercase ratios), content fingerprinting
+(normalized md5) for exact dedup keys, PII redaction, chunking, and
+duplicated n-gram windows and spans.
 
 The explode guard (referenced by every ``explode_outer`` + ``isNotNull``
 pair in this repo): a plain ``explode(e)`` makes Catalyst infer a
@@ -25,7 +25,7 @@ for each empty/NULL array, the rows explode dropped.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -45,14 +45,6 @@ def _spread_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         df.select(F.col(id_col), F.col(text_col)), id_col
     )
 
-#: minimal per-language marker (stop)words for the n-gram/marker heuristic
-LANG_MARKERS: dict[str, tuple[str, ...]] = {
-    "en": ("the", "and", "of", "to", "in", "is", "a"),
-    "fr": ("le", "la", "et", "les", "des", "un", "une"),
-    "es": ("el", "la", "y", "los", "de", "un", "una"),
-    "de": ("der", "die", "das", "und", "ein", "eine", "ist"),
-    "zh": ("的", "是", "了", "在", "我", "有", "和"),
-}
 
 STOPWORDS_EN: tuple[str, ...] = (
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
@@ -60,8 +52,7 @@ STOPWORDS_EN: tuple[str, ...] = (
 
 
 def tokens(col: Column | str) -> Column:
-    """Whitespace tokenization with empty-token removal (BPE-ish regex split
-    is a drop-in replacement for subword counting).
+    """Whitespace tokenization with empty-token removal.
 
     Whitespace means ASCII ``\\s`` BY CONTRACT: Java regex (Spark) and RE2
     (the DuckDB oracle) both scope ``\\s`` to ASCII, so unicode spaces
@@ -86,71 +77,6 @@ def ngrams(toks: Column, n: int) -> Column:
         shifted = F.slice(toks, j + 1, F.greatest(F.size(toks) - j, F.lit(0)))
         ng = F.zip_with(ng, shifted, lambda a, b: F.concat_ws(" ", a, b))
     return F.slice(ng, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0)))
-
-
-def repetition_signals(df, id_col: str, text_col: str):
-    """Gopher-style repetition quality signals per document:
-
-    - ``dup_bigram_frac`` / ``dup_trigram_frac`` — fraction of word n-grams
-      that are repeats of an earlier n-gram (1 − distinct/total). Pure array
-      projection: no shuffle, computed in the scan stage.
-    - ``top_bigram_frac`` — share of all bigram occurrences taken by the
-      single most frequent bigram. Needs a real count: explode → per-(doc,
-      bigram) count → per-doc max. Both aggregations partial-combine
-      map-side (within-document duplicates collapse before the shuffle), so
-      the shuffled volume is distinct bigrams, not corpus tokens.
-
-    Boilerplate/templated text scores high on all three; the standard
-    pre-training corpus filter drops documents above ~0.2–0.3. Documents
-    with fewer than 3 tokens are excluded (no trigrams to measure)."""
-    base = (
-        df.select(F.col(id_col), tokens(text_col).alias("__toks"))
-        .filter(F.size("__toks") >= 3)
-        .select(
-            id_col,
-            ngrams(F.col("__toks"), 2).alias("__bi"),
-            ngrams(F.col("__toks"), 3).alias("__tri"),
-        )
-    )
-    arrays = base.select(
-        id_col,
-        "__bi",
-        F.size("__bi").cast("bigint").alias("n_bigrams"),
-        (
-            F.lit(1.0)
-            - F.size(F.array_distinct("__bi")).cast("double") / F.size("__bi")
-        ).alias("dup_bigram_frac"),
-        (
-            F.lit(1.0)
-            - F.size(F.array_distinct("__tri")).cast("double")
-            / F.size("__tri")
-        ).alias("dup_trigram_frac"),
-    )
-    top = (
-        # explode_outer + isNotNull: the explode guard (module docstring) —
-        # a plain explode's inferred guard re-expands the bigram pipeline in a
-        # pushed-down Filter; bigram elements (concat_ws) are never NULL
-        arrays.select(id_col, F.explode_outer("__bi").alias("__b"))
-        .filter(F.col("__b").isNotNull())
-        .groupBy(id_col, "__b")
-        .agg(F.count("*").alias("__n"))
-        .groupBy(id_col)
-        .agg(F.max("__n").alias("top_bigram_n"))
-    )
-    return (
-        arrays.drop("__bi")
-        .join(top, id_col)
-        .select(
-            id_col,
-            "n_bigrams",
-            "top_bigram_n",
-            (F.col("top_bigram_n").cast("double") / F.col("n_bigrams")).alias(
-                "top_bigram_frac"
-            ),
-            "dup_bigram_frac",
-            "dup_trigram_frac",
-        )
-    )
 
 
 def punct_ratio(col: Column | str) -> Column:
@@ -186,37 +112,6 @@ def stopword_ratio(
     return F.when(n > 0, n_stop.cast("double") / n)
 
 
-def lang_scores(
-    col: Column | str, markers: Mapping[str, Sequence[str]] = LANG_MARKERS
-) -> dict[str, Column]:
-    """Marker-word hit count per language."""
-    toks = tokens(col)
-
-    def contains(arr: Column):
-        # closure, not a default arg — PySpark introspects lambda arity
-        return lambda t: F.array_contains(arr, t)
-
-    out: dict[str, Column] = {}
-    for lang, words in markers.items():
-        arr = F.array(*[F.lit(w) for w in words])
-        out[lang] = F.size(F.filter(toks, contains(arr)))
-    return out
-
-
-def predicted_lang(
-    col: Column | str, markers: Mapping[str, Sequence[str]] = LANG_MARKERS
-) -> Column:
-    """Argmax language by marker hits; deterministic tie-break by declaration
-    order; 'und' (undetermined) when nothing matches."""
-    scores = lang_scores(col, markers)
-    best = F.greatest(*scores.values()) if len(scores) > 1 else next(iter(scores.values()))
-    expr = None
-    for lang, s in scores.items():
-        cond = (s == best) & (best > F.lit(0))
-        expr = F.when(cond, F.lit(lang)) if expr is None else expr.when(cond, F.lit(lang))
-    return expr.otherwise(F.lit("und"))
-
-
 def fingerprint(col: Column | str) -> Column:
     """Content fingerprint: md5 of the lowercased, whitespace-collapsed text.
     Stable across engines — the exact-dedup key for P10 at corpus scale."""
@@ -237,51 +132,6 @@ def quality_score(col: Column | str) -> Column:
     up_ok = F.when(uppercase_ratio(col) <= 0.3, F.lit(1.0)).otherwise(F.lit(0.0))
     punct_ok = F.when(punct_ratio(col) <= 0.1, F.lit(1.0)).otherwise(F.lit(0.0))
     return (len_ok + sw_ok + up_ok + punct_ok) / F.lit(4.0)
-
-
-def tf_idf_topk(df, id_col: str, text_col: str, k: int = 3):
-    """Top-k TF-IDF terms per document (§7.8 text analysis), pure built-ins:
-
-    - tf: token count per (doc, term) off one explode;
-    - idf: smooth ``ln((N+1)/(df+1)) + 1`` with df = docs containing the
-      term (the sklearn-style formulation — stated here so the SQL oracle
-      mirrors it exactly);
-    - score = tf · idf, ranked per doc with ties broken by term.
-
-    Scale shape: one explode + two partial-aggregated groupBys + a window
-    over (doc, k) rows. The idf table is VOCABULARY-sized — a web-scale
-    corpus holds 10^8-10^9 distinct terms, so it must NOT carry a forced
-    broadcast hint (an O(vocab) broadcast is a hard 8 GB failure at
-    corpus scale); AQE broadcasts when it actually fits and shuffles the
-    equi-join when it doesn't."""
-    from pyspark.sql import DataFrame, Window
-
-    assert isinstance(df, DataFrame)
-    # explode_outer + isNotNull: the explode guard (module docstring)
-    toked = df.select(
-        F.col(id_col), F.explode_outer(tokens(text_col)).alias("term")
-    ).filter(F.col("term").isNotNull())
-    tf = toked.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    n_docs = df.select(id_col).distinct().count()
-    dfreq = toked.groupBy("term").agg(
-        F.count_distinct(id_col).alias("df_")
-    )
-    idf = dfreq.select(
-        "term",
-        (
-            F.log((F.lit(float(n_docs + 1))) / (F.col("df_") + F.lit(1.0)))
-            + F.lit(1.0)
-        ).alias("idf"),
-    )
-    scored = tf.join(idf, "term").select(
-        id_col, "term", (F.col("tf") * F.col("idf")).alias("tfidf")
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("tfidf").desc(), F.col("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(id_col, "term", "tfidf", "rank")
-    )
 
 
 #: PII patterns restricted to constructs Java regex (Spark) and RE2
@@ -354,138 +204,6 @@ def chunk_documents(
             F.col(text_col), F.col("__i").cast("int") * stride + 1, chunk_chars
         ).alias("chunk_text"),
     )
-
-
-def pack_tokens_into_bins(
-    df,
-    group_col: str,
-    id_col: str,
-    text_col: str,
-    bin_tokens: int = 2048,
-):
-    """Assign documents to ~``bin_tokens``-sized context bins per group —
-    the distributed approximation of sequence packing: a running token
-    total over a deterministic order, floor-divided into bins. One window
-    shuffle per group; exact greedy packing is inherently sequential, this
-    is the standard scalable stand-in (bins can overflow by at most one
-    document).
-
-    Skew note: the window serializes within each group, so a low-cardinality
-    ``group_col`` (e.g. 5 languages over 100 TB) bottlenecks on 5 tasks. At
-    scale pass a sharded group — e.g. ``F.concat(lang, pmod(xxhash64(id),
-    F.lit(256)))`` — bins stay valid because packing never needs to be
-    globally optimal, only locally bounded."""
-    from pyspark.sql import DataFrame, Window
-
-    assert isinstance(df, DataFrame)
-    n_tok = token_count(text_col)
-    w = (
-        Window.partitionBy(group_col)
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    running = F.sum(n_tok).over(w)
-    return df.select(
-        F.col(group_col),
-        F.col(id_col),
-        n_tok.cast("bigint").alias("n_tokens"),
-        F.floor((running - n_tok) / F.lit(bin_tokens)).cast("bigint").alias("bin_id"),
-    )
-
-
-#: GPT-2-style pre-tokenizer shape, restricted to constructs both Java
-#: regex (Spark) and RE2 (DuckDB) support identically: contraction
-#: suffixes, space-prefixed letter runs, digit runs, punctuation runs.
-BPE_TOKEN_PATTERN = r"'s|'t|'re|'ve|'m|'ll|'d| ?[A-Za-z]+| ?[0-9]+| ?[^\sA-Za-z0-9]+"
-
-#: bin-id namespace width per packing group (pack_bins_ffd)
-_FFD_BINS_PER_GROUP = 1_000_000_000_000
-
-
-def bpe_token_count(col: Column | str) -> Column:
-    """Subword-style token count via the BPE-ish pre-tokenizer regex — the
-    training-data-pipeline complement to whitespace ``token_count`` (both
-    declared in the engine's text surface). JVM-side regexp, no UDF."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(c, F.lit(BPE_TOKEN_PATTERN), F.lit(0)))
-
-
-def pack_bins_ffd(
-    df,
-    id_col: str,
-    token_col: str,
-    capacity: int = 2048,
-    num_groups: int = 64,
-):
-    """First-fit-decreasing sequence packing via ``applyInPandas``: assign
-    documents to training-sequence bins of ``capacity`` tokens, wasting less
-    tail space than running-total chunking (``pack_tokens_into_bins``).
-
-    Exact global FFD is inherently sequential, so the distributed shape is
-    GROUP-LOCAL packing: documents hash deterministically into
-    ``num_groups`` packing groups (at corpus scale: thousands of groups,
-    each a few thousand docs — the Arrow batch a worker packs in memory),
-    and FFD runs independently per group. Bin ids are globally unique as
-    (group, local_bin). Deterministic: group = crc32(id) % num_groups,
-    in-group order = (tokens desc, id).
-
-    Oversized documents (> capacity) get a dedicated bin each — flagged
-    ``oversize`` so downstream can truncate or split them.
-
-    Returns (id, tokens, pack_group, bin_id, oversize)."""
-    import pandas as pd
-
-    out_schema = (
-        f"{id_col} bigint, tokens bigint, pack_group int, "
-        "bin_id bigint, oversize boolean"
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["tokens", id_col], ascending=[False, True]
-        ).reset_index(drop=True)
-        bins: list[int] = []  # remaining capacity per local bin
-        assigned = []
-        oversize = []
-        for t in pdf["tokens"]:
-            t = int(t)
-            if t > capacity:
-                bins.append(0)
-                assigned.append(len(bins) - 1)
-                oversize.append(True)
-                continue
-            for b, rem in enumerate(bins):
-                if rem >= t:
-                    bins[b] = rem - t
-                    assigned.append(b)
-                    break
-            else:
-                bins.append(capacity - t)
-                assigned.append(len(bins) - 1)
-            oversize.append(False)
-        grp = int(pdf["pack_group"].iloc[0])
-        # 10^12 local bins per group keeps (group, local_bin) -> bin_id
-        # injective up to ~9.2M groups in int64; the old 10^6 multiplier
-        # silently COLLIDED bin ids once a group packed >1M bins (64
-        # groups over a 10^9-doc corpus average ~16M docs per group)
-        if len(bins) >= _FFD_BINS_PER_GROUP:
-            raise ValueError(
-                f"pack_bins_ffd: group {grp} needs {len(bins)} bins "
-                f"(>= {_FFD_BINS_PER_GROUP}); raise num_groups so "
-                "(group, local_bin) stays injective in the bigint bin_id"
-            )
-        pdf["bin_id"] = [grp * _FFD_BINS_PER_GROUP + b for b in assigned]
-        pdf["oversize"] = oversize
-        return pdf[[id_col, "tokens", "pack_group", "bin_id", "oversize"]]
-
-    staged = df.select(
-        F.col(id_col),
-        F.col(token_col).cast("bigint").alias("tokens"),
-        (F.crc32(F.col(id_col).cast("string")) % num_groups)
-        .cast("int")
-        .alias("pack_group"),
-    )
-    return staged.groupBy("pack_group").applyInPandas(pack, out_schema)
 
 
 def duplicate_ngram_windows(
@@ -582,68 +300,6 @@ def duplicate_ngram_spans(
         )
         .drop("grp")
     )
-
-
-def _exploded_shingles(
-    df: DataFrame, id_col: str, text_col: str, n: int
-) -> DataFrame:
-    """(id, n_sh, shingle) long format over each document's DISTINCT word
-    n-grams; ``n_sh`` is the distinct count. explode_outer + isNotNull: the
-    explode guard (module docstring)."""
-    sh = _spread_text(df, id_col, text_col).select(
-        F.col(id_col), tokens(text_col).alias("__toks")
-    ).select(
-        F.col(id_col), F.array_distinct(ngrams(F.col("__toks"), n)).alias("sh")
-    )
-    return sh.select(
-        id_col,
-        F.size("sh").alias("n_sh"),
-        F.explode_outer("sh").alias("shingle"),
-    ).filter(F.col("shingle").isNotNull())
-
-
-def contamination_check(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.2,
-) -> DataFrame:
-    """Benchmark-contamination scan: for each corpus document, the fraction
-    of its distinct word n-grams that also occur anywhere in a benchmark
-    corpus (the standard train/test-leakage check run before LLM training).
-
-    Returns (id, n_ngrams, shared_ngrams, contamination) for documents at or
-    above ``threshold``.
-
-    Scale shape (100 TB corpus vs MB-scale benchmark): eval suites are tiny,
-    so the benchmark's distinct-shingle set is built once and **broadcast**;
-    the corpus is exploded exactly once and inner-joined against that
-    broadcast set, so only matching shingle rows ever reach the per-document
-    count shuffle. No corpus self-join, no pairwise comparison, and the
-    corpus-side explode is map-side only."""
-    cand = _exploded_shingles(corpus, id_col, text_col, n)
-    bench_sh = (
-        _exploded_shingles(benchmark, id_col, text_col, n)
-        .select("shingle")
-        .distinct()
-    )
-    shared = (
-        cand.join(F.broadcast(bench_sh), "shingle")
-        .groupBy(id_col)
-        .agg(
-            F.min("n_sh").cast("bigint").alias("n_ngrams"),
-            F.count("*").alias("shared_ngrams"),
-        )
-    )
-    contamination = F.col("shared_ngrams").cast("double") / F.col("n_ngrams")
-    return shared.select(
-        id_col,
-        "n_ngrams",
-        "shared_ngrams",
-        contamination.alias("contamination"),
-    ).filter(F.col("contamination") >= threshold)
 
 
 def chunk_documents_udtf(spark):

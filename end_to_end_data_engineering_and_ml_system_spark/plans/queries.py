@@ -1067,63 +1067,6 @@ def doc_quality_scores(spark, sf_dir):
 
 
 @register(
-    "doc_language_id",
-    oracle="""
-        WITH t AS (
-            SELECT
-                lang,
-                list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                            tk -> tk <> '') AS toks
-            FROM documents
-        ), s AS (
-            SELECT
-                lang,
-                len(list_filter(toks, tk -> list_contains(
-                    ['the','and','of','to','in','is','a'], tk))) AS s_en,
-                len(list_filter(toks, tk -> list_contains(
-                    ['le','la','et','les','des','un','une'], tk))) AS s_fr,
-                len(list_filter(toks, tk -> list_contains(
-                    ['el','la','y','los','de','un','una'], tk))) AS s_es,
-                len(list_filter(toks, tk -> list_contains(
-                    ['der','die','das','und','ein','eine','ist'], tk))) AS s_de,
-                len(list_filter(toks, tk -> list_contains(
-                    ['的','是','了','在','我','有','和'], tk))) AS s_zh
-            FROM t
-        )
-        SELECT
-            lang,
-            CASE
-                WHEN s_en = greatest(s_en, s_fr, s_es, s_de, s_zh)
-                     AND greatest(s_en, s_fr, s_es, s_de, s_zh) > 0 THEN 'en'
-                WHEN s_fr = greatest(s_en, s_fr, s_es, s_de, s_zh)
-                     AND greatest(s_en, s_fr, s_es, s_de, s_zh) > 0 THEN 'fr'
-                WHEN s_es = greatest(s_en, s_fr, s_es, s_de, s_zh)
-                     AND greatest(s_en, s_fr, s_es, s_de, s_zh) > 0 THEN 'es'
-                WHEN s_de = greatest(s_en, s_fr, s_es, s_de, s_zh)
-                     AND greatest(s_en, s_fr, s_es, s_de, s_zh) > 0 THEN 'de'
-                WHEN s_zh = greatest(s_en, s_fr, s_es, s_de, s_zh)
-                     AND greatest(s_en, s_fr, s_es, s_de, s_zh) > 0 THEN 'zh'
-                ELSE 'und'
-            END AS pred_lang,
-            COUNT(*) AS n_docs
-        FROM s
-        GROUP BY 1, 2
-    """,
-    description="marker-word language ID (n-gram heuristic), confusion counts vs labeled lang",
-    tags=("text", "langid"),
-)
-def doc_language_id(spark, sf_dir):
-    from ..operators.text import predicted_lang
-
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("lang", predicted_lang("text").alias("pred_lang"))
-        .groupBy("lang", "pred_lang")
-        .agg(F.count("*").alias("n_docs"))
-    )
-
-
-@register(
     "doc_fingerprints",
     oracle="""
         SELECT
@@ -1453,57 +1396,8 @@ def stream_dedup_within_watermark(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Multimodal columns + composed ETL. Payload plumbing (binary + metadata
-# struct) is oracle-checked; the decode stub (mapInPandas byte histogram) is
-# rows-only with determinism invariants.
+# Composed ETL.
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "multimodal_payload_stats",
-    oracle="""
-        SELECT
-            doc_id,
-            octet_length(encode(text)) AS n_bytes,
-            md5(text) AS checksum
-        FROM documents
-    """,
-    description="binary payload column + typed metadata struct (multimodal ingest)",
-    tags=("multimodal",),
-)
-def multimodal_payload_stats(spark, sf_dir):
-    from ..operators.multimodal import payload_from_text, with_media_metadata
-
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "payload", payload_from_text("text")
-    )
-    meta = with_media_metadata(docs, "payload")
-    return meta.select(
-        "doc_id",
-        F.col("media_meta.n_bytes").alias("n_bytes"),
-        # checksum of the utf-8 payload == md5 of the text in both engines
-        F.col("media_meta.checksum").alias("checksum"),
-    )
-
-
-@register(
-    "multimodal_feature_extract",
-    oracle=None,
-    description="STUB media decode -> byte-histogram features via mapInPandas (Arrow batches)",
-    tags=("multimodal", "inference"),
-)
-def multimodal_feature_extract(spark, sf_dir):
-    from ..operators.multimodal import decode_media_features, payload_from_text
-
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "payload", payload_from_text("text")
-    )
-    feats = decode_media_features(docs, "doc_id", "payload")
-    # serialize the feature vector: the driver's canonicalizer cannot hash
-    # bare array cells (r1: TypeError unhashable type 'list')
-    return feats.select(
-        "doc_id", "n_bytes", F.to_json("features").alias("features_json")
-    )
 
 
 @register(
@@ -2223,46 +2117,6 @@ def stream_flow_scoring(spark, sf_dir):
 
 
 @register(
-    "doc_tfidf_topk",
-    oracle="""
-        WITH toked AS (
-            SELECT doc_id, unnest(list_filter(
-                regexp_split_to_array(trim(text), '\\s+'), tk -> tk <> ''
-            )) AS term
-            FROM documents
-        ),
-        tf AS (
-            SELECT doc_id, term, COUNT(*) AS tf
-            FROM toked GROUP BY 1, 2
-        ),
-        idf AS (
-            SELECT term,
-                   ln((SELECT COUNT(DISTINCT doc_id) + 1 FROM documents)
-                      / (COUNT(DISTINCT doc_id) + 1.0)) + 1.0 AS idf
-            FROM toked GROUP BY 1
-        ),
-        scored AS (
-            SELECT tf.doc_id, tf.term, tf.tf * idf.idf AS tfidf,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY tf.doc_id
-                       ORDER BY tf.tf * idf.idf DESC, tf.term
-                   ) AS rank
-            FROM tf JOIN idf USING (term)
-        )
-        SELECT doc_id, term, tfidf, rank
-        FROM scored WHERE rank <= 3
-    """,
-    description="top-3 TF-IDF terms per document (smooth idf, tie-broken by term)",
-    tags=("text", "tfidf"),
-)
-def doc_tfidf_topk(spark, sf_dir):
-    from ..operators.text import tf_idf_topk
-
-    docs = load_table(spark, sf_dir, "documents")
-    return tf_idf_topk(docs, "doc_id", "text", k=3)
-
-
-@register(
     "stream_stream_join_counts",
     oracle="""
         WITH p AS (
@@ -2450,34 +2304,6 @@ def lineitem_grouping_sets(spark, sf_dir):
         FROM li_gs
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
     """)
-
-
-@register(
-    "doc_bpe_token_counts",
-    oracle="""
-        SELECT doc_id,
-               len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                               tk -> tk <> '')) AS ws_tokens,
-               len(regexp_extract_all(text,
-                   '''s|''t|''re|''ve|''m|''ll|''d| ?[A-Za-z]+| ?[0-9]+| ?[^\\sA-Za-z0-9]+'
-               )) AS bpe_tokens
-        FROM documents
-    """,
-    description="whitespace + BPE-ish-regex token counts per doc (cross-engine-identical pattern)",
-    tags=("text", "tokens"),
-)
-def doc_bpe_token_counts(spark, sf_dir):
-    """Both token-counting modes the brief declares: whitespace split and
-    the GPT-2-shaped pre-tokenizer regex, restricted to constructs Java
-    regex and RE2 treat identically (verified 0 mismatches on the corpus)."""
-    from ..operators.text import bpe_token_count, token_count
-
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        token_count("text").alias("ws_tokens"),
-        bpe_token_count("text").alias("bpe_tokens"),
-    )
 
 
 @register(
@@ -2671,142 +2497,6 @@ def stratified_sample_counts(spark, sf_dir):
 
 
 @register(
-    "multimodal_frame_sample",
-    oracle="""
-        -- frames are compared as HEX strings: the operator slices the
-        -- BINARY payload by bytes (DuckDB has no blob substring, but
-        -- hex(blob) makes byte k the hex chars [2k+1, 2k+2])
-        WITH f AS (
-            SELECT doc_id, hex(encode(text)) AS hx,
-                   CAST(floor(octet_length(encode(text)) / 64.0) AS BIGINT)
-                       AS n_frames
-            FROM documents
-        ), x AS (
-            SELECT doc_id, hx,
-                   unnest(range(0, CASE WHEN n_frames < 1 THEN 1
-                                        ELSE n_frames END)) AS frame_no
-            FROM f
-        )
-        SELECT doc_id,
-               CAST(frame_no AS BIGINT) AS frame_no,
-               substr(hx, CAST(frame_no * 128 + 1 AS INT), 128) AS frame_hex
-        FROM x
-    """,
-    description="frame-sampling analog for video payloads: one 64-byte binary 'frame' per chunk, JVM substring arithmetic, hex-compared",
-    tags=("multimodal",),
-)
-def multimodal_frame_sample(spark, sf_dir):
-    """Byte-exact frame sampling over the BINARY payload (the old version
-    round-tripped through a UTF-8 string cast — character slicing, garbage
-    on real media bytes). Frames leave as hex so the DuckDB oracle can
-    compare byte-for-byte without blob slicing support."""
-    from ..operators.multimodal import frame_sample, payload_from_text
-
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "payload", payload_from_text("text")
-    )
-    frames = frame_sample(docs, "doc_id", "payload", every_n_bytes=64)
-    return frames.select(
-        "doc_id",
-        F.col("frame_no").cast("bigint").alias("frame_no"),
-        F.hex("frame_bytes").alias("frame_hex"),
-    )
-
-
-@register(
-    "audio_frame_energy",
-    oracle=None,
-    description=(
-        "per-frame PCM RMS energy via Arrow-batched mapInPandas (real "
-        "int16 decode, rows-only: byte-level signal math is not "
-        "SQL-expressible; invariant-tested vs a numpy reference)"
-    ),
-    tags=("multimodal", "audio"),
-)
-def audio_frame_energy(spark, sf_dir):
-    """The audio half of the multimodal contract with REAL signal math:
-    document text bytes stand in for int16 PCM payloads (the fixtures ship
-    no media blobs), decoded and framed inside the executor
-    (operators/multimodal.py::pcm_rms_energy), then reduced to per-doc
-    energy stats so only fixed-width features leave the operator."""
-    from ..operators.multimodal import payload_from_text, pcm_rms_energy
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", payload_from_text("text").alias("payload")
-    )
-    frames = pcm_rms_energy(docs, "doc_id", "payload", frame_samples=64)
-    return frames.groupBy("doc_id").agg(
-        F.count("*").alias("n_frames"),
-        F.sum("n_samples").alias("n_samples"),
-        F.max("rms").alias("max_rms"),
-    )
-
-
-@register(
-    "audio_frame_energy_portable",
-    oracle="""
-        WITH b AS (
-            SELECT doc_id, i,
-                   ascii(substr(text, CAST(i + 1 AS INT), 1)) AS byte
-            FROM documents,
-                 UNNEST(range(len(text) - (len(text) % 2))) AS t(i)
-        ),
-        samples AS (
-            SELECT doc_id, i // 2 AS si,
-                   SUM(CASE WHEN i % 2 = 0 THEN byte
-                            ELSE 256 * byte END) AS v_raw
-            FROM b GROUP BY 1, 2
-        ),
-        sv AS (
-            SELECT doc_id, si,
-                   CASE WHEN v_raw >= 32768 THEN v_raw - 65536
-                        ELSE v_raw END AS v
-            FROM samples
-        ),
-        frames AS (
-            SELECT doc_id, si // 64 AS frame_no,
-                   COUNT(*) AS n_samples, SUM(v * v) AS sumsq
-            FROM sv GROUP BY 1, 2
-        )
-        SELECT doc_id,
-               CAST(COUNT(*) AS BIGINT) AS n_frames,
-               CAST(SUM(n_samples) AS BIGINT) AS n_samples,
-               CAST(MAX(sumsq) AS BIGINT) AS max_frame_energy,
-               CAST(SUM(sumsq) AS BIGINT) AS total_energy
-        FROM frames GROUP BY 1
-    """,
-    description=(
-        "per-doc int16 PCM frame energy, oracle-checked: the Arrow-batched "
-        "byte decode reproduced integer-for-integer by SQL byte arithmetic "
-        "— the portable sibling of rows-only audio_frame_energy"
-    ),
-    tags=("multimodal", "audio", "deterministic"),
-)
-def audio_frame_energy_portable(spark, sf_dir):
-    """Proves the REAL multimodal decode path (binary column →
-    ``mapInPandas`` → ``np.frombuffer`` little-endian int16 → framing) at
-    hash level: per-frame energy as an exact int64 sum of squares
-    (operators/multimodal.py::pcm_frame_energy), which DuckDB reconstructs
-    from first principles — character codes → byte pairs → signed int16 →
-    64-sample frames. The corpus is ASCII (UTF-8 byte == code point); the
-    trailing odd byte drop and short-tail-frame semantics match the decode
-    contract exactly. Any batch-boundary, alignment, or endianness bug in
-    the Arrow path lands as a hash mismatch."""
-    from ..operators.multimodal import payload_from_text, pcm_frame_energy
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", payload_from_text("text").alias("payload")
-    )
-    frames = pcm_frame_energy(docs, "doc_id", "payload", frame_samples=64)
-    return frames.groupBy("doc_id").agg(
-        F.count("*").alias("n_frames"),
-        F.sum("n_samples").alias("n_samples"),
-        F.max("sumsq").alias("max_frame_energy"),
-        F.sum("sumsq").alias("total_energy"),
-    )
-
-
-@register(
     "doc_pii_redaction",
     oracle=r"""
         WITH synth AS (
@@ -2921,31 +2611,6 @@ def doc_chunking(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     return chunk_documents(docs, "doc_id", "text", chunk_chars=512, overlap=64)
 
-
-@register(
-    "doc_token_packing",
-    oracle=f"""
-        WITH t AS (
-            SELECT doc_id, lang,
-                   len({_SQL_TOKENS}) AS n_tokens
-            FROM documents
-        )
-        SELECT lang, doc_id,
-               CAST(n_tokens AS BIGINT) AS n_tokens,
-               CAST(floor(
-                   (SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                        ROWS UNBOUNDED PRECEDING) - n_tokens) / 2048.0
-               ) AS BIGINT) AS bin_id
-        FROM t
-    """,
-    description="sequence packing approximation: running token totals per lang into ~2048-token bins",
-    tags=("text", "packing"),
-)
-def doc_token_packing(spark, sf_dir):
-    from ..operators.text import pack_tokens_into_bins
-
-    docs = load_table(spark, sf_dir, "documents")
-    return pack_tokens_into_bins(docs, "lang", "doc_id", "text", bin_tokens=2048)
 
 # ---------------------------------------------------------------------------
 # Changelog semantics (CDC analogs on the events table): latest-state
@@ -3086,43 +2751,6 @@ _SQL_HASH_U = (
     "CAST(concat('0x', substr(md5(CAST({key} AS VARCHAR)), 1, 8)) AS BIGINT)"
     " / 4294967296.0"
 )
-
-
-@register(
-    "corpus_weighted_mix_counts",
-    oracle=f"""
-        WITH u AS (
-            SELECT source, {_SQL_HASH_U.format(key="doc_id")} AS u
-            FROM documents
-        )
-        SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
-        FROM u
-        WHERE u < CASE source
-            WHEN 'src0' THEN 1.0
-            WHEN 'src1' THEN 0.5
-            WHEN 'src2' THEN 0.25
-            WHEN 'src3' THEN 0.0
-            ELSE 0.6 END
-        GROUP BY 1
-    """,
-    description=(
-        "dataset-mixture sampling: per-source weights, deterministic "
-        "md5-keyed membership (reproducible across engines)"
-    ),
-    tags=("sampling", "corpus", "deterministic"),
-)
-def corpus_weighted_mix_counts(spark, sf_dir):
-    from ..operators.relational import weighted_corpus_mix
-
-    docs = load_table(spark, sf_dir, "documents")
-    mixed = weighted_corpus_mix(
-        docs,
-        "source",
-        "doc_id",
-        {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.0},
-        default_weight=0.6,
-    )
-    return mixed.groupBy("source").agg(F.count("*").alias("n_docs"))
 
 
 @register(
@@ -4534,61 +4162,6 @@ def events_table_profile(spark, sf_dir):
 
 
 @register(
-    "multimodal_feature_histogram",
-    oracle="""
-        WITH hx AS (
-            SELECT doc_id, hex(encode(text)) AS h,
-                   octet_length(encode(text)) AS n_bytes
-            FROM documents
-        ),
-        byte_bins AS (
-            SELECT doc_id,
-                   CAST(concat('0x', substr(h, CAST(i * 2 + 1 AS INT), 2))
-                        AS INT) // 16 AS bin
-            FROM hx, UNNEST(range(n_bytes)) AS t(i)
-        ),
-        counts AS (
-            SELECT doc_id, bin, COUNT(*) AS c
-            FROM byte_bins
-            GROUP BY 1, 2
-        )
-        SELECT hx.doc_id,
-               CAST(hx.n_bytes AS BIGINT) AS n_bytes,
-               CAST(b.bin AS BIGINT) AS bin,
-               CASE WHEN hx.n_bytes = 0 THEN 0.0
-                    ELSE COALESCE(c.c, 0) / CAST(hx.n_bytes AS DOUBLE)
-               END AS frac
-        FROM hx
-        CROSS JOIN (SELECT unnest(range(16)) AS bin) b
-        LEFT JOIN counts c ON c.doc_id = hx.doc_id AND c.bin = b.bin
-    """,
-    description=(
-        "mapInPandas media decode (deterministic byte-histogram fake), "
-        "unpacked long so the Arrow path is ORACLE-checked value-for-value"
-    ),
-    tags=("multimodal", "inference"),
-)
-def multimodal_feature_histogram(spark, sf_dir):
-    """Same mapInPandas decode as multimodal_feature_extract
-    (operators/multimodal.py:45), but posexploded to (doc_id, n_bytes, bin,
-    frac) — proving the Python/Arrow batch path computes exactly what the
-    declarative oracle says, not just 'some rows'."""
-    from ..operators.multimodal import decode_media_features, payload_from_text
-
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "payload", payload_from_text("text")
-    )
-    feats = decode_media_features(docs, "doc_id", "payload")
-    return feats.select(
-        "doc_id",
-        "n_bytes",
-        F.posexplode("features").alias("bin", "frac"),
-    ).select(
-        "doc_id", "n_bytes", F.col("bin").cast("bigint").alias("bin"), "frac"
-    )
-
-
-@register(
     "feature_correlations",
     oracle="""
         WITH m AS (
@@ -5200,51 +4773,6 @@ def idle_rich_customers(spark, sf_dir):
 
 
 @register(
-    "benchmark_contamination",
-    oracle="""
-        -- Train/test leakage scan: fraction of each candidate document's
-        -- distinct 3-gram shingles that occur anywhere in the benchmark
-        -- (source = 'src0') corpus.
-        WITH t AS (
-            SELECT doc_id, source,
-                   list_distinct(list_transform(range(1, len(toks)-1),
-                       i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))) AS sh
-            FROM (SELECT doc_id, source,
-                         list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                                     tk -> tk <> '') AS toks
-                  FROM documents)
-        ),
-        b AS (SELECT DISTINCT unnest(sh) AS shingle FROM t
-              WHERE source = 'src0'),
-        c AS (SELECT doc_id, len(sh) AS n_sh, unnest(sh) AS shingle FROM t
-              WHERE source <> 'src0')
-        SELECT c.doc_id,
-               CAST(MIN(c.n_sh) AS BIGINT) AS n_ngrams,
-               CAST(COUNT(*) AS BIGINT) AS shared_ngrams,
-               CAST(COUNT(*) AS DOUBLE) / MIN(c.n_sh) AS contamination
-        FROM c JOIN b USING (shingle)
-        GROUP BY c.doc_id
-        HAVING CAST(COUNT(*) AS DOUBLE) / MIN(c.n_sh) >= 0.2
-    """,
-    bench=True,
-    description="benchmark-contamination scan: n-gram overlap vs a broadcast benchmark set",
-    tags=("dedup", "llm-data"),
-)
-def benchmark_contamination(spark, sf_dir):
-    from ..operators.text import contamination_check
-
-    docs = load_table(spark, sf_dir, "documents")
-    return contamination_check(
-        docs.filter(F.col("source") != "src0"),
-        docs.filter(F.col("source") == "src0"),
-        "doc_id",
-        "text",
-        n=3,
-        threshold=0.2,
-    )
-
-
-@register(
     "value_outliers_iqr",
     oracle="""
         -- Per-type Tukey-fence outlier counts. quantile_cont and Spark's
@@ -5289,50 +4817,6 @@ def value_outliers_iqr(spark, sf_dir):
         F.count("*").alias("n_events"),
         F.sum(F.when(is_out, 1).otherwise(0)).alias("n_outliers"),
     ).select("event_type", "n_events", "n_outliers", "q1", "q3")
-
-
-@register(
-    "doc_repetition_signals",
-    oracle="""
-        -- Gopher-style repetition filters: duplicate n-gram fractions are
-        -- pure list math; the top-bigram share needs the unnest + count.
-        WITH t AS (
-            SELECT doc_id, toks FROM (
-                SELECT doc_id,
-                       list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                                   tk -> tk <> '') AS toks
-                FROM documents)
-            WHERE len(toks) >= 3
-        ),
-        arr AS (
-            SELECT doc_id,
-                   list_transform(range(1, len(toks)),
-                       i -> concat_ws(' ', toks[i], toks[i+1])) AS bi,
-                   list_transform(range(1, len(toks)-1),
-                       i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])) AS tri
-            FROM t
-        ),
-        e AS (SELECT doc_id, unnest(bi) AS b FROM arr),
-        c AS (SELECT doc_id, b, COUNT(*) AS n FROM e GROUP BY 1, 2),
-        m AS (SELECT doc_id, MAX(n) AS top_bigram_n FROM c GROUP BY 1)
-        SELECT a.doc_id,
-               CAST(len(a.bi) AS BIGINT) AS n_bigrams,
-               CAST(m.top_bigram_n AS BIGINT) AS top_bigram_n,
-               CAST(m.top_bigram_n AS DOUBLE) / len(a.bi) AS top_bigram_frac,
-               1.0 - CAST(len(list_distinct(a.bi)) AS DOUBLE) / len(a.bi)
-                   AS dup_bigram_frac,
-               1.0 - CAST(len(list_distinct(a.tri)) AS DOUBLE) / len(a.tri)
-                   AS dup_trigram_frac
-        FROM arr a JOIN m USING (doc_id)
-    """,
-    description="Gopher-style repetition quality signals (dup n-gram fractions, top-bigram share)",
-    tags=("quality", "llm-data"),
-)
-def doc_repetition_signals(spark, sf_dir):
-    from ..operators.text import repetition_signals
-
-    docs = load_table(spark, sf_dir, "documents")
-    return repetition_signals(docs, "doc_id", "text")
 
 
 @register(
@@ -6036,43 +5520,6 @@ def distinct_users_hll_rollup_portable(spark, sf_dir):
 
 
 @register(
-    "doc_pack_bins_ffd",
-    oracle=None,  # FFD is an iterative greedy (not SQL-expressible); the
-    # invariant tests pin: every doc packed once, no bin over capacity,
-    # fewer bins than docs, bit-identical across runs
-    description="first-fit-decreasing sequence packing via applyInPandas (group-local, deterministic)",
-    tags=("llm-data", "packing", "pandas-udf"),
-)
-def doc_pack_bins_ffd(spark, sf_dir):
-    """Summary view of the FFD packer: per packing-group bin counts and
-    fill factor (the per-doc assignment is the operator's real output;
-    aggregating here keeps the driver row canonicalizable).
-
-    rows-only by nature (first-fit-decreasing is an iterative greedy, not
-    SQL-expressible), but deterministic — bit-identical across runs
-    (test_ffd_packing_deterministic) — and the running-total packing
-    approximation `doc_token_packing` is the oracle-checked sibling: same
-    semantics class, FFD provably uses ≤ its bin count
-    (test_ffd_packing_invariants)."""
-    from ..operators.text import pack_bins_ffd, token_count
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", token_count("text").alias("n_tokens")
-    )
-    packed = pack_bins_ffd(docs, "doc_id", "n_tokens", capacity=200, num_groups=8)
-    return (
-        packed.groupBy("pack_group")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.countDistinct("bin_id").alias("n_bins"),
-            F.sum("tokens").alias("total_tokens"),
-            F.sum(F.when(F.col("oversize"), 1).otherwise(0)).alias("n_oversize"),
-        )
-        .orderBy("pack_group")
-    )
-
-
-@register(
     "value_quantiles_kll_rollup",
     oracle=None,  # DataSketches KLL quantile estimates are engine-specific;
     # the exact sibling value_percentiles_by_type carries the oracle row and
@@ -6648,54 +6095,6 @@ def corpus_temperature_mix(spark, sf_dir):
         (p / tot).alias("weight"),
         (F.lit(1e4) * p / tot).alias("expected_docs"),
         (F.lit(1e4) * p / tot / F.col("n_docs")).alias("oversample_factor"),
-    )
-
-
-@register(
-    "training_shuffle_shards",
-    oracle="""
-        WITH h AS (
-            SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS hx
-            FROM documents
-        )
-        SELECT doc_id,
-               CAST(CAST(concat('0x', substr(hx, 1, 8)) AS BIGINT) % 8
-                    AS BIGINT) AS shard,
-               CAST(ROW_NUMBER() OVER (
-                   PARTITION BY
-                       CAST(concat('0x', substr(hx, 1, 8)) AS BIGINT) % 8
-                   ORDER BY hx, doc_id) AS BIGINT) AS position
-        FROM h
-    """,
-    description=(
-        "deterministic global training shuffle: md5-keyed shard assignment "
-        "+ intra-shard position, reproducible across engines and re-runs"
-    ),
-    tags=("sampling", "deterministic", "corpus"),
-)
-def training_shuffle_shards(spark, sf_dir):
-    """Epoch-shuffle for training-data writing WITHOUT a global sort: shard
-    membership is a pure projection (md5 prefix mod n_shards), and ordering
-    is only ever per-shard — one hash-partitioned exchange + local sort,
-    the shape that scales to any corpus because no single machine ever sees
-    a total order. Same hash idiom as ``relational.hash_uniform``, so the
-    shuffle order is stable across engines, partition counts, and re-runs
-    (unlike ``orderBy(rand(seed))``)."""
-    from pyspark.sql import Window
-
-    docs = load_table(spark, sf_dir, "documents")
-    hx = F.md5(F.col("doc_id").cast("string"))
-    with_h = docs.select("doc_id", hx.alias("hx")).withColumn(
-        "shard",
-        F.pmod(
-            F.conv(F.substring("hx", 1, 8), 16, 10).cast("bigint"), F.lit(8)
-        ).cast("bigint"),
-    )
-    w = Window.partitionBy("shard").orderBy("hx", "doc_id")
-    return with_h.select(
-        "doc_id",
-        "shard",
-        F.row_number().over(w).cast("bigint").alias("position"),
     )
 
 
@@ -8376,105 +7775,6 @@ def monthly_revenue_naive_forecast(spark, sf_dir):
 
 
 @register(
-    "doc_label_noise_audit",
-    oracle="""
-        WITH t AS (
-            SELECT doc_id, lang, text,
-                   list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                               tk -> tk <> '') AS toks
-            FROM documents
-        ), s AS (
-            SELECT doc_id, lang, length(text) AS n_chars,
-                   len(list_filter(toks, tk -> list_contains(
-                       ['the','and','of','to','in','is','a'], tk))) AS s_en,
-                   len(list_filter(toks, tk -> list_contains(
-                       ['le','la','et','les','des','un','une'], tk))) AS s_fr,
-                   len(list_filter(toks, tk -> list_contains(
-                       ['el','la','y','los','de','un','una'], tk))) AS s_es,
-                   len(list_filter(toks, tk -> list_contains(
-                       ['der','die','das','und','ein','eine','ist'], tk)))
-                       AS s_de,
-                   len(list_filter(toks, tk -> list_contains(
-                       ['的','是','了','在','我','有','和'], tk))) AS s_zh
-            FROM t
-        ), p AS (
-            SELECT doc_id, lang, n_chars,
-                   CASE
-                       WHEN s_en = greatest(s_en, s_fr, s_es, s_de, s_zh)
-                            AND greatest(s_en, s_fr, s_es, s_de, s_zh) > 0
-                           THEN 'en'
-                       WHEN s_fr = greatest(s_en, s_fr, s_es, s_de, s_zh)
-                            AND greatest(s_en, s_fr, s_es, s_de, s_zh) > 0
-                           THEN 'fr'
-                       WHEN s_es = greatest(s_en, s_fr, s_es, s_de, s_zh)
-                            AND greatest(s_en, s_fr, s_es, s_de, s_zh) > 0
-                           THEN 'es'
-                       WHEN s_de = greatest(s_en, s_fr, s_es, s_de, s_zh)
-                            AND greatest(s_en, s_fr, s_es, s_de, s_zh) > 0
-                           THEN 'de'
-                       WHEN s_zh = greatest(s_en, s_fr, s_es, s_de, s_zh)
-                            AND greatest(s_en, s_fr, s_es, s_de, s_zh) > 0
-                           THEN 'zh'
-                       ELSE 'und'
-                   END AS pred_lang
-            FROM s
-        )
-        SELECT lang,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(CASE WHEN pred_lang <> lang AND pred_lang <> 'und'
-                             THEN 1 ELSE 0 END) AS BIGINT) AS n_contradicted,
-               CAST(SUM(CASE WHEN pred_lang = 'und' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_unverifiable,
-               CAST(SUM(CASE WHEN pred_lang <> lang AND pred_lang <> 'und'
-                             THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)
-                   AS contradicted_frac,
-               CAST(SUM(CASE WHEN pred_lang <> lang AND pred_lang <> 'und'
-                             THEN n_chars ELSE 0 END) AS BIGINT)
-                   AS chars_at_risk
-        FROM p
-        GROUP BY 1
-    """,
-    description=(
-        "label-noise audit: per labeled lang, docs whose content "
-        "contradicts the label (marker-based lang-ID disagrees), with "
-        "unverifiable docs reported separately"
-    ),
-    tags=("text", "quality", "langid"),
-)
-def doc_label_noise_audit(spark, sf_dir):
-    """The training-label QA rollup: a label the content contradicts is
-    worse than no label — these are the docs that poison a
-    lang-conditioned sampler or classifier head. Contradicted = the
-    marker-based detector fires AND disagrees; detector-silent docs
-    ('und') are counted as unverifiable, not noise. One projection pass
-    (the lang scores are array filters in the scan stage) plus one
-    grouped rollup."""
-    from ..operators.text import predicted_lang
-
-    docs = load_table(spark, sf_dir, "documents")
-    p = docs.select(
-        "lang",
-        F.length("text").alias("n_chars"),
-        predicted_lang("text").alias("pred_lang"),
-    )
-    contradicted = (F.col("pred_lang") != F.col("lang")) & (
-        F.col("pred_lang") != "und"
-    )
-    n_contra = F.sum(F.when(contradicted, 1).otherwise(0))
-    return p.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        n_contra.alias("n_contradicted"),
-        F.sum(F.when(F.col("pred_lang") == "und", 1).otherwise(0)).alias(
-            "n_unverifiable"
-        ),
-        (n_contra.cast("double") / F.count("*")).alias("contradicted_frac"),
-        F.sum(F.when(contradicted, F.col("n_chars")).otherwise(0)).alias(
-            "chars_at_risk"
-        ),
-    )
-
-
-@register(
     "events_ab_test_readout",
     oracle=f"""
         -- deterministic hash assignment + exact integer-cents sufficient
@@ -8847,83 +8147,6 @@ def value_benford_audit(spark, sf_dir):
         obs.alias("observed_frac"),
         ben.alias("benford_frac"),
         F.abs(obs - ben).alias("abs_dev"),
-    )
-
-
-@register(
-    "doc_readability_scores",
-    oracle=r"""
-        -- Flesch-style reading ease from three regex counts (sentences,
-        -- words, vowel-group syllable proxy). All counts are integers and
-        -- the formula is fixed IEEE arithmetic, so scores are
-        -- engine-identical; guards keep degenerate docs finite
-        WITH c AS (
-            SELECT doc_id, lang,
-                   greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
-                       AS sentences,
-                   greatest(len(list_filter(
-                       regexp_split_to_array(trim(text), '\s+'),
-                       t -> t <> '')), 1) AS words,
-                   greatest(len(regexp_extract_all(lower(text),
-                                                   '[aeiouy]+')), 1)
-                       AS syllables
-            FROM documents
-        )
-        SELECT doc_id, lang,
-               CAST(sentences AS BIGINT) AS sentences,
-               CAST(words AS BIGINT) AS words,
-               CAST(syllables AS BIGINT) AS syllables,
-               206.835
-                 - 1.015 * (CAST(words AS DOUBLE) / sentences)
-                 - 84.6 * (CAST(syllables AS DOUBLE) / words)
-                   AS reading_ease
-        FROM c
-    """,
-    description=(
-        "Flesch-style readability per document (regex sentence/word/"
-        "syllable-proxy counts; quality-filter feature)"
-    ),
-    tags=("text", "quality"),
-)
-def doc_readability_scores(spark, sf_dir):
-    """The classic fluency feature quality filters add next to the
-    length/stopword ratios: Flesch reading ease from three regex counts
-    (syllables approximated by vowel groups — the standard cheap proxy).
-    Pure scan-stage projections; both engines run RE2-compatible
-    character classes so the counts are identical, and the formula is
-    fixed IEEE arithmetic over integers. English-calibrated constants —
-    for other langs the score is a relative signal, not a grade level."""
-    docs = load_table(spark, sf_dir, "documents")
-    sentences = F.greatest(
-        F.size(F.regexp_extract_all("text", F.lit(r"[.!?]+"), F.lit(0))), F.lit(1)
-    )
-    words = F.greatest(
-        F.size(
-            F.filter(
-                F.split(F.trim("text"), r"\s+"), lambda t: t != F.lit("")
-            )
-        ),
-        F.lit(1),
-    )
-    syllables = F.greatest(
-        F.size(
-            F.regexp_extract_all(
-                F.lower(F.col("text")), F.lit("[aeiouy]+"), F.lit(0)
-            )
-        ),
-        F.lit(1),
-    )
-    return docs.select(
-        "doc_id",
-        "lang",
-        sentences.cast("bigint").alias("sentences"),
-        words.cast("bigint").alias("words"),
-        syllables.cast("bigint").alias("syllables"),
-        (
-            F.lit(206.835)
-            - F.lit(1.015) * (words.cast("double") / sentences)
-            - F.lit(84.6) * (syllables.cast("double") / words)
-        ).alias("reading_ease"),
     )
 
 

@@ -972,75 +972,6 @@ def order_price_equidepth_histogram(spark, sf_dir):
 
 
 @register(
-    "weighted_doc_sample",
-    oracle="""
-        -- weighted sampling without replacement, distributed and
-        -- engine-portable: Efraimidis-Spirakis keys k = ln(u)/w with u a
-        -- deterministic md5 uniform — the top-50 by key IS a weighted
-        -- sample (longer docs proportionally likelier), no RNG state, no
-        -- driver pass
-        WITH u AS (
-            SELECT doc_id, lang, n_chars,
-                   CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)),
-                        1, 8)) AS BIGINT) / 4294967296.0 AS uni
-            FROM documents
-        ),
-        k AS (
-            SELECT doc_id, lang, n_chars,
-                   ln(uni) / CAST(n_chars AS DOUBLE) AS skey
-            FROM u
-            WHERE uni > 0 AND n_chars > 0
-        )
-        SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-        FROM (
-            SELECT *, ROW_NUMBER() OVER (ORDER BY skey DESC, doc_id) AS rn
-            FROM k
-        )
-        WHERE rn <= 50
-    """,
-    description=(
-        "weighted sampling without replacement via Efraimidis-Spirakis "
-        "keys over deterministic md5 uniforms (top-k by key, no RNG state)"
-    ),
-    tags=("sampling", "deterministic"),
-)
-def weighted_doc_sample(spark, sf_dir):
-    """Length-weighted corpus sampling, the distributed way: each row
-    computes its own sample key k = ln(u)/w from an md5-uniform (exact
-    dyadic, identical on any engine), and the weighted sample is just
-    TakeOrdered top-k on the key — one pass, no RNG state to coordinate,
-    reproducible forever. This is the standard one-pass weighted
-    reservoir idea as a declarative plan; the seeded-randomSplit family
-    (R1/R2) stays engine-specific while this one is oracle-checked."""
-    docs = load_table(spark, sf_dir, "documents")
-    uni = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("bigint")
-        / F.lit(4294967296.0)
-    )
-    k = docs.select(
-        "doc_id",
-        "lang",
-        F.col("n_chars").cast("bigint").alias("n_chars"),
-        # the where() below drops these rows, but ANSI evaluation order
-        # is optimizer-dependent (the filter only protects the division if
-        # pushdown reorders it below this projection) — guard in-place
-        F.when(
-            (uni > 0) & (F.col("n_chars") > 0),
-            F.log(uni) / F.col("n_chars").cast("double"),
-        ).alias("skey"),
-    ).where((uni > 0) & (F.col("n_chars") > 0))
-    # top-50 by key IS the sample: orderBy().limit() compiles to a
-    # distributed TakeOrderedAndProject — no global-window single reducer
-    return (
-        k.orderBy(F.desc("skey"), F.asc("doc_id"))
-        .limit(50)
-        .select("doc_id", "lang", "n_chars")
-    )
-
-
-@register(
     "signup_to_purchase_latency_quantiles",
     oracle="""
         -- activation speed: per-user first signup -> first purchase
@@ -1610,70 +1541,8 @@ def tx_table_schema_evolution_counts(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round 8: per-language weighted sampling, vocabulary coverage, corpus-mix
-# divergence, txlog delete-all/restore
+# Round 8: vocabulary coverage, txlog delete-all/restore
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "weighted_doc_sample_by_lang",
-    oracle="""
-        -- the PARTITIONED form of weighted_doc_sample: Efraimidis-
-        -- Spirakis keys ranked within each language — the shape that
-        -- scales (per-group window, no global order anywhere), and the
-        -- sampler a multilingual corpus actually needs (quotas per lang)
-        WITH u AS (
-            SELECT doc_id, lang, n_chars,
-                   CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)),
-                        1, 8)) AS BIGINT) / 4294967296.0 AS uni
-            FROM documents
-        ),
-        k AS (
-            SELECT doc_id, lang, n_chars,
-                   ln(uni) / CAST(n_chars AS DOUBLE) AS skey
-            FROM u
-            WHERE uni > 0 AND n_chars > 0
-        )
-        SELECT lang, doc_id, CAST(n_chars AS BIGINT) AS n_chars
-        FROM (
-            SELECT *, ROW_NUMBER() OVER (
-                PARTITION BY lang ORDER BY skey DESC, doc_id) AS rn
-            FROM k
-        )
-        WHERE rn <= 10
-    """,
-    description=(
-        "per-language weighted sampling without replacement: top-10 "
-        "Efraimidis-Spirakis keys within each lang (partitioned window)"
-    ),
-    tags=("sampling", "llm-data", "deterministic"),
-)
-def weighted_doc_sample_by_lang(spark, sf_dir):
-    """weighted_doc_sample's scalable sibling: the same deterministic
-    md5-uniform E-S keys, ranked WITHIN each language by a partitioned
-    window — every language's quota computes in parallel with no global
-    order anywhere, which is both the plan you want at 100 TB and the
-    sampler a multilingual pretraining mix actually runs (per-language
-    quotas, longer docs proportionally likelier)."""
-    from ..operators.relational import hash_uniform, top_n_per_key
-
-    docs = load_table(spark, sf_dir, "documents")
-    uni = hash_uniform(F.col("doc_id"))
-    k = docs.select(
-        "doc_id",
-        "lang",
-        F.col("n_chars").cast("bigint").alias("n_chars"),
-        # the where() below drops these rows, but ANSI evaluation order
-        # is optimizer-dependent (the filter only protects the division if
-        # pushdown reorders it below this projection) — guard in-place
-        F.when(
-            (uni > 0) & (F.col("n_chars") > 0),
-            F.log(uni) / F.col("n_chars").cast("double"),
-        ).alias("skey"),
-    ).where((uni > 0) & (F.col("n_chars") > 0))
-    return top_n_per_key(
-        k, ["lang"], [F.desc("skey"), F.asc("doc_id")], 10
-    ).select("lang", "doc_id", "n_chars")
 
 
 @register(
@@ -1763,65 +1632,6 @@ def token_coverage_curve(spark, sf_dir):
             .cast("bigint")
             .alias("types_used"),
         )
-    )
-
-
-@register(
-    "source_mix_kl_divergence",
-    oracle="""
-        -- how far is the corpus's source mix from the uniform target?
-        -- per-source KL terms p*ln(p*S) (the mixture-rebalancing signal
-        -- corpus_temperature_mix acts on), shares as single divisions,
-        -- ln-domain doubles rounded at 6 (libm convention)
-        WITH c AS (
-            SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
-            FROM documents
-            GROUP BY 1
-        ),
-        t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS total,
-                     CAST(COUNT(*) AS BIGINT) AS s
-              FROM c)
-        SELECT source, n_docs,
-               CAST(n_docs AS DOUBLE) / t.total AS share,
-               ROUND((CAST(n_docs AS DOUBLE) / t.total)
-                     * ln((CAST(n_docs AS DOUBLE) / t.total) * t.s),
-                     6) AS kl_term
-        FROM c CROSS JOIN t
-        ORDER BY source
-    """,
-    description=(
-        "corpus source-mix divergence: per-source share and KL term vs "
-        "the uniform target mix"
-    ),
-    tags=("llm-data", "aggregate", "monitoring", "deterministic"),
-)
-def source_mix_kl_divergence(spark, sf_dir):
-    """The drift number a curation pipeline watches between crawl
-    snapshots: KL(observed source mix ‖ uniform). Per-source terms are
-    returned (not just the scalar) because the ACTION is per-source —
-    which source to up/down-weight — and the temperature-mix query
-    consumes exactly these shares. One grouped count, one broadcast
-    1-row total; shares are single divisions, the ln rounded at 6."""
-    docs = load_table(spark, sf_dir, "documents")
-    c = docs.groupBy("source").agg(
-        F.count("*").cast("long").alias("n_docs")
-    )
-    t = c.agg(
-        F.sum("n_docs").cast("long").alias("total"),
-        F.count("*").cast("long").alias("s"),
-    )
-    share = F.col("n_docs").cast("double") / F.col("total")
-    return (
-        c.crossJoin(F.broadcast(t))
-        .select(
-            "source",
-            "n_docs",
-            share.alias("share"),
-            F.round(
-                share * F.log(share * F.col("s").cast("double")), 6
-            ).alias("kl_term"),
-        )
-        .orderBy("source")
     )
 
 

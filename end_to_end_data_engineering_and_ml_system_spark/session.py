@@ -198,23 +198,19 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE coalescing is byte-based, but several operator families here
-        # (k² pair explode, shingle+md5 batteries, window rollups) carry
-        # heavy PER-ROW compute on small shuffle bytes — the default 1m
-        # minPartitionSize packs them onto 3-4 tasks and strands the other
-        # cores (measured: the co-purchase pair explode ran as 4 tasks/
-        # 875ms). 64k lets small-byte stages keep core-width parallelism.
+        # (tokenize + n-gram hashing, window rollups) carry heavy PER-ROW
+        # compute on small shuffle bytes — the default 1m minPartitionSize
+        # packs them onto 3-4 tasks and strands the other cores. 64k lets
+        # small-byte stages keep core-width parallelism.
         # Scale-adaptive by construction: with parallelismFirst (default
         # true) the coalesce target is max(stage_bytes/defaultParallelism,
         # minPartitionSize), so any stage bigger than parallelism×1m
         # behaves exactly as before — at 100 TB this conf is inert; it only
         # re-parallelizes the small compute-bound stages. r16 same-JVM A/B,
-        # order-reversed, medians of 7: a co-purchase graph query −22%,
-        # jaccard −16%, events_window_counts −15%, nothing slower; value
-        # sweep flat 256k→4k, 64k picked as the conservative middle.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
+        # order-reversed, medians of 7: events_window_counts −15%, nothing
+        # slower; value sweep flat 256k→4k, 64k picked as the conservative
+        # middle. Sweeps pass the conf through get_spark(extra_conf=...).
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

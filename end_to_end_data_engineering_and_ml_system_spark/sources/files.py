@@ -13,8 +13,6 @@
   portable JSON file written via Spark (no driver pickling).
 - **ORC scan/sink**: columnar interchange with Hive/Trino lakes — same
   pushdown/pruning contract as parquet.
-- **Raw-text corpus scan**: line-per-row or file-per-row (crawl-shard)
-  ingestion, the upstream-most source of a training-data pipeline.
 """
 
 from __future__ import annotations
@@ -176,25 +174,3 @@ def write_orc(df: DataFrame, dest_dir: str, partitions: int | None = None) -> st
     out = df.coalesce(partitions) if partitions is not None else df
     out.write.mode("overwrite").option("compression", "zlib").orc(dest_dir)
     return dest_dir
-
-
-def read_text_corpus(
-    spark: SparkSession, path: str, whole_files: bool = False
-) -> DataFrame:
-    """Raw-text corpus ingestion — the upstream-most source of a training
-    pipeline (crawl dumps, one document per file or per line).
-
-    - ``whole_files=False``: one row per LINE (``value`` string), splittable
-      scan — the 100 TB shape for line-delimited corpora.
-    - ``whole_files=True``: one row per FILE plus its path (via the
-      ``_metadata.file_path`` hidden column) — for per-file documents;
-      files are the parallelism unit, so only sane for many small-ish
-      files, which is exactly the crawl-shard layout."""
-    from pyspark.sql import functions as F
-
-    df = spark.read.text(path, wholetext=whole_files)
-    if whole_files:
-        df = df.select(
-            F.col("_metadata.file_path").alias("file_path"), "value"
-        )
-    return df

@@ -17,7 +17,6 @@ SAMPLE = [
     "embedding_drift_by_dim",     # IEEE-quantized float32 sums (r4 fix)
     "doc_unigram_logprob",        # decimal-exact mean over window counts
     "drift_psi_events",           # shares + ln over integer counts
-    "training_shuffle_shards",    # md5 shard + per-shard order
     "doc_duplicate_ngram_windows",# hash-keyed window counts
     "orders_cdc_merge_counts",    # full-outer merge + decimal checksum
     "token_cms_estimates",        # md5-bucket sketch + TakeOrdered ties
@@ -31,7 +30,6 @@ SAMPLE = [
     "error_burst_detection",      # integer moving-window sums (r4 fix)
     "price_quantity_ols",         # exact-integer sufficient statistics
     "source_unigram_jsd",         # ln-domain decimal sums
-    "doc_readability_scores",     # regex counts + fixed IEEE formula
     # round-5 additions
     "events_mad_outlier_hours",   # dyadic medians -> integer comparison
     "events_l_diversity_audit",   # count + count_distinct grain
@@ -45,7 +43,6 @@ SAMPLE = [
     "term_posting_stats",         # posting-grain reduce, tie-broken topk
     "join_cardinality_estimate_vs_actual",  # exact counts + floored est
     "order_price_equidepth_histogram",      # NTILE over exact cents
-    "weighted_doc_sample",        # md5-uniform sample keys
     "signup_to_purchase_latency_quantiles",  # dyadic quartiles
     "watermark_tolerance_curve",  # running-max window + delay sweep
     "sessions_per_user_histogram",  # interval-exact session gaps
@@ -56,9 +53,7 @@ SAMPLE = [
     # round-8 additions — the distributed-rank machinery uses
     # spark_partition_id over a range repartition, exactly the kind of
     # construction this suite exists to pin across shuffle widths
-    "weighted_doc_sample_by_lang",    # partitioned E-S keys
     "token_coverage_curve",           # global_row_number over the vocab
-    "source_mix_kl_divergence",       # shares + rounded ln terms
     "revenue_pareto_deciles",         # global_ntile over the aggregate
     "vocab_growth_heaps",             # global_running_sum prefix offsets
 ]

@@ -1,4 +1,4 @@
-"""Multimodal plumbing + file source/sink round-trips."""
+"""File source/sink round-trips."""
 
 from __future__ import annotations
 
@@ -15,55 +15,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from end_to_end_data_engineering_and_ml_system_spark.operators.multimodal import (
-    decode_image_real,
-    decode_media_features,
-    frame_sample,
-    payload_from_text,
-)
 from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import load_table
 from end_to_end_data_engineering_and_ml_system_spark.sources.files import (
     read_csv_permissive,
     write_metadata_sidecar,
     write_single_csv,
 )
-
-
-def test_media_features_deterministic_and_normalized(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "payload", payload_from_text("text")
-    )
-    a = {r.doc_id: r.features for r in decode_media_features(docs, "doc_id", "payload").collect()}
-    b = {r.doc_id: r.features for r in decode_media_features(docs, "doc_id", "payload").collect()}
-    assert a == b
-    for feats in a.values():
-        assert len(feats) == 16
-        assert abs(sum(feats) - 1.0) < 1e-9
-
-
-def test_media_feature_bytes_match(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "payload", payload_from_text("text")
-    )
-    out = decode_media_features(docs, "doc_id", "payload")
-    joined = out.join(
-        docs.select("doc_id", F.octet_length("payload").alias("expect")),
-        "doc_id",
-    )
-    assert joined.filter(F.col("n_bytes") != F.col("expect")).count() == 0
-
-
-def test_decode_image_real_is_explicit_stub(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    with pytest.raises(NotImplementedError):
-        decode_image_real(docs, "doc_id", "text")
-
-
-def test_frame_sample_shapes(spark):
-    df = spark.createDataFrame([(1, "x" * 200)], ["id", "payload"])
-    frames = frame_sample(df, "id", "payload", every_n_bytes=64).collect()
-    assert len(frames) == 3
-    assert all(len(r.frame_bytes) == 64 for r in frames[:2])
 
 
 def test_csv_permissive_and_single_file_sink(spark):
@@ -233,123 +190,6 @@ def test_orc_roundtrip_events(spark, sf_dir, tmp_path):
     assert "PushedFilters" in plan and "event_id" in plan
 
 
-def test_pcm_rms_energy_matches_numpy_reference(spark):
-    import numpy as np
-
-    from end_to_end_data_engineering_and_ml_system_spark.operators.multimodal import (
-        pcm_rms_energy,
-    )
-
-    rng = np.random.default_rng(7)
-    blobs = {
-        1: rng.integers(-32768, 32767, size=300, dtype=np.int16).tobytes(),
-        2: rng.integers(-32768, 32767, size=64, dtype=np.int16).tobytes(),
-        3: rng.integers(-32768, 32767, size=10, dtype=np.int16).tobytes() + b"\x01",
-        4: b"",  # empty payload emits no frames
-    }
-    df = spark.createDataFrame(
-        [(k, bytearray(v)) for k, v in blobs.items()], "doc_id long, payload binary"
-    )
-    got = {
-        (r.doc_id, r.frame_no): (r.n_samples, r.rms)
-        for r in pcm_rms_energy(df, "doc_id", "payload", frame_samples=64).collect()
-    }
-
-    want = {}
-    for k, raw in blobs.items():
-        samples = np.frombuffer(raw[: len(raw) - (len(raw) % 2)], "<i2").astype(
-            float
-        )
-        for fno in range(0, samples.size, 64):
-            fr = samples[fno : fno + 64]
-            want[(k, fno // 64)] = (fr.size, float(np.sqrt(np.mean(fr * fr))))
-
-    assert set(got) == set(want)
-    assert 4 not in {k for k, _ in got}
-    for key, (n, rms) in want.items():
-        gn, grms = got[key]
-        assert gn == n and abs(grms - rms) < 1e-9, key
-    # odd trailing byte dropped: doc 3 has exactly 10 samples in one frame
-    assert got[(3, 0)][0] == 10
-
-
-def test_pcm_frame_energy_matches_numpy_reference(spark):
-    """Integer-exact sibling: same framing contract as pcm_rms_energy, the
-    per-frame statistic an exact int64 sum of squares (bit-equal, no
-    tolerance), NULL/empty payloads emit nothing."""
-    import numpy as np
-
-    from end_to_end_data_engineering_and_ml_system_spark.operators.multimodal import (
-        pcm_frame_energy,
-    )
-
-    rng = np.random.default_rng(11)
-    blobs = {
-        1: rng.integers(-32768, 32767, size=300, dtype=np.int16).tobytes(),
-        2: rng.integers(-32768, 32767, size=64, dtype=np.int16).tobytes(),
-        3: rng.integers(-32768, 32767, size=10, dtype=np.int16).tobytes() + b"\x01",
-        4: b"",
-    }
-    df = spark.createDataFrame(
-        [(k, bytearray(v)) for k, v in blobs.items()]
-        + [(5, None)],
-        "doc_id long, payload binary",
-    )
-    got = {
-        (r.doc_id, r.frame_no): (r.n_samples, r.sumsq)
-        for r in pcm_frame_energy(df, "doc_id", "payload", frame_samples=64).collect()
-    }
-
-    want = {}
-    for k, raw in blobs.items():
-        samples = np.frombuffer(raw[: len(raw) - (len(raw) % 2)], "<i2").astype(
-            np.int64
-        )
-        for fno in range(0, samples.size, 64):
-            fr = samples[fno : fno + 64]
-            want[(k, fno // 64)] = (fr.size, int((fr * fr).sum()))
-
-    assert set(got) == set(want)
-    assert {4, 5}.isdisjoint({k for k, _ in got})
-    assert got == want  # exact integers, no tolerance
-    # worst-case frame fits int64 comfortably: 64 * 32768^2 < 2^63
-    assert all(0 <= s <= 64 * 32768 * 32768 for _, s in got.values())
-
-
-def test_pcm_energy_and_rms_agree(spark):
-    """Cross-operator invariant: the integer-exact and float paths describe
-    the SAME decode — rms == sqrt(sumsq / n_samples) per frame, and the
-    frame sets are identical."""
-    import math
-
-    import numpy as np
-
-    from end_to_end_data_engineering_and_ml_system_spark.operators.multimodal import (
-        pcm_frame_energy,
-        pcm_rms_energy,
-    )
-
-    rng = np.random.default_rng(23)
-    rows = [
-        (k, bytearray(rng.integers(-32768, 32767, size=sz, dtype=np.int16).tobytes()))
-        for k, sz in ((1, 500), (2, 64), (3, 65), (4, 1))
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    energy = {
-        (r.doc_id, r.frame_no): (r.n_samples, r.sumsq)
-        for r in pcm_frame_energy(df, "doc_id", "payload", frame_samples=64).collect()
-    }
-    rms = {
-        (r.doc_id, r.frame_no): (r.n_samples, r.rms)
-        for r in pcm_rms_energy(df, "doc_id", "payload", frame_samples=64).collect()
-    }
-    assert set(energy) == set(rms)
-    for key, (n, sumsq) in energy.items():
-        rn, rv = rms[key]
-        assert rn == n
-        assert abs(rv - math.sqrt(sumsq / n)) < 1e-9, key
-
-
 def test_orc_helper_roundtrip_documents(spark, sf_dir, tmp_path):
     from end_to_end_data_engineering_and_ml_system_spark.sources.files import (
         read_orc,
@@ -376,69 +216,3 @@ def test_orc_helper_roundtrip_documents(spark, sf_dir, tmp_path):
     )
     assert two_col.columns == ["doc_id", "lang"]
     assert two_col.count() == docs.count()
-
-
-def test_read_text_corpus_lines_and_whole_files(spark, tmp_path):
-    from end_to_end_data_engineering_and_ml_system_spark.sources.files import (
-        read_text_corpus,
-    )
-
-    shard_dir = tmp_path / "crawl"
-    shard_dir.mkdir()
-    (shard_dir / "shard0.txt").write_text("alpha\nbeta\n")
-    (shard_dir / "shard1.txt").write_text("gamma\n")
-
-    lines = read_text_corpus(spark, str(shard_dir))
-    assert sorted(r.value for r in lines.collect()) == [
-        "alpha",
-        "beta",
-        "gamma",
-    ]
-
-    files = read_text_corpus(spark, str(shard_dir), whole_files=True)
-    rows = {os.path.basename(r.file_path): r.value for r in files.collect()}
-    assert rows == {"shard0.txt": "alpha\nbeta\n", "shard1.txt": "gamma\n"}
-
-
-def test_frame_sample_slices_bytes_not_chars(spark):
-    """Frames must be BYTE slices of the binary payload: the old
-    cast-to-string path decoded as UTF-8 and sliced by CHARACTERS while
-    counting frames in BYTES — misaligned frames on any multi-byte
-    content, garbage on real media bytes."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.multimodal import (
-        frame_sample,
-    )
-
-    # 3-byte UTF-8 chars: 8 chars = 24 bytes -> 3 frames of 8 bytes, and
-    # byte slicing splits code points (which char slicing never would)
-    text = "€" * 8  # euro sign, 3 bytes each
-    df = spark.createDataFrame([(1, text)], "doc_id long, text string").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-    rows = frame_sample(df, "doc_id", "payload", every_n_bytes=8).collect()
-    assert [r["frame_no"] for r in rows] == [0, 1, 2]
-    raw = text.encode("utf-8")
-    for r in rows:
-        got = bytes(r["frame_bytes"])
-        assert got == raw[r["frame_no"] * 8 : r["frame_no"] * 8 + 8]
-        assert len(got) == 8
-
-
-def test_multimodal_null_payloads_do_not_crash(spark):
-    """NULL payloads arrive as None in the Arrow batch — bytes(None)
-    killed the whole job; they must decode as empty."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.multimodal import (
-        decode_media_features,
-        pcm_rms_energy,
-    )
-
-    df = spark.createDataFrame(
-        [(1, bytearray(b"hello world")), (2, None)],
-        "doc_id long, payload binary",
-    )
-    feats = {r["doc_id"]: r for r in decode_media_features(df, "doc_id", "payload").collect()}
-    assert feats[2]["n_bytes"] == 0
-    assert feats[2]["features"] == [0.0] * 16
-    # pcm path: NULL payload simply emits no frames
-    frames = pcm_rms_energy(df, "doc_id", "payload", frame_samples=4).collect()
-    assert all(r["doc_id"] == 1 for r in frames)

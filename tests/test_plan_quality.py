@@ -221,7 +221,6 @@ def test_distributed_rank_queries_have_no_single_partition_exchange(
         "order_price_equidepth_histogram",
         "token_coverage_curve",
         "revenue_pareto_deciles",
-        "weighted_doc_sample",
         "term_posting_stats",
         "vocab_growth_heaps",
     )

@@ -335,86 +335,6 @@ def test_hash_uniform_matches_duckdb_bit_for_bit(spark, keys):
         assert got[str(k)] == want, (k, got[str(k)], want)
 
 
-# --- repetition signals vs a pure-Python reference ------------------------
-
-word_st = st.sampled_from(["aa", "bb", "cc", "dd"])  # tiny alphabet -> repeats
-doc_st = st.lists(word_st, min_size=3, max_size=30).map(" ".join)
-
-
-def _py_repetition(text: str):
-    toks = text.split()
-    bi = [" ".join(toks[i : i + 2]) for i in range(len(toks) - 1)]
-    tri = [" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)]
-    from collections import Counter
-
-    top = max(Counter(bi).values())
-    return {
-        "n_bigrams": len(bi),
-        "top_bigram_n": top,
-        "top_bigram_frac": top / len(bi),
-        "dup_bigram_frac": 1.0 - len(set(bi)) / len(bi),
-        "dup_trigram_frac": 1.0 - len(set(tri)) / len(tri),
-    }
-
-
-@given(st.lists(doc_st, min_size=1, max_size=8))
-@SLOW
-def test_repetition_signals_match_python_reference(spark, texts):
-    from end_to_end_data_engineering_and_ml_system_spark.operators.text import repetition_signals
-
-    df = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
-    got = {r["doc_id"]: r for r in repetition_signals(df, "doc_id", "text").collect()}
-    assert set(got) == set(range(len(texts)))
-    for i, text in enumerate(texts):
-        ref = _py_repetition(text)
-        row = got[i]
-        for k, v in ref.items():
-            assert abs(row[k] - v) < 1e-12, (k, text)
-
-
-# --- contamination check vs Python set math -------------------------------
-
-
-def _py_shingles(text: str, n: int = 3):
-    toks = text.split()
-    return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
-
-
-@given(
-    st.lists(doc_st, min_size=1, max_size=6),
-    st.lists(doc_st, min_size=1, max_size=3),
-)
-@SLOW
-def test_contamination_matches_python_reference(spark, corpus, benchmark):
-    from end_to_end_data_engineering_and_ml_system_spark.operators.text import contamination_check
-
-    corp = spark.createDataFrame(list(enumerate(corpus)), ["doc_id", "text"])
-    bench = spark.createDataFrame(
-        [(1000 + i, t) for i, t in enumerate(benchmark)], ["doc_id", "text"]
-    )
-    got = {
-        r["doc_id"]: r
-        for r in contamination_check(
-            corp, bench, "doc_id", "text", n=3, threshold=0.0
-        ).collect()
-    }
-    bench_set = set().union(*(_py_shingles(t) for t in benchmark))
-    for i, text in enumerate(corpus):
-        sh = _py_shingles(text)
-        shared = len(sh & bench_set)
-        if not sh:
-            assert i not in got
-            continue
-        if shared == 0:
-            # inner join: zero-overlap docs never appear
-            assert i not in got
-            continue
-        row = got[i]
-        assert row["n_ngrams"] == len(sh)
-        assert row["shared_ngrams"] == shared
-        assert abs(row["contamination"] - shared / len(sh)) < 1e-12
-
-
 @given(
     st.lists(
         st.tuples(st.integers(0, 3), st.integers(0, 100)), min_size=1, max_size=30

@@ -1,5 +1,6 @@
-"""Invariants for the chunking/packing text operators (their value-level
-parity is oracle-checked; these pin the semantic properties)."""
+"""Invariants for the chunking, duplicate-window and quality-ratio text
+operators (their value-level parity is oracle-checked; these pin the
+semantic properties)."""
 
 from __future__ import annotations
 
@@ -7,7 +8,6 @@ from pyspark.sql import functions as F
 
 from end_to_end_data_engineering_and_ml_system_spark.operators.text import (
     chunk_documents,
-    pack_tokens_into_bins,
 )
 from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import load_table
 
@@ -53,99 +53,6 @@ def test_chunks_cover_text_with_overlap(spark, sf_dir):
         .join(docs.select("doc_id", "text"), "doc_id")
     )
     assert rebuilt.filter(F.col("rebuilt") != F.col("text")).count() == 0
-
-
-def test_token_packing_bins_bounded(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    packed = pack_tokens_into_bins(docs, "lang", "doc_id", "text", bin_tokens=2048)
-    assert packed.count() == docs.count()  # every doc assigned exactly once
-    per_bin = packed.groupBy("lang", "bin_id").agg(
-        F.sum("n_tokens").alias("bin_total"), F.max("n_tokens").alias("biggest_doc")
-    )
-    # a bin overflows 2048 by at most its last document
-    assert per_bin.filter(
-        F.col("bin_total") >= 2048 + F.col("biggest_doc")
-    ).count() == 0
-    # bins are consecutive from 0 within each lang
-    seq = per_bin.groupBy("lang").agg(
-        F.min("bin_id").alias("lo"), F.max("bin_id").alias("hi"),
-        F.count("*").alias("n_bins"),
-    )
-    assert seq.filter(
-        (F.col("lo") != 0) | (F.col("n_bins") != F.col("hi") + 1)
-    ).count() == 0
-
-
-def test_repetition_signals_planted(spark):
-    """A templated/repetitive doc scores high; a diverse doc scores 0."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.text import repetition_signals
-
-    docs = spark.createDataFrame(
-        [
-            # "buy now" repeated 5x: bigrams = 9 total, top "now buy"/"buy now"
-            (1, "buy now buy now buy now buy now buy now"),
-            # all-distinct tokens: zero duplicate n-grams
-            (2, "one two three four five six seven"),
-            # too short to measure (< 3 tokens) -> excluded
-            (3, "hi there"),
-        ],
-        ["doc_id", "text"],
-    )
-    rows = {r["doc_id"]: r for r in repetition_signals(docs, "doc_id", "text").collect()}
-    assert set(rows) == {1, 2}
-    r1 = rows[1]
-    assert r1["n_bigrams"] == 9
-    assert r1["top_bigram_n"] == 5  # "buy now" x5
-    assert abs(r1["top_bigram_frac"] - 5 / 9) < 1e-12
-    assert abs(r1["dup_bigram_frac"] - (1 - 2 / 9)) < 1e-12
-    assert r1["dup_trigram_frac"] > 0.7
-    r2 = rows[2]
-    assert r2["dup_bigram_frac"] == 0.0
-    assert r2["dup_trigram_frac"] == 0.0
-    assert r2["top_bigram_n"] == 1
-
-
-def test_ffd_packing_invariants(spark, sf_dir):
-    """Every doc packed exactly once; no bin over capacity (except dedicated
-    oversize bins); FFD never uses more bins than running-total chunking."""
-    from pyspark.sql import functions as F
-
-    from end_to_end_data_engineering_and_ml_system_spark.operators.text import pack_bins_ffd, token_count
-    from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", token_count("text").alias("n_tokens")
-    )
-    cap = 200
-    packed = pack_bins_ffd(docs, "doc_id", "n_tokens", capacity=cap, num_groups=8)
-    packed.cache()
-    n_docs = docs.count()
-    assert packed.count() == n_docs
-    assert packed.select("doc_id").distinct().count() == n_docs
-    over = packed.filter("oversize").count()
-    assert over == docs.filter(F.col("n_tokens") > cap).count()
-    fills = (
-        packed.filter(~F.col("oversize"))
-        .groupBy("bin_id")
-        .agg(F.sum("tokens").alias("fill"))
-    )
-    assert fills.filter(F.col("fill") > cap).count() == 0
-    # efficiency: total bins <= naive one-doc-per-bin, and fill factor sane
-    n_bins = packed.select("bin_id").distinct().count()
-    assert n_bins < n_docs
-    packed.unpersist()
-
-
-def test_ffd_packing_deterministic(spark, sf_dir):
-    from end_to_end_data_engineering_and_ml_system_spark.operators.text import pack_bins_ffd, token_count
-    from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", token_count("text").alias("n_tokens")
-    )
-    a = sorted(map(tuple, pack_bins_ffd(docs, "doc_id", "n_tokens", 200, 8).collect()))
-    b = sorted(map(tuple, pack_bins_ffd(docs, "doc_id", "n_tokens", 200, 8).collect()))
-    assert a == b
 
 
 def test_duplicate_ngram_windows_planted(spark):
@@ -289,40 +196,3 @@ def test_quality_ratios_null_on_empty_text_ansi_safe(spark):
     assert out[1]["q"] == 0.0
     assert out[2]["s"] is None  # whitespace-only: zero tokens
     assert out[3]["p"] is not None and out[3]["q"] is not None
-
-
-def test_tf_idf_topk_does_not_force_broadcast_vocab(spark, sf_dir):
-    """The idf table is vocabulary-sized — a forced broadcast hint is a
-    hard ~8 GB failure at web-corpus scale. The logical plan must carry no
-    broadcast hint; AQE decides at runtime."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.text import (
-        tf_idf_topk,
-    )
-    from end_to_end_data_engineering_and_ml_system_spark.sources.catalog import (
-        load_table,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").limit(50)
-    plan = tf_idf_topk(docs, "doc_id", "text")._jdf.queryExecution().logical().toString()
-    assert "UnresolvedHint" not in plan and "hint" not in plan.lower()
-
-
-def test_ffd_bin_ids_injective_across_groups(spark):
-    """(group, local_bin) -> bin_id must stay injective: the old 10^6
-    multiplier collided once a group packed over a million bins."""
-    from end_to_end_data_engineering_and_ml_system_spark.operators.text import (
-        _FFD_BINS_PER_GROUP,
-        pack_bins_ffd,
-    )
-
-    assert _FFD_BINS_PER_GROUP >= 10**12
-    docs = spark.range(200).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 150 + 20).alias("n_tokens")
-    )
-    packed = pack_bins_ffd(docs, "doc_id", "n_tokens", capacity=200, num_groups=4)
-    rows = packed.collect()
-    assert len(rows) == 200
-    for r in rows:
-        grp, b = divmod(r["bin_id"], _FFD_BINS_PER_GROUP)
-        assert grp == r["pack_group"]
-        assert 0 <= b < _FFD_BINS_PER_GROUP
